@@ -197,9 +197,9 @@ object Bench {
     // NAME (not per rep): the persist-heavy extension operators register
     // a cache entry per canonicalized plan, and letting ~100 of them
     // accumulate starves execution memory — the same phantom-regression
-    // class Verify/Scratch hit (see Scratch's t() note). Within one
-    // name's warm-up + 3 timed reps the cache stays, so reps measure the
-    // operator's warm cost exactly as the r4 protocol did.
+    // class Verify hit. Within one name's warm-up + 3 timed reps the
+    // cache stays, so reps measure the operator's warm cost exactly as
+    // the r4 protocol did.
     // Non-q sets get ONE global warm pass instead of two: with the r13
     // measurement fix every rep re-executes the whole plan, so the 285-op
     // extension suite's honest wall cost is dominated by executions, and

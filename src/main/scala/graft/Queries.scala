@@ -4,14 +4,19 @@ import scala.collection.immutable.ListMap
 
 /** The declared query inventory (SURVEY.md §2 — THE CONTRACT).
   *
-  * Each entry carries the Spark-dialect SQL (run by the engine) and the
-  * DuckDB-dialect oracle SQL (run by the driver's correctness gate on the
-  * same parquet tables). Canonical semantics are defined by the oracle text
-  * in SURVEY.md §2.10; the dialect deltas are exactly those enumerated in
-  * §2.7/§2.10 (RLIKE vs regexp_matches, explode vs unnest, unix_millis vs
-  * epoch_ms, STRING vs VARCHAR, get_json_object vs ->>, size/element_at vs
-  * len/[], collect_set vs list(DISTINCT), HOF cosine vs
-  * list_cosine_similarity, window-emulated as-of vs ASOF JOIN).
+  * The DuckDB oracle text is the only source of each query: the DuckDB
+  * correctness gate runs it on the same parquet tables, and the engine
+  * runs the Spark text that `Dialect.toSpark` derives from it. The
+  * dialect table (function renames, `VARCHAR`, `//`, `x[i]` and list
+  * literals; SURVEY.md §2.7/§2.10) lives in Dialect.scala.
+  *
+  * Override rule: an entry carries a hand-kept Spark text (`Hand`) only
+  * where the plan must differ from the derived one — a Spark-only hint,
+  * a DuckDB construct the table does not map (ASOF JOIN, list slices and
+  * comprehensions, `regexp_matches`, the '0x' hex cast of the md5 hash
+  * chain, …), or a Spark feature the query exists to exercise — and says
+  * why in one line. DialectSpec fails on an override whose derived twin
+  * plans the same.
   *
   * Determinism rules baked into every query (SURVEY.md §5.4): total ORDER BY
   * with a unique key suffix, floats rounded in-query, explicit NULL ordering,
@@ -19,13 +24,19 @@ import scala.collection.immutable.ListMap
   */
 object Queries {
 
-  /** A contract query: Spark SQL + DuckDB oracle SQL (identical when the
-    * dialects agree). */
-  final case class Q(name: String, spark: String, oracle: String)
+  /** A contract query: the DuckDB oracle SQL, and the Spark SQL the engine
+    * runs — derived from the oracle text on first use, so a process pays
+    * the translation only for the queries it runs, unless hand-kept. */
+  final case class Q(name: String, oracle: String, hand: Option[Hand]) {
+    lazy val spark: String = hand.fold(Dialect.toSpark(oracle))(_.sql)
+  }
 
-  private def q(name: String, sql: String): Q = Q(name, sql, sql)
-  private def q(name: String, spark: String, oracle: String): Q =
-    Q(name, spark, oracle)
+  /** A hand-kept Spark text and the one-line reason its plan must differ
+    * from the one derived from the oracle text. */
+  final case class Hand(why: String, sql: String)
+
+  private def q(name: String, oracle: String): Q = Q(name, oracle, None)
+  private def q(name: String, oracle: String, spark: Hand): Q = Q(name, oracle, Some(spark))
 
   /** Explicit-repartition width for the few Spark-dialect texts whose hot
     * path EXPLODES (join/window output ≫ every input): input-bytes-based
@@ -34,16 +45,26 @@ object Queries {
     * plan into ONE task, serializing tens of millions of produced rows
     * (guide §3.3, the exploding-join blind spot; OPTIMIZATION_r18.md §6).
     * Parameterized off the driver's own core-count contract
-    * (`SPARK_GRAFT_CPUS`, local default 32), NOT a hard-coded local
+    * (`SPARK_GRAFT_CPUS`, default 32 when unset), NOT a hard-coded local
     * constant: the 8-core companion run gets width 8, a cluster session
     * gets its configured width. At 100 TB the same hint is the explicit
     * hash-repartition any exploding self-join needs; width there is sized
     * to cores/output-volume, and AQE skew splits handle residual key skew.
-    * Hash partitioning is deterministic and aggregation-exact, so declared
-    * results are bit-identical at any width (InvariantsSpec pins this). */
-  private val hintPar: Int =
-    math.max(1, scala.util.Try(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt).getOrElse(32))
+    * Hash partitioning is deterministic and aggregation-exact for integer
+    * results. The hinted texts were re-verified against the DuckDB oracle
+    * after the hints went in (395/395, floats compared after in-query
+    * rounding); no test varies this width, so floating-point aggregates
+    * over it (x269's corr, x272's sum(1/ln d)) are pinned only up to that
+    * rounding. */
+  private val hintPar: Int = hintWidth(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  /** `SPARK_GRAFT_CPUS` as a hint width: 32 when unset; anything but a
+    * positive integer fails loudly instead of silently becoming 32. */
+  private[graft] def hintWidth(env: Option[String]): Int = env match {
+    case None => 32
+    case Some(v) => v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+  }
 
   /** Deliberately-quadratic exact baselines (the plans their banded/LSH
     * siblings are recall-verified against). Contract-SF only: Verify
@@ -80,11 +101,12 @@ object Queries {
 
     q("q04_regex_grep",
       """SELECT doc_id, n_chars FROM documents
-        |WHERE text RLIKE '(join|merge).*(window|stream)'
-        |ORDER BY doc_id""".stripMargin,
-      """SELECT doc_id, n_chars FROM documents
         |WHERE regexp_matches(text, '(join|merge).*(window|stream)')
-        |ORDER BY doc_id""".stripMargin),
+        |ORDER BY doc_id""".stripMargin,
+      Hand("Spark has no regexp_matches: RLIKE",
+      """SELECT doc_id, n_chars FROM documents
+        |WHERE text RLIKE '(join|merge).*(window|stream)'
+        |ORDER BY doc_id""".stripMargin)),
 
     // ---- aggregations -----------------------------------------------------
     q("q05_histogram",
@@ -120,9 +142,6 @@ object Queries {
         |ORDER BY user_id""".stripMargin),
 
     q("q13_wordcount",
-      """SELECT w, count(*) AS c
-        |FROM (SELECT explode(split(text,' ')) AS w FROM documents)
-        |GROUP BY w ORDER BY c DESC, w LIMIT 20""".stripMargin,
       """SELECT w, count(*) AS c
         |FROM (SELECT unnest(string_split(text,' ')) AS w FROM documents)
         |GROUP BY w ORDER BY c DESC, w LIMIT 20""".stripMargin),
@@ -179,6 +198,12 @@ object Queries {
     // so a ts-equal click sorts before the purchase (`>=` tie semantics),
     // then last_value(click_id) IGNORE NULLS carries the latest click forward.
     q("q23_asof_join",
+      """SELECT p.event_id AS purchase_id, c.event_id AS click_id
+        |FROM (SELECT * FROM events WHERE event_type='purchase') p
+        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type='click') c
+        |  ON p.user_id = c.user_id AND p.ts >= c.ts
+        |ORDER BY p.event_id""".stripMargin,
+      Hand("Spark has no ASOF JOIN: last_value over a union of both sides",
       """WITH u AS (
         |  SELECT user_id, ts, event_id,
         |         CASE WHEN event_type='click' THEN 1 ELSE 0 END AS is_click,
@@ -191,12 +216,7 @@ object Queries {
         |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS click_id
         |  FROM u)
         |SELECT event_id AS purchase_id, click_id FROM w WHERE is_click=0
-        |ORDER BY purchase_id""".stripMargin,
-      """SELECT p.event_id AS purchase_id, c.event_id AS click_id
-        |FROM (SELECT * FROM events WHERE event_type='purchase') p
-        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type='click') c
-        |  ON p.user_id = c.user_id AND p.ts >= c.ts
-        |ORDER BY p.event_id""".stripMargin),
+        |ORDER BY purchase_id""".stripMargin)),
 
     q("q24_broadcast_join",
       "SELECT n_name, r_name FROM nation JOIN region ON n_regionkey=r_regionkey ORDER BY n_name"),
@@ -212,11 +232,6 @@ object Queries {
         |WHERE rk <= 3 ORDER BY o_custkey, rk, o_orderkey""".stripMargin),
 
     q("q26_lag_gap",
-      """SELECT user_id, round(avg(gap_ms),4) AS avg_gap
-        |FROM (SELECT user_id,
-        |             unix_millis(ts) - lag(unix_millis(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap_ms
-        |      FROM events)
-        |WHERE gap_ms IS NOT NULL GROUP BY 1 ORDER BY 1""".stripMargin,
       """SELECT user_id, round(avg(gap_ms),4) AS avg_gap
         |FROM (SELECT user_id,
         |             epoch_ms(ts) - lag(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap_ms
@@ -246,15 +261,6 @@ object Queries {
         |FROM events ORDER BY user_id""".stripMargin),
 
     q("q31_sessionization",
-      """WITH g AS (
-        |  SELECT user_id, ts, event_id,
-        |         CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-        |               OR unix_millis(ts) - lag(unix_millis(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) > 1800000
-        |              THEN 1 ELSE 0 END AS new_s
-        |  FROM events),
-        |s AS (SELECT user_id, sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS sid FROM g),
-        |per AS (SELECT user_id, sid, count(*) AS n FROM s GROUP BY 1,2)
-        |SELECT user_id, count(*) AS sessions, round(avg(n),4) AS avg_len FROM per GROUP BY 1 ORDER BY 1""".stripMargin,
       """WITH g AS (
         |  SELECT user_id, ts, event_id,
         |         CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
@@ -291,11 +297,6 @@ object Queries {
       """SELECT c_custkey, upper(c_name) AS up, lower(c_name) AS lo, substr(c_name,1,8) AS sub,
         |       length(c_name) AS len, concat(c_name,'-',c_mktsegment) AS cat,
         |       replace(c_name,'#','@') AS rep,
-        |       lpad(cast(c_custkey AS STRING),8,'0') AS pad
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-      """SELECT c_custkey, upper(c_name) AS up, lower(c_name) AS lo, substr(c_name,1,8) AS sub,
-        |       length(c_name) AS len, concat(c_name,'-',c_mktsegment) AS cat,
-        |       replace(c_name,'#','@') AS rep,
         |       lpad(cast(c_custkey AS VARCHAR),8,'0') AS pad
         |FROM customer ORDER BY c_custkey""".stripMargin),
 
@@ -314,24 +315,23 @@ object Queries {
         |LIMIT 500""".stripMargin),
 
     q("q39_json_extract",
-      """SELECT event_id, cast(get_json_object(props,'$.k') AS INT) AS k
-        |FROM events ORDER BY event_id""".stripMargin,
       """SELECT event_id, cast(props->>'$.k' AS INTEGER) AS k
-        |FROM events ORDER BY event_id""".stripMargin),
+        |FROM events ORDER BY event_id""".stripMargin,
+      Hand("JSON ->> is get_json_object in Spark",
+      """SELECT event_id, cast(get_json_object(props,'$.k') AS INT) AS k
+        |FROM events ORDER BY event_id""".stripMargin)),
 
     q("q40_array_access",
-      """SELECT vec_id, size(embedding) AS dim,
-        |       round(cast(element_at(embedding,1) AS DOUBLE),4) AS e1, label
-        |FROM embeddings ORDER BY vec_id LIMIT 100""".stripMargin,
       """SELECT vec_id, len(embedding) AS dim,
         |       round(cast(embedding[1] AS DOUBLE),4) AS e1, label
         |FROM embeddings ORDER BY vec_id LIMIT 100""".stripMargin),
 
     q("q41_collect_agg",
-      """SELECT user_id, array_join(sort_array(collect_set(event_type)),',') AS types
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
       """SELECT user_id, array_to_string(list_sort(list(DISTINCT event_type)),',') AS types
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
+      Hand("list(DISTINCT x) is collect_set in Spark",
+      """SELECT user_id, array_join(sort_array(collect_set(event_type)),',') AS types
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // ---- LLM-data-pipeline (hash-checked subset, SURVEY.md §2.8) ----------
     q("q42_dedup_census",
@@ -346,10 +346,6 @@ object Queries {
     // codegen: q43 exec 121ms→57ms, x49 (2M pairs) 11.5s→1.4s at sf0.1.
     q("q43_cosine_topk",
       """WITH q AS (SELECT embedding AS e FROM embeddings WHERE vec_id=0)
-        |SELECT v.vec_id, round(cosine_sim(v.embedding, q.e), 4) AS sim
-        |FROM embeddings v, q WHERE v.vec_id <> 0
-        |ORDER BY sim DESC, v.vec_id LIMIT 10""".stripMargin,
-      """WITH q AS (SELECT embedding AS e FROM embeddings WHERE vec_id=0)
         |SELECT v.vec_id, round(cast(list_cosine_similarity(v.embedding, q.e) AS DOUBLE),4) AS sim
         |FROM embeddings v, q WHERE v.vec_id <> 0 ORDER BY sim DESC, v.vec_id LIMIT 10""".stripMargin),
 
@@ -359,8 +355,6 @@ object Queries {
         |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin),
 
     q("q45_tumbling_window",
-      """SELECT cast(floor(unix_millis(ts)/21600000.0) AS BIGINT) AS w, count(*) AS c, round(sum(value),4) AS s
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
       """SELECT cast(floor(epoch_ms(ts)/21600000.0) AS BIGINT) AS w, count(*) AS c, round(sum(value),4) AS s
         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
 
@@ -375,12 +369,6 @@ object Queries {
     // Exact dedup over a normalized representation (sorted distinct token
     // set): keep the lowest doc_id per key, report the dropped docs.
     q("x47_dedup_keep_first",
-      """WITH k AS (SELECT doc_id,
-        |  md5(array_join(sort_array(array_distinct(split(text,' '))),' ')) AS key
-        |  FROM documents),
-        |f AS (SELECT key, min(doc_id) AS keeper FROM k GROUP BY 1)
-        |SELECT k.doc_id, f.keeper FROM k JOIN f ON k.key=f.key
-        |WHERE k.doc_id <> f.keeper ORDER BY k.doc_id""".stripMargin,
       """WITH k AS (SELECT doc_id,
         |  md5(array_to_string(list_sort(list_distinct(string_split(text,' '))),' ')) AS key
         |  FROM documents),
@@ -403,6 +391,17 @@ object Queries {
     // (HashPartitioning(doc_id) flows to a = sa.doc_id, so the pair agg
     // stays in-task). Result-identical; DuckDB text verbatim below.
     q("x48_jaccard_topk",
+      """WITH t AS (SELECT doc_id,
+        |  list_distinct([array_to_string(w[i:i+2],' ') FOR i IN range(1, len(w)-1)]) AS shs
+        |  FROM (SELECT doc_id, string_split(text,' ') AS w FROM documents) WHERE len(w) >= 3),
+        |n AS (SELECT doc_id, len(shs) AS n FROM t),
+        |s AS (SELECT doc_id, unnest(shs) AS sh FROM t),
+        |p AS (SELECT sa.doc_id AS a, sb.doc_id AS b, count(*) AS c
+        |      FROM s sa JOIN s sb ON sa.sh = sb.sh AND sa.doc_id < sb.doc_id GROUP BY 1,2)
+        |SELECT p.a, p.b, cast(floor(p.c*10000.0/(na.n + nb.n - p.c)) AS BIGINT) AS jac_bp
+        |FROM p JOIN n na ON p.a=na.doc_id JOIN n nb ON p.b=nb.doc_id
+        |ORDER BY jac_bp DESC, p.a, p.b LIMIT 20""".stripMargin,
+      Hand("REPARTITION hint on the exploding join; shingles via transform/slice",
       s"""WITH t AS (SELECT doc_id,
         |  array_distinct(transform(sequence(1, size(w)-2), i -> concat_ws(' ', slice(w, i, 3)))) AS shs
         |  FROM (SELECT doc_id, split(text,' ') AS w
@@ -413,17 +412,7 @@ object Queries {
         |      FROM s sa JOIN s sb ON sa.sh = sb.sh AND sa.doc_id < sb.doc_id GROUP BY 1,2)
         |SELECT p.a, p.b, cast(floor(p.c*10000.0/(na.n + nb.n - p.c)) AS BIGINT) AS jac_bp
         |FROM p JOIN n na ON p.a=na.doc_id JOIN n nb ON p.b=nb.doc_id
-        |ORDER BY jac_bp DESC, p.a, p.b LIMIT 20""".stripMargin,
-      """WITH t AS (SELECT doc_id,
-        |  list_distinct([array_to_string(w[i:i+2],' ') FOR i IN range(1, len(w)-1)]) AS shs
-        |  FROM (SELECT doc_id, string_split(text,' ') AS w FROM documents) WHERE len(w) >= 3),
-        |n AS (SELECT doc_id, len(shs) AS n FROM t),
-        |s AS (SELECT doc_id, unnest(shs) AS sh FROM t),
-        |p AS (SELECT sa.doc_id AS a, sb.doc_id AS b, count(*) AS c
-        |      FROM s sa JOIN s sb ON sa.sh = sb.sh AND sa.doc_id < sb.doc_id GROUP BY 1,2)
-        |SELECT p.a, p.b, cast(floor(p.c*10000.0/(na.n + nb.n - p.c)) AS BIGINT) AS jac_bp
-        |FROM p JOIN n na ON p.a=na.doc_id JOIN n nb ON p.b=nb.doc_id
-        |ORDER BY jac_bp DESC, p.a, p.b LIMIT 20""".stripMargin),
+        |ORDER BY jac_bp DESC, p.a, p.b LIMIT 20""".stripMargin)),
 
     // EXACT BASELINE — all-pairs (O(n²)) BY DESIGN; at scale use x54
     // (LSH ANN) / x59 (IVF) / x103 (IVFPQ), spec-verified against this
@@ -435,15 +424,16 @@ object Queries {
     // task; repartitioning the streamed side runs the pair loop
     // width-way parallel (top-20 is a per-partition partial TakeOrdered).
     q("x49_cosine_pairs",
+      """SELECT va.vec_id AS a, vb.vec_id AS b,
+        |       round(cast(list_cosine_similarity(va.embedding, vb.embedding) AS DOUBLE), 4) AS sim
+        |FROM embeddings va JOIN embeddings vb ON va.vec_id < vb.vec_id
+        |ORDER BY sim DESC, a, b LIMIT 20""".stripMargin,
+      Hand("REPARTITION hint: the exploding join would run in one task",
       s"""SELECT va.vec_id AS a, vb.vec_id AS b,
         |       round(cosine_sim(va.embedding, vb.embedding), 4) AS sim
         |FROM (SELECT /*+ REPARTITION($hintPar, vec_id) */ vec_id, embedding FROM embeddings) va
         |JOIN embeddings vb ON va.vec_id < vb.vec_id
-        |ORDER BY sim DESC, a, b LIMIT 20""".stripMargin,
-      """SELECT va.vec_id AS a, vb.vec_id AS b,
-        |       round(cast(list_cosine_similarity(va.embedding, vb.embedding) AS DOUBLE), 4) AS sim
-        |FROM embeddings va JOIN embeddings vb ON va.vec_id < vb.vec_id
-        |ORDER BY sim DESC, a, b LIMIT 20""".stripMargin),
+        |ORDER BY sim DESC, a, b LIMIT 20""".stripMargin)),
 
     // Per-document quality scoring: token counts, type-token ratio,
     // stopword ratio, composite quality. All ratio outputs are integer
@@ -451,16 +441,6 @@ object Queries {
     // and small-integer ratios hit .xxxx5 boundaries often (observed:
     // quality 0.65875 at sf0.1 rounded 0.6587 vs 0.6588).
     q("x50_quality_score",
-      """SELECT doc_id, n_toks, n_types,
-        |       cast(floor(n_types*10000.0/n_toks) AS BIGINT) AS ttr_bp,
-        |       cast(floor(n_stop*10000.0/n_toks) AS BIGINT) AS stop_bp,
-        |       cast(floor((0.4*(n_types/cast(n_toks AS DOUBLE))
-        |             + 0.3*(1.0 - n_stop/cast(n_toks AS DOUBLE))
-        |             + 0.3*least(n_toks/100.0, 1.0))*10000.0) AS BIGINT) AS quality_bp
-        |FROM (SELECT doc_id, size(w) AS n_toks, size(array_distinct(w)) AS n_types,
-        |             size(filter(w, x -> x IN ('a','the'))) AS n_stop
-        |      FROM (SELECT doc_id, split(text,' ') AS w FROM documents))
-        |ORDER BY doc_id""".stripMargin,
       """SELECT doc_id, n_toks, n_types,
         |       cast(floor(n_types*10000.0/n_toks) AS BIGINT) AS ttr_bp,
         |       cast(floor(n_stop*10000.0/n_toks) AS BIGINT) AS stop_bp,
@@ -475,11 +455,6 @@ object Queries {
     // Token counting per source: whitespace tokens, distinct vocab, chars
     // (the corpus-accounting pass a training-data pipeline runs first).
     q("x58_token_counts",
-      """SELECT source, count(*) AS docs,
-        |       sum(size(split(text,' '))) AS toks,
-        |       sum(size(array_distinct(split(text,' ')))) AS vocab_sum,
-        |       sum(n_chars) AS chars
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
       // CAST the sums: DuckDB sum(INTEGER) yields HUGEINT (int128), which
       // survives fetchall() as int but turns float64 through pandas —
       // "1435.0" vs Spark's BIGINT "1435" is a hash mismatch (r1 failure).
@@ -502,42 +477,45 @@ object Queries {
     // coalesce the pivoted cells: Spark PIVOT yields NULL for an empty
     // (user, type) cell, DuckDB's FILTER count yields 0
     q("x61_pivot",
-      """SELECT user_id, coalesce(click,0) AS click, coalesce(purchase,0) AS purchase,
-        |       coalesce(error,0) AS error, coalesce(signup,0) AS signup,
-        |       coalesce(view,0) AS view
-        |FROM (SELECT * FROM (SELECT user_id, event_type FROM events)
-        |      PIVOT (count(*) FOR event_type IN ('click' AS click, 'purchase' AS purchase,
-        |             'error' AS error, 'signup' AS signup, 'view' AS view)))
-        |ORDER BY user_id""".stripMargin,
       """SELECT user_id,
         |       count(*) FILTER (WHERE event_type='click') AS click,
         |       count(*) FILTER (WHERE event_type='purchase') AS purchase,
         |       count(*) FILTER (WHERE event_type='error') AS error,
         |       count(*) FILTER (WHERE event_type='signup') AS signup,
         |       count(*) FILTER (WHERE event_type='view') AS view
-        |FROM events GROUP BY 1 ORDER BY user_id""".stripMargin),
+        |FROM events GROUP BY 1 ORDER BY user_id""".stripMargin,
+      Hand("exercises Spark's PIVOT clause",
+      """SELECT user_id, coalesce(click,0) AS click, coalesce(purchase,0) AS purchase,
+        |       coalesce(error,0) AS error, coalesce(signup,0) AS signup,
+        |       coalesce(view,0) AS view
+        |FROM (SELECT * FROM (SELECT user_id, event_type FROM events)
+        |      PIVOT (count(*) FOR event_type IN ('click' AS click, 'purchase' AS purchase,
+        |             'error' AS error, 'signup' AS signup, 'view' AS view)))
+        |ORDER BY user_id""".stripMargin)),
 
     // Typed JSON parse (from_json with a schema — parse once into a
     // struct, the at-scale alternative to per-field get_json_object).
     q("x62_json_typed",
-      """SELECT event_id, from_json(props, 'k INT').k AS k
-        |FROM events ORDER BY event_id""".stripMargin,
       """SELECT event_id, cast(props->>'$.k' AS INTEGER) AS k
-        |FROM events ORDER BY event_id""".stripMargin),
+        |FROM events ORDER BY event_id""".stripMargin,
+      Hand("JSON ->> with a cast is from_json with a schema in Spark",
+      """SELECT event_id, from_json(props, 'k INT').k AS k
+        |FROM events ORDER BY event_id""".stripMargin)),
 
     // Exact interpolated percentiles per group (beyond q44's median):
     // Spark percentile() and DuckDB quantile_cont both linear-interpolate.
     q("x63_percentiles",
       """SELECT event_type,
-        |       round(percentile(value, 0.25), 4) AS p25,
-        |       round(percentile(value, 0.5), 4) AS p50,
-        |       round(percentile(value, 0.9), 4) AS p90
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-      """SELECT event_type,
         |       round(quantile_cont(value, 0.25), 4) AS p25,
         |       round(quantile_cont(value, 0.5), 4) AS p50,
         |       round(quantile_cont(value, 0.9), 4) AS p90
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
+      Hand("quantile_cont is percentile in Spark",
+      """SELECT event_type,
+        |       round(percentile(value, 0.25), 4) AS p25,
+        |       round(percentile(value, 0.5), 4) AS p50,
+        |       round(percentile(value, 0.9), 4) AS p90
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // Language-ID as a trained classifier: per-language unigram profiles
     // (Laplace-smoothed), per-doc log-likelihood argmax, accuracy by true
@@ -549,20 +527,6 @@ object Queries {
     // not by the cand tie-break. The oracle's `correct` sum is cast to
     // BIGINT (DuckDB integer sum → HUGEINT → float64 via pandas).
     q("x51_langid",
-      """WITH wt AS (SELECT doc_id, lang, explode(split(text,' ')) AS w FROM documents),
-        |counts AS (SELECT lang AS l, w, count(*) AS c FROM wt GROUP BY 1,2),
-        |tot AS (SELECT l, sum(c) AS tc FROM counts GROUP BY 1),
-        |dw AS (SELECT doc_id, lang, w, count(*) AS n FROM wt GROUP BY 1,2,3),
-        |sc AS (SELECT d.doc_id, d.lang AS true_lang, t.l AS cand,
-        |              sum(d.n * cast(floor(ln((coalesce(c.c,0)+1.0)/(t.tc+31.0))*1000000) AS BIGINT)) AS score
-        |       FROM dw d CROSS JOIN tot t LEFT JOIN counts c ON c.l = t.l AND c.w = d.w
-        |       GROUP BY 1,2,3),
-        |pred AS (SELECT doc_id, true_lang, cand,
-        |                row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, cand) AS rn
-        |         FROM sc)
-        |SELECT true_lang AS lang, count(*) AS n,
-        |       sum(CASE WHEN cand = true_lang THEN 1 ELSE 0 END) AS correct
-        |FROM pred WHERE rn = 1 GROUP BY 1 ORDER BY 1""".stripMargin,
       """WITH wt AS (SELECT doc_id, lang, unnest(string_split(text,' ')) AS w FROM documents),
         |counts AS (SELECT lang AS l, w, count(*) AS c FROM wt GROUP BY 1,2),
         |tot AS (SELECT l, sum(c) AS tc FROM counts GROUP BY 1),
@@ -602,22 +566,19 @@ object Queries {
       """SELECT o_orderkey,
         |       regexp_extract(o_orderpriority,'([0-9])-(.*)',2) AS word,
         |       cast(regexp_extract(o_orderpriority,'([0-9])',1) AS INT) AS num,
-        |       regexp_replace(o_orderpriority,'[AEIOU]','_') AS rep
+        |       regexp_replace(o_orderpriority,'[AEIOU]','_','g') AS rep
         |FROM orders ORDER BY o_orderkey""".stripMargin,
+      Hand("regexp_replace replaces every match in Spark: no 'g' flag",
       """SELECT o_orderkey,
         |       regexp_extract(o_orderpriority,'([0-9])-(.*)',2) AS word,
         |       cast(regexp_extract(o_orderpriority,'([0-9])',1) AS INT) AS num,
-        |       regexp_replace(o_orderpriority,'[AEIOU]','_','g') AS rep
-        |FROM orders ORDER BY o_orderkey""".stripMargin),
+        |       regexp_replace(o_orderpriority,'[AEIOU]','_') AS rep
+        |FROM orders ORDER BY o_orderkey""".stripMargin)),
 
     // RANGE-frame window (value-based, not row-based): 3-day windowed sum
     // over the daily revenue series — gaps in the day sequence widen the
     // frame correctly, unlike a ROWS frame.
     q("x67_range_frame",
-      """SELECT dn, round(sum(s) OVER (ORDER BY dn RANGE BETWEEN 2 PRECEDING AND CURRENT ROW),4) AS r3
-        |FROM (SELECT cast(floor(unix_millis(ts)/86400000.0) AS BIGINT) AS dn, sum(value) AS s
-        |      FROM events GROUP BY 1)
-        |ORDER BY dn""".stripMargin,
       """SELECT dn, round(sum(s) OVER (ORDER BY dn RANGE BETWEEN 2 PRECEDING AND CURRENT ROW),4) AS r3
         |FROM (SELECT cast(floor(epoch_ms(ts)/86400000.0) AS BIGINT) AS dn, sum(value) AS s
         |      FROM events GROUP BY 1)
@@ -637,11 +598,6 @@ object Queries {
     // left join the sparse per-hour counts, zero-fill the holes (the
     // dashboard-correctness op a log pipeline always needs).
     q("x69_gap_fill",
-      """WITH h AS (SELECT cast(floor(unix_millis(ts)/3600000.0) AS BIGINT) AS hn, count(*) AS c
-        |           FROM events WHERE event_type='signup' AND value > 150 GROUP BY 1)
-        |SELECT b.hn, coalesce(h.c, 0) AS c
-        |FROM (SELECT explode(sequence((SELECT min(hn) FROM h),(SELECT max(hn) FROM h))) AS hn) b
-        |LEFT JOIN h ON b.hn = h.hn ORDER BY b.hn""".stripMargin,
       """WITH h AS (SELECT cast(floor(epoch_ms(ts)/3600000.0) AS BIGINT) AS hn, count(*) AS c
         |           FROM events WHERE event_type='signup' AND value > 150 GROUP BY 1)
         |SELECT b.hn, coalesce(h.c, 0) AS c
@@ -665,22 +621,18 @@ object Queries {
     // functions in Spark, operators in DuckDB.
     q("x71_bitwise",
       """SELECT o_orderkey, o_orderkey & 255 AS band, o_orderkey | 4096 AS bor,
-        |       o_orderkey ^ 21845 AS bxor, shiftleft(o_orderkey,2) AS shl,
-        |       shiftright(o_orderkey,3) AS shr
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-      """SELECT o_orderkey, o_orderkey & 255 AS band, o_orderkey | 4096 AS bor,
         |       xor(o_orderkey, 21845) AS bxor, o_orderkey << 2 AS shl,
         |       o_orderkey >> 3 AS shr
-        |FROM orders ORDER BY o_orderkey""".stripMargin),
+        |FROM orders ORDER BY o_orderkey""".stripMargin,
+      Hand("xor, << and >> are ^, shiftleft and shiftright in Spark",
+      """SELECT o_orderkey, o_orderkey & 255 AS band, o_orderkey | 4096 AS bor,
+        |       o_orderkey ^ 21845 AS bxor, shiftleft(o_orderkey,2) AS shl,
+        |       shiftright(o_orderkey,3) AS shr
+        |FROM orders ORDER BY o_orderkey""".stripMargin)),
 
     // Null-safe equality over full-outer-join results: Spark `<=>` ==
     // DuckDB `IS NOT DISTINCT FROM`.
     q("x72_nullsafe_eq",
-      """SELECT coalesce(c.k, s.k) AS k, (c.cc <=> s.sc) AS eq_counts,
-        |       (c.cc IS NULL) AS cust_missing
-        |FROM (SELECT c_nationkey AS k, count(*) AS cc FROM customer GROUP BY 1) c
-        |FULL JOIN (SELECT s_nationkey AS k, count(*) AS sc FROM supplier GROUP BY 1) s ON c.k=s.k
-        |ORDER BY k""".stripMargin,
       """SELECT coalesce(c.k, s.k) AS k, (c.cc IS NOT DISTINCT FROM s.sc) AS eq_counts,
         |       (c.cc IS NULL) AS cust_missing
         |FROM (SELECT c_nationkey AS k, count(*) AS cc FROM customer GROUP BY 1) c
@@ -691,13 +643,6 @@ object Queries {
     // -(p·ln p) is floored to an integer BEFORE summing (same determinism
     // argument as x51 — float sums are order-dependent across engines).
     q("x73_entropy",
-      """WITH c AS (SELECT doc_id, w, count(*) AS n
-        |           FROM (SELECT doc_id, explode(split(text,' ')) AS w FROM documents)
-        |           GROUP BY 1,2),
-        |t AS (SELECT doc_id, sum(n) AS nt FROM c GROUP BY 1)
-        |SELECT c.doc_id,
-        |       cast(sum(cast(floor(-(c.n/cast(t.nt AS DOUBLE))*ln(c.n/cast(t.nt AS DOUBLE))*1000000) AS BIGINT)) AS BIGINT) AS ent_unat
-        |FROM c JOIN t ON c.doc_id = t.doc_id GROUP BY 1 ORDER BY 1""".stripMargin,
       """WITH c AS (SELECT doc_id, w, count(*) AS n
         |           FROM (SELECT doc_id, unnest(string_split(text,' ')) AS w FROM documents)
         |           GROUP BY 1,2),
@@ -712,22 +657,6 @@ object Queries {
     // this variant is exactly reproducible in DuckDB → full hash check.
     // Spark gets hex→int via conv(); DuckDB casts a '0x…' literal.
     q("x74_minhash_sql",
-      """WITH w AS (SELECT doc_id, split(text,' ') AS w FROM documents),
-        |sh AS (SELECT doc_id, explode(array_distinct(
-        |         transform(sequence(1, size(w)-2), i -> concat_ws(' ', slice(w, i, 3))))) AS sh
-        |       FROM w WHERE size(w) >= 3),
-        |hv AS (SELECT doc_id, cast(conv(substr(md5(sh),1,8),16,10) AS BIGINT) AS hv FROM sh),
-        |perm AS (SELECT * FROM VALUES (0,1299721,104729),(1,1299827,104743),(2,1300021,104759),
-        |         (3,1300033,104761),(4,1300109,104773),(5,1300151,104779),(6,1300187,104789),
-        |         (7,1300201,104801),(8,1300247,104803),(9,1300289,104827),(10,1300303,104831),
-        |         (11,1300313,104849),(12,1300333,104851),(13,1300351,104869),(14,1300369,104879),
-        |         (15,1300387,104891) AS perm(i,a,b)),
-        |sig AS (SELECT doc_id, p.i, min(mod(p.a*hv.hv + p.b, 2147483647)) AS mh
-        |        FROM hv CROSS JOIN perm p GROUP BY 1,2),
-        |pairs AS (SELECT sa.doc_id AS a, sb.doc_id AS b, count(*) AS m
-        |          FROM sig sa JOIN sig sb ON sa.i = sb.i AND sa.mh = sb.mh AND sa.doc_id < sb.doc_id
-        |          GROUP BY 1,2)
-        |SELECT a, b, m FROM pairs WHERE m >= 8 ORDER BY a, b""".stripMargin,
       """WITH w AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
         |sh AS (SELECT doc_id, unnest(list_distinct(
         |         [array_to_string(w[i:i+2],' ') FOR i IN range(1, len(w)-1)])) AS sh
@@ -743,22 +672,38 @@ object Queries {
         |pairs AS (SELECT sa.doc_id AS a, sb.doc_id AS b, count(*) AS m
         |          FROM sig sa JOIN sig sb ON sa.i = sb.i AND sa.mh = sb.mh AND sa.doc_id < sb.doc_id
         |          GROUP BY 1,2)
-        |SELECT a, b, m FROM pairs WHERE m >= 8 ORDER BY a, b""".stripMargin),
+        |SELECT a, b, m FROM pairs WHERE m >= 8 ORDER BY a, b""".stripMargin,
+      Hand("shingles via transform/slice; hex via conv(hex, 16, 10)",
+      """WITH w AS (SELECT doc_id, split(text,' ') AS w FROM documents),
+        |sh AS (SELECT doc_id, explode(array_distinct(
+        |         transform(sequence(1, size(w)-2), i -> concat_ws(' ', slice(w, i, 3))))) AS sh
+        |       FROM w WHERE size(w) >= 3),
+        |hv AS (SELECT doc_id, cast(conv(substr(md5(sh),1,8),16,10) AS BIGINT) AS hv FROM sh),
+        |perm AS (SELECT * FROM VALUES (0,1299721,104729),(1,1299827,104743),(2,1300021,104759),
+        |         (3,1300033,104761),(4,1300109,104773),(5,1300151,104779),(6,1300187,104789),
+        |         (7,1300201,104801),(8,1300247,104803),(9,1300289,104827),(10,1300303,104831),
+        |         (11,1300313,104849),(12,1300333,104851),(13,1300351,104869),(14,1300369,104879),
+        |         (15,1300387,104891) AS perm(i,a,b)),
+        |sig AS (SELECT doc_id, p.i, min(mod(p.a*hv.hv + p.b, 2147483647)) AS mh
+        |        FROM hv CROSS JOIN perm p GROUP BY 1,2),
+        |pairs AS (SELECT sa.doc_id AS a, sb.doc_id AS b, count(*) AS m
+        |          FROM sig sa JOIN sig sb ON sa.i = sb.i AND sa.mh = sb.mh AND sa.doc_id < sb.doc_id
+        |          GROUP BY 1,2)
+        |SELECT a, b, m FROM pairs WHERE m >= 8 ORDER BY a, b""".stripMargin)),
 
     // Ordered string aggregation: Spark 4 listagg WITHIN GROUP == DuckDB
     // string_agg with ORDER BY (deterministic element order).
     q("x75_listagg",
-      """SELECT c_nationkey, listagg(c_name, ',') WITHIN GROUP (ORDER BY c_name) AS names
-        |FROM customer WHERE c_custkey < 300 GROUP BY 1 ORDER BY 1""".stripMargin,
       """SELECT c_nationkey, string_agg(c_name, ',' ORDER BY c_name) AS names
-        |FROM customer WHERE c_custkey < 300 GROUP BY 1 ORDER BY 1""".stripMargin),
+        |FROM customer WHERE c_custkey < 300 GROUP BY 1 ORDER BY 1""".stripMargin,
+      Hand("string_agg(x ORDER BY y) is listagg WITHIN GROUP in Spark",
+      """SELECT c_nationkey, listagg(c_name, ',') WITHIN GROUP (ORDER BY c_name) AS names
+        |FROM customer WHERE c_custkey < 300 GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // Arg-max/arg-min (max_by/min_by vs arg_max/arg_min). The ordering
     // key (c_custkey) is unique, so ties — where both engines pick
     // arbitrarily — cannot occur.
     q("x76_argmax",
-      """SELECT c_nationkey, max_by(c_name, c_custkey) AS newest, min_by(c_name, c_custkey) AS oldest
-        |FROM customer GROUP BY 1 ORDER BY 1""".stripMargin,
       """SELECT c_nationkey, arg_max(c_name, c_custkey) AS newest, arg_min(c_name, c_custkey) AS oldest
         |FROM customer GROUP BY 1 ORDER BY 1""".stripMargin),
 
@@ -767,24 +712,21 @@ object Queries {
     // DuckDB quantile_disc.
     q("x77_percentile_disc",
       """SELECT event_type,
-        |       round(percentile_disc(0.25) WITHIN GROUP (ORDER BY value),4) AS p25d,
-        |       round(percentile_disc(0.5)  WITHIN GROUP (ORDER BY value),4) AS p50d,
-        |       round(percentile_disc(0.9)  WITHIN GROUP (ORDER BY value),4) AS p90d
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-      """SELECT event_type,
         |       round(quantile_disc(value, 0.25),4) AS p25d,
         |       round(quantile_disc(value, 0.5),4) AS p50d,
         |       round(quantile_disc(value, 0.9),4) AS p90d
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
+      Hand("quantile_disc(x, p) is percentile_disc(p) WITHIN GROUP (ORDER BY x)",
+      """SELECT event_type,
+        |       round(percentile_disc(0.25) WITHIN GROUP (ORDER BY value),4) AS p25d,
+        |       round(percentile_disc(0.5)  WITHIN GROUP (ORDER BY value),4) AS p50d,
+        |       round(percentile_disc(0.9)  WITHIN GROUP (ORDER BY value),4) AS p90d
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // Sliding 6h windows every 3h (batch analog of streaming
     // window(ts,'6 hours','3 hours')): each event lands in exactly two
     // windows, materialized by exploding the two covering window ids.
     q("x78_sliding_window",
-      """WITH k AS (SELECT cast(floor(unix_millis(ts)/10800000.0) AS BIGINT) AS k, value FROM events)
-        |SELECT s, count(*) AS c, round(sum(value),4) AS v
-        |FROM (SELECT explode(array(k-1, k)) AS s, value FROM k)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
       """WITH k AS (SELECT cast(floor(epoch_ms(ts)/10800000.0) AS BIGINT) AS k, value FROM events)
         |SELECT s, count(*) AS c, round(sum(value),4) AS v
         |FROM (SELECT unnest([k-1, k]) AS s, value FROM k)
@@ -803,22 +745,6 @@ object Queries {
     // oracle's temp disk at the 10× soak (SCALE.md §7).
     q("x79_simhash_sql",
       """WITH tok AS (SELECT doc_id, w, count(*) AS n
-        |             FROM (SELECT doc_id, explode(split(text,' ')) AS w FROM documents)
-        |             GROUP BY 1,2),
-        |hv AS (SELECT doc_id, n, cast(conv(substr(md5(w),1,8),16,10) AS BIGINT) AS h FROM tok),
-        |bits AS (SELECT doc_id, j, cast(sum(n * (2*((h >> j) & 1) - 1)) AS BIGINT) AS wt
-        |         FROM hv CROSS JOIN (SELECT explode(sequence(0,31)) AS j) b
-        |         GROUP BY 1,2),
-        |sig AS (SELECT doc_id, cast(sum(CASE WHEN wt > 0 THEN shiftleft(cast(1 AS BIGINT), j) ELSE 0 END) AS BIGINT) AS sig
-        |        FROM bits GROUP BY 1),
-        |chunks AS (SELECT doc_id, sig, c, (sig >> (8*c)) & 255 AS ck
-        |           FROM sig CROSS JOIN (SELECT explode(sequence(0,3)) AS c) cs),
-        |pairs AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b,
-        |                 cast(bit_count(x.sig ^ y.sig) AS INT) AS ham
-        |          FROM chunks x JOIN chunks y
-        |            ON x.c = y.c AND x.ck = y.ck AND x.doc_id < y.doc_id)
-        |SELECT a, b, ham FROM pairs WHERE ham <= 3 ORDER BY a, b""".stripMargin,
-      """WITH tok AS (SELECT doc_id, w, count(*) AS n
         |             FROM (SELECT doc_id, unnest(string_split(text,' ')) AS w FROM documents)
         |             GROUP BY 1,2),
         |hv AS (SELECT doc_id, n, cast(('0x'||substr(md5(w),1,8)) AS BIGINT) AS h FROM tok),
@@ -833,7 +759,24 @@ object Queries {
         |                 cast(bit_count(xor(x.sig, y.sig)) AS INT) AS ham
         |          FROM chunks x JOIN chunks y
         |            ON x.c = y.c AND x.ck = y.ck AND x.doc_id < y.doc_id)
-        |SELECT a, b, ham FROM pairs WHERE ham <= 3 ORDER BY a, b""".stripMargin),
+        |SELECT a, b, ham FROM pairs WHERE ham <= 3 ORDER BY a, b""".stripMargin,
+      Hand("hex via conv(hex, 16, 10); xor and << are ^ and shiftleft",
+      """WITH tok AS (SELECT doc_id, w, count(*) AS n
+        |             FROM (SELECT doc_id, explode(split(text,' ')) AS w FROM documents)
+        |             GROUP BY 1,2),
+        |hv AS (SELECT doc_id, n, cast(conv(substr(md5(w),1,8),16,10) AS BIGINT) AS h FROM tok),
+        |bits AS (SELECT doc_id, j, cast(sum(n * (2*((h >> j) & 1) - 1)) AS BIGINT) AS wt
+        |         FROM hv CROSS JOIN (SELECT explode(sequence(0,31)) AS j) b
+        |         GROUP BY 1,2),
+        |sig AS (SELECT doc_id, cast(sum(CASE WHEN wt > 0 THEN shiftleft(cast(1 AS BIGINT), j) ELSE 0 END) AS BIGINT) AS sig
+        |        FROM bits GROUP BY 1),
+        |chunks AS (SELECT doc_id, sig, c, (sig >> (8*c)) & 255 AS ck
+        |           FROM sig CROSS JOIN (SELECT explode(sequence(0,3)) AS c) cs),
+        |pairs AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b,
+        |                 cast(bit_count(x.sig ^ y.sig) AS INT) AS ham
+        |          FROM chunks x JOIN chunks y
+        |            ON x.c = y.c AND x.ck = y.ck AND x.doc_id < y.doc_id)
+        |SELECT a, b, ham FROM pairs WHERE ham <= 3 ORDER BY a, b""".stripMargin)),
 
     // Winnowing fingerprints entirely in SQL (companion to x55's Scala
     // operator): char 8-gram md5-prefix hashes, per-window (4) minima via
@@ -879,20 +822,6 @@ object Queries {
     // optimizer-removed as redundant with this one; the copies run
     // parallel and cheap.)
     q("x80_winnowing_sql",
-      s"""WITH pos AS (SELECT doc_id, explode(sequence(1, greatest(length(text)-7,1))) AS i, text
-        |             FROM (SELECT /*+ REPARTITION($hintPar, doc_id) */ doc_id, text FROM documents)),
-        |h AS (SELECT doc_id, i, cast(conv(substr(md5(substr(text,i,8)),1,8),16,10) AS BIGINT) AS h FROM pos),
-        |wmin AS (SELECT doc_id, i, min(h) OVER (PARTITION BY doc_id ORDER BY i ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS fp FROM h),
-        |fps AS (SELECT DISTINCT doc_id, fp FROM wmin WHERE i >= 4),
-        |n AS (SELECT doc_id, count(*) AS n FROM fps GROUP BY 1),
-        |df AS (SELECT fp FROM fps GROUP BY fp HAVING count(*) >= 2),
-        |rep AS (SELECT fps.doc_id, fps.fp FROM fps JOIN df ON fps.fp = df.fp),
-        |common AS (SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS c
-        |           FROM rep x JOIN rep y ON x.fp = y.fp AND x.doc_id < y.doc_id GROUP BY 1,2)
-        |SELECT a, b, contain_bp FROM (
-        |  SELECT common.a, common.b, cast(floor(common.c*10000.0/least(na.n, nb.n)) AS BIGINT) AS contain_bp
-        |  FROM common JOIN n na ON common.a = na.doc_id JOIN n nb ON common.b = nb.doc_id)
-        |WHERE contain_bp >= 5000 ORDER BY contain_bp DESC, a, b""".stripMargin,
       """WITH pos AS (SELECT doc_id, unnest(generate_series(1, greatest(length(text)-7,1))) AS i, text FROM documents),
         |h AS (SELECT doc_id, i, cast(('0x'||substr(md5(substr(text,i,8)),1,8)) AS BIGINT) AS h FROM pos),
         |wmin AS (SELECT doc_id, i, min(h) OVER (PARTITION BY doc_id ORDER BY i ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS fp FROM h),
@@ -906,29 +835,28 @@ object Queries {
         |SELECT a, b, contain_bp FROM (
         |  SELECT common.a, common.b, cast(floor(common.c*10000.0/least(na.n, nb.n)) AS BIGINT) AS contain_bp
         |  FROM common JOIN n na ON common.a = na.doc_id JOIN n nb ON common.b = nb.doc_id)
-        |WHERE contain_bp >= 5000 ORDER BY contain_bp DESC, a, b""".stripMargin),
+        |WHERE contain_bp >= 5000 ORDER BY contain_bp DESC, a, b""".stripMargin,
+      Hand("REPARTITION hint and a grouped repeat filter on the exploding join; hex via conv",
+      s"""WITH pos AS (SELECT doc_id, explode(sequence(1, greatest(length(text)-7,1))) AS i, text
+        |             FROM (SELECT /*+ REPARTITION($hintPar, doc_id) */ doc_id, text FROM documents)),
+        |h AS (SELECT doc_id, i, cast(conv(substr(md5(substr(text,i,8)),1,8),16,10) AS BIGINT) AS h FROM pos),
+        |wmin AS (SELECT doc_id, i, min(h) OVER (PARTITION BY doc_id ORDER BY i ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS fp FROM h),
+        |fps AS (SELECT DISTINCT doc_id, fp FROM wmin WHERE i >= 4),
+        |n AS (SELECT doc_id, count(*) AS n FROM fps GROUP BY 1),
+        |df AS (SELECT fp FROM fps GROUP BY fp HAVING count(*) >= 2),
+        |rep AS (SELECT fps.doc_id, fps.fp FROM fps JOIN df ON fps.fp = df.fp),
+        |common AS (SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS c
+        |           FROM rep x JOIN rep y ON x.fp = y.fp AND x.doc_id < y.doc_id GROUP BY 1,2)
+        |SELECT a, b, contain_bp FROM (
+        |  SELECT common.a, common.b, cast(floor(common.c*10000.0/least(na.n, nb.n)) AS BIGINT) AS contain_bp
+        |  FROM common JOIN n na ON common.a = na.doc_id JOIN n nb ON common.b = nb.doc_id)
+        |WHERE contain_bp >= 5000 ORDER BY contain_bp DESC, a, b""".stripMargin)),
 
     // Session funnel: within q31's 30-min sessions, count sessions that
     // contain a click and sessions that convert (a purchase at-or-after
     // the first click). The click→purchase attribution query a log
     // pipeline exists to answer. Sums cast BIGINT (HUGEINT hazard).
     q("x81_funnel_sessions",
-      """WITH g AS (
-        |  SELECT user_id, ts, event_id, event_type,
-        |         CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-        |               OR unix_millis(ts) - lag(unix_millis(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) > 1800000
-        |              THEN 1 ELSE 0 END AS new_s
-        |  FROM events),
-        |s AS (SELECT user_id, ts, event_id, event_type,
-        |             sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS sid FROM g),
-        |per AS (SELECT user_id, sid,
-        |               min(CASE WHEN event_type='click' THEN ts END) AS fc,
-        |               max(CASE WHEN event_type='purchase' THEN ts END) AS lp
-        |        FROM s GROUP BY 1,2)
-        |SELECT user_id, count(*) AS sessions,
-        |       cast(sum(CASE WHEN fc IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS with_click,
-        |       cast(sum(CASE WHEN fc IS NOT NULL AND lp IS NOT NULL AND lp >= fc THEN 1 ELSE 0 END) AS BIGINT) AS conversions
-        |FROM per GROUP BY 1 ORDER BY 1""".stripMargin,
       """WITH g AS (
         |  SELECT user_id, ts, event_id, event_type,
         |         CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
@@ -952,12 +880,13 @@ object Queries {
     q("x82_cohort_retention",
       """WITH f AS (SELECT user_id, min(cast(date_trunc('day', ts) AS DATE)) AS cohort FROM events GROUP BY 1),
         |a AS (SELECT DISTINCT user_id, cast(date_trunc('day', ts) AS DATE) AS d FROM events)
-        |SELECT f.cohort, cast(datediff(a.d, f.cohort) AS INT) AS age, count(*) AS active
+        |SELECT f.cohort, cast(date_diff('day', f.cohort, a.d) AS INT) AS age, count(*) AS active
         |FROM a JOIN f ON a.user_id = f.user_id GROUP BY 1,2 ORDER BY 1,2""".stripMargin,
+      Hand("date_diff('day', a, b) is datediff(b, a) in Spark",
       """WITH f AS (SELECT user_id, min(cast(date_trunc('day', ts) AS DATE)) AS cohort FROM events GROUP BY 1),
         |a AS (SELECT DISTINCT user_id, cast(date_trunc('day', ts) AS DATE) AS d FROM events)
-        |SELECT f.cohort, cast(date_diff('day', f.cohort, a.d) AS INT) AS age, count(*) AS active
-        |FROM a JOIN f ON a.user_id = f.user_id GROUP BY 1,2 ORDER BY 1,2""".stripMargin),
+        |SELECT f.cohort, cast(datediff(a.d, f.cohort) AS INT) AS age, count(*) AS active
+        |FROM a JOIN f ON a.user_id = f.user_id GROUP BY 1,2 ORDER BY 1,2""".stripMargin)),
 
     // Boolean aggregates (universal / existential quantification per
     // group). Predicates chosen so both answers vary across users.
@@ -980,10 +909,6 @@ object Queries {
     q("x85_try_cast",
       """SELECT c_custkey, try_cast(substr(c_name,10,9) AS BIGINT) AS id_num,
         |       try_cast(c_mktsegment AS INT) AS bad,
-        |       try_cast(c_acctbal AS STRING) IS NOT NULL AS ok
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-      """SELECT c_custkey, try_cast(substr(c_name,10,9) AS BIGINT) AS id_num,
-        |       try_cast(c_mktsegment AS INT) AS bad,
         |       try_cast(c_acctbal AS VARCHAR) IS NOT NULL AS ok
         |FROM customer ORDER BY c_custkey""".stripMargin),
 
@@ -992,17 +917,18 @@ object Queries {
     // repeat, reverse, split_part, prefix/suffix tests.
     q("x86_string_trim",
       """SELECT c_custkey, trim('  x  '||c_mktsegment) AS tr,
-        |       ltrim('xy', 'xxy'||c_name) AS lt, rtrim('0123456789', c_name) AS rt,
-        |       repeat(substr(c_mktsegment,1,2),3) AS rp, reverse(c_mktsegment) AS rv,
-        |       split_part(c_name,'#',2) AS sp,
-        |       startswith(c_name,'Customer') AS sw, endswith(c_name,'1') AS ew
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-      """SELECT c_custkey, trim('  x  '||c_mktsegment) AS tr,
         |       ltrim('xxy'||c_name, 'xy') AS lt, rtrim(c_name, '0123456789') AS rt,
         |       repeat(substr(c_mktsegment,1,2),3) AS rp, reverse(c_mktsegment) AS rv,
         |       split_part(c_name,'#',2) AS sp,
         |       starts_with(c_name,'Customer') AS sw, ends_with(c_name,'1') AS ew
-        |FROM customer ORDER BY c_custkey""".stripMargin),
+        |FROM customer ORDER BY c_custkey""".stripMargin,
+      Hand("ltrim/rtrim take the trim set first; startswith/endswith",
+      """SELECT c_custkey, trim('  x  '||c_mktsegment) AS tr,
+        |       ltrim('xy', 'xxy'||c_name) AS lt, rtrim('0123456789', c_name) AS rt,
+        |       repeat(substr(c_mktsegment,1,2),3) AS rp, reverse(c_mktsegment) AS rv,
+        |       split_part(c_name,'#',2) AS sp,
+        |       startswith(c_name,'Customer') AS sw, endswith(c_name,'1') AS ew
+        |FROM customer ORDER BY c_custkey""".stripMargin)),
 
     // Second window battery: lead, nth_value over a full frame, and
     // cume_dist (unique order keys — no tie ambiguity).
@@ -1072,17 +998,18 @@ object Queries {
     // DuckDB a[5:12] (both 8 elements).
     q("x94_array_battery",
       """SELECT vec_id,
-        |       size(array_intersect(slice(embedding,1,8), slice(embedding,5,8))) AS ni,
-        |       cast(array_position(embedding, element_at(embedding,3)) AS INT) AS ap,
-        |       array_contains(embedding, element_at(embedding,1)) AS ac,
-        |       size(flatten(array(slice(embedding,1,2), slice(embedding,3,2)))) AS fl
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
-      """SELECT vec_id,
         |       cast(len(list_intersect(embedding[1:8], embedding[5:12])) AS INT) AS ni,
         |       cast(list_position(embedding, embedding[3]) AS INT) AS ap,
         |       list_contains(embedding, embedding[1]) AS ac,
         |       cast(len(flatten([embedding[1:2], embedding[3:4]])) AS INT) AS fl
-        |FROM embeddings ORDER BY vec_id""".stripMargin),
+        |FROM embeddings ORDER BY vec_id""".stripMargin,
+      Hand("list slices via slice(w, start, length); list_* functions are array_*",
+      """SELECT vec_id,
+        |       size(array_intersect(slice(embedding,1,8), slice(embedding,5,8))) AS ni,
+        |       cast(array_position(embedding, element_at(embedding,3)) AS INT) AS ap,
+        |       array_contains(embedding, element_at(embedding,1)) AS ac,
+        |       size(flatten(array(slice(embedding,1,2), slice(embedding,3,2)))) AS fl
+        |FROM embeddings ORDER BY vec_id""".stripMargin)),
 
     // BPE-ish subword counting per source (SURVEY.md §2.8 companion to
     // x58's whitespace counts): regex tokenization (runs of letters /
@@ -1091,41 +1018,44 @@ object Queries {
     // heuristic, computed with codegen'd HOFs, oracle-matched exactly.
     q("x95_subword_counts",
       """SELECT source,
-        |       cast(sum(aggregate(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]', 0),
-        |                cast(0 AS BIGINT), (a, t) -> a + 1 + ((length(t)-1) div 4))) AS BIGINT) AS subwords
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-      """SELECT source,
         |       cast(sum(list_sum(list_transform(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]'),
         |                t -> 1 + (length(t)-1)//4))) AS BIGINT) AS subwords
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin),
+        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
+      Hand("list_sum over transform is one aggregate in Spark",
+      """SELECT source,
+        |       cast(sum(aggregate(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]', 0),
+        |                cast(0 AS BIGINT), (a, t) -> a + 1 + ((length(t)-1) div 4))) AS BIGINT) AS subwords
+        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // Higher-order quantifiers over arrays (exists/forall vs DuckDB's
     // bool_or/bool_and list_aggregate) + ordered HOF reduction (L2 norm —
     // both engines fold the transformed list left-to-right in element
     // order, so the double sum is bit-identical).
     q("x96_hof_quantifiers",
-      """SELECT vec_id, exists(embedding, x -> x > 0.2) AS has_hi,
-        |       forall(embedding, x -> x > -1.0) AS all_gt,
-        |       round(sqrt(aggregate(transform(embedding, x -> cast(x AS DOUBLE)*x),
-        |             cast(0 AS DOUBLE), (s, x) -> s + x)),4) AS l2
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
       """SELECT vec_id,
         |       list_aggregate(list_transform(embedding, x -> x > 0.2), 'bool_or') AS has_hi,
         |       list_aggregate(list_transform(embedding, x -> x > -1.0), 'bool_and') AS all_gt,
         |       round(sqrt(list_aggregate(list_transform(embedding, x -> cast(x AS DOUBLE)*x), 'sum')),4) AS l2
-        |FROM embeddings ORDER BY vec_id""".stripMargin),
+        |FROM embeddings ORDER BY vec_id""".stripMargin,
+      Hand("list_aggregate bool_or/bool_and are exists/forall in Spark",
+      """SELECT vec_id, exists(embedding, x -> x > 0.2) AS has_hi,
+        |       forall(embedding, x -> x > -1.0) AS all_gt,
+        |       round(sqrt(aggregate(transform(embedding, x -> cast(x AS DOUBLE)*x),
+        |             cast(0 AS DOUBLE), (s, x) -> s + x)),4) AS l2
+        |FROM embeddings ORDER BY vec_id""".stripMargin)),
 
     // Timestamp ↔ string round-trip (the log-parsing core op). The format
     // languages differ wholesale: JDK letters (yyyy-MM-dd HH:mm:ss) vs
     // C strftime (%Y-%m-%d %H:%M:%S).
     q("x97_ts_parse",
+      """SELECT event_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS s,
+        |       epoch_ms(strptime(strftime(ts, '%Y-%m-%d %H:%M:%S'), '%Y-%m-%d %H:%M:%S')) AS ems
+        |FROM events ORDER BY event_id""".stripMargin,
+      Hand("strftime/strptime formats are date_format/to_timestamp patterns",
       """SELECT event_id, date_format(ts, 'yyyy-MM-dd HH:mm:ss') AS s,
         |       unix_millis(to_timestamp(date_format(ts, 'yyyy-MM-dd HH:mm:ss'),
         |                   'yyyy-MM-dd HH:mm:ss')) AS ems
-        |FROM events ORDER BY event_id""".stripMargin,
-      """SELECT event_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS s,
-        |       epoch_ms(strptime(strftime(ts, '%Y-%m-%d %H:%M:%S'), '%Y-%m-%d %H:%M:%S')) AS ems
-        |FROM events ORDER BY event_id""".stripMargin),
+        |FROM events ORDER BY event_id""".stripMargin)),
 
     // Extended math battery: trig, atan2, degrees, exp, log10/log2, sign
     // (complements q38; both engines round libm doubles at 4dp).
@@ -1141,10 +1071,6 @@ object Queries {
     // MONTH step) + zero-filled monthly order counts — x69's gap fill at
     // calendar granularity.
     q("x99_month_series",
-      """WITH b AS (SELECT explode(sequence(DATE '1995-01-01', DATE '1998-12-01', INTERVAL 1 MONTH)) AS m),
-        |o AS (SELECT cast(date_trunc('month', o_orderdate) AS DATE) AS m, count(*) AS c FROM orders GROUP BY 1)
-        |SELECT cast(b.m AS DATE) AS m, coalesce(o.c, 0) AS c
-        |FROM b LEFT JOIN o ON cast(b.m AS DATE) = o.m ORDER BY 1""".stripMargin,
       """WITH b AS (SELECT unnest(generate_series(DATE '1995-01-01', DATE '1998-12-01', INTERVAL 1 MONTH)) AS m),
         |o AS (SELECT cast(date_trunc('month', o_orderdate) AS DATE) AS m, count(*) AS c FROM orders GROUP BY 1)
         |SELECT cast(b.m AS DATE) AS m, coalesce(o.c, 0) AS c
@@ -1161,14 +1087,15 @@ object Queries {
     q("x105_hash_sample",
       """SELECT doc_id, source
         |FROM (SELECT doc_id, source,
-        |        cast(conv(substr(md5(cast(doc_id AS STRING)),1,8),16,10) AS BIGINT) % 100 AS b
-        |      FROM documents)
-        |WHERE b < 10 ORDER BY doc_id""".stripMargin,
-      """SELECT doc_id, source
-        |FROM (SELECT doc_id, source,
         |        cast(('0x'||substr(md5(cast(doc_id AS VARCHAR)),1,8)) AS BIGINT) % 100 AS b
         |      FROM documents)
-        |WHERE b < 10 ORDER BY doc_id""".stripMargin),
+        |WHERE b < 10 ORDER BY doc_id""".stripMargin,
+      Hand("hex to integer: DuckDB casts '0x' || hex, Spark calls conv(hex, 16, 10)",
+      """SELECT doc_id, source
+        |FROM (SELECT doc_id, source,
+        |        cast(conv(substr(md5(cast(doc_id AS STRING)),1,8),16,10) AS BIGINT) % 100 AS b
+        |      FROM documents)
+        |WHERE b < 10 ORDER BY doc_id""".stripMargin)),
 
     // Stratified train/val/test split (80/10/10) by the same content
     // hash: split assignment is stable under corpus growth (a doc never
@@ -1177,19 +1104,20 @@ object Queries {
     // (source, split).
     q("x106_stratified_split",
       """WITH h AS (SELECT source,
-        |    cast(conv(substr(md5(cast(doc_id AS STRING)),1,8),16,10) AS BIGINT) % 100 AS b
-        |  FROM documents)
-        |SELECT source,
-        |       CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split,
-        |       count(*) AS n
-        |FROM h GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-      """WITH h AS (SELECT source,
         |    cast(('0x'||substr(md5(cast(doc_id AS VARCHAR)),1,8)) AS BIGINT) % 100 AS b
         |  FROM documents)
         |SELECT source,
         |       CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split,
         |       count(*) AS n
-        |FROM h GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+        |FROM h GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+      Hand("hex to integer: DuckDB casts '0x' || hex, Spark calls conv(hex, 16, 10)",
+      """WITH h AS (SELECT source,
+        |    cast(conv(substr(md5(cast(doc_id AS STRING)),1,8),16,10) AS BIGINT) % 100 AS b
+        |  FROM documents)
+        |SELECT source,
+        |       CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split,
+        |       count(*) AS n
+        |FROM h GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
 
     // Concat-and-chunk sequence packing: lay all documents end-to-end in
     // doc_id order and split the token stream into 512-token context
@@ -1199,15 +1127,6 @@ object Queries {
     // tier is operators.GlobalWindow.runningSum, hash-proven equivalent
     // by x102.
     q("x107_sequence_packing",
-      """WITH t AS (SELECT doc_id, size(split(text,' ')) AS n FROM documents),
-        |c AS (SELECT doc_id, n,
-        |        sum(n) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) - n AS start_tok
-        |      FROM t)
-        |SELECT doc_id, cast(n AS BIGINT) AS n_toks,
-        |       cast(start_tok AS BIGINT) AS start_tok,
-        |       cast(floor(start_tok/512.0) AS BIGINT) AS first_win,
-        |       cast(floor((start_tok + n - 1)/512.0) AS BIGINT) AS last_win
-        |FROM c ORDER BY doc_id""".stripMargin,
       """WITH t AS (SELECT doc_id, len(string_split(text,' ')) AS n FROM documents),
         |c AS (SELECT doc_id, n,
         |        cast(sum(n) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS BIGINT) - n AS start_tok
@@ -1224,6 +1143,17 @@ object Queries {
     // stays linear in corpus size at scale (the benchmark gram set is
     // the small side; broadcast it).
     q("x108_contamination",
+      """WITH sh AS (SELECT doc_id, source, unnest(gs) AS g
+        |  FROM (SELECT doc_id, source,
+        |          list_distinct([array_to_string(w[i:i+4],' ') FOR i IN range(1, len(w)-3)]) AS gs
+        |        FROM (SELECT doc_id, source, string_split(text,' ') AS w FROM documents)
+        |        WHERE len(w) >= 5))
+        |SELECT source, count(DISTINCT doc_id) AS contaminated
+        |FROM sh
+        |WHERE source <> 'src0'
+        |  AND g IN (SELECT g FROM sh WHERE source = 'src0')
+        |GROUP BY 1 ORDER BY 1""".stripMargin,
+      Hand("list comprehension: shingles via transform over slice",
       """WITH sh AS (SELECT doc_id, source, g
         |  FROM (SELECT doc_id, source,
         |          explode(array_distinct(transform(sequence(1, size(w)-4),
@@ -1234,17 +1164,7 @@ object Queries {
         |FROM sh
         |WHERE source <> 'src0'
         |  AND g IN (SELECT g FROM sh WHERE source = 'src0')
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-      """WITH sh AS (SELECT doc_id, source, unnest(gs) AS g
-        |  FROM (SELECT doc_id, source,
-        |          list_distinct([array_to_string(w[i:i+4],' ') FOR i IN range(1, len(w)-3)]) AS gs
-        |        FROM (SELECT doc_id, source, string_split(text,' ') AS w FROM documents)
-        |        WHERE len(w) >= 5))
-        |SELECT source, count(DISTINCT doc_id) AS contaminated
-        |FROM sh
-        |WHERE source <> 'src0'
-        |  AND g IN (SELECT g FROM sh WHERE source = 'src0')
-        |GROUP BY 1 ORDER BY 1""".stripMargin),
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // Deterministic mixture resampling: per-source target weight in
     // basis points (here: 1.5x for even-digit sources, 0.5x for odd) —
@@ -1256,16 +1176,6 @@ object Queries {
     // op every pretraining pipeline runs.
     q("x109_mixture_resample",
       """WITH w AS (SELECT doc_id, source,
-        |    cast(conv(substr(md5(cast(doc_id AS STRING)),1,8),16,10) AS BIGINT) % 10000 AS hb,
-        |    CASE WHEN right(source, 1) IN ('0','2','4','6','8') THEN 15000 ELSE 5000 END AS w_bp
-        |  FROM documents),
-        |r AS (SELECT doc_id, source,
-        |        cast(w_bp div 10000 AS INT) + CASE WHEN hb < w_bp % 10000 THEN 1 ELSE 0 END AS copies
-        |      FROM w)
-        |SELECT doc_id, source, explode(sequence(1, copies)) AS copy_id
-        |FROM r WHERE copies > 0
-        |ORDER BY doc_id, copy_id""".stripMargin,
-      """WITH w AS (SELECT doc_id, source,
         |    cast(('0x'||substr(md5(cast(doc_id AS VARCHAR)),1,8)) AS BIGINT) % 10000 AS hb,
         |    CASE WHEN right(source, 1) IN ('0','2','4','6','8') THEN 15000 ELSE 5000 END AS w_bp
         |  FROM documents),
@@ -1274,7 +1184,18 @@ object Queries {
         |      FROM w)
         |SELECT doc_id, source, cast(unnest(range(1, copies + 1)) AS INT) AS copy_id
         |FROM r WHERE copies > 0
-        |ORDER BY doc_id, copy_id""".stripMargin),
+        |ORDER BY doc_id, copy_id""".stripMargin,
+      Hand("hex via conv(hex, 16, 10); range(1, n + 1) is sequence(1, n)",
+      """WITH w AS (SELECT doc_id, source,
+        |    cast(conv(substr(md5(cast(doc_id AS STRING)),1,8),16,10) AS BIGINT) % 10000 AS hb,
+        |    CASE WHEN right(source, 1) IN ('0','2','4','6','8') THEN 15000 ELSE 5000 END AS w_bp
+        |  FROM documents),
+        |r AS (SELECT doc_id, source,
+        |        cast(w_bp div 10000 AS INT) + CASE WHEN hb < w_bp % 10000 THEN 1 ELSE 0 END AS copies
+        |      FROM w)
+        |SELECT doc_id, source, explode(sequence(1, copies)) AS copy_id
+        |FROM r WHERE copies > 0
+        |ORDER BY doc_id, copy_id""".stripMargin)),
 
     // Repetition quality signal (the C4-style boilerplate detector x50's
     // battery lacks): fraction of repeated word 3-grams per doc, integer
@@ -1283,21 +1204,22 @@ object Queries {
     q("x110_repetition_filter",
       """SELECT doc_id, n_grams, n_distinct,
         |       cast(floor((n_grams - n_distinct)*10000.0/n_grams) AS BIGINT) AS rep_bp
+        |FROM (SELECT doc_id, cast(len(gs) AS BIGINT) AS n_grams,
+        |             cast(len(list_distinct(gs)) AS BIGINT) AS n_distinct
+        |      FROM (SELECT doc_id, [array_to_string(w[i:i+2],' ') FOR i IN range(1, len(w)-1)] AS gs
+        |            FROM (SELECT doc_id, string_split(text,' ') AS w FROM documents)
+        |            WHERE len(w) >= 3))
+        |ORDER BY doc_id""".stripMargin,
+      Hand("list comprehension: shingles via transform over slice",
+      """SELECT doc_id, n_grams, n_distinct,
+        |       cast(floor((n_grams - n_distinct)*10000.0/n_grams) AS BIGINT) AS rep_bp
         |FROM (SELECT doc_id, cast(size(gs) AS BIGINT) AS n_grams,
         |             cast(size(array_distinct(gs)) AS BIGINT) AS n_distinct
         |      FROM (SELECT doc_id, transform(sequence(1, size(w)-2),
         |                     i -> concat_ws(' ', slice(w, i, 3))) AS gs
         |            FROM (SELECT doc_id, split(text,' ') AS w FROM documents)
         |            WHERE size(w) >= 3))
-        |ORDER BY doc_id""".stripMargin,
-      """SELECT doc_id, n_grams, n_distinct,
-        |       cast(floor((n_grams - n_distinct)*10000.0/n_grams) AS BIGINT) AS rep_bp
-        |FROM (SELECT doc_id, cast(len(gs) AS BIGINT) AS n_grams,
-        |             cast(len(list_distinct(gs)) AS BIGINT) AS n_distinct
-        |      FROM (SELECT doc_id, [array_to_string(w[i:i+2],' ') FOR i IN range(1, len(w)-1)] AS gs
-        |            FROM (SELECT doc_id, string_split(text,' ') AS w FROM documents)
-        |            WHERE len(w) >= 3))
-        |ORDER BY doc_id""".stripMargin),
+        |ORDER BY doc_id""".stripMargin)),
 
     // PII redaction (the scrub stage every training pipeline runs before
     // text ships): emails, IPv4s, and phone-shaped numbers replaced with
@@ -1310,22 +1232,6 @@ object Queries {
     // Dialect: Spark regexp_replace is replace-all and counts via
     // regexp_count; DuckDB needs the 'g' flag and len(regexp_extract_all).
     q("x112_pii_redact",
-      """WITH t AS (SELECT c_custkey,
-        |    concat('contact user', cast(c_custkey AS STRING), '@mail.example.com ip=10.',
-        |           cast(c_custkey % 256 AS STRING), '.', cast((c_custkey * 7) % 256 AS STRING), '.',
-        |           cast((c_custkey * 13) % 256 AS STRING), ' tel 555-',
-        |           lpad(cast(c_custkey % 1000 AS STRING), 3, '0'), '-',
-        |           lpad(cast((c_custkey * 31) % 10000 AS STRING), 4, '0'), ' end') AS text
-        |  FROM customer)
-        |SELECT c_custkey,
-        |       regexp_replace(regexp_replace(regexp_replace(text,
-        |         '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+[.][A-Za-z]{2,}', '<EMAIL>'),
-        |         '[0-9]{1,3}[.][0-9]{1,3}[.][0-9]{1,3}[.][0-9]{1,3}', '<IP>'),
-        |         '[0-9]{3}-[0-9]{3}-[0-9]{4}', '<PHONE>') AS redacted,
-        |       cast(regexp_count(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+[.][A-Za-z]{2,}') AS BIGINT) AS n_email,
-        |       cast(regexp_count(text, '[0-9]{1,3}[.][0-9]{1,3}[.][0-9]{1,3}[.][0-9]{1,3}') AS BIGINT) AS n_ip,
-        |       cast(regexp_count(text, '[0-9]{3}-[0-9]{3}-[0-9]{4}') AS BIGINT) AS n_phone
-        |FROM t ORDER BY c_custkey""".stripMargin,
       """WITH t AS (SELECT c_custkey,
         |    concat('contact user', cast(c_custkey AS VARCHAR), '@mail.example.com ip=10.',
         |           cast(c_custkey % 256 AS VARCHAR), '.', cast((c_custkey * 7) % 256 AS VARCHAR), '.',
@@ -1341,7 +1247,24 @@ object Queries {
         |       cast(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+[.][A-Za-z]{2,}')) AS BIGINT) AS n_email,
         |       cast(len(regexp_extract_all(text, '[0-9]{1,3}[.][0-9]{1,3}[.][0-9]{1,3}[.][0-9]{1,3}')) AS BIGINT) AS n_ip,
         |       cast(len(regexp_extract_all(text, '[0-9]{3}-[0-9]{3}-[0-9]{4}')) AS BIGINT) AS n_phone
-        |FROM t ORDER BY c_custkey""".stripMargin),
+        |FROM t ORDER BY c_custkey""".stripMargin,
+      Hand("no 'g' flag: Spark replaces every match; regexp_count counts them",
+      """WITH t AS (SELECT c_custkey,
+        |    concat('contact user', cast(c_custkey AS STRING), '@mail.example.com ip=10.',
+        |           cast(c_custkey % 256 AS STRING), '.', cast((c_custkey * 7) % 256 AS STRING), '.',
+        |           cast((c_custkey * 13) % 256 AS STRING), ' tel 555-',
+        |           lpad(cast(c_custkey % 1000 AS STRING), 3, '0'), '-',
+        |           lpad(cast((c_custkey * 31) % 10000 AS STRING), 4, '0'), ' end') AS text
+        |  FROM customer)
+        |SELECT c_custkey,
+        |       regexp_replace(regexp_replace(regexp_replace(text,
+        |         '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+[.][A-Za-z]{2,}', '<EMAIL>'),
+        |         '[0-9]{1,3}[.][0-9]{1,3}[.][0-9]{1,3}[.][0-9]{1,3}', '<IP>'),
+        |         '[0-9]{3}-[0-9]{3}-[0-9]{4}', '<PHONE>') AS redacted,
+        |       cast(regexp_count(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+[.][A-Za-z]{2,}') AS BIGINT) AS n_email,
+        |       cast(regexp_count(text, '[0-9]{1,3}[.][0-9]{1,3}[.][0-9]{1,3}[.][0-9]{1,3}') AS BIGINT) AS n_ip,
+        |       cast(regexp_count(text, '[0-9]{3}-[0-9]{3}-[0-9]{4}') AS BIGINT) AS n_phone
+        |FROM t ORDER BY c_custkey""".stripMargin)),
 
     // TF-IDF top-3 terms per document (corpus keyword extraction). Scores
     // in integer micro-units — floor(tf·ln(N/df)·1e6) — the x73 trick
@@ -1351,19 +1274,6 @@ object Queries {
     // sized term aggregate joined back on term, top-k a per-doc window —
     // all key-partitioned, nothing global.
     q("x113_tfidf_topk",
-      """WITH tok AS (SELECT doc_id, w, count(*) AS tf
-        |             FROM (SELECT doc_id, explode(split(text,' ')) AS w FROM documents)
-        |             GROUP BY 1,2),
-        |dfq AS (SELECT w, count(*) AS df FROM tok GROUP BY 1),
-        |n AS (SELECT count(*) AS n FROM documents),
-        |sc AS (SELECT t.doc_id, t.w,
-        |         cast(floor(t.tf * ln(n.n / cast(d.df AS DOUBLE)) * 1000000) AS BIGINT) AS score_u
-        |       FROM tok t JOIN dfq d ON t.w = d.w CROSS JOIN n),
-        |r AS (SELECT doc_id, w, score_u,
-        |        row_number() OVER (PARTITION BY doc_id ORDER BY score_u DESC, w) AS rk
-        |      FROM sc)
-        |SELECT doc_id, w, score_u, cast(rk AS BIGINT) AS rk
-        |FROM r WHERE rk <= 3 ORDER BY doc_id, rk""".stripMargin,
       """WITH tok AS (SELECT doc_id, w, count(*) AS tf
         |             FROM (SELECT doc_id, unnest(string_split(text,' ')) AS w FROM documents)
         |             GROUP BY 1,2),
@@ -1387,22 +1297,6 @@ object Queries {
     // term df joins broadcast, top-20 is TakeOrderedAndProject — no
     // global sort materializes.
     q("x114_bm25",
-      """WITH tok AS (SELECT doc_id, w, count(*) AS tf
-        |             FROM (SELECT doc_id, explode(split(text,' ')) AS w FROM documents)
-        |             GROUP BY 1,2),
-        |dl AS (SELECT doc_id, size(split(text,' ')) AS dl FROM documents),
-        |st AS (SELECT count(*) AS n, cast(sum(dl) AS DOUBLE)/count(*) AS avgdl FROM dl),
-        |qt AS (SELECT explode(array('spark','window','join')) AS w),
-        |dfq AS (SELECT t.w, count(*) AS df FROM tok t JOIN qt ON t.w = qt.w GROUP BY 1),
-        |sc AS (SELECT t.doc_id,
-        |         sum(cast(floor(ln((st.n - d.df + 0.5)/(d.df + 0.5) + 1.0)
-        |             * t.tf * 2.2
-        |             / (t.tf + 1.2*(0.25 + 0.75*dl.dl/st.avgdl)) * 1000000) AS BIGINT)) AS score_u
-        |       FROM tok t JOIN dfq d ON t.w = d.w
-        |       JOIN dl ON t.doc_id = dl.doc_id CROSS JOIN st
-        |       GROUP BY 1)
-        |SELECT doc_id, cast(score_u AS BIGINT) AS score_u
-        |FROM sc ORDER BY score_u DESC, doc_id LIMIT 20""".stripMargin,
       """WITH tok AS (SELECT doc_id, w, count(*) AS tf
         |             FROM (SELECT doc_id, unnest(string_split(text,' ')) AS w FROM documents)
         |             GROUP BY 1,2),
@@ -1431,23 +1325,6 @@ object Queries {
     // rollup. Dominance is O(types·tokens) per row — bounded by the
     // vocabulary, and never a join.
     q("x115_gopher_rules",
-      """WITH t AS (SELECT doc_id, source, split(text,' ') AS w, n_chars FROM documents),
-        |m AS (SELECT doc_id, source,
-        |        size(w) AS n_toks,
-        |        size(array_distinct(w)) AS n_types,
-        |        (n_chars - (size(w)-1)) * 100 div size(w) AS mwl_c,
-        |        array_max(transform(array_distinct(w),
-        |          x -> size(filter(w, y -> y = x)))) AS top_cnt
-        |      FROM t)
-        |SELECT source,
-        |       count(*) AS docs,
-        |       cast(sum(CASE WHEN n_toks < 30 THEN 1 ELSE 0 END) AS BIGINT) AS viol_short,
-        |       cast(sum(CASE WHEN mwl_c < 400 OR mwl_c > 500 THEN 1 ELSE 0 END) AS BIGINT) AS viol_wordlen,
-        |       cast(sum(CASE WHEN n_types*2 < n_toks THEN 1 ELSE 0 END) AS BIGINT) AS viol_ttr,
-        |       cast(sum(CASE WHEN top_cnt*10 > n_toks THEN 1 ELSE 0 END) AS BIGINT) AS viol_dominance,
-        |       cast(sum(CASE WHEN n_toks >= 30 AND mwl_c BETWEEN 400 AND 500
-        |                      AND n_types*2 >= n_toks AND top_cnt*10 <= n_toks THEN 1 ELSE 0 END) AS BIGINT) AS pass_all
-        |FROM m GROUP BY 1 ORDER BY 1""".stripMargin,
       """WITH t AS (SELECT doc_id, source, string_split(text,' ') AS w, n_chars FROM documents),
         |m AS (SELECT doc_id, source,
         |        len(w) AS n_toks,
@@ -1476,6 +1353,16 @@ object Queries {
     // the shared set is a semi-join back on the same key, and the
     // top-20 is TakeOrderedAndProject. Linear in total windows.
     q("x116_dup_window_scan",
+      """WITH t AS (SELECT doc_id, string_split(text,' ') AS w FROM documents WHERE len(string_split(text,' ')) >= 8),
+        |wins AS (SELECT doc_id, unnest(hs) AS h
+        |         FROM (SELECT doc_id, [md5(array_to_string(w[i:i+7],' ')) FOR i IN range(1, len(w)-6)] AS hs FROM t)),
+        |shared AS (SELECT h FROM wins GROUP BY h HAVING count(DISTINCT doc_id) >= 2),
+        |per AS (SELECT doc_id, count(*) AS n_win,
+        |          cast(sum(CASE WHEN h IN (SELECT h FROM shared) THEN 1 ELSE 0 END) AS BIGINT) AS n_dup
+        |        FROM wins GROUP BY 1)
+        |SELECT doc_id, n_win, n_dup, cast(floor(n_dup*10000.0/n_win) AS BIGINT) AS dup_bp
+        |FROM per ORDER BY dup_bp DESC, doc_id LIMIT 20""".stripMargin,
+      Hand("list comprehension: shingles via transform over slice",
       """WITH t AS (SELECT doc_id, split(text,' ') AS w FROM documents WHERE size(split(text,' ')) >= 8),
         |wins AS (SELECT doc_id, explode(transform(sequence(1, size(w)-7),
         |           i -> md5(concat_ws(' ', slice(w, i, 8))))) AS h
@@ -1485,16 +1372,7 @@ object Queries {
         |          cast(sum(CASE WHEN h IN (SELECT h FROM shared) THEN 1 ELSE 0 END) AS BIGINT) AS n_dup
         |        FROM wins GROUP BY 1)
         |SELECT doc_id, n_win, n_dup, cast(floor(n_dup*10000.0/n_win) AS BIGINT) AS dup_bp
-        |FROM per ORDER BY dup_bp DESC, doc_id LIMIT 20""".stripMargin,
-      """WITH t AS (SELECT doc_id, string_split(text,' ') AS w FROM documents WHERE len(string_split(text,' ')) >= 8),
-        |wins AS (SELECT doc_id, unnest(hs) AS h
-        |         FROM (SELECT doc_id, [md5(array_to_string(w[i:i+7],' ')) FOR i IN range(1, len(w)-6)] AS hs FROM t)),
-        |shared AS (SELECT h FROM wins GROUP BY h HAVING count(DISTINCT doc_id) >= 2),
-        |per AS (SELECT doc_id, count(*) AS n_win,
-        |          cast(sum(CASE WHEN h IN (SELECT h FROM shared) THEN 1 ELSE 0 END) AS BIGINT) AS n_dup
-        |        FROM wins GROUP BY 1)
-        |SELECT doc_id, n_win, n_dup, cast(floor(n_dup*10000.0/n_win) AS BIGINT) AS dup_bp
-        |FROM per ORDER BY dup_bp DESC, doc_id LIMIT 20""".stripMargin),
+        |FROM per ORDER BY dup_bp DESC, doc_id LIMIT 20""".stripMargin)),
 
     // Anchor-based semantic clustering census: assign every vector to
     // its nearest of 8 fixed anchor vectors (vec_id 0-7) by cosine, and
@@ -1516,17 +1394,6 @@ object Queries {
       """WITH a AS (SELECT vec_id AS anchor_id, embedding AS ae FROM embeddings WHERE vec_id < 8),
         |v AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 8),
         |sc AS (SELECT v.vec_id, a.anchor_id,
-        |         round(cosine_sim(v.embedding, a.ae), 4) AS sim
-        |       FROM v CROSS JOIN a),
-        |best AS (SELECT vec_id, anchor_id, sim,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, anchor_id) AS rn
-        |         FROM sc)
-        |SELECT anchor_id, count(*) AS n_assigned,
-        |       cast(sum(cast(round(sim*10000, 0) AS BIGINT)) AS BIGINT) AS sum_sim4
-        |FROM best WHERE rn = 1 GROUP BY 1 ORDER BY 1""".stripMargin,
-      """WITH a AS (SELECT vec_id AS anchor_id, embedding AS ae FROM embeddings WHERE vec_id < 8),
-        |v AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 8),
-        |sc AS (SELECT v.vec_id, a.anchor_id,
         |         round(list_cosine_similarity(cast(v.embedding AS DOUBLE[]), cast(a.ae AS DOUBLE[])), 4) AS sim
         |       FROM v CROSS JOIN a),
         |best AS (SELECT vec_id, anchor_id, sim,
@@ -1534,7 +1401,19 @@ object Queries {
         |         FROM sc)
         |SELECT anchor_id, count(*) AS n_assigned,
         |       cast(sum(cast(round(sim*10000, 0) AS BIGINT)) AS BIGINT) AS sum_sim4
-        |FROM best WHERE rn = 1 GROUP BY 1 ORDER BY 1""".stripMargin),
+        |FROM best WHERE rn = 1 GROUP BY 1 ORDER BY 1""".stripMargin,
+      Hand("cosine_sim reads FLOAT arrays; DuckDB needs the DOUBLE[] casts",
+      """WITH a AS (SELECT vec_id AS anchor_id, embedding AS ae FROM embeddings WHERE vec_id < 8),
+        |v AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 8),
+        |sc AS (SELECT v.vec_id, a.anchor_id,
+        |         round(cosine_sim(v.embedding, a.ae), 4) AS sim
+        |       FROM v CROSS JOIN a),
+        |best AS (SELECT vec_id, anchor_id, sim,
+        |           row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, anchor_id) AS rn
+        |         FROM sc)
+        |SELECT anchor_id, count(*) AS n_assigned,
+        |       cast(sum(cast(round(sim*10000, 0) AS BIGINT)) AS BIGINT) AS sum_sim4
+        |FROM best WHERE rn = 1 GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // Incremental near-dup: dedup the NEW batch (doc_id ≡ 4 mod 5, the
     // daily increment) against the EXISTING corpus without ever
@@ -1547,26 +1426,6 @@ object Queries {
     // at a real corpus the old side's signatures are a precomputed index
     // read from parquet, not recomputed (sources.Layout bucketed by mh).
     q("x118_incremental_neardup",
-      """WITH w AS (SELECT doc_id, split(text,' ') AS w, doc_id % 5 = 4 AS is_new FROM documents),
-        |sh AS (SELECT doc_id, is_new, explode(array_distinct(
-        |         transform(sequence(1, size(w)-2), i -> concat_ws(' ', slice(w, i, 3))))) AS sh
-        |       FROM w WHERE size(w) >= 3),
-        |hv AS (SELECT doc_id, is_new, cast(conv(substr(md5(sh),1,8),16,10) AS BIGINT) AS hv FROM sh),
-        |perm AS (SELECT * FROM VALUES (0,1299721,104729),(1,1299827,104743),(2,1300021,104759),
-        |         (3,1300033,104761),(4,1300109,104773),(5,1300151,104779),(6,1300187,104789),
-        |         (7,1300201,104801),(8,1300247,104803),(9,1300289,104827),(10,1300303,104831),
-        |         (11,1300313,104849),(12,1300333,104851),(13,1300351,104869),(14,1300369,104879),
-        |         (15,1300387,104891) AS perm(i,a,b)),
-        |sig AS (SELECT doc_id, is_new, p.i, min(mod(p.a*hv.hv + p.b, 2147483647)) AS mh
-        |        FROM hv CROSS JOIN perm p GROUP BY 1,2,3),
-        |cand AS (SELECT sn.doc_id AS new_id, sc.doc_id AS corpus_id, count(*) AS m
-        |         FROM sig sn JOIN sig sc ON sn.i = sc.i AND sn.mh = sc.mh
-        |         WHERE sn.is_new AND NOT sc.is_new
-        |         GROUP BY 1,2),
-        |best AS (SELECT new_id, corpus_id, m,
-        |           row_number() OVER (PARTITION BY new_id ORDER BY m DESC, corpus_id) AS rn
-        |         FROM cand WHERE m >= 8)
-        |SELECT new_id, corpus_id, m FROM best WHERE rn = 1 ORDER BY new_id""".stripMargin,
       """WITH w AS (SELECT doc_id, string_split(text,' ') AS w, doc_id % 5 = 4 AS is_new FROM documents),
         |sh AS (SELECT doc_id, is_new, unnest(list_distinct(
         |         [array_to_string(w[i:i+2],' ') FOR i IN range(1, len(w)-1)])) AS sh
@@ -1586,7 +1445,28 @@ object Queries {
         |best AS (SELECT new_id, corpus_id, m,
         |           row_number() OVER (PARTITION BY new_id ORDER BY m DESC, corpus_id) AS rn
         |         FROM cand WHERE m >= 8)
-        |SELECT new_id, corpus_id, m FROM best WHERE rn = 1 ORDER BY new_id""".stripMargin),
+        |SELECT new_id, corpus_id, m FROM best WHERE rn = 1 ORDER BY new_id""".stripMargin,
+      Hand("shingles via transform/slice; hex via conv(hex, 16, 10)",
+      """WITH w AS (SELECT doc_id, split(text,' ') AS w, doc_id % 5 = 4 AS is_new FROM documents),
+        |sh AS (SELECT doc_id, is_new, explode(array_distinct(
+        |         transform(sequence(1, size(w)-2), i -> concat_ws(' ', slice(w, i, 3))))) AS sh
+        |       FROM w WHERE size(w) >= 3),
+        |hv AS (SELECT doc_id, is_new, cast(conv(substr(md5(sh),1,8),16,10) AS BIGINT) AS hv FROM sh),
+        |perm AS (SELECT * FROM VALUES (0,1299721,104729),(1,1299827,104743),(2,1300021,104759),
+        |         (3,1300033,104761),(4,1300109,104773),(5,1300151,104779),(6,1300187,104789),
+        |         (7,1300201,104801),(8,1300247,104803),(9,1300289,104827),(10,1300303,104831),
+        |         (11,1300313,104849),(12,1300333,104851),(13,1300351,104869),(14,1300369,104879),
+        |         (15,1300387,104891) AS perm(i,a,b)),
+        |sig AS (SELECT doc_id, is_new, p.i, min(mod(p.a*hv.hv + p.b, 2147483647)) AS mh
+        |        FROM hv CROSS JOIN perm p GROUP BY 1,2,3),
+        |cand AS (SELECT sn.doc_id AS new_id, sc.doc_id AS corpus_id, count(*) AS m
+        |         FROM sig sn JOIN sig sc ON sn.i = sc.i AND sn.mh = sc.mh
+        |         WHERE sn.is_new AND NOT sc.is_new
+        |         GROUP BY 1,2),
+        |best AS (SELECT new_id, corpus_id, m,
+        |           row_number() OVER (PARTITION BY new_id ORDER BY m DESC, corpus_id) AS rn
+        |         FROM cand WHERE m >= 8)
+        |SELECT new_id, corpus_id, m FROM best WHERE rn = 1 ORDER BY new_id""".stripMargin)),
 
     // SemDeDup (Abbas et al. 2023): embedding near-dup detection scoped
     // to semantic clusters — assign every vector to its nearest anchor
@@ -1598,23 +1478,6 @@ object Queries {
     // vec_id of each qualifying pair survives (keep_id). The LSH-bucketed
     // scale sibling with no exact pair pass is llm/Ann.cosineNearDups.
     q("x119_semdedup",
-      """WITH a AS (SELECT vec_id AS anchor_id, embedding AS ae FROM embeddings WHERE vec_id < 8),
-        |v AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 8),
-        |sc AS (SELECT v.vec_id, v.embedding, a.anchor_id,
-        |         round(cosine_sim(v.embedding, a.ae), 4) AS asim
-        |       FROM v CROSS JOIN a),
-        |best AS (SELECT vec_id, embedding, anchor_id
-        |         FROM (SELECT *, row_number() OVER (PARTITION BY vec_id
-        |                 ORDER BY asim DESC, anchor_id) AS rn FROM sc) t
-        |         WHERE rn = 1),
-        |pairs AS (SELECT x.anchor_id AS cluster_id, x.vec_id AS keep_id, y.vec_id AS drop_id,
-        |            round(cosine_sim(x.embedding, y.embedding), 4) AS sim
-        |          FROM best x JOIN best y
-        |            ON x.anchor_id = y.anchor_id AND x.vec_id < y.vec_id)
-        |SELECT cluster_id, keep_id, drop_id,
-        |       cast(round(sim*10000, 0) AS BIGINT) AS sim4
-        |FROM pairs WHERE sim >= 0.35
-        |ORDER BY cluster_id, keep_id, drop_id""".stripMargin,
       """WITH a AS (SELECT vec_id AS anchor_id, cast(embedding AS DOUBLE[]) AS ae FROM embeddings WHERE vec_id < 8),
         |v AS (SELECT vec_id, cast(embedding AS DOUBLE[]) AS embedding FROM embeddings WHERE vec_id >= 8),
         |sc AS (SELECT v.vec_id, v.embedding, a.anchor_id,
@@ -1631,7 +1494,25 @@ object Queries {
         |SELECT cluster_id, keep_id, drop_id,
         |       cast(round(sim*10000, 0) AS BIGINT) AS sim4
         |FROM pairs WHERE sim >= 0.35
-        |ORDER BY cluster_id, keep_id, drop_id""".stripMargin),
+        |ORDER BY cluster_id, keep_id, drop_id""".stripMargin,
+      Hand("cosine_sim reads FLOAT arrays; DuckDB needs the DOUBLE[] casts",
+      """WITH a AS (SELECT vec_id AS anchor_id, embedding AS ae FROM embeddings WHERE vec_id < 8),
+        |v AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 8),
+        |sc AS (SELECT v.vec_id, v.embedding, a.anchor_id,
+        |         round(cosine_sim(v.embedding, a.ae), 4) AS asim
+        |       FROM v CROSS JOIN a),
+        |best AS (SELECT vec_id, embedding, anchor_id
+        |         FROM (SELECT *, row_number() OVER (PARTITION BY vec_id
+        |                 ORDER BY asim DESC, anchor_id) AS rn FROM sc) t
+        |         WHERE rn = 1),
+        |pairs AS (SELECT x.anchor_id AS cluster_id, x.vec_id AS keep_id, y.vec_id AS drop_id,
+        |            round(cosine_sim(x.embedding, y.embedding), 4) AS sim
+        |          FROM best x JOIN best y
+        |            ON x.anchor_id = y.anchor_id AND x.vec_id < y.vec_id)
+        |SELECT cluster_id, keep_id, drop_id,
+        |       cast(round(sim*10000, 0) AS BIGINT) AS sim4
+        |FROM pairs WHERE sim >= 0.35
+        |ORDER BY cluster_id, keep_id, drop_id""".stripMargin)),
 
     // kNN-vote label propagation: predict each held-out vector's label
     // from the majority label of its 5 nearest labeled neighbors (cosine).
@@ -1641,23 +1522,6 @@ object Queries {
     // becomes an ANN probe (x59/x104) feeding the same vote aggregation;
     // here the exact form doubles as the recall oracle.
     q("x120_knn_vote",
-      """WITH q AS (SELECT vec_id, embedding, label FROM embeddings WHERE vec_id < 50),
-        |r AS (SELECT vec_id, embedding, label FROM embeddings WHERE vec_id >= 50),
-        |sc AS (SELECT q.vec_id AS qid, q.label AS true_label, r.vec_id AS rid, r.label AS nlabel,
-        |         round(cosine_sim(q.embedding, r.embedding), 4) AS sim
-        |       FROM q CROSS JOIN r),
-        |top AS (SELECT qid, true_label, nlabel, sim,
-        |          row_number() OVER (PARTITION BY qid ORDER BY sim DESC, rid) AS rn
-        |        FROM sc),
-        |votes AS (SELECT qid, true_label, nlabel, count(*) AS c, max(sim) AS msim
-        |          FROM top WHERE rn <= 5 GROUP BY 1, 2, 3),
-        |pred AS (SELECT qid, true_label, nlabel AS pred_label,
-        |           row_number() OVER (PARTITION BY qid
-        |             ORDER BY c DESC, msim DESC, nlabel) AS vr
-        |         FROM votes)
-        |SELECT qid, true_label, pred_label,
-        |       CASE WHEN pred_label = true_label THEN 1 ELSE 0 END AS correct
-        |FROM pred WHERE vr = 1 ORDER BY qid""".stripMargin,
       """WITH q AS (SELECT vec_id, cast(embedding AS DOUBLE[]) AS embedding, label FROM embeddings WHERE vec_id < 50),
         |r AS (SELECT vec_id, cast(embedding AS DOUBLE[]) AS embedding, label FROM embeddings WHERE vec_id >= 50),
         |sc AS (SELECT q.vec_id AS qid, q.label AS true_label, r.vec_id AS rid, r.label AS nlabel,
@@ -1674,7 +1538,25 @@ object Queries {
         |         FROM votes)
         |SELECT qid, true_label, pred_label,
         |       CASE WHEN pred_label = true_label THEN 1 ELSE 0 END AS correct
-        |FROM pred WHERE vr = 1 ORDER BY qid""".stripMargin),
+        |FROM pred WHERE vr = 1 ORDER BY qid""".stripMargin,
+      Hand("cosine_sim reads FLOAT arrays; DuckDB needs the DOUBLE[] casts",
+      """WITH q AS (SELECT vec_id, embedding, label FROM embeddings WHERE vec_id < 50),
+        |r AS (SELECT vec_id, embedding, label FROM embeddings WHERE vec_id >= 50),
+        |sc AS (SELECT q.vec_id AS qid, q.label AS true_label, r.vec_id AS rid, r.label AS nlabel,
+        |         round(cosine_sim(q.embedding, r.embedding), 4) AS sim
+        |       FROM q CROSS JOIN r),
+        |top AS (SELECT qid, true_label, nlabel, sim,
+        |          row_number() OVER (PARTITION BY qid ORDER BY sim DESC, rid) AS rn
+        |        FROM sc),
+        |votes AS (SELECT qid, true_label, nlabel, count(*) AS c, max(sim) AS msim
+        |          FROM top WHERE rn <= 5 GROUP BY 1, 2, 3),
+        |pred AS (SELECT qid, true_label, nlabel AS pred_label,
+        |           row_number() OVER (PARTITION BY qid
+        |             ORDER BY c DESC, msim DESC, nlabel) AS vr
+        |         FROM votes)
+        |SELECT qid, true_label, pred_label,
+        |       CASE WHEN pred_label = true_label THEN 1 ELSE 0 END AS correct
+        |FROM pred WHERE vr = 1 ORDER BY qid""".stripMargin)),
 
     // Boilerplate-prefix census: hash each document's first 8 words and
     // report prefix groups shared by ≥2 docs — the cheap first-pass
@@ -1683,18 +1565,19 @@ object Queries {
     // hash-agg shuffle; at 100 TB this is the cheapest dedup signal that
     // exists, and keep_id implements keep-first within each family.
     q("x121_prefix_census",
-      """WITH w AS (SELECT doc_id, split(text,' ') AS w FROM documents),
-        |p AS (SELECT doc_id, md5(concat_ws(' ', slice(w, 1, 8))) AS prefix_hash
-        |      FROM w WHERE size(w) >= 8)
-        |SELECT prefix_hash, count(*) AS n_docs, min(doc_id) AS keep_id, max(doc_id) AS last_id
-        |FROM p GROUP BY 1 HAVING count(*) >= 2
-        |ORDER BY n_docs DESC, prefix_hash""".stripMargin,
       """WITH w AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
         |p AS (SELECT doc_id, md5(array_to_string(w[1:8], ' ')) AS prefix_hash
         |      FROM w WHERE len(w) >= 8)
         |SELECT prefix_hash, count(*) AS n_docs, min(doc_id) AS keep_id, max(doc_id) AS last_id
         |FROM p GROUP BY 1 HAVING count(*) >= 2
-        |ORDER BY n_docs DESC, prefix_hash""".stripMargin),
+        |ORDER BY n_docs DESC, prefix_hash""".stripMargin,
+      Hand("list slice w[a:b]: Spark takes slice(w, start, length)",
+      """WITH w AS (SELECT doc_id, split(text,' ') AS w FROM documents),
+        |p AS (SELECT doc_id, md5(concat_ws(' ', slice(w, 1, 8))) AS prefix_hash
+        |      FROM w WHERE size(w) >= 8)
+        |SELECT prefix_hash, count(*) AS n_docs, min(doc_id) AS keep_id, max(doc_id) AS last_id
+        |FROM p GROUP BY 1 HAVING count(*) >= 2
+        |ORDER BY n_docs DESC, prefix_hash""".stripMargin)),
 
     // Token-budget planner: given per-source token counts and an
     // equal-share target mixture, compute each source's natural weight
@@ -1703,16 +1586,6 @@ object Queries {
     // high-quality sources, subsample big ones". Pure two-level agg on
     // fixed-point outputs; the heavy input (token counting) is one scan.
     q("x122_token_budget",
-      """WITH s AS (SELECT source, cast(sum(size(split(text,' '))) AS BIGINT) AS n_tokens,
-        |             count(*) AS n_docs
-        |           FROM documents GROUP BY 1),
-        |t AS (SELECT source, n_docs, n_tokens,
-        |        sum(n_tokens) OVER () AS tot, count(*) OVER () AS n_src
-        |      FROM s)
-        |SELECT source, n_docs, n_tokens,
-        |       cast(floor(n_tokens * 10000.0 / tot) AS BIGINT) AS weight_bp,
-        |       cast(floor((tot * 1.0 / n_src) * 10000.0 / n_tokens) AS BIGINT) AS epochs_4dp
-        |FROM t ORDER BY source""".stripMargin,
       """WITH s AS (SELECT source, cast(sum(len(string_split(text,' '))) AS BIGINT) AS n_tokens,
         |             count(*) AS n_docs
         |           FROM documents GROUP BY 1),
@@ -1741,14 +1614,6 @@ object Queries {
     q("x123_decimal_money",
       """WITH m AS (SELECT o_orderpriority, cast(o_totalprice AS DECIMAL(12,2)) AS m FROM orders)
         |SELECT o_orderpriority, count(*) AS n,
-        |       cast(cast(sum(m) AS DECIMAL(18,2)) AS STRING) AS sum_money,
-        |       cast(min(m) AS STRING) AS min_money,
-        |       cast(max(m) AS STRING) AS max_money,
-        |       cast(cast(round(sum(m * cast(0.9 AS DECIMAL(2,1))), 1) AS DECIMAL(18,1)) AS STRING) AS disc_money,
-        |       round(cast(avg(m) AS DOUBLE), 4) AS avg_money
-        |FROM m GROUP BY 1 ORDER BY 1""".stripMargin,
-      """WITH m AS (SELECT o_orderpriority, cast(o_totalprice AS DECIMAL(12,2)) AS m FROM orders)
-        |SELECT o_orderpriority, count(*) AS n,
         |       cast(cast(sum(m) AS DECIMAL(18,2)) AS VARCHAR) AS sum_money,
         |       cast(min(m) AS VARCHAR) AS min_money,
         |       cast(max(m) AS VARCHAR) AS max_money,
@@ -1763,11 +1628,6 @@ object Queries {
     // Spark's definition explicitly via a two-pass central-moment CTE —
     // the battery doubles as executable documentation of the delta.
     q("x124_stats_battery",
-      """SELECT event_type,
-        |       round(stddev_samp(value),4) AS sd_s, round(stddev_pop(value),4) AS sd_p,
-        |       round(var_samp(value),4) AS var_s, round(var_pop(value),4) AS var_p,
-        |       round(skewness(value),4) AS skew, round(kurtosis(value),4) AS kurt
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
       """WITH mu AS (SELECT event_type, avg(value) AS mean FROM events GROUP BY 1),
         |m AS (SELECT e.event_type,
         |        avg(pow(e.value - mu.mean, 2)) AS m2,
@@ -1780,7 +1640,13 @@ object Queries {
         |       round(any_value(m.m3 / pow(m.m2, 1.5)),4) AS skew,
         |       round(any_value(m.m4 / pow(m.m2, 2) - 3),4) AS kurt
         |FROM events e JOIN m ON e.event_type = m.event_type
-        |GROUP BY 1 ORDER BY 1""".stripMargin),
+        |GROUP BY 1 ORDER BY 1""".stripMargin,
+      Hand("Spark's skewness/kurtosis replace the oracle's moment self-join",
+      """SELECT event_type,
+        |       round(stddev_samp(value),4) AS sd_s, round(stddev_pop(value),4) AS sd_p,
+        |       round(var_samp(value),4) AS var_s, round(var_pop(value),4) AS var_p,
+        |       round(skewness(value),4) AS skew, round(kurtosis(value),4) AS kurt
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // Bivariate/regression aggregates over genuinely correlated columns
     // (quantity drives extendedprice): corr / covar / the regr_* family —
@@ -1828,35 +1694,46 @@ object Queries {
     // token pipelines need). Spark posexplode; DuckDB reconstructs the
     // ordinal with a range lateral join over the split list.
     q("x127_posexplode",
-      """SELECT doc_id, pos, tok
-        |FROM (SELECT doc_id, posexplode(split(text, ' ')) AS (pos, tok) FROM documents)
-        |WHERE doc_id < 40 AND pos < 5
-        |ORDER BY doc_id, pos""".stripMargin,
       """SELECT doc_id, i - 1 AS pos, w[i] AS tok
         |FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         |     range(1, 6) r(i)
         |WHERE doc_id < 40 AND i <= len(w)
-        |ORDER BY doc_id, pos""".stripMargin),
+        |ORDER BY doc_id, pos""".stripMargin,
+      Hand("exercises posexplode; the oracle joins a range table",
+      """SELECT doc_id, pos, tok
+        |FROM (SELECT doc_id, posexplode(split(text, ' ')) AS (pos, tok) FROM documents)
+        |WHERE doc_id < 40 AND pos < 5
+        |ORDER BY doc_id, pos""".stripMargin)),
 
     // PIVOT: event-type columns per user bucket (Spark's native PIVOT
     // syntax; the oracle states the equivalent conditional aggregation —
     // which is also exactly the plan Spark compiles PIVOT into).
     q("x128_pivot",
-      """SELECT * FROM (
-        |  SELECT user_id % 10 AS ub, event_type FROM events)
-        |PIVOT (count(*) FOR event_type IN ('click' AS click, 'view' AS view, 'purchase' AS purchase))
-        |ORDER BY ub""".stripMargin,
       """SELECT user_id % 10 AS ub,
         |       cast(count(*) FILTER (WHERE event_type = 'click') AS BIGINT) AS click,
         |       cast(count(*) FILTER (WHERE event_type = 'view') AS BIGINT) AS view,
         |       cast(count(*) FILTER (WHERE event_type = 'purchase') AS BIGINT) AS purchase
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
+      Hand("exercises Spark's PIVOT clause",
+      """SELECT * FROM (
+        |  SELECT user_id % 10 AS ub, event_type FROM events)
+        |PIVOT (count(*) FOR event_type IN ('click' AS click, 'view' AS view, 'purchase' AS purchase))
+        |ORDER BY ub""".stripMargin)),
 
     // Map-typed column construction + lookup, surfaced as scalars (map
     // values cannot hash-compare across engines; element_at lookups can).
     // Spark builds a real MapType from collected entries; the oracle
     // computes the same lookups with conditional aggregation.
     q("x129_map_funcs",
+      """WITH per AS (SELECT event_type, user_id % 5 AS ub, count(*) AS c
+        |             FROM events GROUP BY 1, 2)
+        |SELECT event_type,
+        |       cast(count(*) AS BIGINT) AS nkeys,
+        |       cast(sum(c) FILTER (WHERE ub = 0) AS BIGINT) AS b0,
+        |       cast(sum(c) FILTER (WHERE ub = 4) AS BIGINT) AS b4,
+        |       cast(sum(c) AS BIGINT) AS total
+        |FROM per GROUP BY 1 ORDER BY event_type""".stripMargin,
+      Hand("exercises Spark's map functions over a per-key map",
       """WITH per AS (SELECT event_type, user_id % 5 AS ub, count(*) AS c
         |             FROM events GROUP BY 1, 2),
         |m AS (SELECT event_type, map_from_entries(sort_array(collect_list(struct(ub, c)))) AS mp
@@ -1865,15 +1742,7 @@ object Queries {
         |       cast(size(mp) AS BIGINT) AS nkeys,
         |       element_at(mp, 0) AS b0, element_at(mp, 4) AS b4,
         |       cast(aggregate(map_values(mp), 0L, (s, v) -> s + v) AS BIGINT) AS total
-        |FROM m ORDER BY event_type""".stripMargin,
-      """WITH per AS (SELECT event_type, user_id % 5 AS ub, count(*) AS c
-        |             FROM events GROUP BY 1, 2)
-        |SELECT event_type,
-        |       cast(count(*) AS BIGINT) AS nkeys,
-        |       cast(sum(c) FILTER (WHERE ub = 0) AS BIGINT) AS b0,
-        |       cast(sum(c) FILTER (WHERE ub = 4) AS BIGINT) AS b4,
-        |       cast(sum(c) AS BIGINT) AS total
-        |FROM per GROUP BY 1 ORDER BY event_type""".stripMargin),
+        |FROM m ORDER BY event_type""".stripMargin)),
 
     // Bitwise aggregates (feature-flag folding): bit_and/bit_or/bit_xor
     // over a deterministic per-event flag word — identical semantics on
@@ -1898,13 +1767,6 @@ object Queries {
         |       cast(floor(sum(value) OVER w * 100) AS BIGINT) AS s6h_c
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts
-        |             RANGE BETWEEN INTERVAL 6 HOURS PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
-      """SELECT event_id, user_id,
-        |       cast(count(*) OVER w AS BIGINT) AS n6h,
-        |       cast(floor(sum(value) OVER w * 100) AS BIGINT) AS s6h_c
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts
         |             RANGE BETWEEN INTERVAL 6 HOUR PRECEDING AND CURRENT ROW)
         |ORDER BY event_id""".stripMargin),
 
@@ -1915,17 +1777,6 @@ object Queries {
     q("x132_url_parse",
       """WITH u AS (SELECT c_custkey,
         |             concat('https://', lower(replace(c_mktsegment,' ','')),
-        |                    '.example.com/seg/', cast(c_nationkey AS STRING),
-        |                    '/item?id=', cast(c_custkey AS STRING), '&ref=mail') AS url
-        |           FROM customer WHERE c_custkey <= 500)
-        |SELECT c_custkey,
-        |       parse_url(url, 'HOST') AS host,
-        |       parse_url(url, 'PATH') AS path,
-        |       parse_url(url, 'QUERY') AS query,
-        |       parse_url(url, 'QUERY', 'id') AS qid
-        |FROM u ORDER BY c_custkey""".stripMargin,
-      """WITH u AS (SELECT c_custkey,
-        |             concat('https://', lower(replace(c_mktsegment,' ','')),
         |                    '.example.com/seg/', cast(c_nationkey AS VARCHAR),
         |                    '/item?id=', cast(c_custkey AS VARCHAR), '&ref=mail') AS url
         |           FROM customer WHERE c_custkey <= 500)
@@ -1934,19 +1785,25 @@ object Queries {
         |       regexp_extract(url, '^[a-z]+://[^/?#]+(/[^?#]*)', 1) AS path,
         |       regexp_extract(url, '\?([^#]*)', 1) AS query,
         |       regexp_extract(url, '[?&]id=([^&#]*)', 1) AS qid
-        |FROM u ORDER BY c_custkey""".stripMargin),
+        |FROM u ORDER BY c_custkey""".stripMargin,
+      Hand("exercises parse_url; the oracle parses with regexes",
+      """WITH u AS (SELECT c_custkey,
+        |             concat('https://', lower(replace(c_mktsegment,' ','')),
+        |                    '.example.com/seg/', cast(c_nationkey AS STRING),
+        |                    '/item?id=', cast(c_custkey AS STRING), '&ref=mail') AS url
+        |           FROM customer WHERE c_custkey <= 500)
+        |SELECT c_custkey,
+        |       parse_url(url, 'HOST') AS host,
+        |       parse_url(url, 'PATH') AS path,
+        |       parse_url(url, 'QUERY') AS query,
+        |       parse_url(url, 'QUERY', 'id') AS qid
+        |FROM u ORDER BY c_custkey""".stripMargin)),
 
     // Deterministic per-group sampling ("take k docs per source" — the
     // subsample-big-sources step of x122's budget plan, made replayable):
     // rank by md5 of the doc id, a content-independent uniform order both
     // engines reproduce bit-for-bit, then keep the k smallest.
     q("x133_per_group_sample",
-      """WITH r AS (SELECT source, doc_id,
-        |             row_number() OVER (PARTITION BY source
-        |               ORDER BY md5(cast(doc_id AS STRING)), doc_id) AS rk
-        |           FROM documents)
-        |SELECT source, doc_id, cast(rk AS BIGINT) AS rk
-        |FROM r WHERE rk <= 5 ORDER BY source, rk""".stripMargin,
       """WITH r AS (SELECT source, doc_id,
         |             row_number() OVER (PARTITION BY source
         |               ORDER BY md5(cast(doc_id AS VARCHAR)), doc_id) AS rk
@@ -1959,20 +1816,21 @@ object Queries {
     // within-corpus duplicated-window scan). Grams shuffle as md5 keys,
     // never text; the pair join sees only grams present in ≥2 sources.
     q("x134_source_overlap",
-      """WITH w AS (SELECT source, split(text,' ') AS w FROM documents),
-        |g AS (SELECT DISTINCT source, md5(concat_ws(' ', slice(w, i, 8))) AS h
-        |      FROM (SELECT source, w, explode(sequence(1, size(w)-7)) AS i
-        |            FROM w WHERE size(w) >= 8))
-        |SELECT x.source AS a, y.source AS b, cast(count(*) AS BIGINT) AS shared
-        |FROM g x JOIN g y ON x.h = y.h AND x.source < y.source
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
       """WITH w AS (SELECT source, string_split(text,' ') AS w FROM documents),
         |g AS (SELECT DISTINCT source, md5(array_to_string(w[i:i+7], ' ')) AS h
         |      FROM (SELECT source, w, unnest(generate_series(1, len(w)-7)) AS i
         |            FROM w WHERE len(w) >= 8))
         |SELECT x.source AS a, y.source AS b, cast(count(*) AS BIGINT) AS shared
         |FROM g x JOIN g y ON x.h = y.h AND x.source < y.source
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+      Hand("list slice w[a:b]: Spark takes slice(w, start, length)",
+      """WITH w AS (SELECT source, split(text,' ') AS w FROM documents),
+        |g AS (SELECT DISTINCT source, md5(concat_ws(' ', slice(w, i, 8))) AS h
+        |      FROM (SELECT source, w, explode(sequence(1, size(w)-7)) AS i
+        |            FROM w WHERE size(w) >= 8))
+        |SELECT x.source AS a, y.source AS b, cast(count(*) AS BIGINT) AS shared
+        |FROM g x JOIN g y ON x.h = y.h AND x.source < y.source
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
 
     // Unigram LM cross-entropy per doc (the perplexity quality signal):
     // corpus-trained unigram probabilities, per-token negative log-probs
@@ -1981,16 +1839,6 @@ object Queries {
     // compare survives any execution order). High xent = improbable
     // token stream = noise/garbage candidate.
     q("x135_perplexity",
-      """WITH tok AS (SELECT doc_id, explode(split(text,' ')) AS w FROM documents),
-        |cnt AS (SELECT w, count(*) AS c FROM tok GROUP BY 1),
-        |tot AS (SELECT sum(c) AS t FROM cnt),
-        |lp AS (SELECT tok.doc_id,
-        |         cast(floor(-ln(cnt.c * 1.0 / tot.t) * 1000000) AS BIGINT) AS nlp_u
-        |       FROM tok JOIN cnt ON tok.w = cnt.w CROSS JOIN tot)
-        |SELECT doc_id, cast(count(*) AS BIGINT) AS n_tok,
-        |       cast(sum(nlp_u) AS BIGINT) AS nll_u,
-        |       cast(floor(sum(nlp_u) * 1.0 / count(*)) AS BIGINT) AS xent_u
-        |FROM lp GROUP BY 1 ORDER BY 1""".stripMargin,
       """WITH tok AS (SELECT doc_id, unnest(string_split(text,' ')) AS w FROM documents),
         |cnt AS (SELECT w, count(*) AS c FROM tok GROUP BY 1),
         |tot AS (SELECT cast(sum(c) AS BIGINT) AS t FROM cnt),
@@ -2013,35 +1861,6 @@ object Queries {
     // N log-N: edges aggregate once, each iteration is one broadcast-able
     // deg join + one shuffle on dst.
     q("x136_pagerank",
-      """WITH e AS (SELECT c.c_nationkey AS src, s.s_nationkey AS dst, count(*) AS w
-        |           FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |                JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-        |                JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        |           GROUP BY 1, 2),
-        |deg AS (SELECT src, sum(w) AS d FROM e GROUP BY 1),
-        |n AS (SELECT n_nationkey AS node FROM nation),
-        |p0 AS (SELECT node, cast(40000000 AS BIGINT) AS r FROM n),
-        |p1 AS (SELECT n.node,
-        |         cast(6000000 + (85 * coalesce(sum((p.r * e.w) div d.d), 0)) div 100 AS BIGINT) AS r
-        |       FROM n LEFT JOIN e ON e.dst = n.node
-        |              LEFT JOIN deg d ON d.src = e.src
-        |              LEFT JOIN p0 p ON p.node = e.src
-        |       GROUP BY 1),
-        |p2 AS (SELECT n.node,
-        |         cast(6000000 + (85 * coalesce(sum((p.r * e.w) div d.d), 0)) div 100 AS BIGINT) AS r
-        |       FROM n LEFT JOIN e ON e.dst = n.node
-        |              LEFT JOIN deg d ON d.src = e.src
-        |              LEFT JOIN p1 p ON p.node = e.src
-        |       GROUP BY 1),
-        |p3 AS (SELECT n.node,
-        |         cast(6000000 + (85 * coalesce(sum((p.r * e.w) div d.d), 0)) div 100 AS BIGINT) AS r
-        |       FROM n LEFT JOIN e ON e.dst = n.node
-        |              LEFT JOIN deg d ON d.src = e.src
-        |              LEFT JOIN p2 p ON p.node = e.src
-        |       GROUP BY 1)
-        |SELECT p3.node AS nationkey, nat.n_name AS nation, p3.r AS rank_nano
-        |FROM p3 JOIN nation nat ON nat.n_nationkey = p3.node
-        |ORDER BY 1""".stripMargin,
       """WITH e AS (SELECT c.c_nationkey AS src, s.s_nationkey AS dst, count(*) AS w
         |           FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
         |                JOIN lineitem l ON l.l_orderkey = o.o_orderkey
@@ -2080,15 +1899,16 @@ object Queries {
     // integral (checked: 0 non-integer rows), so double partial sums are
     // exact and re-summation order cannot change the result.
     q("x137_salted_agg",
+      """SELECT l_partkey AS k, CAST(count(*) AS BIGINT) AS n,
+        |       CAST(floor(sum(l_quantity)) AS BIGINT) AS qty
+        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
+      Hand("the salted two-phase aggregate over pmod(l_orderkey, 8) is the point",
       """WITH p AS (SELECT l_partkey AS k, pmod(l_orderkey, 8) AS salt,
         |             count(*) AS c, sum(l_quantity) AS sq
         |           FROM lineitem GROUP BY 1, 2)
         |SELECT k, cast(sum(c) AS BIGINT) AS n,
         |       cast(floor(sum(sq)) AS BIGINT) AS qty
-        |FROM p GROUP BY 1 ORDER BY 1""".stripMargin,
-      """SELECT l_partkey AS k, CAST(count(*) AS BIGINT) AS n,
-        |       CAST(floor(sum(l_quantity)) AS BIGINT) AS qty
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin),
+        |FROM p GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // Ordered funnel (view -> click -> purchase): per-user earliest view,
     // earliest click strictly after it, earliest purchase strictly after
@@ -2138,14 +1958,6 @@ object Queries {
     // the content comparable without shipping text. Per-row explode,
     // no shuffle — at 100 TB this is a map-only stage.
     q("x141_chunking",
-      """WITH w AS (SELECT doc_id, split(text,' ') AS w FROM documents),
-        |c AS (SELECT doc_id, w, explode(sequence(0,
-        |        greatest(cast(ceil((size(w) - 64) / 48.0) AS INT), 0))) AS i
-        |      FROM w)
-        |SELECT doc_id, cast(i AS BIGINT) AS chunk_id,
-        |       cast(size(slice(w, i*48 + 1, 64)) AS BIGINT) AS n_tok,
-        |       md5(concat_ws(' ', slice(w, i*48 + 1, 64))) AS chunk_md5
-        |FROM c ORDER BY doc_id, chunk_id""".stripMargin,
       """WITH w AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
         |c AS (SELECT doc_id, w, unnest(generate_series(0,
         |        greatest(CAST(ceil((len(w) - 64) / 48.0) AS INT), 0))) AS i
@@ -2153,7 +1965,16 @@ object Queries {
         |SELECT doc_id, CAST(i AS BIGINT) AS chunk_id,
         |       CAST(len(w[i*48+1 : i*48+64]) AS BIGINT) AS n_tok,
         |       md5(array_to_string(w[i*48+1 : i*48+64], ' ')) AS chunk_md5
-        |FROM c ORDER BY doc_id, chunk_id""".stripMargin),
+        |FROM c ORDER BY doc_id, chunk_id""".stripMargin,
+      Hand("list slice w[a:b]: Spark takes slice(w, start, length)",
+      """WITH w AS (SELECT doc_id, split(text,' ') AS w FROM documents),
+        |c AS (SELECT doc_id, w, explode(sequence(0,
+        |        greatest(cast(ceil((size(w) - 64) / 48.0) AS INT), 0))) AS i
+        |      FROM w)
+        |SELECT doc_id, cast(i AS BIGINT) AS chunk_id,
+        |       cast(size(slice(w, i*48 + 1, 64)) AS BIGINT) AS n_tok,
+        |       md5(concat_ws(' ', slice(w, i*48 + 1, 64))) AS chunk_md5
+        |FROM c ORDER BY doc_id, chunk_id""".stripMargin)),
 
     // Error-tolerant parsing battery (dirty-log ingestion): try_cast /
     // try_divide / try_to_timestamp over a deterministic mix of valid,
@@ -2169,19 +1990,6 @@ object Queries {
     // §5.3 canonicalization doesn't cover).
     q("x142_try_parse",
       """WITH s AS (SELECT c_custkey AS k,
-        |  CASE c_custkey % 4 WHEN 0 THEN cast(c_custkey AS STRING)
-        |                     WHEN 1 THEN concat(cast(c_custkey AS STRING), 'x')
-        |                     WHEN 2 THEN '' ELSE '  42  ' END AS raw,
-        |  CASE c_custkey % 3 WHEN 0 THEN '2024-01-15' WHEN 1 THEN '2024-13-40'
-        |                     ELSE 'nope' END AS draw
-        |  FROM customer)
-        |SELECT k, try_cast(raw AS INT) AS as_int,
-        |       cast(floor(coalesce(try_cast(raw AS DOUBLE), -1) * 100) AS BIGINT) AS cents,
-        |       coalesce(try_to_timestamp(draw, 'yyyy-MM-dd'),
-        |                timestamp'1970-01-01 00:00:00') AS as_ts,
-        |       cast(floor(coalesce(try_divide(100, k % 7), -1) * 100) AS BIGINT) AS div_c
-        |FROM s ORDER BY k""".stripMargin,
-      """WITH s AS (SELECT c_custkey AS k,
         |  CASE c_custkey % 4 WHEN 0 THEN CAST(c_custkey AS VARCHAR)
         |                     WHEN 1 THEN concat(CAST(c_custkey AS VARCHAR), 'x')
         |                     WHEN 2 THEN '' ELSE '  42  ' END AS raw,
@@ -2193,7 +2001,21 @@ object Queries {
         |       coalesce(try_strptime(draw, '%Y-%m-%d'),
         |                TIMESTAMP '1970-01-01 00:00:00') AS as_ts,
         |       CAST(floor(coalesce(100 / nullif(k % 7, 0), -1) * 100) AS BIGINT) AS div_c
-        |FROM s ORDER BY k""".stripMargin),
+        |FROM s ORDER BY k""".stripMargin,
+      Hand("try_strptime is try_to_timestamp; division by nullif is try_divide",
+      """WITH s AS (SELECT c_custkey AS k,
+        |  CASE c_custkey % 4 WHEN 0 THEN cast(c_custkey AS STRING)
+        |                     WHEN 1 THEN concat(cast(c_custkey AS STRING), 'x')
+        |                     WHEN 2 THEN '' ELSE '  42  ' END AS raw,
+        |  CASE c_custkey % 3 WHEN 0 THEN '2024-01-15' WHEN 1 THEN '2024-13-40'
+        |                     ELSE 'nope' END AS draw
+        |  FROM customer)
+        |SELECT k, try_cast(raw AS INT) AS as_int,
+        |       cast(floor(coalesce(try_cast(raw AS DOUBLE), -1) * 100) AS BIGINT) AS cents,
+        |       coalesce(try_to_timestamp(draw, 'yyyy-MM-dd'),
+        |                timestamp'1970-01-01 00:00:00') AS as_ts,
+        |       cast(floor(coalesce(try_divide(100, k % 7), -1) * 100) AS BIGINT) AS div_c
+        |FROM s ORDER BY k""".stripMargin)),
 
     // BPE first-merge census: character-bigram frequencies weighted by
     // word counts — the statistic byte-pair-encoding vocabulary
@@ -2204,6 +2026,14 @@ object Queries {
     // top-20 with a total (cnt DESC, pair) tie-break; pairs extracted
     // with substr so no char-array dialect quirks enter the hash.
     q("x143_bpe_pair_census",
+      """WITH tok AS (SELECT lower(unnest(string_split(text,' '))) AS w FROM documents),
+        |wd AS (SELECT w, count(*) AS c FROM tok WHERE len(w) >= 2 GROUP BY 1),
+        |p AS (SELECT substr(w, i, 2) AS pair, c
+        |      FROM (SELECT w, c, unnest(generate_series(1, len(w)-1)) AS i FROM wd)),
+        |agg AS (SELECT pair, CAST(sum(c) AS BIGINT) AS cnt FROM p GROUP BY 1),
+        |rk AS (SELECT pair, cnt, row_number() OVER (ORDER BY cnt DESC, pair) AS rk FROM agg)
+        |SELECT CAST(rk AS BIGINT) AS rk, pair, cnt FROM rk WHERE rk <= 20 ORDER BY rk""".stripMargin,
+      Hand("Spark cannot nest explode in an expression; length for strings",
       """WITH tok AS (SELECT lower(w) AS w
         |             FROM (SELECT explode(split(text,' ')) AS w FROM documents)),
         |wd AS (SELECT w, count(*) AS c FROM tok WHERE length(w) >= 2 GROUP BY 1),
@@ -2211,14 +2041,7 @@ object Queries {
         |      FROM (SELECT w, c, explode(sequence(1, length(w)-1)) AS i FROM wd)),
         |agg AS (SELECT pair, cast(sum(c) AS BIGINT) AS cnt FROM p GROUP BY 1),
         |rk AS (SELECT pair, cnt, row_number() OVER (ORDER BY cnt DESC, pair) AS rk FROM agg)
-        |SELECT cast(rk AS BIGINT) AS rk, pair, cnt FROM rk WHERE rk <= 20 ORDER BY rk""".stripMargin,
-      """WITH tok AS (SELECT lower(unnest(string_split(text,' '))) AS w FROM documents),
-        |wd AS (SELECT w, count(*) AS c FROM tok WHERE len(w) >= 2 GROUP BY 1),
-        |p AS (SELECT substr(w, i, 2) AS pair, c
-        |      FROM (SELECT w, c, unnest(generate_series(1, len(w)-1)) AS i FROM wd)),
-        |agg AS (SELECT pair, CAST(sum(c) AS BIGINT) AS cnt FROM p GROUP BY 1),
-        |rk AS (SELECT pair, cnt, row_number() OVER (ORDER BY cnt DESC, pair) AS rk FROM agg)
-        |SELECT CAST(rk AS BIGINT) AS rk, pair, cnt FROM rk WHERE rk <= 20 ORDER BY rk""".stripMargin),
+        |SELECT cast(rk AS BIGINT) AS rk, pair, cnt FROM rk WHERE rk <= 20 ORDER BY rk""".stripMargin)),
 
     // Size-WEIGHTED per-group sampling (x133's uniform sibling):
     // priority sampling (Duffield et al.) — keep the k docs per source
@@ -2231,15 +2054,6 @@ object Queries {
     // near-tied ranks cross-engine.
     q("x144_weighted_sample",
       """WITH h AS (SELECT source, doc_id, n_chars,
-        |             cast(conv(substr(md5(cast(doc_id AS STRING)),1,8),16,10) AS BIGINT) AS hv
-        |           FROM documents),
-        |r AS (SELECT source, doc_id,
-        |        row_number() OVER (PARTITION BY source
-        |          ORDER BY (hv * 1000000) div n_chars, doc_id) AS rk
-        |      FROM h)
-        |SELECT source, doc_id, cast(rk AS BIGINT) AS rk
-        |FROM r WHERE rk <= 5 ORDER BY source, rk""".stripMargin,
-      """WITH h AS (SELECT source, doc_id, n_chars,
         |             CAST(('0x'||substr(md5(CAST(doc_id AS VARCHAR)),1,8)) AS BIGINT) AS hv
         |           FROM documents),
         |r AS (SELECT source, doc_id,
@@ -2247,7 +2061,17 @@ object Queries {
         |          ORDER BY (hv * 1000000) // n_chars, doc_id) AS rk
         |      FROM h)
         |SELECT source, doc_id, CAST(rk AS BIGINT) AS rk
-        |FROM r WHERE rk <= 5 ORDER BY source, rk""".stripMargin),
+        |FROM r WHERE rk <= 5 ORDER BY source, rk""".stripMargin,
+      Hand("hex to integer: DuckDB casts '0x' || hex, Spark calls conv(hex, 16, 10)",
+      """WITH h AS (SELECT source, doc_id, n_chars,
+        |             cast(conv(substr(md5(cast(doc_id AS STRING)),1,8),16,10) AS BIGINT) AS hv
+        |           FROM documents),
+        |r AS (SELECT source, doc_id,
+        |        row_number() OVER (PARTITION BY source
+        |          ORDER BY (hv * 1000000) div n_chars, doc_id) AS rk
+        |      FROM h)
+        |SELECT source, doc_id, cast(rk AS BIGINT) AS rk
+        |FROM r WHERE rk <= 5 ORDER BY source, rk""".stripMargin)),
 
     // Collocation mining by PMI rank: adjacent word bigrams vs unigram
     // frequencies — the phrase-detection statistic (Church & Hanks)
@@ -2260,18 +2084,6 @@ object Queries {
     // size joins onto the candidate table — all shuffle keys are
     // words, never text; linear at 100 TB.
     q("x145_pmi_collocations",
-      """WITH t AS (SELECT split(lower(text),' ') AS a FROM documents),
-        |bg AS (SELECT element_at(a, i) AS w1, element_at(a, i+1) AS w2
-        |       FROM (SELECT a, explode(sequence(1, size(a)-1)) AS i FROM t WHERE size(a) >= 2)),
-        |cb AS (SELECT w1, w2, count(*) AS cxy FROM bg
-        |       WHERE w1 <> '' AND w2 <> '' GROUP BY 1,2 HAVING count(*) >= 5),
-        |u AS (SELECT w, count(*) AS cw
-        |      FROM (SELECT explode(split(lower(text),' ')) AS w FROM documents)
-        |      WHERE w <> '' GROUP BY 1)
-        |SELECT w1, w2, cast(cxy AS BIGINT) AS cxy,
-        |       cast((cxy * 1000000000000) div (u1.cw * u2.cw) AS BIGINT) AS pmi_score
-        |FROM cb JOIN u u1 ON cb.w1 = u1.w JOIN u u2 ON cb.w2 = u2.w
-        |ORDER BY pmi_score DESC, w1, w2 LIMIT 20""".stripMargin,
       """WITH t AS (SELECT string_split(lower(text),' ') AS a FROM documents),
         |bg AS (SELECT a[i] AS w1, a[i+1] AS w2
         |       FROM (SELECT a, unnest(generate_series(1, len(a)-1)) AS i FROM t WHERE len(a) >= 2)),
@@ -2298,19 +2110,6 @@ object Queries {
         |             CASE WHEN event_id % 3 = 0 THEN value END AS v
         |           FROM events)
         |SELECT event_id, user_id,
-        |       round(last_value(v) IGNORE NULLS OVER w1, 4) AS ffill,
-        |       round(first_value(v) IGNORE NULLS OVER w2, 4) AS bfill,
-        |       round(nth_value(v, 2) IGNORE NULLS OVER w1, 4) AS nth2
-        |FROM s
-        |WINDOW w1 AS (PARTITION BY user_id ORDER BY ts, event_id
-        |              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-        |       w2 AS (PARTITION BY user_id ORDER BY ts, event_id
-        |              ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-        |ORDER BY event_id""".stripMargin,
-      """WITH s AS (SELECT event_id, user_id, ts,
-        |             CASE WHEN event_id % 3 = 0 THEN value END AS v
-        |           FROM events)
-        |SELECT event_id, user_id,
         |       round(last_value(v IGNORE NULLS) OVER w1, 4) AS ffill,
         |       round(first_value(v IGNORE NULLS) OVER w2, 4) AS bfill,
         |       round(nth_value(v, 2 IGNORE NULLS) OVER w1, 4) AS nth2
@@ -2319,7 +2118,21 @@ object Queries {
         |              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
         |       w2 AS (PARTITION BY user_id ORDER BY ts, event_id
         |              ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-        |ORDER BY event_id""".stripMargin),
+        |ORDER BY event_id""".stripMargin,
+      Hand("IGNORE NULLS goes after the call in Spark, inside it in DuckDB",
+      """WITH s AS (SELECT event_id, user_id, ts,
+        |             CASE WHEN event_id % 3 = 0 THEN value END AS v
+        |           FROM events)
+        |SELECT event_id, user_id,
+        |       round(last_value(v) IGNORE NULLS OVER w1, 4) AS ffill,
+        |       round(first_value(v) IGNORE NULLS OVER w2, 4) AS bfill,
+        |       round(nth_value(v, 2) IGNORE NULLS OVER w1, 4) AS nth2
+        |FROM s
+        |WINDOW w1 AS (PARTITION BY user_id ORDER BY ts, event_id
+        |              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+        |       w2 AS (PARTITION BY user_id ORDER BY ts, event_id
+        |              ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
+        |ORDER BY event_id""".stripMargin)),
 
     // Duplicated-SPAN coverage (the measurement half of Lee et al.
     // exact-substring dedup): x116 counts dup windows; this merges the
@@ -2330,26 +2143,6 @@ object Queries {
     // ends are positions, coverage is basis points via div. Window
     // ORDER BY s is total (one window per start position per doc).
     q("x147_dup_span_coverage",
-      """WITH t AS (SELECT doc_id, split(text,' ') AS w FROM documents WHERE size(split(text,' ')) >= 8),
-        |wins AS (SELECT doc_id, i, md5(concat_ws(' ', slice(w, i, 8))) AS h
-        |         FROM (SELECT doc_id, w, explode(sequence(1, size(w)-7)) AS i FROM t)),
-        |shared AS (SELECT h FROM wins GROUP BY h HAVING count(DISTINCT doc_id) >= 2),
-        |dup AS (SELECT doc_id, i AS s, i + 8 AS e FROM wins WHERE h IN (SELECT h FROM shared)),
-        |m AS (SELECT doc_id, s, e,
-        |        max(e) OVER (PARTITION BY doc_id ORDER BY s
-        |                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pe
-        |      FROM dup),
-        |isl AS (SELECT doc_id, s, e,
-        |          sum(CASE WHEN pe IS NULL OR s > pe THEN 1 ELSE 0 END)
-        |            OVER (PARTITION BY doc_id ORDER BY s ROWS UNBOUNDED PRECEDING) AS g
-        |        FROM m),
-        |mg AS (SELECT doc_id, g, max(e) - min(s) AS cov FROM isl GROUP BY doc_id, g),
-        |per AS (SELECT doc_id, cast(sum(cov) AS BIGINT) AS covered FROM mg GROUP BY doc_id),
-        |tok AS (SELECT doc_id, cast(size(w) AS BIGINT) AS n_tok FROM t)
-        |SELECT p.doc_id, t.n_tok, p.covered,
-        |       cast((p.covered * 10000) div t.n_tok AS BIGINT) AS cov_bp
-        |FROM per p JOIN tok t ON p.doc_id = t.doc_id
-        |ORDER BY cov_bp DESC, p.doc_id LIMIT 20""".stripMargin,
       """WITH t AS (SELECT doc_id, string_split(text,' ') AS w FROM documents WHERE len(string_split(text,' ')) >= 8),
         |wins AS (SELECT doc_id, i, md5(array_to_string(w[i:i+7], ' ')) AS h
         |         FROM (SELECT doc_id, w, unnest(generate_series(1, len(w)-7)) AS i FROM t)),
@@ -2369,7 +2162,28 @@ object Queries {
         |SELECT p.doc_id, t.n_tok, p.covered,
         |       CAST((p.covered * 10000) // t.n_tok AS BIGINT) AS cov_bp
         |FROM per p JOIN tok t ON p.doc_id = t.doc_id
-        |ORDER BY cov_bp DESC, p.doc_id LIMIT 20""".stripMargin),
+        |ORDER BY cov_bp DESC, p.doc_id LIMIT 20""".stripMargin,
+      Hand("list slice w[a:b]: Spark takes slice(w, start, length)",
+      """WITH t AS (SELECT doc_id, split(text,' ') AS w FROM documents WHERE size(split(text,' ')) >= 8),
+        |wins AS (SELECT doc_id, i, md5(concat_ws(' ', slice(w, i, 8))) AS h
+        |         FROM (SELECT doc_id, w, explode(sequence(1, size(w)-7)) AS i FROM t)),
+        |shared AS (SELECT h FROM wins GROUP BY h HAVING count(DISTINCT doc_id) >= 2),
+        |dup AS (SELECT doc_id, i AS s, i + 8 AS e FROM wins WHERE h IN (SELECT h FROM shared)),
+        |m AS (SELECT doc_id, s, e,
+        |        max(e) OVER (PARTITION BY doc_id ORDER BY s
+        |                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pe
+        |      FROM dup),
+        |isl AS (SELECT doc_id, s, e,
+        |          sum(CASE WHEN pe IS NULL OR s > pe THEN 1 ELSE 0 END)
+        |            OVER (PARTITION BY doc_id ORDER BY s ROWS UNBOUNDED PRECEDING) AS g
+        |        FROM m),
+        |mg AS (SELECT doc_id, g, max(e) - min(s) AS cov FROM isl GROUP BY doc_id, g),
+        |per AS (SELECT doc_id, cast(sum(cov) AS BIGINT) AS covered FROM mg GROUP BY doc_id),
+        |tok AS (SELECT doc_id, cast(size(w) AS BIGINT) AS n_tok FROM t)
+        |SELECT p.doc_id, t.n_tok, p.covered,
+        |       cast((p.covered * 10000) div t.n_tok AS BIGINT) AS cov_bp
+        |FROM per p JOIN tok t ON p.doc_id = t.doc_id
+        |ORDER BY cov_bp DESC, p.doc_id LIMIT 20""".stripMargin)),
 
     // BPE vocabulary induction, 3 merges unrolled (Sennrich et al.) —
     // x143 ranks the FIRST merge's candidates; this executes the loop.
@@ -2386,6 +2200,40 @@ object Queries {
     // corpus-scale pass is the word census; the iterative scale form
     // is llm/Bpe.scala (x149, same oracle — the x136/x140 policy).
     q("x148_bpe_train3",
+      """WITH tok AS (SELECT lower(unnest(string_split(text,' '))) AS w FROM documents),
+        |wd AS (SELECT w, count(*) AS c FROM tok WHERE len(w) >= 2 GROUP BY 1),
+        |e0 AS (SELECT c, regexp_replace(w, '(?s)(.)', ' \1 ', 'g') AS cs FROM wd),
+        |pc1 AS (SELECT s[i] AS p1, s[i+1] AS p2, c
+        |        FROM (SELECT s, c, unnest(generate_series(1, len(s)-1)) AS i
+        |              FROM (SELECT string_split(trim(cs),'  ') AS s, c FROM e0) WHERE len(s) >= 2)),
+        |m1 AS (SELECT p1, p2, CAST(sum(c) AS BIGINT) AS cnt,
+        |              ' '||p1||'  '||p2||' ' AS srch, ' '||p1||p2||' ' AS repl
+        |       FROM pc1 GROUP BY 1,2 ORDER BY cnt DESC, p1, p2 LIMIT 1),
+        |e1 AS (SELECT e0.c, replace(e0.cs, m1.srch, m1.repl) AS cs FROM e0 CROSS JOIN m1),
+        |pc2 AS (SELECT s[i] AS p1, s[i+1] AS p2, c
+        |        FROM (SELECT s, c, unnest(generate_series(1, len(s)-1)) AS i
+        |              FROM (SELECT string_split(trim(cs),'  ') AS s, c FROM e1) WHERE len(s) >= 2)),
+        |m2 AS (SELECT p1, p2, CAST(sum(c) AS BIGINT) AS cnt,
+        |              ' '||p1||'  '||p2||' ' AS srch, ' '||p1||p2||' ' AS repl
+        |       FROM pc2 GROUP BY 1,2 ORDER BY cnt DESC, p1, p2 LIMIT 1),
+        |e2 AS (SELECT e1.c, replace(e1.cs, m2.srch, m2.repl) AS cs FROM e1 CROSS JOIN m2),
+        |pc3 AS (SELECT s[i] AS p1, s[i+1] AS p2, c
+        |        FROM (SELECT s, c, unnest(generate_series(1, len(s)-1)) AS i
+        |              FROM (SELECT string_split(trim(cs),'  ') AS s, c FROM e2) WHERE len(s) >= 2)),
+        |m3 AS (SELECT p1, p2, CAST(sum(c) AS BIGINT) AS cnt,
+        |              ' '||p1||'  '||p2||' ' AS srch, ' '||p1||p2||' ' AS repl
+        |       FROM pc3 GROUP BY 1,2 ORDER BY cnt DESC, p1, p2 LIMIT 1),
+        |e3 AS (SELECT e2.c, replace(e2.cs, m3.srch, m3.repl) AS cs FROM e2 CROSS JOIN m3),
+        |sym AS (SELECT sy, CAST(sum(c) AS BIGINT) AS cnt
+        |        FROM (SELECT unnest(string_split(trim(cs),'  ')) AS sy, c FROM e3) GROUP BY 1),
+        |syt AS (SELECT sy, cnt, row_number() OVER (ORDER BY cnt DESC, sy) AS r FROM sym)
+        |SELECT * FROM (
+        |  SELECT CAST(1 AS BIGINT) AS rk, 'merge' AS kind, p1 AS a, p2 AS b, cnt FROM m1
+        |  UNION ALL SELECT CAST(2 AS BIGINT), 'merge', p1, p2, cnt FROM m2
+        |  UNION ALL SELECT CAST(3 AS BIGINT), 'merge', p1, p2, cnt FROM m3
+        |  UNION ALL SELECT CAST(10 + r AS BIGINT), 'sym', sy, '', cnt FROM syt WHERE r <= 12
+        |) ORDER BY rk""".stripMargin,
+      Hand("Spark cannot nest explode in an expression; $1 backreferences, no 'g'",
       """WITH tok AS (SELECT lower(w) AS w
         |             FROM (SELECT explode(split(text,' ')) AS w FROM documents)),
         |wd AS (SELECT w, count(*) AS c FROM tok WHERE length(w) >= 2 GROUP BY 1),
@@ -2419,40 +2267,7 @@ object Queries {
         |  UNION ALL SELECT cast(2 AS BIGINT), 'merge', p1, p2, cnt FROM m2
         |  UNION ALL SELECT cast(3 AS BIGINT), 'merge', p1, p2, cnt FROM m3
         |  UNION ALL SELECT cast(10 + r AS BIGINT), 'sym', sy, '', cnt FROM syt WHERE r <= 12
-        |) ORDER BY rk""".stripMargin,
-      """WITH tok AS (SELECT lower(unnest(string_split(text,' '))) AS w FROM documents),
-        |wd AS (SELECT w, count(*) AS c FROM tok WHERE len(w) >= 2 GROUP BY 1),
-        |e0 AS (SELECT c, regexp_replace(w, '(?s)(.)', ' \1 ', 'g') AS cs FROM wd),
-        |pc1 AS (SELECT s[i] AS p1, s[i+1] AS p2, c
-        |        FROM (SELECT s, c, unnest(generate_series(1, len(s)-1)) AS i
-        |              FROM (SELECT string_split(trim(cs),'  ') AS s, c FROM e0) WHERE len(s) >= 2)),
-        |m1 AS (SELECT p1, p2, CAST(sum(c) AS BIGINT) AS cnt,
-        |              ' '||p1||'  '||p2||' ' AS srch, ' '||p1||p2||' ' AS repl
-        |       FROM pc1 GROUP BY 1,2 ORDER BY cnt DESC, p1, p2 LIMIT 1),
-        |e1 AS (SELECT e0.c, replace(e0.cs, m1.srch, m1.repl) AS cs FROM e0 CROSS JOIN m1),
-        |pc2 AS (SELECT s[i] AS p1, s[i+1] AS p2, c
-        |        FROM (SELECT s, c, unnest(generate_series(1, len(s)-1)) AS i
-        |              FROM (SELECT string_split(trim(cs),'  ') AS s, c FROM e1) WHERE len(s) >= 2)),
-        |m2 AS (SELECT p1, p2, CAST(sum(c) AS BIGINT) AS cnt,
-        |              ' '||p1||'  '||p2||' ' AS srch, ' '||p1||p2||' ' AS repl
-        |       FROM pc2 GROUP BY 1,2 ORDER BY cnt DESC, p1, p2 LIMIT 1),
-        |e2 AS (SELECT e1.c, replace(e1.cs, m2.srch, m2.repl) AS cs FROM e1 CROSS JOIN m2),
-        |pc3 AS (SELECT s[i] AS p1, s[i+1] AS p2, c
-        |        FROM (SELECT s, c, unnest(generate_series(1, len(s)-1)) AS i
-        |              FROM (SELECT string_split(trim(cs),'  ') AS s, c FROM e2) WHERE len(s) >= 2)),
-        |m3 AS (SELECT p1, p2, CAST(sum(c) AS BIGINT) AS cnt,
-        |              ' '||p1||'  '||p2||' ' AS srch, ' '||p1||p2||' ' AS repl
-        |       FROM pc3 GROUP BY 1,2 ORDER BY cnt DESC, p1, p2 LIMIT 1),
-        |e3 AS (SELECT e2.c, replace(e2.cs, m3.srch, m3.repl) AS cs FROM e2 CROSS JOIN m3),
-        |sym AS (SELECT sy, CAST(sum(c) AS BIGINT) AS cnt
-        |        FROM (SELECT unnest(string_split(trim(cs),'  ')) AS sy, c FROM e3) GROUP BY 1),
-        |syt AS (SELECT sy, cnt, row_number() OVER (ORDER BY cnt DESC, sy) AS r FROM sym)
-        |SELECT * FROM (
-        |  SELECT CAST(1 AS BIGINT) AS rk, 'merge' AS kind, p1 AS a, p2 AS b, cnt FROM m1
-        |  UNION ALL SELECT CAST(2 AS BIGINT), 'merge', p1, p2, cnt FROM m2
-        |  UNION ALL SELECT CAST(3 AS BIGINT), 'merge', p1, p2, cnt FROM m3
-        |  UNION ALL SELECT CAST(10 + r AS BIGINT), 'sym', sy, '', cnt FROM syt WHERE r <= 12
-        |) ORDER BY rk""".stripMargin),
+        |) ORDER BY rk""".stripMargin)),
 
     // Curriculum interleave: per-source quality rank (n_chars as the
     // deterministic quality proxy), then a global training order that
@@ -2462,13 +2277,6 @@ object Queries {
     // contract form here, GlobalWindow.ranks is the scale tier.
     // row_number is INT in Spark and BIGINT in DuckDB — cast both.
     q("x150_curriculum_interleave",
-      """WITH r AS (SELECT doc_id, source,
-        |             cast(row_number() OVER (PARTITION BY source
-        |               ORDER BY n_chars DESC, doc_id) AS BIGINT) AS rk
-        |           FROM documents)
-        |SELECT cast(row_number() OVER (ORDER BY rk, source) AS BIGINT) AS pos,
-        |       doc_id, source, rk
-        |FROM r ORDER BY pos LIMIT 100""".stripMargin,
       """WITH r AS (SELECT doc_id, source,
         |             CAST(row_number() OVER (PARTITION BY source
         |               ORDER BY n_chars DESC, doc_id) AS BIGINT) AS rk
@@ -2484,19 +2292,20 @@ object Queries {
     // partitionBy key of the writer at 100 TB.
     q("x151_shard_manifest",
       """WITH a AS (SELECT doc_id, source, n_chars,
-        |    cast(conv(substr(md5(cast(doc_id AS STRING)),1,8),16,10) AS BIGINT) % 8 AS shard
-        |  FROM documents)
-        |SELECT shard, count(*) AS n_docs, cast(sum(n_chars) AS BIGINT) AS n_chars,
-        |       count(DISTINCT source) AS n_sources,
-        |       min(doc_id) AS first_doc, max(doc_id) AS last_doc
-        |FROM a GROUP BY 1 ORDER BY 1""".stripMargin,
-      """WITH a AS (SELECT doc_id, source, n_chars,
         |    CAST(('0x'||substr(md5(CAST(doc_id AS VARCHAR)),1,8)) AS BIGINT) % 8 AS shard
         |  FROM documents)
         |SELECT shard, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS n_chars,
         |       count(DISTINCT source) AS n_sources,
         |       min(doc_id) AS first_doc, max(doc_id) AS last_doc
-        |FROM a GROUP BY 1 ORDER BY 1""".stripMargin),
+        |FROM a GROUP BY 1 ORDER BY 1""".stripMargin,
+      Hand("hex to integer: DuckDB casts '0x' || hex, Spark calls conv(hex, 16, 10)",
+      """WITH a AS (SELECT doc_id, source, n_chars,
+        |    cast(conv(substr(md5(cast(doc_id AS STRING)),1,8),16,10) AS BIGINT) % 8 AS shard
+        |  FROM documents)
+        |SELECT shard, count(*) AS n_docs, cast(sum(n_chars) AS BIGINT) AS n_chars,
+        |       count(DISTINCT source) AS n_sources,
+        |       min(doc_id) AS first_doc, max(doc_id) AS last_doc
+        |FROM a GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // OOV rate under a truncated vocabulary: top-k words by corpus
     // frequency (total (c DESC, w) tie-break) as the vocab, then each
@@ -2509,19 +2318,6 @@ object Queries {
     // (dict-sized, not corpus-sized); per-doc scoring is one hash agg
     // with a broadcast-semi IN probe.
     q("x152_oov_rate",
-      """WITH tok AS (SELECT doc_id, w
-        |             FROM (SELECT doc_id, explode(split(lower(text),' ')) AS w FROM documents)
-        |             WHERE w <> ''),
-        |wc AS (SELECT w, count(*) AS c FROM tok GROUP BY 1),
-        |v AS (SELECT w FROM (SELECT w, row_number() OVER (ORDER BY c DESC, w) AS r FROM wc)
-        |      WHERE r <= 15),
-        |per AS (SELECT doc_id, count(*) AS n_tok,
-        |          cast(sum(CASE WHEN w IN (SELECT w FROM v) THEN 1 ELSE 0 END) AS BIGINT) AS in_v
-        |        FROM tok GROUP BY 1)
-        |SELECT doc_id, cast(n_tok AS BIGINT) AS n_tok,
-        |       cast(n_tok - in_v AS BIGINT) AS oov,
-        |       cast(((n_tok - in_v) * 10000) div n_tok AS BIGINT) AS oov_bp
-        |FROM per ORDER BY oov_bp DESC, doc_id LIMIT 20""".stripMargin,
       """WITH tok AS (SELECT doc_id, w
         |             FROM (SELECT doc_id, unnest(string_split(lower(text),' ')) AS w FROM documents)
         |             WHERE w <> ''),
@@ -2548,21 +2344,6 @@ object Queries {
     // sized.
     q("x153_pareto_bands",
       """WITH rev AS (SELECT o_custkey AS ck,
-        |         cast(sum(cast(floor(o_totalprice*100) AS BIGINT)) AS BIGINT) AS cents
-        |       FROM orders GROUP BY 1),
-        |tot AS (SELECT cast(sum(cents) AS BIGINT) AS t FROM rev),
-        |r AS (SELECT ck, cents,
-        |        cast(row_number() OVER (ORDER BY cents DESC, ck) AS BIGINT) AS rk,
-        |        cast(sum(cents) OVER (ORDER BY cents DESC, ck
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
-        |      FROM rev)
-        |SELECT rk, ck, cents,
-        |       cast((cents * 10000) div t AS BIGINT) AS share_bp,
-        |       cast((cum * 10000) div t AS BIGINT) AS cum_bp,
-        |       CASE WHEN (cum * 10000) div t <= 5000 THEN 'A'
-        |            WHEN (cum * 10000) div t <= 8000 THEN 'B' ELSE 'C' END AS band
-        |FROM r CROSS JOIN tot ORDER BY rk LIMIT 50""".stripMargin,
-      """WITH rev AS (SELECT o_custkey AS ck,
         |         CAST(sum(CAST(floor(o_totalprice*100) AS BIGINT)) AS BIGINT) AS cents
         |       FROM orders GROUP BY 1),
         |tot AS (SELECT CAST(sum(cents) AS BIGINT) AS t FROM rev),
@@ -2585,13 +2366,6 @@ object Queries {
       """SELECT c_custkey,
         |       translate(c_name, 'aeiou', '-----') AS tr,
         |       ascii(substr(c_name, 1, 1)) AS first_code,
-        |       chr(65 + cast(c_custkey % 26 AS INT)) AS rot_chr,
-        |       reverse(lower(c_name)) AS rev,
-        |       repeat(substr(c_name, -2, 2), 3) AS rep3
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-      """SELECT c_custkey,
-        |       translate(c_name, 'aeiou', '-----') AS tr,
-        |       ascii(substr(c_name, 1, 1)) AS first_code,
         |       chr(65 + CAST(c_custkey % 26 AS INT)) AS rot_chr,
         |       reverse(lower(c_name)) AS rev,
         |       repeat(substr(c_name, -2, 2), 3) AS rep3
@@ -2604,15 +2378,16 @@ object Queries {
     // edge IS the point. Joined with '|' for a hash-stable scalar.
     q("x155_regex_split",
       """SELECT c_custkey,
-        |       concat_ws('|', split(lower(c_name), '[0-9]+')) AS parts,
-        |       cast(size(split(lower(c_name), '[0-9]+')) AS BIGINT) AS n_parts,
-        |       concat_ws('|', split(c_mktsegment, '[aeiou]+')) AS seg_parts
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-      """SELECT c_custkey,
         |       array_to_string(regexp_split_to_array(lower(c_name), '[0-9]+'), '|') AS parts,
         |       CAST(len(regexp_split_to_array(lower(c_name), '[0-9]+')) AS BIGINT) AS n_parts,
         |       array_to_string(regexp_split_to_array(c_mktsegment, '[aeiou]+'), '|') AS seg_parts
-        |FROM customer ORDER BY c_custkey""".stripMargin),
+        |FROM customer ORDER BY c_custkey""".stripMargin,
+      Hand("regexp_split_to_array is split in Spark",
+      """SELECT c_custkey,
+        |       concat_ws('|', split(lower(c_name), '[0-9]+')) AS parts,
+        |       cast(size(split(lower(c_name), '[0-9]+')) AS BIGINT) AS n_parts,
+        |       concat_ws('|', split(c_mktsegment, '[aeiou]+')) AS seg_parts
+        |FROM customer ORDER BY c_custkey""".stripMargin)),
 
     // Rolling 3-day distinct buyers: count(DISTINCT) over a RANGE
     // frame. Spark windows don't take DISTINCT aggregates — the
@@ -2621,18 +2396,19 @@ object Queries {
     // pre-deduplicated (day, user) pairs, so the window input is
     // days × active-users (dim-sized), not the event stream.
     q("x156_rolling_distinct",
-      """WITH du AS (SELECT DISTINCT cast(floor(unix_millis(ts)/86400000.0) AS BIGINT) AS d, user_id
-        |            FROM events WHERE event_type = 'purchase')
-        |SELECT DISTINCT d,
-        |  cast(size(collect_set(user_id) OVER (ORDER BY d
-        |    RANGE BETWEEN 2 PRECEDING AND CURRENT ROW)) AS BIGINT) AS u3
-        |FROM du ORDER BY d""".stripMargin,
       """WITH du AS (SELECT DISTINCT CAST(floor(epoch_ms(ts)/86400000.0) AS BIGINT) AS d, user_id
         |            FROM events WHERE event_type = 'purchase')
         |SELECT DISTINCT d,
         |  CAST(count(DISTINCT user_id) OVER (ORDER BY d
         |    RANGE BETWEEN 2 PRECEDING AND CURRENT ROW) AS BIGINT) AS u3
-        |FROM du ORDER BY d""".stripMargin),
+        |FROM du ORDER BY d""".stripMargin,
+      Hand("Spark has no DISTINCT window aggregate: size(collect_set)",
+      """WITH du AS (SELECT DISTINCT cast(floor(unix_millis(ts)/86400000.0) AS BIGINT) AS d, user_id
+        |            FROM events WHERE event_type = 'purchase')
+        |SELECT DISTINCT d,
+        |  cast(size(collect_set(user_id) OVER (ORDER BY d
+        |    RANGE BETWEEN 2 PRECEDING AND CURRENT ROW)) AS BIGINT) AS u3
+        |FROM du ORDER BY d""".stripMargin)),
 
     // Dataset card: the per-source release audit every corpus ships —
     // doc/token totals, language spread, exact-dup rate (docs minus
@@ -2641,15 +2417,6 @@ object Queries {
     // final pipeline stage (x151's shard manifest is the storage half,
     // this is the content half).
     q("x157_dataset_card",
-      """SELECT source,
-        |       count(*) AS docs,
-        |       cast(sum(size(split(text,' '))) AS BIGINT) AS toks,
-        |       count(DISTINCT lang) AS langs,
-        |       count(DISTINCT md5(text)) AS uniq,
-        |       cast(((count(*) - count(DISTINCT md5(text))) * 10000) div count(*) AS BIGINT) AS dup_bp,
-        |       cast(min(n_chars) AS BIGINT) AS min_chars,
-        |       cast(max(n_chars) AS BIGINT) AS max_chars
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
       """SELECT source,
         |       count(*) AS docs,
         |       CAST(sum(len(string_split(text,' '))) AS BIGINT) AS toks,
@@ -2675,13 +2442,6 @@ object Queries {
     // division is identical IEEE on both engines; the max row is
     // clamped into the last bucket (classic right-edge rule).
     q("x159_histogram",
-      """WITH b AS (SELECT cast(min(o_totalprice) AS DOUBLE) AS lo, cast(max(o_totalprice) AS DOUBLE) AS hi FROM orders),
-        |h AS (SELECT least(cast(floor((o_totalprice - lo) / ((hi - lo) / 16.0)) AS BIGINT), 15) AS bucket,
-        |             count(*) AS c
-        |      FROM orders CROSS JOIN b GROUP BY 1),
-        |s AS (SELECT explode(sequence(0, 15)) AS bucket)
-        |SELECT s.bucket, coalesce(h.c, 0) AS c
-        |FROM s LEFT JOIN h ON s.bucket = h.bucket ORDER BY s.bucket""".stripMargin,
       """WITH b AS (SELECT CAST(min(o_totalprice) AS DOUBLE) AS lo, CAST(max(o_totalprice) AS DOUBLE) AS hi FROM orders),
         |h AS (SELECT least(CAST(floor((o_totalprice - lo) / ((hi - lo) / 16.0)) AS BIGINT), 15) AS bucket,
         |             count(*) AS c
@@ -2697,24 +2457,6 @@ object Queries {
     // clarity; the Scala form would fuse them into one pass of
     // multi-column aggregates.
     q("x160_column_profile",
-      """SELECT * FROM (
-        |  SELECT 'l_orderkey' AS col, count(DISTINCT l_orderkey) AS ndv,
-        |         cast(count(*) - count(l_orderkey) AS BIGINT) AS nulls,
-        |         cast(min(l_orderkey) AS STRING) AS minv, cast(max(l_orderkey) AS STRING) AS maxv
-        |  FROM lineitem
-        |  UNION ALL
-        |  SELECT 'l_linenumber', count(DISTINCT l_linenumber),
-        |         cast(count(*) - count(l_linenumber) AS BIGINT),
-        |         cast(min(l_linenumber) AS STRING), cast(max(l_linenumber) AS STRING) FROM lineitem
-        |  UNION ALL
-        |  SELECT 'l_returnflag', count(DISTINCT l_returnflag),
-        |         cast(count(*) - count(l_returnflag) AS BIGINT),
-        |         min(l_returnflag), max(l_returnflag) FROM lineitem
-        |  UNION ALL
-        |  SELECT 'l_shipdate', count(DISTINCT l_shipdate),
-        |         cast(count(*) - count(l_shipdate) AS BIGINT),
-        |         cast(min(l_shipdate) AS STRING), cast(max(l_shipdate) AS STRING) FROM lineitem
-        |) ORDER BY col""".stripMargin,
       """SELECT * FROM (
         |  SELECT 'l_orderkey' AS col, count(DISTINCT l_orderkey) AS ndv,
         |         CAST(count(*) - count(l_orderkey) AS BIGINT) AS nulls,
@@ -2749,6 +2491,19 @@ object Queries {
     // the pair expansion; `lip` repartitions on the join key so the
     // expansion runs width-way parallel. Spark dialect only.
     q("x162_market_basket",
+      """WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+        |cnt AS (SELECT l_partkey, count(*) AS c FROM li GROUP BY 1),
+        |tot AS (SELECT count(DISTINCT l_orderkey) AS n FROM li),
+        |pairs AS (
+        |  SELECT a.l_partkey AS p1, b.l_partkey AS p2, count(*) AS support
+        |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+        |  GROUP BY 1, 2 HAVING count(*) >= 2)
+        |SELECT p1, p2, support,
+        |       CAST((support * n * 10000) // (c1.c * c2.c) AS BIGINT) AS lift_bp
+        |FROM pairs JOIN cnt c1 ON c1.l_partkey = p1
+        |           JOIN cnt c2 ON c2.l_partkey = p2 CROSS JOIN tot
+        |ORDER BY support DESC, p1, p2 LIMIT 30""".stripMargin,
+      Hand("REPARTITION hint: the exploding join would run in one task",
       s"""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
         |lip AS (SELECT /*+ REPARTITION($hintPar, l_orderkey) */ l_orderkey, l_partkey FROM li),
         |cnt AS (SELECT l_partkey, count(*) AS c FROM li GROUP BY 1),
@@ -2761,19 +2516,7 @@ object Queries {
         |       cast((support * n * 10000) div (c1.c * c2.c) AS BIGINT) AS lift_bp
         |FROM pairs JOIN cnt c1 ON c1.l_partkey = p1
         |           JOIN cnt c2 ON c2.l_partkey = p2 CROSS JOIN tot
-        |ORDER BY support DESC, p1, p2 LIMIT 30""".stripMargin,
-      """WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        |cnt AS (SELECT l_partkey, count(*) AS c FROM li GROUP BY 1),
-        |tot AS (SELECT count(DISTINCT l_orderkey) AS n FROM li),
-        |pairs AS (
-        |  SELECT a.l_partkey AS p1, b.l_partkey AS p2, count(*) AS support
-        |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        |  GROUP BY 1, 2 HAVING count(*) >= 2)
-        |SELECT p1, p2, support,
-        |       CAST((support * n * 10000) // (c1.c * c2.c) AS BIGINT) AS lift_bp
-        |FROM pairs JOIN cnt c1 ON c1.l_partkey = p1
-        |           JOIN cnt c2 ON c2.l_partkey = p2 CROSS JOIN tot
-        |ORDER BY support DESC, p1, p2 LIMIT 30""".stripMargin),
+        |ORDER BY support DESC, p1, p2 LIMIT 30""".stripMargin)),
 
     // Triangle enumeration on the frequent-co-purchase graph (edges =
     // x162's min-support-2 pairs, kept oriented p1<p2 so each triangle
@@ -2787,6 +2530,16 @@ object Queries {
     // OPTIMIZATION_r18.md §8); the texts split only so the hint stays
     // Spark-side — the oracle text is the old shared one, verbatim.
     q("x163_triangles",
+      """WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+        |pairs AS (
+        |  SELECT a.l_partkey AS p1, b.l_partkey AS p2
+        |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+        |  GROUP BY 1, 2 HAVING count(*) >= 2)
+        |SELECT e1.p1 AS a, e1.p2 AS b, e2.p2 AS c
+        |FROM pairs e1 JOIN pairs e2 ON e1.p2 = e2.p1
+        |     JOIN pairs e3 ON e3.p1 = e1.p1 AND e3.p2 = e2.p2
+        |ORDER BY a, b, c""".stripMargin,
+      Hand("REPARTITION hint: the exploding join would run in one task",
       s"""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
         |lip AS (SELECT /*+ REPARTITION($hintPar, l_orderkey) */ l_orderkey, l_partkey FROM li),
         |pairs AS (
@@ -2796,16 +2549,7 @@ object Queries {
         |SELECT e1.p1 AS a, e1.p2 AS b, e2.p2 AS c
         |FROM pairs e1 JOIN pairs e2 ON e1.p2 = e2.p1
         |     JOIN pairs e3 ON e3.p1 = e1.p1 AND e3.p2 = e2.p2
-        |ORDER BY a, b, c""".stripMargin,
-      """WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        |pairs AS (
-        |  SELECT a.l_partkey AS p1, b.l_partkey AS p2
-        |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        |  GROUP BY 1, 2 HAVING count(*) >= 2)
-        |SELECT e1.p1 AS a, e1.p2 AS b, e2.p2 AS c
-        |FROM pairs e1 JOIN pairs e2 ON e1.p2 = e2.p1
-        |     JOIN pairs e3 ON e3.p1 = e1.p1 AND e3.p2 = e2.p2
-        |ORDER BY a, b, c""".stripMargin),
+        |ORDER BY a, b, c""".stripMargin)),
 
     // Date/interval arithmetic battery (the calendar half of §2.7 that
     // x88/x99 don't cover: INTERVAL literals, last_day, quarter trunc,
@@ -2816,16 +2560,6 @@ object Queries {
     // semantics in both engines, unlike months_between (fractional,
     // day-of-month dependent) vs date_diff('month').
     q("x164_interval_math",
-      """WITH o AS (SELECT o_orderkey, cast(o_orderdate AS DATE) AS d FROM orders)
-        |SELECT o_orderkey,
-        |       cast(d + INTERVAL '3' MONTH AS DATE) AS plus3mo,
-        |       cast(d - INTERVAL '90' DAY AS DATE) AS minus90d,
-        |       last_day(d) AS eom,
-        |       cast(date_trunc('quarter', d) AS DATE) AS qtr,
-        |       next_day(d, 'MO') AS next_mon,
-        |       cast(datediff(DATE'1998-12-31', d) AS BIGINT) AS days_to_eoy,
-        |       cast((1998*12 + 12) - (year(d)*12 + month(d)) AS BIGINT) AS mon_to_eoy
-        |FROM o ORDER BY o_orderkey""".stripMargin,
       """WITH o AS (SELECT o_orderkey, CAST(o_orderdate AS DATE) AS d FROM orders)
         |SELECT o_orderkey,
         |       CAST(d + INTERVAL 3 MONTH AS DATE) AS plus3mo,
@@ -2835,7 +2569,18 @@ object Queries {
         |       d + CAST(((7 - isodow(d)) % 7) + 1 AS INT) AS next_mon,
         |       CAST(date_diff('day', d, DATE '1998-12-31') AS BIGINT) AS days_to_eoy,
         |       CAST((1998*12 + 12) - (year(d)*12 + month(d)) AS BIGINT) AS mon_to_eoy
-        |FROM o ORDER BY o_orderkey""".stripMargin),
+        |FROM o ORDER BY o_orderkey""".stripMargin,
+      Hand("date_diff and the isodow arithmetic are datediff and next_day",
+      """WITH o AS (SELECT o_orderkey, cast(o_orderdate AS DATE) AS d FROM orders)
+        |SELECT o_orderkey,
+        |       cast(d + INTERVAL '3' MONTH AS DATE) AS plus3mo,
+        |       cast(d - INTERVAL '90' DAY AS DATE) AS minus90d,
+        |       last_day(d) AS eom,
+        |       cast(date_trunc('quarter', d) AS DATE) AS qtr,
+        |       next_day(d, 'MO') AS next_mon,
+        |       cast(datediff(DATE'1998-12-31', d) AS BIGINT) AS days_to_eoy,
+        |       cast((1998*12 + 12) - (year(d)*12 + month(d)) AS BIGINT) AS mon_to_eoy
+        |FROM o ORDER BY o_orderkey""".stripMargin)),
 
     // Unicode accent folding — the canonicalization pass upstream of
     // every hash-based dedup (md5/minhash keys must not split on
@@ -2849,16 +2594,6 @@ object Queries {
     // non-decomposable Ø (must survive); `roundtrip` proves
     // fold(translate(x)) == x.
     q("x166_fold_accents",
-      """WITH acc AS (SELECT c_custkey,
-        |                    lower(c_name) AS lo,
-        |                    translate(lower(c_name), 'aeioucs', 'áéíóüçš') AS accented
-        |             FROM customer)
-        |SELECT c_custkey, accented,
-        |       fold_accents(accented) AS folded,
-        |       cast(length(accented) AS BIGINT) AS n_chars,
-        |       (fold_accents(accented) = lo) AS roundtrip,
-        |       fold_accents('Crème Brûlée Ø') AS decomposed_fold
-        |FROM acc ORDER BY c_custkey""".stripMargin,
       """WITH acc AS (SELECT c_custkey,
         |                    lower(c_name) AS lo,
         |                    translate(lower(c_name), 'aeioucs', 'áéíóüçš') AS accented
@@ -2878,16 +2613,6 @@ object Queries {
     // bit. Truncation error vs the infinite EWMA is < 2^-8 of the
     // running scale — below the x128 quantum.
     q("x167_ewma",
-      """WITH daily AS (
-        |  SELECT cast(floor(unix_millis(ts)/86400000.0) AS BIGINT) AS d, count(*) AS c
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1)
-        |SELECT d, c,
-        |  cast(c*128
-        |     + coalesce(lag(c,1) OVER w, 0)*64 + coalesce(lag(c,2) OVER w, 0)*32
-        |     + coalesce(lag(c,3) OVER w, 0)*16 + coalesce(lag(c,4) OVER w, 0)*8
-        |     + coalesce(lag(c,5) OVER w, 0)*4  + coalesce(lag(c,6) OVER w, 0)*2
-        |     + coalesce(lag(c,7) OVER w, 0)    AS BIGINT) AS ewma_x128
-        |FROM daily WINDOW w AS (ORDER BY d) ORDER BY d""".stripMargin,
       """WITH daily AS (
         |  SELECT CAST(floor(epoch_ms(ts)/86400000.0) AS BIGINT) AS d, count(*) AS c
         |  FROM events WHERE event_type = 'purchase' GROUP BY 1)
@@ -2911,21 +2636,22 @@ object Queries {
       """WITH ev AS (SELECT user_id, ts, event_type, event_id FROM events
         |            WHERE event_type IN ('click', 'purchase')),
         |m AS (SELECT user_id, ts, event_type, event_id,
-        |        last_value(CASE WHEN event_type = 'click' THEN event_id END) IGNORE NULLS
-        |          OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS attrib
-        |      FROM ev)
-        |SELECT event_id, user_id, attrib, (attrib IS NOT NULL) AS attributed
-        |FROM m WHERE event_type = 'purchase' ORDER BY event_id""".stripMargin,
-      """WITH ev AS (SELECT user_id, ts, event_type, event_id FROM events
-        |            WHERE event_type IN ('click', 'purchase')),
-        |m AS (SELECT user_id, ts, event_type, event_id,
         |        last_value(CASE WHEN event_type = 'click' THEN event_id END IGNORE NULLS)
         |          OVER (PARTITION BY user_id ORDER BY ts, event_id
         |                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS attrib
         |      FROM ev)
         |SELECT event_id, user_id, attrib, (attrib IS NOT NULL) AS attributed
-        |FROM m WHERE event_type = 'purchase' ORDER BY event_id""".stripMargin),
+        |FROM m WHERE event_type = 'purchase' ORDER BY event_id""".stripMargin,
+      Hand("IGNORE NULLS goes after the call in Spark, inside it in DuckDB",
+      """WITH ev AS (SELECT user_id, ts, event_type, event_id FROM events
+        |            WHERE event_type IN ('click', 'purchase')),
+        |m AS (SELECT user_id, ts, event_type, event_id,
+        |        last_value(CASE WHEN event_type = 'click' THEN event_id END) IGNORE NULLS
+        |          OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS attrib
+        |      FROM ev)
+        |SELECT event_id, user_id, attrib, (attrib IS NOT NULL) AS attributed
+        |FROM m WHERE event_type = 'purchase' ORDER BY event_id""".stripMargin)),
 
     // CDC upsert (MERGE semantics as a full-outer coalesce): delta
     // rows override matching base rows (update), unmatched delta rows
@@ -2962,19 +2688,6 @@ object Queries {
     q("x170_nested_structs",
       """WITH nested AS (
         |  SELECT l_orderkey,
-        |         sort_array(collect_list(named_struct(
-        |           'ln', l_linenumber, 'qty', l_quantity,
-        |           'price', l_extendedprice, 'disc', l_discount))) AS lines
-        |  FROM lineitem GROUP BY 1)
-        |SELECT l_orderkey,
-        |  cast(size(lines) AS BIGINT) AS n_lines,
-        |  cast(aggregate(lines, 0L,
-        |    (s, x) -> s + cast(floor(x.price * (1 - x.disc) * 100) AS BIGINT)) AS BIGINT) AS net_cents,
-        |  cast(size(filter(lines, x -> x.qty > 30)) AS BIGINT) AS big_lines,
-        |  cast(element_at(lines, 1).ln AS BIGINT) AS first_ln
-        |FROM nested ORDER BY l_orderkey""".stripMargin,
-      """WITH nested AS (
-        |  SELECT l_orderkey,
         |         list(struct_pack(ln := l_linenumber, qty := l_quantity,
         |                          price := l_extendedprice, disc := l_discount)
         |              ORDER BY l_linenumber, l_quantity, l_extendedprice, l_discount) AS lines
@@ -2985,7 +2698,21 @@ object Queries {
         |    x -> CAST(floor(x.price * (1 - x.disc) * 100) AS BIGINT))) AS BIGINT) AS net_cents,
         |  CAST(len(list_filter(lines, x -> x.qty > 30)) AS BIGINT) AS big_lines,
         |  CAST(lines[1].ln AS BIGINT) AS first_ln
-        |FROM nested ORDER BY l_orderkey""".stripMargin),
+        |FROM nested ORDER BY l_orderkey""".stripMargin,
+      Hand("struct_pack and ordered list() are named_struct/collect_list",
+      """WITH nested AS (
+        |  SELECT l_orderkey,
+        |         sort_array(collect_list(named_struct(
+        |           'ln', l_linenumber, 'qty', l_quantity,
+        |           'price', l_extendedprice, 'disc', l_discount))) AS lines
+        |  FROM lineitem GROUP BY 1)
+        |SELECT l_orderkey,
+        |  cast(size(lines) AS BIGINT) AS n_lines,
+        |  cast(aggregate(lines, 0L,
+        |    (s, x) -> s + cast(floor(x.price * (1 - x.disc) * 100) AS BIGINT)) AS BIGINT) AS net_cents,
+        |  cast(size(filter(lines, x -> x.qty > 30)) AS BIGINT) AS big_lines,
+        |  cast(element_at(lines, 1).ln AS BIGINT) AS first_ln
+        |FROM nested ORDER BY l_orderkey""".stripMargin)),
 
     // Timezone conversion battery: UTC event times to America/New_York
     // wall clock — the localization pass every user-facing rollup
@@ -2997,21 +2724,22 @@ object Queries {
     // (Both engines read the IANA tzdb; NY 2024 rules are identical.)
     q("x171_timezone",
       """SELECT event_id,
-        |  date_format(from_utc_timestamp(ts, 'America/New_York'), 'yyyy-MM-dd HH:mm:ss') AS ny_str,
-        |  cast(hour(from_utc_timestamp(ts, 'America/New_York')) AS BIGINT) AS ny_hour,
-        |  date_format(from_utc_timestamp(TIMESTAMP'2024-03-10 06:59:00', 'America/New_York'),
-        |              'yyyy-MM-dd HH:mm:ss') AS pre_dst,
-        |  date_format(from_utc_timestamp(TIMESTAMP'2024-03-10 07:01:00', 'America/New_York'),
-        |              'yyyy-MM-dd HH:mm:ss') AS post_dst
-        |FROM events ORDER BY event_id""".stripMargin,
-      """SELECT event_id,
         |  strftime(timezone('America/New_York', timezone('UTC', ts)), '%Y-%m-%d %H:%M:%S') AS ny_str,
         |  CAST(hour(timezone('America/New_York', timezone('UTC', ts))) AS BIGINT) AS ny_hour,
         |  strftime(timezone('America/New_York', timezone('UTC', TIMESTAMP '2024-03-10 06:59:00')),
         |           '%Y-%m-%d %H:%M:%S') AS pre_dst,
         |  strftime(timezone('America/New_York', timezone('UTC', TIMESTAMP '2024-03-10 07:01:00')),
         |           '%Y-%m-%d %H:%M:%S') AS post_dst
-        |FROM events ORDER BY event_id""".stripMargin),
+        |FROM events ORDER BY event_id""".stripMargin,
+      Hand("strftime and timezone() are date_format and from_utc_timestamp",
+      """SELECT event_id,
+        |  date_format(from_utc_timestamp(ts, 'America/New_York'), 'yyyy-MM-dd HH:mm:ss') AS ny_str,
+        |  cast(hour(from_utc_timestamp(ts, 'America/New_York')) AS BIGINT) AS ny_hour,
+        |  date_format(from_utc_timestamp(TIMESTAMP'2024-03-10 06:59:00', 'America/New_York'),
+        |              'yyyy-MM-dd HH:mm:ss') AS pre_dst,
+        |  date_format(from_utc_timestamp(TIMESTAMP'2024-03-10 07:01:00', 'America/New_York'),
+        |              'yyyy-MM-dd HH:mm:ss') AS post_dst
+        |FROM events ORDER BY event_id""".stripMargin)),
 
     // Data-quality audit — the expectation gate a pipeline runs before
     // promoting a corpus snapshot: null keys, domain ranges, PK
@@ -3023,29 +2751,6 @@ object Queries {
     // `checked` for the FK rule counts non-NULL keys (REFERENCES
     // semantics: NULL never violates FK).
     q("x172_dq_audit",
-      """SELECT * FROM (
-        |  SELECT 'lineitem.qty_in_1_45' AS rule,
-        |         cast(count(*) FILTER (WHERE l_quantity < 1 OR l_quantity > 45) AS BIGINT) AS violations,
-        |         cast(count(*) AS BIGINT) AS checked FROM lineitem
-        |  UNION ALL
-        |  SELECT 'lineitem.orderkey_not_null',
-        |         cast(count(*) FILTER (WHERE l_orderkey IS NULL) AS BIGINT),
-        |         cast(count(*) AS BIGINT) FROM lineitem
-        |  UNION ALL
-        |  SELECT 'lineitem.positive_price',
-        |         cast(count(*) FILTER (WHERE l_extendedprice <= 0) AS BIGINT),
-        |         cast(count(*) AS BIGINT) FROM lineitem
-        |  UNION ALL
-        |  SELECT 'orders.pk_unique',
-        |         cast(count(o_orderkey) - count(DISTINCT o_orderkey) AS BIGINT),
-        |         cast(count(*) AS BIGINT) FROM orders
-        |  UNION ALL
-        |  SELECT 'lineitem.fk_orders',
-        |         cast((SELECT count(*) FROM lineitem l
-        |               WHERE l.l_orderkey IS NOT NULL AND NOT EXISTS
-        |                 (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)) AS BIGINT),
-        |         cast((SELECT count(*) FROM lineitem WHERE l_orderkey IS NOT NULL) AS BIGINT)
-        |) ORDER BY rule""".stripMargin,
       """SELECT * FROM (
         |  SELECT 'lineitem.qty_in_1_45' AS rule,
         |         CAST(count(*) FILTER (WHERE l_quantity < 1 OR l_quantity > 45) AS BIGINT) AS violations,
@@ -3080,19 +2785,20 @@ object Queries {
     // '0x'-prefixed BIGINT cast in DuckDB — same md5, same value.
     q("x174_table_checksum",
       """WITH h AS (SELECT l_returnflag AS f,
-        |    cast(conv(substr(md5(concat_ws('|', l_orderkey, l_linenumber,
-        |         l_returnflag, cast(floor(l_extendedprice*100) AS BIGINT))), 1, 8),
-        |         16, 10) AS BIGINT) AS h32
-        |  FROM lineitem)
-        |SELECT f, count(*) AS n, cast(sum(h32) AS BIGINT) AS checksum
-        |FROM h GROUP BY f ORDER BY f""".stripMargin,
-      """WITH h AS (SELECT l_returnflag AS f,
         |    CAST(('0x' || substring(md5(concat_ws('|', l_orderkey, l_linenumber,
         |         l_returnflag, CAST(floor(l_extendedprice*100) AS BIGINT))), 1, 8))
         |         AS BIGINT) AS h32
         |  FROM lineitem)
         |SELECT f, count(*) AS n, CAST(sum(h32) AS BIGINT) AS checksum
-        |FROM h GROUP BY f ORDER BY f""".stripMargin),
+        |FROM h GROUP BY f ORDER BY f""".stripMargin,
+      Hand("hex to integer: DuckDB casts '0x' || hex, Spark calls conv(hex, 16, 10)",
+      """WITH h AS (SELECT l_returnflag AS f,
+        |    cast(conv(substr(md5(concat_ws('|', l_orderkey, l_linenumber,
+        |         l_returnflag, cast(floor(l_extendedprice*100) AS BIGINT))), 1, 8),
+        |         16, 10) AS BIGINT) AS h32
+        |  FROM lineitem)
+        |SELECT f, count(*) AS n, cast(sum(h32) AS BIGINT) AS checksum
+        |FROM h GROUP BY f ORDER BY f""".stripMargin)),
 
     // Weighted median (quantity-weighted price): smallest value whose
     // cumulative weight crosses half the group total. Integer weights
@@ -3119,6 +2825,15 @@ object Queries {
     // shuffle. One hash-agg + one tiny distribution agg.
     q("x176_skew_report",
       """WITH k AS (SELECT l_partkey AS key, count(*) AS c FROM lineitem GROUP BY 1)
+        |SELECT CAST(count(*) AS BIGINT) AS n_keys,
+        |       CAST(max(c) AS BIGINT) AS max_c,
+        |       CAST(quantile_disc(c, 0.5) AS BIGINT) AS p50_c,
+        |       CAST(quantile_disc(c, 0.9) AS BIGINT) AS p90_c,
+        |       CAST(quantile_disc(c, 0.99) AS BIGINT) AS p99_c,
+        |       CAST((max(c) * 10000) // quantile_disc(c, 0.5) AS BIGINT) AS skew_bp
+        |FROM k""".stripMargin,
+      Hand("quantile_disc(x, p) is percentile_disc(p) WITHIN GROUP (ORDER BY x)",
+      """WITH k AS (SELECT l_partkey AS key, count(*) AS c FROM lineitem GROUP BY 1)
         |SELECT cast(count(*) AS BIGINT) AS n_keys,
         |       cast(max(c) AS BIGINT) AS max_c,
         |       cast(percentile_disc(0.5) WITHIN GROUP (ORDER BY c) AS BIGINT) AS p50_c,
@@ -3126,15 +2841,7 @@ object Queries {
         |       cast(percentile_disc(0.99) WITHIN GROUP (ORDER BY c) AS BIGINT) AS p99_c,
         |       cast((max(c) * 10000) div cast(percentile_disc(0.5)
         |            WITHIN GROUP (ORDER BY c) AS BIGINT) AS BIGINT) AS skew_bp
-        |FROM k""".stripMargin,
-      """WITH k AS (SELECT l_partkey AS key, count(*) AS c FROM lineitem GROUP BY 1)
-        |SELECT CAST(count(*) AS BIGINT) AS n_keys,
-        |       CAST(max(c) AS BIGINT) AS max_c,
-        |       CAST(quantile_disc(c, 0.5) AS BIGINT) AS p50_c,
-        |       CAST(quantile_disc(c, 0.9) AS BIGINT) AS p90_c,
-        |       CAST(quantile_disc(c, 0.99) AS BIGINT) AS p99_c,
-        |       CAST((max(c) * 10000) // quantile_disc(c, 0.5) AS BIGINT) AS skew_bp
-        |FROM k""".stripMargin),
+        |FROM k""".stripMargin)),
 
     // ==== Round-6 additions (x178+) ======================================
 
@@ -3193,12 +2900,6 @@ object Queries {
     // sits ≥0.08 from every integer boundary, so the fixed-point value
     // is engine-stable). One scan, 9-row output.
     q("x181_benford_audit",
-      """WITH d AS (SELECT cast(substr(cast(cast(floor(o_totalprice) AS BIGINT) AS STRING),1,1) AS BIGINT) AS digit
-        |           FROM orders WHERE o_totalprice >= 1)
-        |SELECT digit, count(*) AS n,
-        |       cast(floor(count(*) * 10000.0 / sum(count(*)) OVER ()) AS BIGINT) AS obs_bp,
-        |       cast(floor(10000.0 * log10(1.0 + 1.0/digit)) AS BIGINT) AS benford_bp
-        |FROM d GROUP BY digit ORDER BY digit""".stripMargin,
       """WITH d AS (SELECT cast(substr(cast(cast(floor(o_totalprice) AS BIGINT) AS VARCHAR),1,1) AS BIGINT) AS digit
         |           FROM orders WHERE o_totalprice >= 1)
         |SELECT digit, count(*) AS n,
@@ -3214,16 +2915,6 @@ object Queries {
     // decay) — this is the market/metering semantics (duration-weighted).
     // Per-user windows partition by user_id: scales horizontally.
     q("x182_time_weighted_avg",
-      """WITH e AS (SELECT user_id, unix_millis(ts) AS tms,
-        |                  cast(floor(value*100) AS BIGINT) AS vc,
-        |                  lead(unix_millis(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS ntms
-        |           FROM events)
-        |SELECT user_id,
-        |       cast(sum(vc*(ntms-tms)) AS BIGINT) AS vt_num,
-        |       cast(sum(ntms-tms) AS BIGINT) AS dur_ms,
-        |       cast(sum(vc*(ntms-tms)) div sum(ntms-tms) AS BIGINT) AS twap_c
-        |FROM e WHERE ntms IS NOT NULL GROUP BY user_id
-        |HAVING sum(ntms-tms) > 0 ORDER BY user_id""".stripMargin,
       """WITH e AS (SELECT user_id, epoch_ms(ts) AS tms,
         |                  cast(floor(value*100) AS BIGINT) AS vc,
         |                  lead(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS ntms
@@ -3261,20 +2952,6 @@ object Queries {
     // method is exact, hash-checkable, and the shape every shard/quota
     // assigner needs. Dim-sized windows only.
     q("x184_apportionment",
-      """WITH c AS (SELECT n_name AS name, cast(count(*) AS BIGINT) AS cnt
-        |           FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |           GROUP BY n_name),
-        |t AS (SELECT cast(sum(cnt) AS BIGINT) AS total FROM c),
-        |q AS (SELECT name, cnt,
-        |             cast((cnt * 10000) div (SELECT total FROM t) AS BIGINT) AS fl,
-        |             cast((cnt * 10000) % (SELECT total FROM t) AS BIGINT) AS rem
-        |      FROM c),
-        |s AS (SELECT cast(10000 - sum(fl) AS BIGINT) AS leftover FROM q),
-        |r AS (SELECT name, cnt, fl, rem,
-        |             row_number() OVER (ORDER BY rem DESC, name) AS rk FROM q)
-        |SELECT name, cnt,
-        |       cast(fl + CASE WHEN rk <= (SELECT leftover FROM s) THEN 1 ELSE 0 END AS BIGINT) AS slots
-        |FROM r ORDER BY name""".stripMargin,
       """WITH c AS (SELECT n_name AS name, cast(count(*) AS BIGINT) AS cnt
         |           FROM customer JOIN nation ON c_nationkey = n_nationkey
         |           GROUP BY n_name),
@@ -3393,17 +3070,6 @@ object Queries {
     // so the report is exact and hash-checkable; the drift DECISION
     // (thresholding) consumes the same numbers either way.
     q("x190_dist_drift",
-      """WITH b AS (SELECT source, cast(n_chars AS BIGINT) div 200 AS bucket FROM documents
-        |           WHERE source IN ('src0','src1')),
-        |c AS (SELECT bucket,
-        |             cast(sum(CASE WHEN source='src0' THEN 1 ELSE 0 END) AS BIGINT) AS a_n,
-        |             cast(sum(CASE WHEN source='src1' THEN 1 ELSE 0 END) AS BIGINT) AS b_n
-        |      FROM b GROUP BY bucket)
-        |SELECT bucket, a_n, b_n,
-        |       cast(floor(a_n * 10000.0 / sum(a_n) OVER ()) AS BIGINT) AS a_bp,
-        |       cast(floor(b_n * 10000.0 / sum(b_n) OVER ()) AS BIGINT) AS b_bp,
-        |       cast(floor(a_n * 10000.0 / sum(a_n) OVER ()) - floor(b_n * 10000.0 / sum(b_n) OVER ()) AS BIGINT) AS delta_bp
-        |FROM c ORDER BY bucket""".stripMargin,
       """WITH b AS (SELECT source, cast(n_chars AS BIGINT) // 200 AS bucket FROM documents
         |           WHERE source IN ('src0','src1')),
         |c AS (SELECT bucket,
@@ -3450,17 +3116,6 @@ object Queries {
     // fusion output.
     q("x192_rrf_fusion",
       """WITH t AS (SELECT doc_id,
-        |                  cast((length(text) - length(replace(text,'data',''))) div 4 AS BIGINT) AS tf,
-        |                  n_chars
-        |           FROM documents),
-        |r AS (SELECT doc_id, tf, n_chars,
-        |             row_number() OVER (ORDER BY tf DESC, doc_id) AS r1,
-        |             row_number() OVER (ORDER BY n_chars DESC, doc_id) AS r2
-        |      FROM t)
-        |SELECT doc_id, r1, r2,
-        |       cast(floor(1000000.0/(60+r1)) + floor(1000000.0/(60+r2)) AS BIGINT) AS rrf
-        |FROM r ORDER BY rrf DESC, doc_id LIMIT 20""".stripMargin,
-      """WITH t AS (SELECT doc_id,
         |                  cast((length(text) - length(replace(text,'data',''))) // 4 AS BIGINT) AS tf,
         |                  n_chars
         |           FROM documents),
@@ -3481,12 +3136,6 @@ object Queries {
         |m AS (SELECT g, min(c) AS lo, max(c) AS hi FROM v GROUP BY g)
         |SELECT v.g, v.event_id,
         |       cast(CASE WHEN m.hi = m.lo THEN 0
-        |                 ELSE ((v.c - m.lo) * 1000) div (m.hi - m.lo) END AS BIGINT) AS norm_pm
-        |FROM v JOIN m ON v.g = m.g ORDER BY v.g, v.event_id""".stripMargin,
-      """WITH v AS (SELECT event_type AS g, event_id, cast(floor(value*100) AS BIGINT) AS c FROM events),
-        |m AS (SELECT g, min(c) AS lo, max(c) AS hi FROM v GROUP BY g)
-        |SELECT v.g, v.event_id,
-        |       cast(CASE WHEN m.hi = m.lo THEN 0
         |                 ELSE ((v.c - m.lo) * 1000) // (m.hi - m.lo) END AS BIGINT) AS norm_pm
         |FROM v JOIN m ON v.g = m.g ORDER BY v.g, v.event_id""".stripMargin),
 
@@ -3497,18 +3146,6 @@ object Queries {
     // exact, no interpolation), and min/max. One grouped min per user,
     // dim-sized median pass.
     q("x194_funnel_latency",
-      """WITH f AS (SELECT user_id,
-        |                  min(CASE WHEN event_type='view' THEN ts END) AS v_ts,
-        |                  min(CASE WHEN event_type='purchase' THEN ts END) AS p_ts
-        |           FROM events GROUP BY user_id),
-        |d AS (SELECT unix_millis(p_ts) - unix_millis(v_ts) AS ms FROM f
-        |      WHERE v_ts IS NOT NULL AND p_ts IS NOT NULL AND p_ts >= v_ts),
-        |m AS (SELECT ms, count(*) AS cnt FROM d GROUP BY ms),
-        |c AS (SELECT ms, sum(cnt) OVER (ORDER BY ms) AS cum, sum(cnt) OVER () AS tot FROM m)
-        |SELECT (SELECT cast(count(*) AS BIGINT) FROM d) AS converters,
-        |       (SELECT cast(min(ms) AS BIGINT) FROM c WHERE cum*2 >= tot) AS median_ms,
-        |       (SELECT cast(min(ms) AS BIGINT) FROM d) AS min_ms,
-        |       (SELECT cast(max(ms) AS BIGINT) FROM d) AS max_ms""".stripMargin,
       """WITH f AS (SELECT user_id,
         |                  min(CASE WHEN event_type='view' THEN ts END) AS v_ts,
         |                  min(CASE WHEN event_type='purchase' THEN ts END) AS p_ts
@@ -3542,18 +3179,6 @@ object Queries {
     // session count, single-event sessions, bounce share in bp.
     // Per-user windows scale; the daily rollup is dim-sized.
     q("x196_bounce_rate",
-      """WITH g AS (SELECT user_id, ts, event_id,
-        |                  CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-        |                            OR unix_millis(ts) - unix_millis(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) > 1800000
-        |                       THEN 1 ELSE 0 END AS new_s
-        |           FROM events),
-        |s AS (SELECT user_id, ts, sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS sid FROM g),
-        |per AS (SELECT user_id, sid, min(cast(ts AS DATE)) AS d, count(*) AS n
-        |        FROM s GROUP BY user_id, sid)
-        |SELECT d, cast(count(*) AS BIGINT) AS sessions,
-        |       cast(sum(CASE WHEN n = 1 THEN 1 ELSE 0 END) AS BIGINT) AS bounces,
-        |       cast(floor(sum(CASE WHEN n = 1 THEN 1 ELSE 0 END) * 10000.0 / count(*)) AS BIGINT) AS bounce_bp
-        |FROM per GROUP BY d ORDER BY d""".stripMargin,
       """WITH g AS (SELECT user_id, ts, event_id,
         |                  CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
         |                            OR epoch_ms(ts) - epoch_ms(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) > 1800000
@@ -3602,20 +3227,6 @@ object Queries {
     q("x198_peak_concurrency",
       """WITH g AS (SELECT user_id, ts, event_id,
         |                  CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-        |                            OR unix_millis(ts) - unix_millis(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) > 1800000
-        |                       THEN 1 ELSE 0 END AS new_s
-        |           FROM events),
-        |s AS (SELECT user_id, ts, sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS sid FROM g),
-        |iv AS (SELECT user_id, sid, min(unix_millis(ts)) AS st, max(unix_millis(ts)) AS en
-        |       FROM s GROUP BY user_id, sid),
-        |pts AS (SELECT st AS t, 1 AS delta FROM iv
-        |        UNION ALL SELECT en AS t, -1 AS delta FROM iv),
-        |c AS (SELECT t, sum(delta) OVER (ORDER BY t) AS conc FROM pts)
-        |SELECT cast(max(conc) AS BIGINT) AS peak_sessions,
-        |       (SELECT cast(count(*) AS BIGINT) FROM iv) AS total_sessions
-        |FROM c""".stripMargin,
-      """WITH g AS (SELECT user_id, ts, event_id,
-        |                  CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
         |                            OR epoch_ms(ts) - epoch_ms(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) > 1800000
         |                       THEN 1 ELSE 0 END AS new_s
         |           FROM events),
@@ -3638,22 +3249,23 @@ object Queries {
     q("x199_rapid_repeat",
       """SELECT a.o_orderkey AS a_key, b.o_orderkey AS b_key,
         |       a.o_custkey AS cust,
-        |       cast(abs(datediff(b.o_orderdate, a.o_orderdate)) AS BIGINT) AS gap_days,
-        |       cast(abs(cast(floor(a.o_totalprice*100) AS BIGINT)
-        |                - cast(floor(b.o_totalprice*100) AS BIGINT)) AS BIGINT) AS price_delta_c
-        |FROM orders a JOIN orders b
-        |  ON a.o_custkey = b.o_custkey AND a.o_orderkey < b.o_orderkey
-        |WHERE abs(datediff(b.o_orderdate, a.o_orderdate)) <= 3
-        |ORDER BY a_key, b_key""".stripMargin,
-      """SELECT a.o_orderkey AS a_key, b.o_orderkey AS b_key,
-        |       a.o_custkey AS cust,
         |       cast(abs(datediff('day', a.o_orderdate, b.o_orderdate)) AS BIGINT) AS gap_days,
         |       cast(abs(cast(floor(a.o_totalprice*100) AS BIGINT)
         |                - cast(floor(b.o_totalprice*100) AS BIGINT)) AS BIGINT) AS price_delta_c
         |FROM orders a JOIN orders b
         |  ON a.o_custkey = b.o_custkey AND a.o_orderkey < b.o_orderkey
         |WHERE abs(datediff('day', a.o_orderdate, b.o_orderdate)) <= 3
-        |ORDER BY a_key, b_key""".stripMargin),
+        |ORDER BY a_key, b_key""".stripMargin,
+      Hand("date_diff('day', a, b) is datediff(b, a) in Spark",
+      """SELECT a.o_orderkey AS a_key, b.o_orderkey AS b_key,
+        |       a.o_custkey AS cust,
+        |       cast(abs(datediff(b.o_orderdate, a.o_orderdate)) AS BIGINT) AS gap_days,
+        |       cast(abs(cast(floor(a.o_totalprice*100) AS BIGINT)
+        |                - cast(floor(b.o_totalprice*100) AS BIGINT)) AS BIGINT) AS price_delta_c
+        |FROM orders a JOIN orders b
+        |  ON a.o_custkey = b.o_custkey AND a.o_orderkey < b.o_orderkey
+        |WHERE abs(datediff(b.o_orderdate, a.o_orderdate)) <= 3
+        |ORDER BY a_key, b_key""".stripMargin)),
 
     // Transposition-aware fuzzy matching — x126's banded candidate join
     // under unrestricted Damerau-Levenshtein (swapped adjacent letters,
@@ -3676,6 +3288,15 @@ object Queries {
     // tiers use. DuckDB keeps the plain form: oracle-scale corpora are
     // small, and the hash gate proves the two shapes equal.
     q("x200_fuzzy_join_dl",
+      """SELECT a.p_partkey AS pa, b.p_partkey AS pb,
+        |       cast(damerau_levenshtein(a.p_name, b.p_name) AS BIGINT) AS dl,
+        |       cast(levenshtein(a.p_name, b.p_name) AS BIGINT) AS lev
+        |FROM part a JOIN part b
+        |  ON a.p_brand = b.p_brand AND a.p_partkey < b.p_partkey
+        | AND b.p_partkey - a.p_partkey <= 40
+        |WHERE damerau_levenshtein(a.p_name, b.p_name) <= 12
+        |ORDER BY dl, pa, pb""".stripMargin,
+      Hand("blocks the brand self-join on p_partkey div 41 before the DP",
       """WITH blk AS (SELECT p_partkey, p_brand, p_name, p_partkey div 41 AS bk FROM part),
         |probe AS (SELECT p_partkey, p_brand, p_name, explode(array(bk, bk - 1)) AS jk FROM blk)
         |SELECT a.p_partkey AS pa, b.p_partkey AS pb,
@@ -3686,15 +3307,7 @@ object Queries {
         | AND a.p_partkey < b.p_partkey
         | AND b.p_partkey - a.p_partkey <= 40
         |WHERE damerau_levenshtein(a.p_name, b.p_name) <= 12
-        |ORDER BY dl, pa, pb""".stripMargin,
-      """SELECT a.p_partkey AS pa, b.p_partkey AS pb,
-        |       cast(damerau_levenshtein(a.p_name, b.p_name) AS BIGINT) AS dl,
-        |       cast(levenshtein(a.p_name, b.p_name) AS BIGINT) AS lev
-        |FROM part a JOIN part b
-        |  ON a.p_brand = b.p_brand AND a.p_partkey < b.p_partkey
-        | AND b.p_partkey - a.p_partkey <= 40
-        |WHERE damerau_levenshtein(a.p_name, b.p_name) <= 12
-        |ORDER BY dl, pa, pb""".stripMargin),
+        |ORDER BY dl, pa, pb""".stripMargin)),
 
     // Linear interpolation over series gaps — x69 fills missing hours
     // with 0; this reconstructs them from the neighbors: spine join,
@@ -3704,27 +3317,6 @@ object Queries {
     // probed, including negatives). Edge gaps extend the nearest value.
     // Spine is dim-sized; the windows are over the spine, not events.
     q("x201_linear_interp",
-      """WITH h AS (SELECT cast(floor(unix_millis(ts)/3600000.0) AS BIGINT) AS hn,
-        |                  cast(sum(cast(floor(value*100) AS BIGINT)) div count(*) AS BIGINT) AS vc
-        |           FROM events WHERE event_type = 'purchase' GROUP BY 1),
-        |sp AS (SELECT b.hn, h.vc
-        |       FROM (SELECT explode(sequence((SELECT min(hn) FROM h),(SELECT max(hn) FROM h))) AS hn) b
-        |       LEFT JOIN h ON b.hn = h.hn),
-        |f AS (SELECT hn, vc,
-        |             last_value(CASE WHEN vc IS NOT NULL THEN hn END) IGNORE NULLS OVER w1 AS h0,
-        |             last_value(vc) IGNORE NULLS OVER w1 AS v0,
-        |             first_value(CASE WHEN vc IS NOT NULL THEN hn END) IGNORE NULLS OVER w2 AS h1,
-        |             first_value(vc) IGNORE NULLS OVER w2 AS v1
-        |      FROM sp
-        |      WINDOW w1 AS (ORDER BY hn ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-        |             w2 AS (ORDER BY hn ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
-        |SELECT hn,
-        |       cast(CASE WHEN vc IS NOT NULL THEN vc
-        |                 WHEN h0 IS NULL THEN v1
-        |                 WHEN h1 IS NULL THEN v0
-        |                 ELSE v0 + ((v1 - v0) * (hn - h0)) div (h1 - h0) END AS BIGINT) AS vc_interp,
-        |       CASE WHEN vc IS NULL THEN 1 ELSE 0 END AS interpolated
-        |FROM f ORDER BY hn""".stripMargin,
       """WITH h AS (SELECT cast(floor(epoch_ms(ts)/3600000.0) AS BIGINT) AS hn,
         |                  cast(sum(cast(floor(value*100) AS BIGINT)) // count(*) AS BIGINT) AS vc
         |           FROM events WHERE event_type = 'purchase' GROUP BY 1),
@@ -3745,7 +3337,29 @@ object Queries {
         |                 WHEN h1 IS NULL THEN v0
         |                 ELSE v0 + ((v1 - v0) * (hn - h0)) // (h1 - h0) END AS BIGINT) AS vc_interp,
         |       CASE WHEN vc IS NULL THEN 1 ELSE 0 END AS interpolated
-        |FROM f ORDER BY hn""".stripMargin),
+        |FROM f ORDER BY hn""".stripMargin,
+      Hand("IGNORE NULLS goes after the call in Spark, inside it in DuckDB",
+      """WITH h AS (SELECT cast(floor(unix_millis(ts)/3600000.0) AS BIGINT) AS hn,
+        |                  cast(sum(cast(floor(value*100) AS BIGINT)) div count(*) AS BIGINT) AS vc
+        |           FROM events WHERE event_type = 'purchase' GROUP BY 1),
+        |sp AS (SELECT b.hn, h.vc
+        |       FROM (SELECT explode(sequence((SELECT min(hn) FROM h),(SELECT max(hn) FROM h))) AS hn) b
+        |       LEFT JOIN h ON b.hn = h.hn),
+        |f AS (SELECT hn, vc,
+        |             last_value(CASE WHEN vc IS NOT NULL THEN hn END) IGNORE NULLS OVER w1 AS h0,
+        |             last_value(vc) IGNORE NULLS OVER w1 AS v0,
+        |             first_value(CASE WHEN vc IS NOT NULL THEN hn END) IGNORE NULLS OVER w2 AS h1,
+        |             first_value(vc) IGNORE NULLS OVER w2 AS v1
+        |      FROM sp
+        |      WINDOW w1 AS (ORDER BY hn ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+        |             w2 AS (ORDER BY hn ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
+        |SELECT hn,
+        |       cast(CASE WHEN vc IS NOT NULL THEN vc
+        |                 WHEN h0 IS NULL THEN v1
+        |                 WHEN h1 IS NULL THEN v0
+        |                 ELSE v0 + ((v1 - v0) * (hn - h0)) div (h1 - h0) END AS BIGINT) AS vc_interp,
+        |       CASE WHEN vc IS NULL THEN 1 ELSE 0 END AS interpolated
+        |FROM f ORDER BY hn""".stripMargin)),
 
     // AUC (Mann-Whitney rank form) — the model-eval primitive a
     // training-data engine grades classifiers/filters with. Binary task
@@ -3756,14 +3370,6 @@ object Queries {
     // integer division to basis points. One global rank window
     // (corpus-sized = dim-sized here; x100 tier at scale).
     q("x202_auc",
-      """WITH s AS (SELECT vec_id, cast(element_at(embedding,1) AS DOUBLE) AS score,
-        |                  CASE WHEN label < 5 THEN 1 ELSE 0 END AS y FROM embeddings),
-        |r AS (SELECT y, 2*rank() OVER (ORDER BY score) + count(*) OVER (PARTITION BY score) - 1 AS mr2 FROM s),
-        |a AS (SELECT cast(sum(CASE WHEN y = 1 THEN mr2 ELSE 0 END) AS BIGINT) AS s2,
-        |             cast(sum(y) AS BIGINT) AS np, cast(sum(1 - y) AS BIGINT) AS nn FROM r)
-        |SELECT np AS positives, nn AS negatives,
-        |       cast((10000 * (s2 - np * (np + 1))) div (2 * np * nn) AS BIGINT) AS auc_bp
-        |FROM a""".stripMargin,
       """WITH s AS (SELECT vec_id, cast(embedding[1] AS DOUBLE) AS score,
         |                  CASE WHEN label < 5 THEN 1 ELSE 0 END AS y FROM embeddings),
         |r AS (SELECT y, 2*rank() OVER (ORDER BY score) + count(*) OVER (PARTITION BY score) - 1 AS mr2 FROM s),
@@ -3777,12 +3383,6 @@ object Queries {
     // positive rate (reliability diagram data). Integer counts and
     // rates; ntile tie-broken by the unique vec_id.
     q("x203_calibration",
-      """WITH s AS (SELECT vec_id, cast(element_at(embedding,1) AS DOUBLE) AS score,
-        |                  CASE WHEN label < 5 THEN 1 ELSE 0 END AS y FROM embeddings),
-        |d AS (SELECT y, ntile(10) OVER (ORDER BY score, vec_id) AS bin FROM s)
-        |SELECT bin, cast(count(*) AS BIGINT) AS n, cast(sum(y) AS BIGINT) AS positives,
-        |       cast(floor(sum(y) * 10000.0 / count(*)) AS BIGINT) AS pos_rate_bp
-        |FROM d GROUP BY bin ORDER BY bin""".stripMargin,
       """WITH s AS (SELECT vec_id, cast(embedding[1] AS DOUBLE) AS score,
         |                  CASE WHEN label < 5 THEN 1 ELSE 0 END AS y FROM embeddings),
         |d AS (SELECT y, ntile(10) OVER (ORDER BY score, vec_id) AS bin FROM s)
@@ -3794,18 +3394,6 @@ object Queries {
     // third ML-eval primitive. F1 = 2TP/(2TP+FP+FN) stays in integers
     // to the final bp division. One conditional aggregate, one row.
     q("x204_confusion",
-      """WITH s AS (SELECT CASE WHEN cast(element_at(embedding,1) AS DOUBLE) >= 0 THEN 1 ELSE 0 END AS pred,
-        |                  CASE WHEN label < 5 THEN 1 ELSE 0 END AS y FROM embeddings),
-        |c AS (SELECT cast(sum(CASE WHEN pred=1 AND y=1 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-        |             cast(sum(CASE WHEN pred=1 AND y=0 THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-        |             cast(sum(CASE WHEN pred=0 AND y=1 THEN 1 ELSE 0 END) AS BIGINT) AS fn,
-        |             cast(sum(CASE WHEN pred=0 AND y=0 THEN 1 ELSE 0 END) AS BIGINT) AS tn
-        |      FROM s)
-        |SELECT tp, fp, fn, tn,
-        |       cast((10000*tp) div (tp+fp) AS BIGINT) AS precision_bp,
-        |       cast((10000*tp) div (tp+fn) AS BIGINT) AS recall_bp,
-        |       cast((20000*tp) div (2*tp+fp+fn) AS BIGINT) AS f1_bp
-        |FROM c""".stripMargin,
       """WITH s AS (SELECT CASE WHEN cast(embedding[1] AS DOUBLE) >= 0 THEN 1 ELSE 0 END AS pred,
         |                  CASE WHEN label < 5 THEN 1 ELSE 0 END AS y FROM embeddings),
         |c AS (SELECT cast(sum(CASE WHEN pred=1 AND y=1 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
@@ -3873,15 +3461,6 @@ object Queries {
         |r AS (SELECT ga, rank() OVER (ORDER BY value) AS rk FROM a)
         |SELECT cast(sum(CASE WHEN ga = 1 THEN rk ELSE 0 END) AS BIGINT) AS rank_sum_click,
         |       cast(sum(CASE WHEN ga = 1 THEN rk ELSE 0 END)
-        |            - (sum(ga) * (sum(ga) + 1)) div 2 AS BIGINT) AS u_stat,
-        |       cast(sum(ga) AS BIGINT) AS n_click,
-        |       cast(sum(1 - ga) AS BIGINT) AS n_error
-        |FROM r""".stripMargin,
-      """WITH a AS (SELECT value, CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS ga
-        |           FROM events WHERE event_type IN ('click','error')),
-        |r AS (SELECT ga, rank() OVER (ORDER BY value) AS rk FROM a)
-        |SELECT cast(sum(CASE WHEN ga = 1 THEN rk ELSE 0 END) AS BIGINT) AS rank_sum_click,
-        |       cast(sum(CASE WHEN ga = 1 THEN rk ELSE 0 END)
         |            - (sum(ga) * (sum(ga) + 1)) // 2 AS BIGINT) AS u_stat,
         |       cast(sum(ga) AS BIGINT) AS n_click,
         |       cast(sum(1 - ga) AS BIGINT) AS n_error
@@ -3926,18 +3505,6 @@ object Queries {
     // Jensen-Shannon divergence between two sources' token distributions
     // (drift metric bounded in [0, ln 2] — x190's unbounded-KL sibling).
     q("x212_js_divergence",
-      """WITH tok AS (SELECT source, explode(split(text, ' ')) AS w
-        |             FROM documents WHERE source IN ('src0','src1')),
-        |c AS (SELECT source, w, count(*) AS c FROM tok GROUP BY 1, 2),
-        |tot AS (SELECT source, sum(c) AS t FROM c GROUP BY 1),
-        |d AS (SELECT c.w,
-        |        sum(CASE WHEN c.source='src0' THEN c.c*1.0/tot.t ELSE 0 END) AS p,
-        |        sum(CASE WHEN c.source='src1' THEN c.c*1.0/tot.t ELSE 0 END) AS q
-        |      FROM c JOIN tot ON c.source = tot.source GROUP BY 1)
-        |SELECT round(sum(CASE WHEN p > 0 THEN 0.5 * p * ln(2.0*p/(p+q)) ELSE 0 END)
-        |           + sum(CASE WHEN q > 0 THEN 0.5 * q * ln(2.0*q/(p+q)) ELSE 0 END), 4) AS js_div,
-        |       cast(count(*) AS BIGINT) AS vocab
-        |FROM d""".stripMargin,
       """WITH tok AS (SELECT source, unnest(string_split(text, ' ')) AS w
         |             FROM documents WHERE source IN ('src0','src1')),
         |c AS (SELECT source, w, count(*) AS c FROM tok GROUP BY 1, 2),
@@ -4022,30 +3589,22 @@ object Queries {
     // is already 1-based, DuckDB's 0-based dayofweek gets +1.
     q("x217_seasonal_index",
       """WITH d AS (SELECT cast(ts AS DATE) AS day, count(*) AS c FROM events GROUP BY 1),
-        |w AS (SELECT day, c, dayofweek(day) AS dw FROM d)
-        |SELECT dw AS day_of_week, round(avg(c) / (SELECT avg(c) FROM d), 4) AS seasonal_index,
-        |       cast(count(*) AS BIGINT) AS n_days
-        |FROM w GROUP BY dw ORDER BY dw""".stripMargin,
-      """WITH d AS (SELECT cast(ts AS DATE) AS day, count(*) AS c FROM events GROUP BY 1),
         |w AS (SELECT day, c, dayofweek(day) + 1 AS dw FROM d)
         |SELECT dw AS day_of_week, round(avg(c) / (SELECT avg(c) FROM d), 4) AS seasonal_index,
         |       cast(count(*) AS BIGINT) AS n_days
-        |FROM w GROUP BY dw ORDER BY dw""".stripMargin),
+        |FROM w GROUP BY dw ORDER BY dw""".stripMargin,
+      Hand("dayofweek counts from 1 in Spark, from 0 in DuckDB",
+      """WITH d AS (SELECT cast(ts AS DATE) AS day, count(*) AS c FROM events GROUP BY 1),
+        |w AS (SELECT day, c, dayofweek(day) AS dw FROM d)
+        |SELECT dw AS day_of_week, round(avg(c) / (SELECT avg(c) FROM d), 4) AS seasonal_index,
+        |       cast(count(*) AS BIGINT) AS n_days
+        |FROM w GROUP BY dw ORDER BY dw""".stripMargin)),
 
     // RFM segmentation: per-customer recency/frequency/monetary, quintiled
     // by three global ntiles (unique custkey tie-break), segment counts out.
     // The ntile input is one row per customer — the single-partition window
     // is over the aggregated frame, not the raw orders.
     q("x218_rfm",
-      """WITH m AS (SELECT o_custkey AS c,
-        |             datediff(DATE '2001-08-01', cast(max(o_orderdate) AS DATE)) AS rec,
-        |             count(*) AS freq, sum(o_totalprice) AS mon
-        |           FROM orders GROUP BY 1),
-        |q AS (SELECT c, ntile(5) OVER (ORDER BY rec, c) AS r_q,
-        |             ntile(5) OVER (ORDER BY freq DESC, c) AS f_q,
-        |             ntile(5) OVER (ORDER BY mon DESC, c) AS m_q FROM m)
-        |SELECT r_q, f_q, m_q, cast(count(*) AS BIGINT) AS customers
-        |FROM q GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
       """WITH m AS (SELECT o_custkey AS c,
         |             date_diff('day', cast(max(o_orderdate) AS DATE), DATE '2001-08-01') AS rec,
         |             count(*) AS freq, sum(o_totalprice) AS mon
@@ -4054,7 +3613,17 @@ object Queries {
         |             ntile(5) OVER (ORDER BY freq DESC, c) AS f_q,
         |             ntile(5) OVER (ORDER BY mon DESC, c) AS m_q FROM m)
         |SELECT r_q, f_q, m_q, cast(count(*) AS BIGINT) AS customers
-        |FROM q GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin),
+        |FROM q GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
+      Hand("date_diff('day', a, b) is datediff(b, a) in Spark",
+      """WITH m AS (SELECT o_custkey AS c,
+        |             datediff(DATE '2001-08-01', cast(max(o_orderdate) AS DATE)) AS rec,
+        |             count(*) AS freq, sum(o_totalprice) AS mon
+        |           FROM orders GROUP BY 1),
+        |q AS (SELECT c, ntile(5) OVER (ORDER BY rec, c) AS r_q,
+        |             ntile(5) OVER (ORDER BY freq DESC, c) AS f_q,
+        |             ntile(5) OVER (ORDER BY mon DESC, c) AS m_q FROM m)
+        |SELECT r_q, f_q, m_q, cast(count(*) AS BIGINT) AS customers
+        |FROM q GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin)),
 
     // 7-day rolling MEDIAN via a bounded date-range self-join (exact 7x
     // expansion of a 30-row frame; median-as-window is not portable across
@@ -4114,24 +3683,6 @@ object Queries {
       """WITH u AS (SELECT user_id, cast(min(ts) AS DATE) AS fd, cast(max(ts) AS DATE) AS ld,
         |             cast(min(CASE WHEN event_type = 'error' THEN ts END) AS DATE) AS ed
         |           FROM events GROUP BY 1),
-        |l AS (SELECT CASE WHEN ed IS NOT NULL THEN datediff(ed, fd)
-        |                  ELSE datediff(ld, fd) END AS dur,
-        |             CASE WHEN ed IS NOT NULL THEN 1 ELSE 0 END AS ev FROM u),
-        |d AS (SELECT dur, sum(ev) AS deaths, count(*) AS obs FROM l GROUP BY 1),
-        |a AS (SELECT dur, deaths,
-        |             sum(obs) OVER (ORDER BY dur DESC) AS at_risk FROM d),
-        |s AS (SELECT dur, deaths, at_risk,
-        |        min(CASE WHEN deaths >= at_risk THEN 0 ELSE 1 END) OVER (ORDER BY dur) AS alive,
-        |        exp(sum(ln(CASE WHEN deaths >= at_risk THEN 1.0
-        |                        ELSE (at_risk - deaths) * 1.0 / at_risk END))
-        |            OVER (ORDER BY dur)) AS s0
-        |      FROM a WHERE deaths > 0)
-        |SELECT dur AS duration_days, cast(deaths AS BIGINT) AS deaths,
-        |       cast(at_risk AS BIGINT) AS at_risk, round(s0 * alive, 4) AS survival
-        |FROM s ORDER BY duration_days""".stripMargin,
-      """WITH u AS (SELECT user_id, cast(min(ts) AS DATE) AS fd, cast(max(ts) AS DATE) AS ld,
-        |             cast(min(CASE WHEN event_type = 'error' THEN ts END) AS DATE) AS ed
-        |           FROM events GROUP BY 1),
         |l AS (SELECT CASE WHEN ed IS NOT NULL THEN date_diff('day', fd, ed)
         |                  ELSE date_diff('day', fd, ld) END AS dur,
         |             CASE WHEN ed IS NOT NULL THEN 1 ELSE 0 END AS ev FROM u),
@@ -4146,15 +3697,30 @@ object Queries {
         |      FROM a WHERE deaths > 0)
         |SELECT dur AS duration_days, cast(deaths AS BIGINT) AS deaths,
         |       cast(at_risk AS BIGINT) AS at_risk, round(s0 * alive, 4) AS survival
-        |FROM s ORDER BY duration_days""".stripMargin),
+        |FROM s ORDER BY duration_days""".stripMargin,
+      Hand("date_diff('day', a, b) is datediff(b, a) in Spark",
+      """WITH u AS (SELECT user_id, cast(min(ts) AS DATE) AS fd, cast(max(ts) AS DATE) AS ld,
+        |             cast(min(CASE WHEN event_type = 'error' THEN ts END) AS DATE) AS ed
+        |           FROM events GROUP BY 1),
+        |l AS (SELECT CASE WHEN ed IS NOT NULL THEN datediff(ed, fd)
+        |                  ELSE datediff(ld, fd) END AS dur,
+        |             CASE WHEN ed IS NOT NULL THEN 1 ELSE 0 END AS ev FROM u),
+        |d AS (SELECT dur, sum(ev) AS deaths, count(*) AS obs FROM l GROUP BY 1),
+        |a AS (SELECT dur, deaths,
+        |             sum(obs) OVER (ORDER BY dur DESC) AS at_risk FROM d),
+        |s AS (SELECT dur, deaths, at_risk,
+        |        min(CASE WHEN deaths >= at_risk THEN 0 ELSE 1 END) OVER (ORDER BY dur) AS alive,
+        |        exp(sum(ln(CASE WHEN deaths >= at_risk THEN 1.0
+        |                        ELSE (at_risk - deaths) * 1.0 / at_risk END))
+        |            OVER (ORDER BY dur)) AS s0
+        |      FROM a WHERE deaths > 0)
+        |SELECT dur AS duration_days, cast(deaths AS BIGINT) AS deaths,
+        |       cast(at_risk AS BIGINT) AS at_risk, round(s0 * alive, 4) AS survival
+        |FROM s ORDER BY duration_days""".stripMargin)),
 
     // Logistic log-loss of the embedding[0]-as-score classifier — sigmoid
     // stays strictly inside (0,1) for finite scores, so ln never sees 0.
     q("x223_log_loss",
-      """WITH s AS (SELECT 1.0 / (1.0 + exp(-cast(element_at(embedding, 1) AS DOUBLE))) AS p,
-        |                  CASE WHEN label < 5 THEN 1 ELSE 0 END AS y FROM embeddings)
-        |SELECT round(-avg(y * ln(p) + (1 - y) * ln(1.0 - p)), 4) AS log_loss,
-        |       cast(count(*) AS BIGINT) AS n FROM s""".stripMargin,
       """WITH s AS (SELECT 1.0 / (1.0 + exp(-cast(embedding[1] AS DOUBLE))) AS p,
         |                  CASE WHEN label < 5 THEN 1 ELSE 0 END AS y FROM embeddings)
         |SELECT round(-avg(y * ln(p) + (1 - y) * ln(1.0 - p)), 4) AS log_loss,
@@ -4163,18 +3729,6 @@ object Queries {
     // Cumulative gains / lift table by score decile — all-integer outputs
     // (basis points via integer division), ntile tie-broken by vec_id.
     q("x224_gains_table",
-      """WITH s AS (SELECT vec_id, cast(element_at(embedding, 1) AS DOUBLE) AS score,
-        |                  CASE WHEN label < 5 THEN 1 ELSE 0 END AS y FROM embeddings),
-        |d AS (SELECT y, ntile(10) OVER (ORDER BY score DESC, vec_id) AS decile FROM s),
-        |g AS (SELECT decile, count(*) AS n, sum(y) AS pos FROM d GROUP BY 1),
-        |c AS (SELECT decile, n, pos,
-        |        sum(pos) OVER (ORDER BY decile) AS cum_pos,
-        |        sum(n) OVER (ORDER BY decile) AS cum_n FROM g),
-        |t AS (SELECT sum(y) AS tot_pos, count(*) AS tot_n FROM s)
-        |SELECT decile, cast(n AS BIGINT) AS n, cast(pos AS BIGINT) AS positives,
-        |       cast((10000 * cum_pos) div tot_pos AS BIGINT) AS cum_capture_bp,
-        |       cast((10000 * cum_pos * tot_n) div (cum_n * tot_pos) AS BIGINT) AS lift_bp
-        |FROM c, t ORDER BY decile""".stripMargin,
       """WITH s AS (SELECT vec_id, cast(embedding[1] AS DOUBLE) AS score,
         |                  CASE WHEN label < 5 THEN 1 ELSE 0 END AS y FROM embeddings),
         |d AS (SELECT y, ntile(10) OVER (ORDER BY score DESC, vec_id) AS decile FROM s),
@@ -4191,23 +3745,6 @@ object Queries {
     // Cohen's kappa + Matthews correlation from the x204-twin confusion
     // counts — exact integer numerators, one 4dp-rounded division each.
     q("x225_kappa_mcc",
-      """WITH s AS (SELECT CASE WHEN cast(element_at(embedding, 1) AS DOUBLE) >= 0 THEN 1 ELSE 0 END AS pred,
-        |                  CASE WHEN label < 5 THEN 1 ELSE 0 END AS y FROM embeddings),
-        |c AS (SELECT cast(sum(CASE WHEN pred=1 AND y=1 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-        |             cast(sum(CASE WHEN pred=1 AND y=0 THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-        |             cast(sum(CASE WHEN pred=0 AND y=1 THEN 1 ELSE 0 END) AS BIGINT) AS fn,
-        |             cast(sum(CASE WHEN pred=0 AND y=0 THEN 1 ELSE 0 END) AS BIGINT) AS tn
-        |      FROM s),
-        |k AS (SELECT tp, fp, fn, tn, tp + fp + fn + tn AS n,
-        |             (tp + tn) * 1.0 / (tp + fp + fn + tn) AS po,
-        |             ((tp + fp) * 1.0 * (tp + fn) + (fn + tn) * 1.0 * (fp + tn))
-        |               / pow(tp + fp + fn + tn, 2) AS pe
-        |      FROM c)
-        |SELECT round((po - pe) / (1.0 - pe), 4) AS cohens_kappa,
-        |       round((tp * tn - fp * fn) /
-        |             sqrt((tp + fp) * 1.0 * (tp + fn) * (tn + fp) * (tn + fn)), 4) AS mcc,
-        |       cast(n AS BIGINT) AS n
-        |FROM k""".stripMargin,
       """WITH s AS (SELECT CASE WHEN cast(embedding[1] AS DOUBLE) >= 0 THEN 1 ELSE 0 END AS pred,
         |                  CASE WHEN label < 5 THEN 1 ELSE 0 END AS y FROM embeddings),
         |c AS (SELECT cast(sum(CASE WHEN pred=1 AND y=1 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
@@ -4230,19 +3767,6 @@ object Queries {
     // residue, ranked by score with a unique tie-break; the ideal ordering
     // ranks relevant items first by the same tie-break.
     q("x226_ndcg",
-      """WITH s AS (SELECT label, vec_id, cast(element_at(embedding, 1) AS DOUBLE) AS score,
-        |                  CASE WHEN vec_id % 3 = 0 THEN 1 ELSE 0 END AS rel FROM embeddings),
-        |r AS (SELECT label, rel,
-        |        row_number() OVER (PARTITION BY label ORDER BY score DESC, vec_id) AS pos FROM s),
-        |i AS (SELECT label, rel,
-        |        row_number() OVER (PARTITION BY label ORDER BY rel DESC, vec_id) AS ipos FROM s),
-        |d AS (SELECT label, sum(CASE WHEN pos <= 10 THEN rel / log2(pos + 1.0) ELSE 0 END) AS dcg
-        |      FROM r GROUP BY 1),
-        |j AS (SELECT label, sum(CASE WHEN ipos <= 10 THEN rel / log2(ipos + 1.0) ELSE 0 END) AS idcg
-        |      FROM i GROUP BY 1)
-        |SELECT d.label, round(d.dcg, 4) AS dcg10,
-        |       round(d.dcg / nullif(j.idcg, 0), 4) AS ndcg10
-        |FROM d JOIN j ON d.label = j.label ORDER BY d.label""".stripMargin,
       """WITH s AS (SELECT label, vec_id, cast(embedding[1] AS DOUBLE) AS score,
         |                  CASE WHEN vec_id % 3 = 0 THEN 1 ELSE 0 END AS rel FROM embeddings),
         |r AS (SELECT label, rel,
@@ -4260,14 +3784,6 @@ object Queries {
     // Zipf rank-frequency slope: OLS in log-log space via regr_slope over
     // the word-frequency table (wordcount -> rank -> regression).
     q("x227_zipf_slope",
-      """WITH f AS (SELECT w, count(*) AS cnt
-        |           FROM (SELECT explode(split(text, ' ')) AS w FROM documents)
-        |           GROUP BY 1),
-        |r AS (SELECT cnt, row_number() OVER (ORDER BY cnt DESC, w) AS rk FROM f)
-        |SELECT round(regr_slope(ln(cnt * 1.0), ln(rk * 1.0)), 4) AS zipf_slope,
-        |       round(regr_r2(ln(cnt * 1.0), ln(rk * 1.0)), 4) AS r2,
-        |       cast(count(*) AS BIGINT) AS vocab
-        |FROM r""".stripMargin,
       """WITH f AS (SELECT w, count(*) AS cnt
         |           FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
         |           GROUP BY 1),
@@ -4325,6 +3841,14 @@ object Queries {
     // declarative-for-the-oracle / bucketed-for-execution split of x200.
     q("x230_grid_radius_join",
       """WITH p AS (SELECT event_id AS id, event_id % 1000 AS x, (event_id*7) % 1000 AS y
+        |           FROM events WHERE event_id % 5 = 0)
+        |SELECT a.id AS event_id, cast(count(b.id) AS BIGINT) AS nbrs,
+        |       CASE WHEN count(b.id) >= 3 THEN 1 ELSE 0 END AS core
+        |FROM p a LEFT JOIN p b ON a.id <> b.id
+        |  AND (a.x-b.x)*(a.x-b.x)+(a.y-b.y)*(a.y-b.y) <= 625
+        |GROUP BY a.id ORDER BY nbrs DESC, event_id LIMIT 100""".stripMargin,
+      Hand("grid cells (x div 25) turn the radius self-join into an equi-join",
+      """WITH p AS (SELECT event_id AS id, event_id % 1000 AS x, (event_id*7) % 1000 AS y
         |           FROM events WHERE event_id % 5 = 0),
         |b AS (SELECT id, x, y, x div 25 AS cx, y div 25 AS cy FROM p),
         |pr AS (SELECT b.id, b.x, b.y, b.cx + d1.dx AS cx, b.cy + d2.dy AS cy
@@ -4338,14 +3862,7 @@ object Queries {
         |SELECT b.id AS event_id, cast(coalesce(n.nbrs, 0) AS BIGINT) AS nbrs,
         |       CASE WHEN coalesce(n.nbrs, 0) >= 3 THEN 1 ELSE 0 END AS core
         |FROM b LEFT JOIN n ON b.id = n.id
-        |ORDER BY nbrs DESC, event_id LIMIT 100""".stripMargin,
-      """WITH p AS (SELECT event_id AS id, event_id % 1000 AS x, (event_id*7) % 1000 AS y
-        |           FROM events WHERE event_id % 5 = 0)
-        |SELECT a.id AS event_id, cast(count(b.id) AS BIGINT) AS nbrs,
-        |       CASE WHEN count(b.id) >= 3 THEN 1 ELSE 0 END AS core
-        |FROM p a LEFT JOIN p b ON a.id <> b.id
-        |  AND (a.x-b.x)*(a.x-b.x)+(a.y-b.y)*(a.y-b.y) <= 625
-        |GROUP BY a.id ORDER BY nbrs DESC, event_id LIMIT 100""".stripMargin),
+        |ORDER BY nbrs DESC, event_id LIMIT 100""".stripMargin)),
 
     // Inverted-index construction — term -> (df, first-10 posting list).
     // The retrieval-side primitive behind x113/x114 (TF-IDF / BM25): the
@@ -4355,18 +3872,19 @@ object Queries {
     // agg, so no driver-side or unbounded state. array_sort(collect_list)
     // (vs DuckDB's ordered list()) keeps the list deterministic.
     q("x231_inverted_index",
-      """WITH w AS (SELECT doc_id, explode(split(lower(text), '[^a-z]+')) AS term FROM documents),
-        |t AS (SELECT term, doc_id FROM w WHERE term <> '' AND length(term) >= 3 GROUP BY term, doc_id),
-        |p AS (SELECT term, cast(count(*) AS BIGINT) AS df,
-        |             array_join(slice(array_sort(collect_list(doc_id)), 1, 10), ',') AS postings
-        |      FROM t GROUP BY term)
-        |SELECT term, df, postings FROM p ORDER BY df DESC, term LIMIT 100""".stripMargin,
       """WITH w AS (SELECT doc_id, unnest(string_split_regex(lower(text), '[^a-z]+')) AS term FROM documents),
         |t AS (SELECT term, doc_id FROM w WHERE term <> '' AND length(term) >= 3 GROUP BY term, doc_id),
         |p AS (SELECT term, cast(count(*) AS BIGINT) AS df,
         |             array_to_string(list_slice(list(doc_id ORDER BY doc_id), 1, 10), ',') AS postings
         |      FROM t GROUP BY term)
-        |SELECT term, df, postings FROM p ORDER BY df DESC, term LIMIT 100""".stripMargin),
+        |SELECT term, df, postings FROM p ORDER BY df DESC, term LIMIT 100""".stripMargin,
+      Hand("ordered list() and list_slice are sorted collect_list and slice",
+      """WITH w AS (SELECT doc_id, explode(split(lower(text), '[^a-z]+')) AS term FROM documents),
+        |t AS (SELECT term, doc_id FROM w WHERE term <> '' AND length(term) >= 3 GROUP BY term, doc_id),
+        |p AS (SELECT term, cast(count(*) AS BIGINT) AS df,
+        |             array_join(slice(array_sort(collect_list(doc_id)), 1, 10), ',') AS postings
+        |      FROM t GROUP BY term)
+        |SELECT term, df, postings FROM p ORDER BY df DESC, term LIMIT 100""".stripMargin)),
 
     // Bigram language-model surprise scoring — train P(w2|w1) on the
     // corpus itself, then rank docs by mean transition probability (ppm,
@@ -4376,18 +3894,6 @@ object Queries {
     // (broadcastable); the per-doc score is two hash joins on word keys
     // plus one agg — linear in corpus tokens.
     q("x232_bigram_lm",
-      """WITH t AS (SELECT doc_id, split(lower(text),' ') AS a FROM documents),
-        |bg AS (SELECT doc_id, element_at(a,i) AS w1, element_at(a,i+1) AS w2
-        |       FROM (SELECT doc_id, a, explode(sequence(1, size(a)-1)) AS i FROM t WHERE size(a) >= 2)
-        |       WHERE element_at(a,i) <> '' AND element_at(a,i+1) <> ''),
-        |cb AS (SELECT w1, w2, count(*) AS cxy FROM bg GROUP BY 1,2),
-        |cu AS (SELECT w1, sum(cxy) AS cx FROM cb GROUP BY 1),
-        |sc AS (SELECT bg.doc_id,
-        |              cast(sum((cb.cxy * 1000000) div cu.cx) div count(*) AS BIGINT) AS avg_ppm,
-        |              cast(count(*) AS BIGINT) AS n_bigrams
-        |       FROM bg JOIN cb ON bg.w1=cb.w1 AND bg.w2=cb.w2 JOIN cu ON bg.w1=cu.w1
-        |       GROUP BY bg.doc_id)
-        |SELECT doc_id, avg_ppm, n_bigrams FROM sc ORDER BY avg_ppm ASC, doc_id LIMIT 20""".stripMargin,
       """WITH t AS (SELECT doc_id, string_split(lower(text),' ') AS a FROM documents),
         |bg AS (SELECT doc_id, a[i] AS w1, a[i+1] AS w2
         |       FROM (SELECT doc_id, a, unnest(generate_series(1, len(a)-1)) AS i FROM t WHERE len(a) >= 2)
@@ -4409,15 +3915,6 @@ object Queries {
     // vs DuckDB len(regexp_extract_all).
     q("x233_readability",
       """WITH m AS (SELECT doc_id,
-        |             greatest(1, regexp_count(lower(text), '[a-z]+')) AS words,
-        |             greatest(1, regexp_count(text, '[.!?]+')) AS sentences,
-        |             regexp_count(lower(text), '[aeiouy]+') AS syllables
-        |           FROM documents)
-        |SELECT doc_id, cast(words AS BIGINT) AS words, cast(sentences AS BIGINT) AS sentences,
-        |       cast(syllables AS BIGINT) AS syllables,
-        |       cast(206835 - (1015 * words) div sentences - (84600 * syllables) div words AS BIGINT) AS flesch_milli
-        |FROM m ORDER BY flesch_milli ASC, doc_id LIMIT 25""".stripMargin,
-      """WITH m AS (SELECT doc_id,
         |             greatest(1, len(regexp_extract_all(lower(text), '[a-z]+'))) AS words,
         |             greatest(1, len(regexp_extract_all(text, '[.!?]+'))) AS sentences,
         |             len(regexp_extract_all(lower(text), '[aeiouy]+')) AS syllables
@@ -4425,7 +3922,17 @@ object Queries {
         |SELECT doc_id, cast(words AS BIGINT) AS words, cast(sentences AS BIGINT) AS sentences,
         |       cast(syllables AS BIGINT) AS syllables,
         |       cast(206835 - (1015 * words) // sentences - (84600 * syllables) // words AS BIGINT) AS flesch_milli
-        |FROM m ORDER BY flesch_milli ASC, doc_id LIMIT 25""".stripMargin),
+        |FROM m ORDER BY flesch_milli ASC, doc_id LIMIT 25""".stripMargin,
+      Hand("regexp_count counts matches without building an array",
+      """WITH m AS (SELECT doc_id,
+        |             greatest(1, regexp_count(lower(text), '[a-z]+')) AS words,
+        |             greatest(1, regexp_count(text, '[.!?]+')) AS sentences,
+        |             regexp_count(lower(text), '[aeiouy]+') AS syllables
+        |           FROM documents)
+        |SELECT doc_id, cast(words AS BIGINT) AS words, cast(sentences AS BIGINT) AS sentences,
+        |       cast(syllables AS BIGINT) AS syllables,
+        |       cast(206835 - (1015 * words) div sentences - (84600 * syllables) div words AS BIGINT) AS flesch_milli
+        |FROM m ORDER BY flesch_milli ASC, doc_id LIMIT 25""".stripMargin)),
 
     // l-diversity audit — the companion to x186's k-anonymity: within
     // each quasi-identifier group (nation × coarse balance band) count
@@ -4435,15 +3942,6 @@ object Queries {
     // Spark's truncates; +1000 keeps the band index nonnegative so
     // div/// agree (both floor only on nonnegative operands).
     q("x234_l_diversity",
-      """WITH q AS (SELECT c_nationkey AS nk,
-        |             (cast(floor(c_acctbal) AS BIGINT) + 1000) div 2000 AS band,
-        |             c_mktsegment AS seg FROM customer),
-        |g AS (SELECT nk, band, cast(count(*) AS BIGINT) AS n,
-        |             cast(count(DISTINCT seg) AS BIGINT) AS l FROM q GROUP BY nk, band)
-        |SELECT nk, cast(band AS BIGINT) AS band, n, l,
-        |       CASE WHEN l < 3 THEN 1 ELSE 0 END AS risky,
-        |       cast(min(l) OVER () AS BIGINT) AS l_diversity
-        |FROM g ORDER BY nk, band""".stripMargin,
       """WITH q AS (SELECT c_nationkey AS nk,
         |             (cast(floor(c_acctbal) AS BIGINT) + 1000) // 2000 AS band,
         |             c_mktsegment AS seg FROM customer),
@@ -4472,16 +3970,6 @@ object Queries {
     // TIME-ordered sequence. The time-series motif-mining primitive
     // (Lin et al. SAX) with the alphabet via rank, not float breakpoints.
     q("x236_sax_motifs",
-      """WITH r AS (SELECT user_id, event_id, ts,
-        |              ntile(4) OVER (PARTITION BY user_id ORDER BY value, event_id) AS qb
-        |           FROM events WHERE value IS NOT NULL),
-        |s AS (SELECT user_id, qb AS q1,
-        |             lead(qb) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS q2,
-        |             lead(qb,2) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS q3
-        |      FROM r)
-        |SELECT concat(cast(q1 AS STRING), cast(q2 AS STRING), cast(q3 AS STRING)) AS motif,
-        |       cast(count(*) AS BIGINT) AS n
-        |FROM s WHERE q3 IS NOT NULL GROUP BY 1 ORDER BY n DESC, motif LIMIT 16""".stripMargin,
       """WITH r AS (SELECT user_id, event_id, ts,
         |              ntile(4) OVER (PARTITION BY user_id ORDER BY value, event_id) AS qb
         |           FROM events WHERE value IS NOT NULL),
@@ -4576,9 +4064,6 @@ object Queries {
     // pairwise fuzzy matching is x200's block-bucket pattern.
     q("x241_jaro_winkler",
       """SELECT p_partkey,
-        |       cast(round(jaro_winkler(p_name, 'goldenrod lavender spring chiffon') * 10000) AS BIGINT) AS jw_bp
-        |FROM part ORDER BY jw_bp DESC, p_partkey LIMIT 25""".stripMargin,
-      """SELECT p_partkey,
         |       cast(round(jaro_winkler_similarity(p_name, 'goldenrod lavender spring chiffon') * 10000) AS BIGINT) AS jw_bp
         |FROM part ORDER BY jw_bp DESC, p_partkey LIMIT 25""".stripMargin),
 
@@ -4591,30 +4076,6 @@ object Queries {
     // that teach the model the most new constructions". Per-round cost:
     // one anti-join (term-keyed) + one agg + a 1-row argmax.
     q("x243_setcover3",
-      """WITH t AS (SELECT doc_id, split(lower(text),' ') AS a FROM documents),
-        |w AS (SELECT DISTINCT doc_id, term FROM (
-        |        SELECT doc_id, concat(element_at(a,i), ' ', element_at(a,i+1)) AS term
-        |        FROM (SELECT doc_id, a, explode(sequence(1, size(a)-1)) AS i FROM t WHERE size(a) >= 2)
-        |        WHERE element_at(a,i) <> '' AND element_at(a,i+1) <> '')),
-        |n1 AS (SELECT doc_id, count(*) AS c FROM w GROUP BY 1),
-        |p1 AS (SELECT doc_id, c FROM n1 ORDER BY c DESC, doc_id LIMIT 1),
-        |c1 AS (SELECT DISTINCT w.term FROM w JOIN p1 ON w.doc_id = p1.doc_id),
-        |n2 AS (SELECT w.doc_id, count(*) AS c FROM w
-        |       WHERE NOT EXISTS (SELECT 1 FROM c1 WHERE c1.term = w.term)
-        |         AND w.doc_id NOT IN (SELECT doc_id FROM p1)
-        |       GROUP BY w.doc_id),
-        |p2 AS (SELECT doc_id, c FROM n2 ORDER BY c DESC, doc_id LIMIT 1),
-        |c2 AS (SELECT term FROM c1 UNION SELECT w.term FROM w JOIN p2 ON w.doc_id = p2.doc_id),
-        |n3 AS (SELECT w.doc_id, count(*) AS c FROM w
-        |       WHERE NOT EXISTS (SELECT 1 FROM c2 WHERE c2.term = w.term)
-        |         AND w.doc_id NOT IN (SELECT doc_id FROM p1 UNION ALL SELECT doc_id FROM p2)
-        |       GROUP BY w.doc_id),
-        |p3 AS (SELECT doc_id, c FROM n3 ORDER BY c DESC, doc_id LIMIT 1)
-        |SELECT * FROM (
-        |  SELECT cast(1 AS BIGINT) AS pick, doc_id, cast(c AS BIGINT) AS new_terms FROM p1
-        |  UNION ALL SELECT cast(2 AS BIGINT), doc_id, cast(c AS BIGINT) FROM p2
-        |  UNION ALL SELECT cast(3 AS BIGINT), doc_id, cast(c AS BIGINT) FROM p3)
-        |ORDER BY pick""".stripMargin,
       """WITH t AS (SELECT doc_id, string_split(lower(text),' ') AS a FROM documents),
         |w AS (SELECT DISTINCT doc_id, term FROM (
         |        SELECT doc_id, a[i] || ' ' || a[i+1] AS term
@@ -4695,14 +4156,6 @@ object Queries {
     // source's vocabulary occurring exactly once, in basis points.
     q("x248_hapax_richness",
       """WITH w AS (SELECT source, t AS term FROM (
-        |        SELECT source, explode(split(lower(text), ' ')) AS t FROM documents)
-        |      WHERE t <> ''),
-        |tc AS (SELECT source, term, count(*) AS c FROM w GROUP BY 1, 2)
-        |SELECT source, cast(count(*) AS BIGINT) AS vocab,
-        |       cast(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS hapax,
-        |       cast((sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) * 10000) div count(*) AS BIGINT) AS hapax_bp
-        |FROM tc GROUP BY source ORDER BY source""".stripMargin,
-      """WITH w AS (SELECT source, t AS term FROM (
         |        SELECT source, unnest(string_split(lower(text), ' ')) AS t FROM documents)
         |      WHERE t <> ''),
         |tc AS (SELECT source, term, count(*) AS c FROM w GROUP BY 1, 2)
@@ -4726,17 +4179,6 @@ object Queries {
         |             lag(rev) OVER (ORDER BY month) AS prev, lag(qty) OVER (ORDER BY month) AS pqty
         |      FROM m)
         |SELECT month, cast(rev AS BIGINT) AS rev, cast(qty AS BIGINT) AS qty,
-        |       cast((qty - pqty) * ((prev * 1000000) div pqty) AS BIGINT) AS volume_eff_ucents,
-        |       cast((rev - prev) * 1000000 - (qty - pqty) * ((prev * 1000000) div pqty) AS BIGINT) AS price_eff_ucents
-        |FROM w WHERE prev IS NOT NULL ORDER BY month""".stripMargin,
-      """WITH m AS (SELECT cast(date_trunc('month', o_orderdate) AS DATE) AS month,
-        |                  sum(cast(round(l_extendedprice*100) AS BIGINT)) AS rev,
-        |                  sum(cast(round(l_quantity) AS BIGINT)) AS qty
-        |           FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey GROUP BY 1),
-        |w AS (SELECT month, rev, qty,
-        |             lag(rev) OVER (ORDER BY month) AS prev, lag(qty) OVER (ORDER BY month) AS pqty
-        |      FROM m)
-        |SELECT month, cast(rev AS BIGINT) AS rev, cast(qty AS BIGINT) AS qty,
         |       cast((qty - pqty) * ((prev * 1000000) // pqty) AS BIGINT) AS volume_eff_ucents,
         |       cast((rev - prev) * 1000000 - (qty - pqty) * ((prev * 1000000) // pqty) AS BIGINT) AS price_eff_ucents
         |FROM w WHERE prev IS NOT NULL ORDER BY month""".stripMargin),
@@ -4749,13 +4191,6 @@ object Queries {
     // Per-doc char censuses are exact; the ln-sum rounds at 4dp (x237's
     // passing hazard class).
     q("x250_char_entropy",
-      """WITH ch AS (SELECT doc_id, explode(split(lower(text), '')) AS c FROM documents),
-        |cc AS (SELECT doc_id, c, count(*) AS n FROM ch WHERE c <> '' GROUP BY 1, 2),
-        |tot AS (SELECT doc_id, sum(n) AS t FROM cc GROUP BY 1),
-        |e AS (SELECT cc.doc_id, round(-sum((n*1.0/t) * ln(n*1.0/t)), 4) AS ent,
-        |             cast(count(*) AS BIGINT) AS alphabet
-        |      FROM cc JOIN tot ON cc.doc_id = tot.doc_id GROUP BY cc.doc_id)
-        |SELECT doc_id, ent, alphabet FROM e ORDER BY ent ASC, doc_id LIMIT 25""".stripMargin,
       """WITH ch AS (SELECT doc_id, unnest(string_split_regex(lower(text), '')) AS c FROM documents),
         |cc AS (SELECT doc_id, c, count(*) AS n FROM ch WHERE c <> '' GROUP BY 1, 2),
         |tot AS (SELECT doc_id, sum(n) AS t FROM cc GROUP BY 1),
@@ -4775,14 +4210,6 @@ object Queries {
         |           FROM events),
         |e AS (SELECT event_type, abs(cents - prev) AS ae, cents FROM s WHERE prev IS NOT NULL)
         |SELECT event_type,
-        |       cast((sum(ae) * 10000) div sum(cents) AS BIGINT) AS wape_bp,
-        |       cast(count(*) AS BIGINT) AS n
-        |FROM e GROUP BY 1 ORDER BY 1""".stripMargin,
-      """WITH s AS (SELECT event_type, cast(round(value*100) AS BIGINT) AS cents,
-        |              lag(cast(round(value*100) AS BIGINT)) OVER (PARTITION BY event_type ORDER BY ts, event_id) AS prev
-        |           FROM events),
-        |e AS (SELECT event_type, abs(cents - prev) AS ae, cents FROM s WHERE prev IS NOT NULL)
-        |SELECT event_type,
         |       cast((sum(ae) * 10000) // sum(cents) AS BIGINT) AS wape_bp,
         |       cast(count(*) AS BIGINT) AS n
         |FROM e GROUP BY 1 ORDER BY 1""".stripMargin),
@@ -4794,13 +4221,6 @@ object Queries {
     // Spot-checked rows keep the gate small; the transform itself is a
     // per-type window — scales across types/partitions.
     q("x252_rank_normalize",
-      """WITH r AS (SELECT event_id, event_type, value,
-        |             rank() OVER (PARTITION BY event_type ORDER BY value) AS rk,
-        |             count(*) OVER (PARTITION BY event_type) AS n
-        |           FROM events)
-        |SELECT event_id, event_type,
-        |       cast(((rk - 1) * 10000) div (n - 1) AS BIGINT) AS pct_rank_bp
-        |FROM r WHERE event_id % 211 = 0 ORDER BY event_id""".stripMargin,
       """WITH r AS (SELECT event_id, event_type, value,
         |             rank() OVER (PARTITION BY event_type ORDER BY value) AS rk,
         |             count(*) OVER (PARTITION BY event_type) AS n
@@ -4851,25 +4271,26 @@ object Queries {
         |           FROM orders JOIN lineitem ON o_orderkey = l_orderkey
         |           WHERE o_orderkey % 97 = 0),
         |n AS (SELECT okey, od, sd,
-        |             datediff(od, DATE '1970-01-05') AS no,
-        |             datediff(sd, DATE '1970-01-05') AS ns
-        |      FROM j)
-        |SELECT okey, od, sd,
-        |       cast(((ns div 7)*5 + least(ns % 7, 5))
-        |          - ((no div 7)*5 + least(no % 7, 5)) AS BIGINT) AS bizdays
-        |FROM n ORDER BY okey, od, sd, bizdays""".stripMargin,
-      """WITH j AS (SELECT o_orderkey AS okey, cast(o_orderdate AS DATE) AS od,
-        |                  cast(l_shipdate AS DATE) AS sd
-        |           FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |           WHERE o_orderkey % 97 = 0),
-        |n AS (SELECT okey, od, sd,
         |             datediff('day', DATE '1970-01-05', od) AS no,
         |             datediff('day', DATE '1970-01-05', sd) AS ns
         |      FROM j)
         |SELECT okey, od, sd,
         |       cast(((ns // 7)*5 + least(ns % 7, 5))
         |          - ((no // 7)*5 + least(no % 7, 5)) AS BIGINT) AS bizdays
-        |FROM n ORDER BY okey, od, sd, bizdays""".stripMargin),
+        |FROM n ORDER BY okey, od, sd, bizdays""".stripMargin,
+      Hand("date_diff('day', a, b) is datediff(b, a) in Spark",
+      """WITH j AS (SELECT o_orderkey AS okey, cast(o_orderdate AS DATE) AS od,
+        |                  cast(l_shipdate AS DATE) AS sd
+        |           FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+        |           WHERE o_orderkey % 97 = 0),
+        |n AS (SELECT okey, od, sd,
+        |             datediff(od, DATE '1970-01-05') AS no,
+        |             datediff(sd, DATE '1970-01-05') AS ns
+        |      FROM j)
+        |SELECT okey, od, sd,
+        |       cast(((ns div 7)*5 + least(ns % 7, 5))
+        |          - ((no div 7)*5 + least(no % 7, 5)) AS BIGINT) AS bizdays
+        |FROM n ORDER BY okey, od, sd, bizdays""".stripMargin)),
 
     // CUPED variance reduction (the A/B-test estimator): per-user pre-
     // period covariate (event cents before the corpus midpoint) adjusts
@@ -4916,19 +4337,6 @@ object Queries {
     // join at any scale. Euclidean over float-widened doubles; sqrt
     // outputs round at 4dp.
     q("x259_centroid_silhouette",
-      """WITH e AS (SELECT vec_id, label, posexplode(embedding) AS (pos, v) FROM embeddings),
-        |e2 AS (SELECT vec_id, label, pos, cast(v AS DOUBLE) AS v FROM e),
-        |c AS (SELECT label AS clab, pos, avg(v) AS cv FROM e2 GROUP BY 1, 2),
-        |d AS (SELECT e2.vec_id, e2.label, c.clab,
-        |             sqrt(sum((e2.v - c.cv)*(e2.v - c.cv))) AS dist
-        |      FROM e2 JOIN c ON e2.pos = c.pos GROUP BY 1, 2, 3),
-        |s AS (SELECT vec_id, label,
-        |             min(CASE WHEN clab = label THEN dist END) AS a,
-        |             min(CASE WHEN clab <> label THEN dist END) AS b
-        |      FROM d GROUP BY 1, 2)
-        |SELECT vec_id, cast(label AS BIGINT) AS label, round(a, 4) AS a,
-        |       round(b, 4) AS b, round((b - a) / greatest(a, b), 4) + 0e0 AS sil
-        |FROM s ORDER BY vec_id""".stripMargin,
       """WITH e2 AS (SELECT e.vec_id, e.label, t.i - 1 AS pos,
         |                   cast(e.embedding[t.i] AS DOUBLE) AS v
         |            FROM embeddings e
@@ -4943,7 +4351,21 @@ object Queries {
         |      FROM d GROUP BY 1, 2)
         |SELECT vec_id, cast(label AS BIGINT) AS label, round(a, 4) AS a,
         |       round(b, 4) AS b, round((b - a) / greatest(a, b), 4) + 0e0 AS sil
-        |FROM s ORDER BY vec_id""".stripMargin),
+        |FROM s ORDER BY vec_id""".stripMargin,
+      Hand("posexplode of the embedding; the oracle joins a range table",
+      """WITH e AS (SELECT vec_id, label, posexplode(embedding) AS (pos, v) FROM embeddings),
+        |e2 AS (SELECT vec_id, label, pos, cast(v AS DOUBLE) AS v FROM e),
+        |c AS (SELECT label AS clab, pos, avg(v) AS cv FROM e2 GROUP BY 1, 2),
+        |d AS (SELECT e2.vec_id, e2.label, c.clab,
+        |             sqrt(sum((e2.v - c.cv)*(e2.v - c.cv))) AS dist
+        |      FROM e2 JOIN c ON e2.pos = c.pos GROUP BY 1, 2, 3),
+        |s AS (SELECT vec_id, label,
+        |             min(CASE WHEN clab = label THEN dist END) AS a,
+        |             min(CASE WHEN clab <> label THEN dist END) AS b
+        |      FROM d GROUP BY 1, 2)
+        |SELECT vec_id, cast(label AS BIGINT) AS label, round(a, 4) AS a,
+        |       round(b, 4) AS b, round((b - a) / greatest(a, b), 4) + 0e0 AS sil
+        |FROM s ORDER BY vec_id""".stripMargin)),
 
     // ABC-XYZ inventory matrix: x153's revenue ABC bands crossed with
     // demand-variability XYZ bands (coefficient of variation of weekly
@@ -4980,24 +4402,6 @@ object Queries {
     // identical integer pairs on both engines → identical doubles →
     // min/max exact; output rounds at 4dp.
     q("x262_isotonic_calibration",
-      """WITH s AS (SELECT vec_id, cast(element_at(embedding,1) AS DOUBLE) AS score,
-        |                  CASE WHEN label < 5 THEN 1 ELSE 0 END AS y FROM embeddings),
-        |d AS (SELECT y, ntile(10) OVER (ORDER BY score, vec_id) AS bin FROM s),
-        |bins AS (SELECT bin, cast(count(*) AS BIGINT) AS n, cast(sum(y) AS BIGINT) AS pos
-        |         FROM d GROUP BY bin),
-        |c AS (SELECT bin, n, pos,
-        |             cast(sum(n) OVER (ORDER BY bin) AS BIGINT) AS cn,
-        |             cast(sum(pos) OVER (ORDER BY bin) AS BIGINT) AS cp FROM bins),
-        |seg AS (SELECT j.bin AS j, k.bin AS k,
-        |               (k.cp - (j.cp - j.pos)) AS num, (k.cn - (j.cn - j.n)) AS den
-        |        FROM c j JOIN c k ON j.bin <= k.bin),
-        |mi AS (SELECT i.bin AS i, s.j, min(s.num * 1e0 / s.den) AS mn
-        |       FROM bins i JOIN seg s ON s.j <= i.bin AND s.k >= i.bin GROUP BY 1, 2),
-        |fit AS (SELECT i AS bin, max(mn) AS f FROM mi GROUP BY 1)
-        |SELECT b.bin, b.n, b.pos,
-        |       cast(floor(b.pos * 10000.0 / b.n) AS BIGINT) AS raw_rate_bp,
-        |       round(f.f, 4) AS iso_rate
-        |FROM bins b JOIN fit f ON b.bin = f.bin ORDER BY b.bin""".stripMargin,
       """WITH s AS (SELECT vec_id, cast(embedding[1] AS DOUBLE) AS score,
         |                  CASE WHEN label < 5 THEN 1 ELSE 0 END AS y FROM embeddings),
         |d AS (SELECT y, ntile(10) OVER (ORDER BY score, vec_id) AS bin FROM s),
@@ -5026,16 +4430,6 @@ object Queries {
     // corpus's realism, are what the gate checks.)
     q("x263_otif_sla",
       """WITH j AS (SELECT cast(date_trunc('month', l_shipdate) AS DATE) AS m,
-        |                  datediff(cast(o_orderdate AS DATE), DATE '1970-01-05') AS no,
-        |                  datediff(cast(l_shipdate AS DATE), DATE '1970-01-05') AS ns
-        |           FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-        |b AS (SELECT m, ((ns div 7)*5 + least(ns % 7, 5))
-        |              - ((no div 7)*5 + least(no % 7, 5)) AS bd FROM j)
-        |SELECT m, cast(count(*) AS BIGINT) AS lines,
-        |       cast(sum(CASE WHEN bd BETWEEN 0 AND 65 THEN 1 ELSE 0 END) AS BIGINT) AS on_time,
-        |       cast((sum(CASE WHEN bd BETWEEN 0 AND 65 THEN 1 ELSE 0 END) * 10000) div count(*) AS BIGINT) AS otif_bp
-        |FROM b GROUP BY m ORDER BY m""".stripMargin,
-      """WITH j AS (SELECT cast(date_trunc('month', l_shipdate) AS DATE) AS m,
         |                  datediff('day', DATE '1970-01-05', cast(o_orderdate AS DATE)) AS no,
         |                  datediff('day', DATE '1970-01-05', cast(l_shipdate AS DATE)) AS ns
         |           FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
@@ -5044,7 +4438,18 @@ object Queries {
         |SELECT m, cast(count(*) AS BIGINT) AS lines,
         |       cast(sum(CASE WHEN bd BETWEEN 0 AND 65 THEN 1 ELSE 0 END) AS BIGINT) AS on_time,
         |       cast((sum(CASE WHEN bd BETWEEN 0 AND 65 THEN 1 ELSE 0 END) * 10000) // count(*) AS BIGINT) AS otif_bp
-        |FROM b GROUP BY m ORDER BY m""".stripMargin),
+        |FROM b GROUP BY m ORDER BY m""".stripMargin,
+      Hand("date_diff('day', a, b) is datediff(b, a) in Spark",
+      """WITH j AS (SELECT cast(date_trunc('month', l_shipdate) AS DATE) AS m,
+        |                  datediff(cast(o_orderdate AS DATE), DATE '1970-01-05') AS no,
+        |                  datediff(cast(l_shipdate AS DATE), DATE '1970-01-05') AS ns
+        |           FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
+        |b AS (SELECT m, ((ns div 7)*5 + least(ns % 7, 5))
+        |              - ((no div 7)*5 + least(no % 7, 5)) AS bd FROM j)
+        |SELECT m, cast(count(*) AS BIGINT) AS lines,
+        |       cast(sum(CASE WHEN bd BETWEEN 0 AND 65 THEN 1 ELSE 0 END) AS BIGINT) AS on_time,
+        |       cast((sum(CASE WHEN bd BETWEEN 0 AND 65 THEN 1 ELSE 0 END) * 10000) div count(*) AS BIGINT) AS otif_bp
+        |FROM b GROUP BY m ORDER BY m""".stripMargin)),
 
     // Referential-integrity audit over the FK graph (the governance
     // check next to x172's rule audit): per edge, child rows, distinct
@@ -5098,14 +4503,6 @@ object Queries {
         |           FROM events GROUP BY 1, 2),
         |f AS (SELECT user_id, cast(count(*) AS BIGINT) AS active_days,
         |             cast((10000 * (count(*) * sum(c*c) - sum(c)*sum(c)))
-        |                  div ((count(*) - 1) * sum(c)) AS BIGINT) AS fano_bp
-        |      FROM d GROUP BY 1 HAVING count(*) >= 5)
-        |SELECT user_id, active_days, fano_bp FROM f
-        |ORDER BY fano_bp DESC, user_id LIMIT 20""".stripMargin,
-      """WITH d AS (SELECT user_id, cast(ts AS DATE) AS day, cast(count(*) AS BIGINT) AS c
-        |           FROM events GROUP BY 1, 2),
-        |f AS (SELECT user_id, cast(count(*) AS BIGINT) AS active_days,
-        |             cast((10000 * (count(*) * sum(c*c) - sum(c)*sum(c)))
         |                  // ((count(*) - 1) * sum(c)) AS BIGINT) AS fano_bp
         |      FROM d GROUP BY 1 HAVING count(*) >= 5)
         |SELECT user_id, active_days, fano_bp FROM f
@@ -5125,21 +4522,6 @@ object Queries {
         |t AS (SELECT day, c,
         |        cast(sum(c) OVER (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS BIGINT) AS trend_x7,
         |        count(*) OVER (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS wn,
-        |        weekday(day) AS wd
-        |      FROM d),
-        |f AS (SELECT day, c, trend_x7, wd FROM t WHERE wn = 7),
-        |s AS (SELECT wd, cast(sum(7*c - trend_x7) AS BIGINT) AS seas_sum_x7,
-        |             cast(count(*) AS BIGINT) AS n_w
-        |      FROM f GROUP BY 1)
-        |SELECT f.day, f.c, f.trend_x7,
-        |       round(s.seas_sum_x7 * 1e0 / (7 * s.n_w), 4) + 0e0 AS seasonal,
-        |       round(f.c - f.trend_x7 / 7e0 - s.seas_sum_x7 * 1e0 / (7 * s.n_w), 4) + 0e0 AS residual
-        |FROM f JOIN s ON f.wd = s.wd ORDER BY f.day""".stripMargin,
-      """WITH d AS (SELECT cast(ts AS DATE) AS day, cast(count(*) AS BIGINT) AS c
-        |           FROM events GROUP BY 1),
-        |t AS (SELECT day, c,
-        |        cast(sum(c) OVER (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS BIGINT) AS trend_x7,
-        |        count(*) OVER (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS wn,
         |        isodow(day) - 1 AS wd
         |      FROM d),
         |f AS (SELECT day, c, trend_x7, wd FROM t WHERE wn = 7),
@@ -5149,7 +4531,23 @@ object Queries {
         |SELECT f.day, f.c, f.trend_x7,
         |       round(s.seas_sum_x7 * 1e0 / (7 * s.n_w), 4) + 0e0 AS seasonal,
         |       round(f.c - f.trend_x7 / 7e0 - s.seas_sum_x7 * 1e0 / (7 * s.n_w), 4) + 0e0 AS residual
-        |FROM f JOIN s ON f.wd = s.wd ORDER BY f.day""".stripMargin),
+        |FROM f JOIN s ON f.wd = s.wd ORDER BY f.day""".stripMargin,
+      Hand("isodow(d) - 1 is weekday(d) in Spark",
+      """WITH d AS (SELECT cast(ts AS DATE) AS day, cast(count(*) AS BIGINT) AS c
+        |           FROM events GROUP BY 1),
+        |t AS (SELECT day, c,
+        |        cast(sum(c) OVER (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS BIGINT) AS trend_x7,
+        |        count(*) OVER (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS wn,
+        |        weekday(day) AS wd
+        |      FROM d),
+        |f AS (SELECT day, c, trend_x7, wd FROM t WHERE wn = 7),
+        |s AS (SELECT wd, cast(sum(7*c - trend_x7) AS BIGINT) AS seas_sum_x7,
+        |             cast(count(*) AS BIGINT) AS n_w
+        |      FROM f GROUP BY 1)
+        |SELECT f.day, f.c, f.trend_x7,
+        |       round(s.seas_sum_x7 * 1e0 / (7 * s.n_w), 4) + 0e0 AS seasonal,
+        |       round(f.c - f.trend_x7 / 7e0 - s.seas_sum_x7 * 1e0 / (7 * s.n_w), 4) + 0e0 AS residual
+        |FROM f JOIN s ON f.wd = s.wd ORDER BY f.day""".stripMargin)),
 
     // Degree assortativity of the co-purchase graph (x163's edge
     // universe): Pearson correlation of endpoint degrees over the
@@ -5161,6 +4559,21 @@ object Queries {
     // OPTIMIZATION_r18.md §8); texts split only to keep the hint
     // Spark-side — the oracle text is the old shared one, verbatim.
     q("x269_assortativity",
+      """WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+        |pairs AS (
+        |  SELECT a.l_partkey AS p1, b.l_partkey AS p2
+        |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+        |  GROUP BY 1, 2 HAVING count(*) >= 2),
+        |deg AS (SELECT p, cast(count(*) AS BIGINT) AS d FROM (
+        |          SELECT p1 AS p FROM pairs UNION ALL SELECT p2 FROM pairs) u GROUP BY 1),
+        |e AS (SELECT da.d AS dx, db.d AS dy
+        |      FROM pairs JOIN deg da ON pairs.p1 = da.p JOIN deg db ON pairs.p2 = db.p),
+        |sym AS (SELECT dx, dy FROM e UNION ALL SELECT dy, dx FROM e)
+        |SELECT round(corr(dx, dy), 4) AS assortativity,
+        |       cast(count(*)/2 AS BIGINT) AS edges,
+        |       cast((SELECT count(*) FROM deg) AS BIGINT) AS nodes
+        |FROM sym""".stripMargin,
+      Hand("REPARTITION hint: the exploding join would run in one task",
       s"""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
         |lip AS (SELECT /*+ REPARTITION($hintPar, l_orderkey) */ l_orderkey, l_partkey FROM li),
         |pairs AS (
@@ -5175,21 +4588,7 @@ object Queries {
         |SELECT round(corr(dx, dy), 4) AS assortativity,
         |       cast(count(*)/2 AS BIGINT) AS edges,
         |       cast((SELECT count(*) FROM deg) AS BIGINT) AS nodes
-        |FROM sym""".stripMargin,
-      """WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        |pairs AS (
-        |  SELECT a.l_partkey AS p1, b.l_partkey AS p2
-        |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        |  GROUP BY 1, 2 HAVING count(*) >= 2),
-        |deg AS (SELECT p, cast(count(*) AS BIGINT) AS d FROM (
-        |          SELECT p1 AS p FROM pairs UNION ALL SELECT p2 FROM pairs) u GROUP BY 1),
-        |e AS (SELECT da.d AS dx, db.d AS dy
-        |      FROM pairs JOIN deg da ON pairs.p1 = da.p JOIN deg db ON pairs.p2 = db.p),
-        |sym AS (SELECT dx, dy FROM e UNION ALL SELECT dy, dx FROM e)
-        |SELECT round(corr(dx, dy), 4) AS assortativity,
-        |       cast(count(*)/2 AS BIGINT) AS edges,
-        |       cast((SELECT count(*) FROM deg) AS BIGINT) AS nodes
-        |FROM sym""".stripMargin),
+        |FROM sym""".stripMargin)),
 
     // Sequence-length bucketing efficiency curve — the padding-waste
     // planner for training batches (companion to x107's packing and
@@ -5201,18 +4600,6 @@ object Queries {
     // having to match. One global rank (dim-sized here; the x100 tier
     // is the fact-sized form) + per-bucket maxima.
     q("x271_padding_waste",
-      """WITH l AS (SELECT doc_id, n_chars,
-        |        row_number() OVER (ORDER BY n_chars, doc_id) AS rk,
-        |        count(*) OVER () AS n,
-        |        cast(sum(n_chars) OVER () AS BIGINT) AS t FROM documents),
-        |b AS (SELECT n_chars, t, nb, ((rk - 1) * nb) div n + 1 AS bucket
-        |      FROM l CROSS JOIN (SELECT explode(array(1,2,4,8)) AS nb) s),
-        |w AS (SELECT nb, bucket, max(t) AS t, cast(sum(max_c - n_chars) AS BIGINT) AS waste
-        |      FROM (SELECT nb, bucket, n_chars, t, max(n_chars) OVER (PARTITION BY nb, bucket) AS max_c FROM b) x
-        |      GROUP BY 1, 2)
-        |SELECT nb AS buckets, cast(sum(waste) AS BIGINT) AS padding_chars,
-        |       cast((sum(waste) * 10000) div max(t) AS BIGINT) AS overhead_bp
-        |FROM w GROUP BY 1 ORDER BY 1""".stripMargin,
       """WITH l AS (SELECT doc_id, n_chars,
         |        row_number() OVER (ORDER BY n_chars, doc_id) AS rk,
         |        count(*) OVER () AS n,
@@ -5239,6 +4626,28 @@ object Queries {
     // key (x.b = y.a) so the Σdeg² wedge expansion and the (u,v)
     // candidate count run width-way parallel too. Spark dialect only.
     q("x272_link_prediction",
+      """WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+        |pairs AS (
+        |  SELECT a.l_partkey AS p1, b.l_partkey AS p2
+        |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+        |  GROUP BY 1, 2 HAVING count(*) >= 2),
+        |adj AS (SELECT p1 AS a, p2 AS b FROM pairs UNION ALL SELECT p2, p1 FROM pairs),
+        |deg AS (SELECT a AS p, cast(count(*) AS BIGINT) AS d FROM adj GROUP BY 1),
+        |wedge AS (SELECT x.a AS u, y.b AS v, x.b AS mid
+        |          FROM adj x JOIN adj y ON x.b = y.a AND x.a < y.b),
+        |cand AS (SELECT u, v, cast(count(*) AS BIGINT) AS cn,
+        |                round(sum(1.0 / ln(dm.d)), 4) AS adamic
+        |         FROM wedge JOIN deg dm ON wedge.mid = dm.p
+        |         WHERE dm.d > 1
+        |         GROUP BY 1, 2),
+        |new_pairs AS (SELECT c.u, c.v, c.cn, c.adamic FROM cand c
+        |  WHERE NOT EXISTS (SELECT 1 FROM pairs p WHERE p.p1 = c.u AND p.p2 = c.v))
+        |SELECT n.u, n.v, n.cn,
+        |       cast((n.cn * 10000) // (du.d + dv.d - n.cn) AS BIGINT) AS jaccard_bp,
+        |       n.adamic
+        |FROM new_pairs n JOIN deg du ON n.u = du.p JOIN deg dv ON n.v = dv.p
+        |ORDER BY n.cn DESC, n.u, n.v LIMIT 20""".stripMargin,
+      Hand("REPARTITION hint: the exploding join would run in one task",
       s"""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
         |lip AS (SELECT /*+ REPARTITION($hintPar, l_orderkey) */ l_orderkey, l_partkey FROM li),
         |pairs AS (
@@ -5261,28 +4670,7 @@ object Queries {
         |       cast((n.cn * 10000) div (du.d + dv.d - n.cn) AS BIGINT) AS jaccard_bp,
         |       n.adamic
         |FROM new_pairs n JOIN deg du ON n.u = du.p JOIN deg dv ON n.v = dv.p
-        |ORDER BY n.cn DESC, n.u, n.v LIMIT 20""".stripMargin,
-      """WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        |pairs AS (
-        |  SELECT a.l_partkey AS p1, b.l_partkey AS p2
-        |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        |  GROUP BY 1, 2 HAVING count(*) >= 2),
-        |adj AS (SELECT p1 AS a, p2 AS b FROM pairs UNION ALL SELECT p2, p1 FROM pairs),
-        |deg AS (SELECT a AS p, cast(count(*) AS BIGINT) AS d FROM adj GROUP BY 1),
-        |wedge AS (SELECT x.a AS u, y.b AS v, x.b AS mid
-        |          FROM adj x JOIN adj y ON x.b = y.a AND x.a < y.b),
-        |cand AS (SELECT u, v, cast(count(*) AS BIGINT) AS cn,
-        |                round(sum(1.0 / ln(dm.d)), 4) AS adamic
-        |         FROM wedge JOIN deg dm ON wedge.mid = dm.p
-        |         WHERE dm.d > 1
-        |         GROUP BY 1, 2),
-        |new_pairs AS (SELECT c.u, c.v, c.cn, c.adamic FROM cand c
-        |  WHERE NOT EXISTS (SELECT 1 FROM pairs p WHERE p.p1 = c.u AND p.p2 = c.v))
-        |SELECT n.u, n.v, n.cn,
-        |       cast((n.cn * 10000) // (du.d + dv.d - n.cn) AS BIGINT) AS jaccard_bp,
-        |       n.adamic
-        |FROM new_pairs n JOIN deg du ON n.u = du.p JOIN deg dv ON n.v = dv.p
-        |ORDER BY n.cn DESC, n.u, n.v LIMIT 20""".stripMargin),
+        |ORDER BY n.cn DESC, n.u, n.v LIMIT 20""".stripMargin)),
 
     // Murphy decomposition of the Brier score (reliability / resolution
     // / uncertainty) over score deciles — the calibration-quality
@@ -5293,17 +4681,6 @@ object Queries {
     // integer bin counts except yhat (an avg of ≤ n/10 doubles),
     // rounded at 4dp.
     q("x273_brier_decomp",
-      """WITH s AS (SELECT vec_id, cast(element_at(embedding,1) AS DOUBLE) AS score,
-        |        CASE WHEN label < 5 THEN 1 ELSE 0 END AS y FROM embeddings),
-        |p AS (SELECT vec_id, least(greatest(0.5e0 + score, 0e0), 1e0) AS prob, y FROM s),
-        |d AS (SELECT prob, y, ntile(10) OVER (ORDER BY prob, vec_id) AS bin FROM p),
-        |bins AS (SELECT bin, cast(count(*) AS BIGINT) AS n, cast(sum(y) AS BIGINT) AS pos,
-        |                avg(prob) AS yhat FROM d GROUP BY bin),
-        |g AS (SELECT cast(sum(n) AS BIGINT) AS nn, cast(sum(pos) AS BIGINT) AS npos FROM bins)
-        |SELECT round(sum(n * (yhat - pos * 1e0/n) * (yhat - pos * 1e0/n)) / (SELECT nn FROM g), 4) AS reliability,
-        |       round(sum(n * (pos * 1e0/n - (SELECT npos * 1e0/nn FROM g)) * (pos * 1e0/n - (SELECT npos * 1e0/nn FROM g))) / (SELECT nn FROM g), 4) AS resolution,
-        |       round((SELECT npos * 1e0/nn * (1e0 - npos * 1e0/nn) FROM g), 4) AS uncertainty
-        |FROM bins""".stripMargin,
       """WITH s AS (SELECT vec_id, cast(embedding[1] AS DOUBLE) AS score,
         |        CASE WHEN label < 5 THEN 1 ELSE 0 END AS y FROM embeddings),
         |p AS (SELECT vec_id, least(greatest(0.5e0 + score, 0e0), 1e0) AS prob, y FROM s),
@@ -5352,13 +4729,14 @@ object Queries {
         |  SELECT h.event_type, h.rn + 1, d.y,
         |         5e-1 * d.y + 5e-1 * (h.l + h.b),
         |         5e-1 * ((5e-1 * d.y + 5e-1 * (h.l + h.b)) - h.l) + 5e-1 * h.b
-        |  FROM h JOIN d ON d.event_type = h.event_type AND d.rn = h.rn + 1)
-        |SELECT event_type, cast(rn AS BIGINT) AS rn, y,
-        |       round(l, 4) AS level, round(b, 4) AS trend,
-        |       round(l + b, 4) AS forecast_next
-        |FROM (SELECT h.*, row_number() OVER (PARTITION BY event_type ORDER BY rn DESC) AS rr FROM h)
-        |WHERE rr = 1
-        |ORDER BY event_type""".stripMargin,
+        |  FROM h JOIN d ON d.event_type = h.event_type AND d.rn = h.rn + 1),
+        |fin AS (SELECT event_type, max(rn) AS mx FROM h GROUP BY 1)
+        |SELECT h.event_type, cast(h.rn AS BIGINT) AS rn, h.y,
+        |       round(h.l, 4) AS level, round(h.b, 4) AS trend,
+        |       round(h.l + h.b, 4) AS forecast_next
+        |FROM h JOIN fin ON h.event_type = fin.event_type AND h.rn = fin.mx
+        |ORDER BY h.event_type""".stripMargin,
+      Hand("row_number over the recursion, so the recursive CTE is referenced once",
       """WITH RECURSIVE d AS (
         |  SELECT event_type, cast(ts AS DATE) AS day, cast(count(*) AS BIGINT) AS y,
         |         row_number() OVER (PARTITION BY event_type ORDER BY cast(ts AS DATE)) AS rn
@@ -5371,13 +4749,13 @@ object Queries {
         |  SELECT h.event_type, h.rn + 1, d.y,
         |         5e-1 * d.y + 5e-1 * (h.l + h.b),
         |         5e-1 * ((5e-1 * d.y + 5e-1 * (h.l + h.b)) - h.l) + 5e-1 * h.b
-        |  FROM h JOIN d ON d.event_type = h.event_type AND d.rn = h.rn + 1),
-        |fin AS (SELECT event_type, max(rn) AS mx FROM h GROUP BY 1)
-        |SELECT h.event_type, cast(h.rn AS BIGINT) AS rn, h.y,
-        |       round(h.l, 4) AS level, round(h.b, 4) AS trend,
-        |       round(h.l + h.b, 4) AS forecast_next
-        |FROM h JOIN fin ON h.event_type = fin.event_type AND h.rn = fin.mx
-        |ORDER BY h.event_type""".stripMargin),
+        |  FROM h JOIN d ON d.event_type = h.event_type AND d.rn = h.rn + 1)
+        |SELECT event_type, cast(rn AS BIGINT) AS rn, y,
+        |       round(l, 4) AS level, round(b, 4) AS trend,
+        |       round(l + b, 4) AS forecast_next
+        |FROM (SELECT h.*, row_number() OVER (PARTITION BY event_type ORDER BY rn DESC) AS rr FROM h)
+        |WHERE rr = 1
+        |ORDER BY event_type""".stripMargin)),
 
     // t-closeness audit — completes the privacy triad (x186
     // k-anonymity, x234 l-diversity): per quasi-identifier group, the
@@ -5387,29 +4765,6 @@ object Queries {
     // no float CDFs). Dim-sized windows; the decile assignment is the
     // only fact-sized pass.
     q("x275_t_closeness",
-      """WITH s AS (SELECT c_nationkey AS nk, c_mktsegment AS seg,
-        |        ntile(10) OVER (ORDER BY c_acctbal, c_custkey) AS dec_b FROM customer),
-        |gq AS (SELECT nk, seg, dec_b, cast(count(*) AS BIGINT) AS c FROM s GROUP BY 1,2,3),
-        |gn AS (SELECT nk, seg, cast(sum(c) AS BIGINT) AS ng FROM gq GROUP BY 1,2),
-        |gl AS (SELECT dec_b, cast(sum(c) AS BIGINT) AS gc FROM gq GROUP BY 1),
-        |nn AS (SELECT cast(sum(gc) AS BIGINT) AS n FROM gl),
-        |decs AS (SELECT explode(sequence(1,10)) AS dec_b),
-        |cells AS (SELECT g.nk, g.seg, g.ng, d.dec_b,
-        |                 cast(coalesce(q.c, 0) AS BIGINT) AS c
-        |          FROM gn g CROSS JOIN decs d
-        |          LEFT JOIN gq q ON q.nk = g.nk AND q.seg = g.seg AND q.dec_b = d.dec_b),
-        |cum AS (SELECT nk, seg, ng, dec_b,
-        |               cast(sum(c) OVER (PARTITION BY nk, seg ORDER BY dec_b) AS BIGINT) AS cg
-        |        FROM cells),
-        |gcum AS (SELECT dec_b, cast(sum(gc) OVER (ORDER BY dec_b) AS BIGINT) AS cG FROM gl),
-        |emd AS (SELECT cum.nk, cum.seg, cum.ng,
-        |               cast(sum(abs(cum.cg * (SELECT n FROM nn) - gcum.cG * cum.ng)) AS BIGINT) AS num
-        |        FROM cum JOIN gcum ON cum.dec_b = gcum.dec_b
-        |        WHERE cum.dec_b < 10
-        |        GROUP BY 1, 2, 3)
-        |SELECT nk, seg, ng,
-        |       cast((num * 10000) div (ng * (SELECT n FROM nn) * 9) AS BIGINT) AS t_bp
-        |FROM emd ORDER BY nk, seg""".stripMargin,
       """WITH s AS (SELECT c_nationkey AS nk, c_mktsegment AS seg,
         |        ntile(10) OVER (ORDER BY c_acctbal, c_custkey) AS dec_b FROM customer),
         |gq AS (SELECT nk, seg, dec_b, cast(count(*) AS BIGINT) AS c FROM s GROUP BY 1,2,3),
@@ -5432,7 +4787,31 @@ object Queries {
         |        GROUP BY 1, 2, 3)
         |SELECT nk, seg, ng,
         |       cast((num * 10000) // (ng * (SELECT n FROM nn) * 9) AS BIGINT) AS t_bp
-        |FROM emd ORDER BY nk, seg""".stripMargin),
+        |FROM emd ORDER BY nk, seg""".stripMargin,
+      Hand("DuckDB range excludes its end, Spark sequence includes it",
+      """WITH s AS (SELECT c_nationkey AS nk, c_mktsegment AS seg,
+        |        ntile(10) OVER (ORDER BY c_acctbal, c_custkey) AS dec_b FROM customer),
+        |gq AS (SELECT nk, seg, dec_b, cast(count(*) AS BIGINT) AS c FROM s GROUP BY 1,2,3),
+        |gn AS (SELECT nk, seg, cast(sum(c) AS BIGINT) AS ng FROM gq GROUP BY 1,2),
+        |gl AS (SELECT dec_b, cast(sum(c) AS BIGINT) AS gc FROM gq GROUP BY 1),
+        |nn AS (SELECT cast(sum(gc) AS BIGINT) AS n FROM gl),
+        |decs AS (SELECT explode(sequence(1,10)) AS dec_b),
+        |cells AS (SELECT g.nk, g.seg, g.ng, d.dec_b,
+        |                 cast(coalesce(q.c, 0) AS BIGINT) AS c
+        |          FROM gn g CROSS JOIN decs d
+        |          LEFT JOIN gq q ON q.nk = g.nk AND q.seg = g.seg AND q.dec_b = d.dec_b),
+        |cum AS (SELECT nk, seg, ng, dec_b,
+        |               cast(sum(c) OVER (PARTITION BY nk, seg ORDER BY dec_b) AS BIGINT) AS cg
+        |        FROM cells),
+        |gcum AS (SELECT dec_b, cast(sum(gc) OVER (ORDER BY dec_b) AS BIGINT) AS cG FROM gl),
+        |emd AS (SELECT cum.nk, cum.seg, cum.ng,
+        |               cast(sum(abs(cum.cg * (SELECT n FROM nn) - gcum.cG * cum.ng)) AS BIGINT) AS num
+        |        FROM cum JOIN gcum ON cum.dec_b = gcum.dec_b
+        |        WHERE cum.dec_b < 10
+        |        GROUP BY 1, 2, 3)
+        |SELECT nk, seg, ng,
+        |       cast((num * 10000) div (ng * (SELECT n FROM nn) * 9) AS BIGINT) AS t_bp
+        |FROM emd ORDER BY nk, seg""".stripMargin)),
 
     // Mutual-information feature ranking (feature selection): MI(label;
     // sign of embedding dims 1-4) from 2×2 contingency counts — the
@@ -5441,26 +4820,6 @@ object Queries {
     // feature) round at 4dp and the RANK orders by the ROUNDED value
     // (cross-engine libm ulps must never decide an ordering).
     q("x276_mi_feature_rank",
-      """WITH f AS (
-        |  SELECT CASE WHEN label < 5 THEN 1 ELSE 0 END AS y, fid,
-        |         CASE WHEN v >= 0 THEN 1 ELSE 0 END AS x
-        |  FROM (SELECT label, 1 AS fid, cast(element_at(embedding,1) AS DOUBLE) AS v FROM embeddings
-        |        UNION ALL SELECT label, 2, cast(element_at(embedding,2) AS DOUBLE) FROM embeddings
-        |        UNION ALL SELECT label, 3, cast(element_at(embedding,3) AS DOUBLE) FROM embeddings
-        |        UNION ALL SELECT label, 4, cast(element_at(embedding,4) AS DOUBLE) FROM embeddings) u),
-        |cxy AS (SELECT fid, x, y, cast(count(*) AS BIGINT) AS c FROM f GROUP BY 1,2,3),
-        |cx AS (SELECT fid, x, cast(sum(c) AS BIGINT) AS cx FROM cxy GROUP BY 1,2),
-        |cy AS (SELECT fid, y, cast(sum(c) AS BIGINT) AS cy FROM cxy GROUP BY 1,2),
-        |n AS (SELECT fid, cast(sum(c) AS BIGINT) AS n FROM cxy GROUP BY 1),
-        |mi AS (SELECT cxy.fid,
-        |              round(sum((cxy.c * 1e0 / n.n) * ln((cxy.c * 1e0 * n.n) / (cx.cx * 1e0 * cy.cy))), 4) AS mi_nats
-        |       FROM cxy JOIN cx ON cxy.fid = cx.fid AND cxy.x = cx.x
-        |            JOIN cy ON cxy.fid = cy.fid AND cxy.y = cy.y
-        |            JOIN n ON cxy.fid = n.fid
-        |       GROUP BY 1)
-        |SELECT cast(fid AS BIGINT) AS feature, mi_nats,
-        |       cast(row_number() OVER (ORDER BY mi_nats DESC, fid) AS BIGINT) AS rk
-        |FROM mi ORDER BY rk""".stripMargin,
       """WITH f AS (
         |  SELECT CASE WHEN label < 5 THEN 1 ELSE 0 END AS y, fid,
         |         CASE WHEN v >= 0 THEN 1 ELSE 0 END AS x
@@ -5491,19 +4850,6 @@ object Queries {
     // one dim-sized quantile row, broadcast into the coverage filter.
     q("x277_conformal_coverage",
       """WITH p AS (SELECT vec_id,
-        |        least(greatest(0.5e0 + cast(element_at(embedding,1) AS DOUBLE), 0e0), 1e0) AS prob,
-        |        CASE WHEN label < 5 THEN 1 ELSE 0 END AS y FROM embeddings),
-        |s AS (SELECT vec_id, CASE WHEN y = 1 THEN 1e0 - prob ELSE prob END AS nc FROM p),
-        |cal AS (SELECT nc, row_number() OVER (ORDER BY nc, vec_id) AS rn,
-        |               count(*) OVER () AS n FROM s WHERE vec_id % 2 = 0),
-        |q AS (SELECT nc AS qhat FROM cal WHERE rn = least(((n + 1) * 90 + 99) div 100, n)),
-        |ev AS (SELECT s.nc FROM s WHERE vec_id % 2 = 1)
-        |SELECT round((SELECT qhat FROM q), 4) AS qhat,
-        |       cast((SELECT count(*) FROM cal) AS BIGINT) AS n_calib,
-        |       cast(count(*) AS BIGINT) AS n_eval,
-        |       cast((sum(CASE WHEN nc <= (SELECT qhat FROM q) THEN 1 ELSE 0 END) * 10000) div count(*) AS BIGINT) AS coverage_bp
-        |FROM ev""".stripMargin,
-      """WITH p AS (SELECT vec_id,
         |        least(greatest(0.5e0 + cast(embedding[1] AS DOUBLE), 0e0), 1e0) AS prob,
         |        CASE WHEN label < 5 THEN 1 ELSE 0 END AS y FROM embeddings),
         |s AS (SELECT vec_id, CASE WHEN y = 1 THEN 1e0 - prob ELSE prob END AS nc FROM p),
@@ -5525,19 +4871,6 @@ object Queries {
     // equi-join carries the shuffle; the sort key is the ROUNDED
     // |shift| (libm ulps never order the top-k).
     q("x278_vocab_shift",
-      """WITH w AS (SELECT source, doc_id, explode(array_distinct(split(lower(text), ' '))) AS term
-        |  FROM documents WHERE source IN ('src0', 'src1')),
-        |df AS (SELECT source, term, cast(count(*) AS BIGINT) AS df FROM w GROUP BY 1, 2),
-        |nd AS (SELECT source, cast(count(DISTINCT doc_id) AS BIGINT) AS nd FROM w GROUP BY 1),
-        |j AS (SELECT a.term, a.df AS df_a, b.df AS df_b,
-        |             (SELECT nd FROM nd WHERE source='src0') AS na,
-        |             (SELECT nd FROM nd WHERE source='src1') AS nb
-        |      FROM df a JOIN df b ON a.term = b.term AND a.source='src0' AND b.source='src1'
-        |      WHERE a.df * 4 >= (SELECT nd FROM nd WHERE source='src0')
-        |        AND b.df * 4 >= (SELECT nd FROM nd WHERE source='src1'))
-        |SELECT term, df_a, df_b,
-        |       round(ln((df_a * 1e0 / na) / (df_b * 1e0 / nb)), 4) AS shift
-        |FROM j ORDER BY round(abs(ln((df_a * 1e0 / na) / (df_b * 1e0 / nb))), 4) DESC, term LIMIT 25""".stripMargin,
       """WITH w AS (SELECT source, doc_id, unnest(list_distinct(string_split(lower(text), ' '))) AS term
         |  FROM documents WHERE source IN ('src0', 'src1')),
         |df AS (SELECT source, term, cast(count(*) AS BIGINT) AS df FROM w GROUP BY 1, 2),
@@ -5604,10 +4937,11 @@ object Queries {
         |w2 AS (SELECT user_id, cast(count(*) AS BIGINT) AS n2
         |       FROM events WHERE ts >= TIMESTAMP '2024-01-24 00:00:00' GROUP BY 1)
         |SELECT w1.user_id, n_events, n_purchases, cents,
-        |       cast(datediff(DATE '2024-01-24', last_d) AS BIGINT) AS recency_days,
+        |       cast(datediff('day', last_d, DATE '2024-01-24') AS BIGINT) AS recency_days,
         |       CASE WHEN 23 * coalesce(n2, 0) * 10 < 7 * n_events * 8 THEN 1 ELSE 0 END AS declined
         |FROM w1 LEFT JOIN w2 ON w1.user_id = w2.user_id
         |ORDER BY w1.user_id""".stripMargin,
+      Hand("date_diff('day', a, b) is datediff(b, a) in Spark",
       """WITH w1 AS (SELECT user_id, cast(count(*) AS BIGINT) AS n_events,
         |       cast(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS n_purchases,
         |       cast(sum(cast(round(value*100) AS BIGINT)) AS BIGINT) AS cents,
@@ -5616,10 +4950,10 @@ object Queries {
         |w2 AS (SELECT user_id, cast(count(*) AS BIGINT) AS n2
         |       FROM events WHERE ts >= TIMESTAMP '2024-01-24 00:00:00' GROUP BY 1)
         |SELECT w1.user_id, n_events, n_purchases, cents,
-        |       cast(datediff('day', last_d, DATE '2024-01-24') AS BIGINT) AS recency_days,
+        |       cast(datediff(DATE '2024-01-24', last_d) AS BIGINT) AS recency_days,
         |       CASE WHEN 23 * coalesce(n2, 0) * 10 < 7 * n_events * 8 THEN 1 ELSE 0 END AS declined
         |FROM w1 LEFT JOIN w2 ON w1.user_id = w2.user_id
-        |ORDER BY w1.user_id""".stripMargin),
+        |ORDER BY w1.user_id""".stripMargin)),
 
     // Leave-one-out target encoding with additive smoothing (prior
     // m=10 toward the global mean) — the category-feature transform
@@ -5627,13 +4961,6 @@ object Queries {
     // category mean. PURE INTEGER via cents and floor division. One
     // category agg broadcast back over the fact rows.
     q("x282_target_encoding",
-      """WITH e AS (SELECT event_id, event_type, cast(round(value*100) AS BIGINT) AS c FROM events),
-        |g AS (SELECT event_type, cast(sum(c) AS BIGINT) AS sg, cast(count(*) AS BIGINT) AS ng FROM e GROUP BY 1),
-        |gm AS (SELECT cast(sum(c) AS BIGINT) div cast(count(*) AS BIGINT) AS m FROM e)
-        |SELECT e.event_id, e.event_type,
-        |       cast(((g.sg - e.c) + 10 * (SELECT m FROM gm)) div (g.ng - 1 + 10) AS BIGINT) AS loo_enc_cents
-        |FROM e JOIN g ON e.event_type = g.event_type
-        |WHERE e.event_id % 211 = 0 ORDER BY e.event_id""".stripMargin,
       """WITH e AS (SELECT event_id, event_type, cast(round(value*100) AS BIGINT) AS c FROM events),
         |g AS (SELECT event_type, cast(sum(c) AS BIGINT) AS sg, cast(count(*) AS BIGINT) AS ng FROM e GROUP BY 1),
         |gm AS (SELECT cast(sum(c) AS BIGINT) // cast(count(*) AS BIGINT) AS m FROM e)
@@ -5648,14 +4975,6 @@ object Queries {
     // load and colliding-term mass — the dimensionality/collision
     // trade-off readout before anyone trains on hashed features.
     q("x283_feature_hash_census",
-      """WITH w AS (SELECT DISTINCT explode(array_distinct(split(lower(text), ' '))) AS term FROM documents),
-        |h AS (SELECT term, cast(conv(substr(md5(term),1,8),16,10) AS BIGINT) % 256 AS bucket FROM w),
-        |b AS (SELECT bucket, cast(count(*) AS BIGINT) AS load FROM h GROUP BY 1)
-        |SELECT cast((SELECT count(*) FROM h) AS BIGINT) AS n_terms,
-        |       cast(count(*) AS BIGINT) AS buckets_used,
-        |       cast(max(load) AS BIGINT) AS max_load,
-        |       cast(sum(CASE WHEN load > 1 THEN load ELSE 0 END) AS BIGINT) AS colliding_terms
-        |FROM b""".stripMargin,
       """WITH w AS (SELECT DISTINCT unnest(list_distinct(string_split(lower(text), ' '))) AS term FROM documents),
         |h AS (SELECT term, cast(('0x'||substr(md5(term),1,8)) AS BIGINT) % 256 AS bucket FROM w),
         |b AS (SELECT bucket, cast(count(*) AS BIGINT) AS load FROM h GROUP BY 1)
@@ -5663,7 +4982,16 @@ object Queries {
         |       cast(count(*) AS BIGINT) AS buckets_used,
         |       cast(max(load) AS BIGINT) AS max_load,
         |       cast(sum(CASE WHEN load > 1 THEN load ELSE 0 END) AS BIGINT) AS colliding_terms
-        |FROM b""".stripMargin),
+        |FROM b""".stripMargin,
+      Hand("hex to integer: DuckDB casts '0x' || hex, Spark calls conv(hex, 16, 10)",
+      """WITH w AS (SELECT DISTINCT explode(array_distinct(split(lower(text), ' '))) AS term FROM documents),
+        |h AS (SELECT term, cast(conv(substr(md5(term),1,8),16,10) AS BIGINT) % 256 AS bucket FROM w),
+        |b AS (SELECT bucket, cast(count(*) AS BIGINT) AS load FROM h GROUP BY 1)
+        |SELECT cast((SELECT count(*) FROM h) AS BIGINT) AS n_terms,
+        |       cast(count(*) AS BIGINT) AS buckets_used,
+        |       cast(max(load) AS BIGINT) AS max_load,
+        |       cast(sum(CASE WHEN load > 1 THEN load ELSE 0 END) AS BIGINT) AS colliding_terms
+        |FROM b""".stripMargin)),
 
     // Deterministic negative sampling for a recommender training set:
     // per sampled customer, the 5 hash-lowest parts they never bought
@@ -5681,6 +5009,17 @@ object Queries {
     // parallel (the per-user rank keeps its Partial WindowGroupLimit
     // shape — only ≤5 rows per (task, user) cross the exchange).
     q("x284_negative_sampling",
+      """WITH cust AS (SELECT c_custkey FROM customer WHERE c_custkey % 100 = 0),
+        |bought AS (SELECT DISTINCT o.o_custkey AS ck, l.l_partkey AS pk
+        |           FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
+        |cand AS (SELECT c.c_custkey AS ck, p.p_partkey AS pk,
+        |                cast(('0x'||substr(md5(concat(cast(c.c_custkey AS VARCHAR), ':', cast(p.p_partkey AS VARCHAR))),1,8)) AS BIGINT) AS hv
+        |         FROM cust c CROSS JOIN part p),
+        |neg AS (SELECT cand.ck, cand.pk, hv,
+        |               row_number() OVER (PARTITION BY cand.ck ORDER BY hv, cand.pk) AS rk
+        |        FROM cand WHERE NOT EXISTS (SELECT 1 FROM bought b WHERE b.ck = cand.ck AND b.pk = cand.pk))
+        |SELECT ck, pk, hv, cast(rk AS BIGINT) AS rk FROM neg WHERE rk <= 5 ORDER BY ck, rk""".stripMargin,
+      Hand("BROADCAST and REPARTITION hints on the exploding anti-join; hex via conv",
       s"""WITH cust AS (SELECT c_custkey FROM customer WHERE c_custkey % 100 = 0),
         |bought AS (SELECT /*+ BROADCAST(o) */ DISTINCT o.o_custkey AS ck, l.pk AS pk
         |           FROM orders o JOIN (SELECT /*+ REPARTITION($hintPar, l_partkey) */ l_orderkey, l_partkey AS pk FROM lineitem) l
@@ -5691,17 +5030,7 @@ object Queries {
         |neg AS (SELECT cand.ck, cand.pk, hv,
         |               row_number() OVER (PARTITION BY cand.ck ORDER BY hv, cand.pk) AS rk
         |        FROM cand WHERE NOT EXISTS (SELECT /*+ BROADCAST(b) */ 1 FROM bought b WHERE b.ck = cand.ck AND b.pk = cand.pk))
-        |SELECT ck, pk, hv, cast(rk AS BIGINT) AS rk FROM neg WHERE rk <= 5 ORDER BY ck, rk""".stripMargin,
-      """WITH cust AS (SELECT c_custkey FROM customer WHERE c_custkey % 100 = 0),
-        |bought AS (SELECT DISTINCT o.o_custkey AS ck, l.l_partkey AS pk
-        |           FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
-        |cand AS (SELECT c.c_custkey AS ck, p.p_partkey AS pk,
-        |                cast(('0x'||substr(md5(concat(cast(c.c_custkey AS VARCHAR), ':', cast(p.p_partkey AS VARCHAR))),1,8)) AS BIGINT) AS hv
-        |         FROM cust c CROSS JOIN part p),
-        |neg AS (SELECT cand.ck, cand.pk, hv,
-        |               row_number() OVER (PARTITION BY cand.ck ORDER BY hv, cand.pk) AS rk
-        |        FROM cand WHERE NOT EXISTS (SELECT 1 FROM bought b WHERE b.ck = cand.ck AND b.pk = cand.pk))
-        |SELECT ck, pk, hv, cast(rk AS BIGINT) AS rk FROM neg WHERE rk <= 5 ORDER BY ck, rk""".stripMargin),
+        |SELECT ck, pk, hv, cast(rk AS BIGINT) AS rk FROM neg WHERE rk <= 5 ORDER BY ck, rk""".stripMargin)),
 
     // Tail attribution: which event types over-contribute to the top
     // value decile — lift of each type's share among the top 10% vs
@@ -5709,17 +5038,6 @@ object Queries {
     // The decile is one global ntile (dim here; x100's two-pass tier is
     // the fact-scale form).
     q("x285_tail_attribution",
-      """WITH e AS (SELECT event_type, cast(round(value*100) AS BIGINT) AS c, event_id FROM events),
-        |d AS (SELECT event_type, ntile(10) OVER (ORDER BY c, event_id) AS dec_b FROM e),
-        |a AS (SELECT event_type, cast(count(*) AS BIGINT) AS all_n FROM d GROUP BY 1),
-        |t AS (SELECT event_type, cast(count(*) AS BIGINT) AS top_n FROM d WHERE dec_b = 10 GROUP BY 1),
-        |tot AS (SELECT cast(sum(all_n) AS BIGINT) AS aN FROM a),
-        |ttot AS (SELECT cast(sum(top_n) AS BIGINT) AS tN FROM t)
-        |SELECT a.event_type, a.all_n, coalesce(t.top_n, 0) AS top_n,
-        |       cast((coalesce(t.top_n, 0) * (SELECT aN FROM tot) * 10000)
-        |            div ((SELECT tN FROM ttot) * a.all_n) AS BIGINT) AS lift_bp
-        |FROM a LEFT JOIN t ON a.event_type = t.event_type
-        |ORDER BY a.event_type""".stripMargin,
       """WITH e AS (SELECT event_type, cast(round(value*100) AS BIGINT) AS c, event_id FROM events),
         |d AS (SELECT event_type, ntile(10) OVER (ORDER BY c, event_id) AS dec_b FROM e),
         |a AS (SELECT event_type, cast(count(*) AS BIGINT) AS all_n FROM d GROUP BY 1),
@@ -5776,32 +5094,6 @@ object Queries {
         |  FROM events GROUP BY 1, 2),
         |v AS (SELECT a, b, c, cast(count(*) AS BIGINT) AS n, cast(sum(y) AS BIGINT) AS conv
         |      FROM u GROUP BY 1, 2, 3),
-        |r AS (SELECT a, b, c, (conv * 10000) div n AS v_bp FROM v),
-        |p AS (SELECT
-        |  max(CASE WHEN a=0 AND b=0 AND c=0 THEN v_bp END) AS v000,
-        |  max(CASE WHEN a=1 AND b=0 AND c=0 THEN v_bp END) AS v100,
-        |  max(CASE WHEN a=0 AND b=1 AND c=0 THEN v_bp END) AS v010,
-        |  max(CASE WHEN a=0 AND b=0 AND c=1 THEN v_bp END) AS v001,
-        |  max(CASE WHEN a=1 AND b=1 AND c=0 THEN v_bp END) AS v110,
-        |  max(CASE WHEN a=1 AND b=0 AND c=1 THEN v_bp END) AS v101,
-        |  max(CASE WHEN a=0 AND b=1 AND c=1 THEN v_bp END) AS v011,
-        |  max(CASE WHEN a=1 AND b=1 AND c=1 THEN v_bp END) AS v111 FROM r),
-        |sh AS (
-        |  SELECT 'click' AS channel,
-        |         2*(v100-v000) + (v110-v010) + (v101-v001) + 2*(v111-v011) AS x6 FROM p
-        |  UNION ALL SELECT 'error',
-        |         2*(v001-v000) + (v011-v010) + (v101-v100) + 2*(v111-v110) FROM p
-        |  UNION ALL SELECT 'signup',
-        |         2*(v010-v000) + (v110-v100) + (v011-v001) + 2*(v111-v101) FROM p)
-        |SELECT channel, cast(x6 AS BIGINT) AS shapley_x6_bp FROM sh ORDER BY channel""".stripMargin,
-      """WITH u AS (SELECT user_id, cast(ts AS DATE) AS day,
-        |       max(CASE WHEN event_type='click' THEN 1 ELSE 0 END) AS a,
-        |       max(CASE WHEN event_type='signup' THEN 1 ELSE 0 END) AS b,
-        |       max(CASE WHEN event_type='error' THEN 1 ELSE 0 END) AS c,
-        |       max(CASE WHEN event_type='purchase' THEN 1 ELSE 0 END) AS y
-        |  FROM events GROUP BY 1, 2),
-        |v AS (SELECT a, b, c, cast(count(*) AS BIGINT) AS n, cast(sum(y) AS BIGINT) AS conv
-        |      FROM u GROUP BY 1, 2, 3),
         |r AS (SELECT a, b, c, (conv * 10000) // n AS v_bp FROM v),
         |p AS (SELECT
         |  max(CASE WHEN a=0 AND b=0 AND c=0 THEN v_bp END) AS v000,
@@ -5830,29 +5122,6 @@ object Queries {
     // gap; the sweep is x198's ±1-point walk. The identity row is the
     // reconciliation — fubini_ok MUST be 1.
     q("x288_littles_law",
-      """WITH e AS (SELECT user_id, ts, unix_micros(ts) AS us,
-        |       lag(unix_micros(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-        |  FROM events),
-        |s AS (SELECT user_id, us,
-        |             CASE WHEN prev IS NULL OR us - prev > 1800000000 THEN 1 ELSE 0 END AS new_s
-        |      FROM e),
-        |sid AS (SELECT user_id, us, sum(new_s) OVER (PARTITION BY user_id ORDER BY us) AS sess
-        |        FROM s),
-        |sess AS (SELECT user_id, sess, min(us) AS s0, max(us) AS s1 FROM sid GROUP BY 1, 2),
-        |pts AS (SELECT s0 AS t, 1 AS d FROM sess UNION ALL SELECT s1, -1 FROM sess),
-        |sweep AS (SELECT t, sum(d) AS dd FROM pts GROUP BY t),
-        |walk AS (SELECT t, sum(dd) OVER (ORDER BY t) AS conc,
-        |                lead(t) OVER (ORDER BY t) AS nxt
-        |         FROM sweep),
-        |integral AS (SELECT cast(sum(conc * (nxt - t)) AS BIGINT) AS area_us FROM walk WHERE nxt IS NOT NULL),
-        |durs AS (SELECT cast(sum(s1 - s0) AS BIGINT) AS dur_us, cast(count(*) AS BIGINT) AS n FROM sess),
-        |span AS (SELECT cast(max(us) - min(us) AS BIGINT) AS t_us FROM sid)
-        |SELECT (SELECT area_us FROM integral) AS area_us,
-        |       (SELECT dur_us FROM durs) AS dur_us,
-        |       CASE WHEN (SELECT area_us FROM integral) = (SELECT dur_us FROM durs) THEN 1 ELSE 0 END AS fubini_ok,
-        |       (SELECT n FROM durs) AS sessions,
-        |       cast(((SELECT dur_us FROM durs) * 10000) div (SELECT t_us FROM span) AS BIGINT) AS l_avg_bp,
-        |       cast((SELECT dur_us FROM durs) div ((SELECT n FROM durs) * 1000000) AS BIGINT) AS w_avg_secs""".stripMargin,
       """WITH e AS (SELECT user_id, ts, epoch_us(ts) AS us,
         |       lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
         |  FROM events),
@@ -5884,15 +5153,6 @@ object Queries {
     // sanity gate of any experiment readout (a flagged SRM invalidates
     // x256/x286 downstream). One distinct + one 2-row agg.
     q("x289_srm_check",
-      """WITH a AS (SELECT cast(conv(substr(md5(cast(user_id AS STRING)),1,8),16,10) AS BIGINT) % 2 AS arm,
-        |       cast(count(*) AS BIGINT) AS o
-        |  FROM (SELECT DISTINCT user_id FROM events) u GROUP BY 1),
-        |p AS (SELECT max(CASE WHEN arm = 0 THEN o END) AS o0,
-        |             max(CASE WHEN arm = 1 THEN o END) AS o1 FROM a)
-        |SELECT o0, o1, cast(o0 + o1 AS BIGINT) AS n,
-        |       cast(((o0 - o1) * (o0 - o1) * 10000) div (o0 + o1) AS BIGINT) AS chi2_x10000,
-        |       CASE WHEN (o0 - o1) * (o0 - o1) * 100 > 384 * (o0 + o1) THEN 1 ELSE 0 END AS srm_flag
-        |FROM p""".stripMargin,
       """WITH a AS (SELECT cast(('0x'||substr(md5(cast(user_id AS VARCHAR)),1,8)) AS BIGINT) % 2 AS arm,
         |       cast(count(*) AS BIGINT) AS o
         |  FROM (SELECT DISTINCT user_id FROM events) u GROUP BY 1),
@@ -5901,7 +5161,17 @@ object Queries {
         |SELECT o0, o1, cast(o0 + o1 AS BIGINT) AS n,
         |       cast(((o0 - o1) * (o0 - o1) * 10000) // (o0 + o1) AS BIGINT) AS chi2_x10000,
         |       CASE WHEN (o0 - o1) * (o0 - o1) * 100 > 384 * (o0 + o1) THEN 1 ELSE 0 END AS srm_flag
-        |FROM p""".stripMargin),
+        |FROM p""".stripMargin,
+      Hand("hex to integer: DuckDB casts '0x' || hex, Spark calls conv(hex, 16, 10)",
+      """WITH a AS (SELECT cast(conv(substr(md5(cast(user_id AS STRING)),1,8),16,10) AS BIGINT) % 2 AS arm,
+        |       cast(count(*) AS BIGINT) AS o
+        |  FROM (SELECT DISTINCT user_id FROM events) u GROUP BY 1),
+        |p AS (SELECT max(CASE WHEN arm = 0 THEN o END) AS o0,
+        |             max(CASE WHEN arm = 1 THEN o END) AS o1 FROM a)
+        |SELECT o0, o1, cast(o0 + o1 AS BIGINT) AS n,
+        |       cast(((o0 - o1) * (o0 - o1) * 10000) div (o0 + o1) AS BIGINT) AS chi2_x10000,
+        |       CASE WHEN (o0 - o1) * (o0 - o1) * 100 > 384 * (o0 + o1) THEN 1 ELSE 0 END AS srm_flag
+        |FROM p""".stripMargin)),
 
     // ---- round-9 tier: robust trends, drift, reliability, feature/ -------
     // ---- retrieval eval, quant series (x290+) ----------------------------
@@ -5994,6 +5264,24 @@ object Queries {
     // OPTIMIZATION_r18.md §8); texts split only to keep the hint
     // Spark-side — the oracle text is the old shared one, verbatim.
     q("x293_local_clustering",
+      """WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+        |e AS (SELECT a.l_partkey AS u, b.l_partkey AS v
+        |      FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+        |      GROUP BY 1, 2 HAVING count(*) >= 2),
+        |deg AS (SELECT node, cast(count(*) AS BIGINT) AS d
+        |        FROM (SELECT u AS node FROM e UNION ALL SELECT v FROM e) x GROUP BY 1),
+        |tr AS (SELECT e1.u AS a, e1.v AS b, e2.v AS c
+        |       FROM e e1 JOIN e e2 ON e1.v = e2.u
+        |                 JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v),
+        |tv AS (SELECT a AS node FROM tr UNION ALL SELECT b FROM tr UNION ALL SELECT c FROM tr),
+        |tc AS (SELECT node, cast(count(*) AS BIGINT) AS tri FROM tv GROUP BY 1)
+        |SELECT deg.node, deg.d AS degree,
+        |       cast(coalesce(tc.tri, 0) AS BIGINT) AS triangles,
+        |       cast(floor(coalesce(tc.tri, 0) * 20000e0 / (deg.d * (deg.d - 1))) AS BIGINT) AS lcc_bp
+        |FROM deg LEFT JOIN tc ON deg.node = tc.node
+        |WHERE deg.d >= 2
+        |ORDER BY lcc_bp DESC, deg.node LIMIT 20""".stripMargin,
+      Hand("REPARTITION hint: the exploding join would run in one task",
       s"""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
         |lip AS (SELECT /*+ REPARTITION($hintPar, l_orderkey) */ l_orderkey, l_partkey FROM li),
         |e AS (SELECT a.l_partkey AS u, b.l_partkey AS v
@@ -6011,24 +5299,7 @@ object Queries {
         |       cast(floor(coalesce(tc.tri, 0) * 20000e0 / (deg.d * (deg.d - 1))) AS BIGINT) AS lcc_bp
         |FROM deg LEFT JOIN tc ON deg.node = tc.node
         |WHERE deg.d >= 2
-        |ORDER BY lcc_bp DESC, deg.node LIMIT 20""".stripMargin,
-      """WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        |e AS (SELECT a.l_partkey AS u, b.l_partkey AS v
-        |      FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        |      GROUP BY 1, 2 HAVING count(*) >= 2),
-        |deg AS (SELECT node, cast(count(*) AS BIGINT) AS d
-        |        FROM (SELECT u AS node FROM e UNION ALL SELECT v FROM e) x GROUP BY 1),
-        |tr AS (SELECT e1.u AS a, e1.v AS b, e2.v AS c
-        |       FROM e e1 JOIN e e2 ON e1.v = e2.u
-        |                 JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v),
-        |tv AS (SELECT a AS node FROM tr UNION ALL SELECT b FROM tr UNION ALL SELECT c FROM tr),
-        |tc AS (SELECT node, cast(count(*) AS BIGINT) AS tri FROM tv GROUP BY 1)
-        |SELECT deg.node, deg.d AS degree,
-        |       cast(coalesce(tc.tri, 0) AS BIGINT) AS triangles,
-        |       cast(floor(coalesce(tc.tri, 0) * 20000e0 / (deg.d * (deg.d - 1))) AS BIGINT) AS lcc_bp
-        |FROM deg LEFT JOIN tc ON deg.node = tc.node
-        |WHERE deg.d >= 2
-        |ORDER BY lcc_bp DESC, deg.node LIMIT 20""".stripMargin),
+        |ORDER BY lcc_bp DESC, deg.node LIMIT 20""".stripMargin)),
 
     // Multi-window error-budget burn (the SRE alerting identity: burn
     // rate = error rate / SLO budget, alerted fast at 14.4× over the
@@ -6087,6 +5358,26 @@ object Queries {
     // output divides exact integer sums once. Users partition the
     // windows — embarrassingly parallel at any scale.
     q("x296_mttr_mtbf",
+      """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us, event_id FROM events),
+        |r AS (SELECT user_id, event_type, us,
+        |             min(CASE WHEN event_type <> 'error' THEN us END)
+        |               OVER (PARTITION BY user_id ORDER BY us, event_id
+        |                     ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS next_ok,
+        |             lead(CASE WHEN event_type = 'error' THEN us END IGNORE NULLS)
+        |               OVER (PARTITION BY user_id ORDER BY us, event_id) AS next_err
+        |      FROM e),
+        |fail AS (SELECT user_id, us, next_ok, next_err FROM r WHERE event_type = 'error')
+        |SELECT cast(count(*) AS BIGINT) AS n_failures,
+        |       cast(sum(CASE WHEN next_err IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_gaps,
+        |       cast(floor(sum(CASE WHEN next_err IS NOT NULL THEN next_err - us ELSE 0 END)
+        |             / (1000000e0 * nullif(sum(CASE WHEN next_err IS NOT NULL THEN 1 ELSE 0 END), 0)))
+        |         AS BIGINT) AS mtbf_secs,
+        |       cast(sum(CASE WHEN next_ok IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_recovered,
+        |       cast(floor(sum(CASE WHEN next_ok IS NOT NULL THEN next_ok - us ELSE 0 END)
+        |             / (1000000e0 * nullif(sum(CASE WHEN next_ok IS NOT NULL THEN 1 ELSE 0 END), 0)))
+        |         AS BIGINT) AS mttr_secs
+        |FROM fail""".stripMargin,
+      Hand("IGNORE NULLS goes after the call in Spark, inside it in DuckDB",
       """WITH e AS (SELECT user_id, event_type, unix_micros(ts) AS us, event_id FROM events),
         |r AS (SELECT user_id, event_type, us,
         |             min(CASE WHEN event_type <> 'error' THEN us END)
@@ -6106,26 +5397,7 @@ object Queries {
         |       cast(floor(sum(CASE WHEN next_ok IS NOT NULL THEN next_ok - us ELSE 0 END)
         |             / (1000000e0 * nullif(sum(CASE WHEN next_ok IS NOT NULL THEN 1 ELSE 0 END), 0)))
         |         AS BIGINT) AS mttr_secs
-        |FROM fail""".stripMargin,
-      """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us, event_id FROM events),
-        |r AS (SELECT user_id, event_type, us,
-        |             min(CASE WHEN event_type <> 'error' THEN us END)
-        |               OVER (PARTITION BY user_id ORDER BY us, event_id
-        |                     ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS next_ok,
-        |             lead(CASE WHEN event_type = 'error' THEN us END IGNORE NULLS)
-        |               OVER (PARTITION BY user_id ORDER BY us, event_id) AS next_err
-        |      FROM e),
-        |fail AS (SELECT user_id, us, next_ok, next_err FROM r WHERE event_type = 'error')
-        |SELECT cast(count(*) AS BIGINT) AS n_failures,
-        |       cast(sum(CASE WHEN next_err IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_gaps,
-        |       cast(floor(sum(CASE WHEN next_err IS NOT NULL THEN next_err - us ELSE 0 END)
-        |             / (1000000e0 * nullif(sum(CASE WHEN next_err IS NOT NULL THEN 1 ELSE 0 END), 0)))
-        |         AS BIGINT) AS mtbf_secs,
-        |       cast(sum(CASE WHEN next_ok IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_recovered,
-        |       cast(floor(sum(CASE WHEN next_ok IS NOT NULL THEN next_ok - us ELSE 0 END)
-        |             / (1000000e0 * nullif(sum(CASE WHEN next_ok IS NOT NULL THEN 1 ELSE 0 END), 0)))
-        |         AS BIGINT) AS mttr_secs
-        |FROM fail""".stripMargin),
+        |FROM fail""".stripMargin)),
 
     // Weight-of-Evidence / Information Value per score decile (the
     // credit-scoring feature diagnostic; Siddiqi 2006) — ranks a
@@ -6136,17 +5408,6 @@ object Queries {
     // doubles), signed → `+ 0e0` normalized. Laplace +1 smoothing keeps
     // ln() in domain on empty cells.
     q("x297_woe_iv",
-      """WITH s AS (SELECT vec_id, cast(element_at(embedding, 1) AS DOUBLE) AS score,
-        |                  CASE WHEN label < 5 THEN 1 ELSE 0 END AS bad FROM embeddings),
-        |d AS (SELECT bad, ntile(10) OVER (ORDER BY score, vec_id) AS bin FROM s),
-        |b AS (SELECT bin, cast(sum(1 - bad) + 1 AS BIGINT) AS g, cast(sum(bad) + 1 AS BIGINT) AS bd
-        |      FROM d GROUP BY 1),
-        |t AS (SELECT cast(sum(g) AS BIGINT) AS gt, cast(sum(bd) AS BIGINT) AS bt FROM b)
-        |SELECT b.bin, b.g - 1 AS goods, b.bd - 1 AS bads,
-        |       round(ln((b.g * 1e0 / t.gt) / (b.bd * 1e0 / t.bt)), 4) + 0e0 AS woe,
-        |       round((b.g * 1e0 / t.gt - b.bd * 1e0 / t.bt)
-        |             * ln((b.g * 1e0 / t.gt) / (b.bd * 1e0 / t.bt)), 4) + 0e0 AS iv_contrib
-        |FROM b CROSS JOIN t ORDER BY b.bin""".stripMargin,
       """WITH s AS (SELECT vec_id, cast(embedding[1] AS DOUBLE) AS score,
         |                  CASE WHEN label < 5 THEN 1 ELSE 0 END AS bad FROM embeddings),
         |d AS (SELECT bad, ntile(10) OVER (ORDER BY score, vec_id) AS bin FROM s),
@@ -6190,24 +5451,6 @@ object Queries {
     // queries × own-cell, the linear ANN-probe shape — the all-pairs
     // exact form stays fenced in x48/x49.
     q("x299_mrr_recall",
-      """WITH v AS (SELECT vec_id, embedding, label,
-        |                  cast(floor(cast(element_at(embedding, 1) AS DOUBLE) * 8) AS BIGINT) AS cell
-        |           FROM embeddings),
-        |q AS (SELECT * FROM v WHERE vec_id % 97 = 0),
-        |pr AS (SELECT q.vec_id AS qid, q.label AS ql, c.vec_id AS cid, c.label AS cl,
-        |              round(cosine_sim(q.embedding, c.embedding), 4) AS sim
-        |       FROM q JOIN v c ON q.cell = c.cell AND q.vec_id <> c.vec_id),
-        |rk AS (SELECT qid, ql, cl,
-        |              row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rn
-        |       FROM pr),
-        |fr AS (SELECT qid, min(CASE WHEN ql = cl THEN rn END) AS first_rel FROM rk GROUP BY 1)
-        |SELECT cast(count(*) AS BIGINT) AS n_queries,
-        |       cast(sum(CASE WHEN first_rel IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS with_relevant,
-        |       cast(sum(CASE WHEN first_rel <= 5 THEN 1 ELSE 0 END) AS BIGINT) AS hits_at5,
-        |       cast(floor(sum(CASE WHEN first_rel <= 5 THEN 1 ELSE 0 END) * 10000e0 / count(*)) AS BIGINT) AS recall5_bp,
-        |       cast(sum(coalesce(cast(floor(1000000e0 / first_rel) AS BIGINT), 0)) AS BIGINT) AS mrr_sum_x1e6,
-        |       cast(floor(sum(coalesce(cast(floor(1000000e0 / first_rel) AS BIGINT), 0)) * 1e0 / count(*)) AS BIGINT) AS mrr_x1e6
-        |FROM fr""".stripMargin,
       """WITH v AS (SELECT vec_id, embedding, label,
         |                  cast(floor(cast(embedding[1] AS DOUBLE) * 8) AS BIGINT) AS cell
         |           FROM embeddings),
@@ -6283,25 +5526,6 @@ object Queries {
         |             least(255, cast(p_size AS BIGINT) * 5) AS y
         |           FROM part),
         |z AS (SELECT p_partkey, x, y,
-        |        (shiftright(x,0) & 1) * 1 + (shiftright(y,0) & 1) * 2
-        |      + (shiftright(x,1) & 1) * 4 + (shiftright(y,1) & 1) * 8
-        |      + (shiftright(x,2) & 1) * 16 + (shiftright(y,2) & 1) * 32
-        |      + (shiftright(x,3) & 1) * 64 + (shiftright(y,3) & 1) * 128
-        |      + (shiftright(x,4) & 1) * 256 + (shiftright(y,4) & 1) * 512
-        |      + (shiftright(x,5) & 1) * 1024 + (shiftright(y,5) & 1) * 2048
-        |      + (shiftright(x,6) & 1) * 4096 + (shiftright(y,6) & 1) * 8192
-        |      + (shiftright(x,7) & 1) * 16384 + (shiftright(y,7) & 1) * 32768 AS zcode
-        |      FROM p)
-        |SELECT cast(floor(zcode / 4096e0) AS BIGINT) AS z_tile,
-        |       cast(count(*) AS BIGINT) AS parts,
-        |       cast(min(x) AS BIGINT) AS x_min, cast(max(x) AS BIGINT) AS x_max,
-        |       cast(min(y) AS BIGINT) AS y_min, cast(max(y) AS BIGINT) AS y_max
-        |FROM z GROUP BY 1 ORDER BY 1""".stripMargin,
-      """WITH p AS (SELECT p_partkey,
-        |             least(255, greatest(0, cast(floor((p_retailprice - 900) / 4.5e0) AS BIGINT))) AS x,
-        |             least(255, cast(p_size AS BIGINT) * 5) AS y
-        |           FROM part),
-        |z AS (SELECT p_partkey, x, y,
         |        ((x >> 0) & 1) * 1 + ((y >> 0) & 1) * 2
         |      + ((x >> 1) & 1) * 4 + ((y >> 1) & 1) * 8
         |      + ((x >> 2) & 1) * 16 + ((y >> 2) & 1) * 32
@@ -6324,26 +5548,6 @@ object Queries {
     // partition per user; the path build is two windows + one agg —
     // no self-join, user-parallel at any scale.
     q("x304_session_paths",
-      """WITH s AS (SELECT user_id, ts, event_id, event_type,
-        |             CASE WHEN unix_micros(ts) - lag(unix_micros(ts))
-        |                    OVER (PARTITION BY user_id ORDER BY ts, event_id) > 1800000000
-        |                  OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-        |                  THEN 1 ELSE 0 END AS new_s
-        |           FROM events),
-        |sid AS (SELECT user_id, ts, event_id, event_type,
-        |               sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS sess
-        |        FROM s),
-        |rk AS (SELECT user_id, sess, event_type,
-        |              row_number() OVER (PARTITION BY user_id, sess ORDER BY ts, event_id) AS rn
-        |       FROM sid),
-        |p AS (SELECT user_id, sess,
-        |             max(CASE WHEN rn = 1 THEN event_type END) AS e1,
-        |             max(CASE WHEN rn = 2 THEN event_type END) AS e2,
-        |             max(CASE WHEN rn = 3 THEN event_type END) AS e3
-        |      FROM rk WHERE rn <= 3 GROUP BY 1, 2)
-        |SELECT concat(e1, '>', coalesce(e2, '.'), '>', coalesce(e3, '.')) AS path,
-        |       cast(count(*) AS BIGINT) AS sessions
-        |FROM p GROUP BY 1 ORDER BY sessions DESC, path LIMIT 15""".stripMargin,
       """WITH s AS (SELECT user_id, ts, event_id, event_type,
         |             CASE WHEN epoch_us(ts) - lag(epoch_us(ts))
         |                    OVER (PARTITION BY user_id ORDER BY ts, event_id) > 1800000000
@@ -6399,33 +5603,6 @@ object Queries {
     q("x307_bloom_fpr",
       """WITH mem AS (SELECT p_partkey AS k FROM part WHERE p_partkey % 2 = 0),
         |pos AS (SELECT DISTINCT pos FROM (
-        |    SELECT cast(conv(substr(md5(cast(k AS STRING)),1,8),16,10) AS BIGINT) % 8192 AS pos FROM mem
-        |    UNION ALL
-        |    SELECT cast(conv(substr(md5(cast(k AS STRING)),9,8),16,10) AS BIGINT) % 8192 FROM mem
-        |    UNION ALL
-        |    SELECT cast(conv(substr(md5(cast(k AS STRING)),17,8),16,10) AS BIGINT) % 8192 FROM mem) u),
-        |pr AS (SELECT p_partkey AS k,
-        |         cast(conv(substr(md5(cast(p_partkey AS STRING)),1,8),16,10) AS BIGINT) % 8192 AS h1,
-        |         cast(conv(substr(md5(cast(p_partkey AS STRING)),9,8),16,10) AS BIGINT) % 8192 AS h2,
-        |         cast(conv(substr(md5(cast(p_partkey AS STRING)),17,8),16,10) AS BIGINT) % 8192 AS h3
-        |       FROM part WHERE p_partkey % 2 = 1),
-        |hit AS (SELECT pr.k,
-        |          CASE WHEN b1.pos IS NOT NULL AND b2.pos IS NOT NULL AND b3.pos IS NOT NULL
-        |               THEN 1 ELSE 0 END AS fp
-        |        FROM pr LEFT JOIN pos b1 ON pr.h1 = b1.pos
-        |                LEFT JOIN pos b2 ON pr.h2 = b2.pos
-        |                LEFT JOIN pos b3 ON pr.h3 = b3.pos),
-        |n AS (SELECT cast(count(*) AS BIGINT) AS members FROM mem),
-        |bs AS (SELECT cast(count(*) AS BIGINT) AS bits_set FROM pos)
-        |SELECT n.members, bs.bits_set,
-        |       cast(count(*) AS BIGINT) AS probes,
-        |       cast(sum(fp) AS BIGINT) AS false_positives,
-        |       cast(floor(sum(fp) * 10000e0 / count(*)) AS BIGINT) AS fpr_bp,
-        |       cast(floor(power(1e0 - exp(-3e0 * n.members / 8192), 3) * 10000) AS BIGINT) AS expected_fpr_bp
-        |FROM hit CROSS JOIN n CROSS JOIN bs
-        |GROUP BY n.members, bs.bits_set""".stripMargin,
-      """WITH mem AS (SELECT p_partkey AS k FROM part WHERE p_partkey % 2 = 0),
-        |pos AS (SELECT DISTINCT pos FROM (
         |    SELECT cast(('0x'||substr(md5(cast(k AS VARCHAR)),1,8)) AS BIGINT) % 8192 AS pos FROM mem
         |    UNION ALL
         |    SELECT cast(('0x'||substr(md5(cast(k AS VARCHAR)),9,8)) AS BIGINT) % 8192 FROM mem
@@ -6450,7 +5627,35 @@ object Queries {
         |       cast(floor(sum(fp) * 10000e0 / count(*)) AS BIGINT) AS fpr_bp,
         |       cast(floor(power(1e0 - exp(-3e0 * n.members / 8192), 3) * 10000) AS BIGINT) AS expected_fpr_bp
         |FROM hit CROSS JOIN n CROSS JOIN bs
-        |GROUP BY n.members, bs.bits_set""".stripMargin),
+        |GROUP BY n.members, bs.bits_set""".stripMargin,
+      Hand("hex to integer: DuckDB casts '0x' || hex, Spark calls conv(hex, 16, 10)",
+      """WITH mem AS (SELECT p_partkey AS k FROM part WHERE p_partkey % 2 = 0),
+        |pos AS (SELECT DISTINCT pos FROM (
+        |    SELECT cast(conv(substr(md5(cast(k AS STRING)),1,8),16,10) AS BIGINT) % 8192 AS pos FROM mem
+        |    UNION ALL
+        |    SELECT cast(conv(substr(md5(cast(k AS STRING)),9,8),16,10) AS BIGINT) % 8192 FROM mem
+        |    UNION ALL
+        |    SELECT cast(conv(substr(md5(cast(k AS STRING)),17,8),16,10) AS BIGINT) % 8192 FROM mem) u),
+        |pr AS (SELECT p_partkey AS k,
+        |         cast(conv(substr(md5(cast(p_partkey AS STRING)),1,8),16,10) AS BIGINT) % 8192 AS h1,
+        |         cast(conv(substr(md5(cast(p_partkey AS STRING)),9,8),16,10) AS BIGINT) % 8192 AS h2,
+        |         cast(conv(substr(md5(cast(p_partkey AS STRING)),17,8),16,10) AS BIGINT) % 8192 AS h3
+        |       FROM part WHERE p_partkey % 2 = 1),
+        |hit AS (SELECT pr.k,
+        |          CASE WHEN b1.pos IS NOT NULL AND b2.pos IS NOT NULL AND b3.pos IS NOT NULL
+        |               THEN 1 ELSE 0 END AS fp
+        |        FROM pr LEFT JOIN pos b1 ON pr.h1 = b1.pos
+        |                LEFT JOIN pos b2 ON pr.h2 = b2.pos
+        |                LEFT JOIN pos b3 ON pr.h3 = b3.pos),
+        |n AS (SELECT cast(count(*) AS BIGINT) AS members FROM mem),
+        |bs AS (SELECT cast(count(*) AS BIGINT) AS bits_set FROM pos)
+        |SELECT n.members, bs.bits_set,
+        |       cast(count(*) AS BIGINT) AS probes,
+        |       cast(sum(fp) AS BIGINT) AS false_positives,
+        |       cast(floor(sum(fp) * 10000e0 / count(*)) AS BIGINT) AS fpr_bp,
+        |       cast(floor(power(1e0 - exp(-3e0 * n.members / 8192), 3) * 10000) AS BIGINT) AS expected_fpr_bp
+        |FROM hit CROSS JOIN n CROSS JOIN bs
+        |GROUP BY n.members, bs.bits_set""".stripMargin)),
 
     // Benjamini-Hochberg FDR over the per-type mean-shift z tests
     // (each event type's value mean vs the rest, Welch z from EXACT
@@ -6511,27 +5716,6 @@ object Queries {
         |t AS (SELECT day, c,
         |        cast(sum(c) OVER (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS BIGINT) AS trend_x7,
         |        count(*) OVER (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS wn,
-        |        weekday(day) AS wd
-        |      FROM d),
-        |f AS (SELECT day, c, trend_x7, wd FROM t WHERE wn = 7),
-        |s AS (SELECT wd, cast(sum(7*c - trend_x7) AS BIGINT) AS seas_sum_x7,
-        |             cast(count(*) AS BIGINT) AS n_w
-        |      FROM f GROUP BY 1),
-        |comp AS (SELECT f.day,
-        |           s.seas_sum_x7 * 1e0 / (7 * s.n_w) AS seas,
-        |           f.c - f.trend_x7 / 7e0 - s.seas_sum_x7 * 1e0 / (7 * s.n_w) AS resid,
-        |           f.c - s.seas_sum_x7 * 1e0 / (7 * s.n_w) AS detrended_plus_r,
-        |           f.c - f.trend_x7 / 7e0 AS deseason_plus_r
-        |         FROM f JOIN s ON f.wd = s.wd)
-        |SELECT cast(count(*) AS BIGINT) AS n_days,
-        |       round(greatest(0e0, 1e0 - var_samp(resid) / var_samp(detrended_plus_r)), 4) + 0e0 AS trend_strength,
-        |       round(greatest(0e0, 1e0 - var_samp(resid) / var_samp(deseason_plus_r)), 4) + 0e0 AS seasonal_strength
-        |FROM comp""".stripMargin,
-      """WITH d AS (SELECT cast(ts AS DATE) AS day, cast(count(*) AS BIGINT) AS c
-        |           FROM events GROUP BY 1),
-        |t AS (SELECT day, c,
-        |        cast(sum(c) OVER (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS BIGINT) AS trend_x7,
-        |        count(*) OVER (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS wn,
         |        isodow(day) - 1 AS wd
         |      FROM d),
         |f AS (SELECT day, c, trend_x7, wd FROM t WHERE wn = 7),
@@ -6547,7 +5731,29 @@ object Queries {
         |SELECT cast(count(*) AS BIGINT) AS n_days,
         |       round(greatest(0e0, 1e0 - var_samp(resid) / var_samp(detrended_plus_r)), 4) + 0e0 AS trend_strength,
         |       round(greatest(0e0, 1e0 - var_samp(resid) / var_samp(deseason_plus_r)), 4) + 0e0 AS seasonal_strength
-        |FROM comp""".stripMargin),
+        |FROM comp""".stripMargin,
+      Hand("isodow(d) - 1 is weekday(d) in Spark",
+      """WITH d AS (SELECT cast(ts AS DATE) AS day, cast(count(*) AS BIGINT) AS c
+        |           FROM events GROUP BY 1),
+        |t AS (SELECT day, c,
+        |        cast(sum(c) OVER (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS BIGINT) AS trend_x7,
+        |        count(*) OVER (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS wn,
+        |        weekday(day) AS wd
+        |      FROM d),
+        |f AS (SELECT day, c, trend_x7, wd FROM t WHERE wn = 7),
+        |s AS (SELECT wd, cast(sum(7*c - trend_x7) AS BIGINT) AS seas_sum_x7,
+        |             cast(count(*) AS BIGINT) AS n_w
+        |      FROM f GROUP BY 1),
+        |comp AS (SELECT f.day,
+        |           s.seas_sum_x7 * 1e0 / (7 * s.n_w) AS seas,
+        |           f.c - f.trend_x7 / 7e0 - s.seas_sum_x7 * 1e0 / (7 * s.n_w) AS resid,
+        |           f.c - s.seas_sum_x7 * 1e0 / (7 * s.n_w) AS detrended_plus_r,
+        |           f.c - f.trend_x7 / 7e0 AS deseason_plus_r
+        |         FROM f JOIN s ON f.wd = s.wd)
+        |SELECT cast(count(*) AS BIGINT) AS n_days,
+        |       round(greatest(0e0, 1e0 - var_samp(resid) / var_samp(detrended_plus_r)), 4) + 0e0 AS trend_strength,
+        |       round(greatest(0e0, 1e0 - var_samp(resid) / var_samp(deseason_plus_r)), 4) + 0e0 AS seasonal_strength
+        |FROM comp""".stripMargin)),
 
     // Chapman capture-recapture population estimate: the week-1 and
     // week-2 active-user sets are the two "captures"; the overlap
@@ -6601,29 +5807,6 @@ object Queries {
     // ints). Output every candidate with its weighted impurity and
     // gain vs the root — the one-feature CART step, oracle-checkable.
     q("x312_decision_stump",
-      """WITH s AS (SELECT vec_id, cast(element_at(embedding, 1) AS DOUBLE) AS score,
-        |                  CASE WHEN label < 5 THEN 1 ELSE 0 END AS y FROM embeddings),
-        |d AS (SELECT y, ntile(10) OVER (ORDER BY score, vec_id) AS bin FROM s),
-        |b AS (SELECT bin, cast(count(*) AS BIGINT) AS n, cast(sum(y) AS BIGINT) AS pos
-        |      FROM d GROUP BY 1),
-        |c AS (SELECT bin, n, pos,
-        |             cast(sum(n) OVER (ORDER BY bin) AS BIGINT) AS cn,
-        |             cast(sum(pos) OVER (ORDER BY bin) AS BIGINT) AS cp,
-        |             cast(sum(n) OVER () AS BIGINT) AS nt,
-        |             cast(sum(pos) OVER () AS BIGINT) AS pt
-        |      FROM b),
-        |g AS (SELECT bin AS split_after, cn, cp, nt, pt,
-        |        (cn * 1e0 / nt) * (1e0 - (cp * 1e0 / cn) * (cp * 1e0 / cn)
-        |                               - ((cn - cp) * 1e0 / cn) * ((cn - cp) * 1e0 / cn))
-        |      + ((nt - cn) * 1e0 / nt) * (1e0 - ((pt - cp) * 1e0 / (nt - cn)) * ((pt - cp) * 1e0 / (nt - cn))
-        |                               - ((nt - cn - pt + cp) * 1e0 / (nt - cn)) * ((nt - cn - pt + cp) * 1e0 / (nt - cn))) AS gini_split,
-        |        1e0 - (pt * 1e0 / nt) * (pt * 1e0 / nt)
-        |            - ((nt - pt) * 1e0 / nt) * ((nt - pt) * 1e0 / nt) AS gini_root
-        |      FROM c WHERE bin < 10)
-        |SELECT split_after, cast(cn AS BIGINT) AS n_left, cast(cp AS BIGINT) AS pos_left,
-        |       round(gini_split, 4) AS gini_split,
-        |       round(gini_root - gini_split, 4) + 0e0 AS gain
-        |FROM g ORDER BY split_after""".stripMargin,
       """WITH s AS (SELECT vec_id, cast(embedding[1] AS DOUBLE) AS score,
         |                  CASE WHEN label < 5 THEN 1 ELSE 0 END AS y FROM embeddings),
         |d AS (SELECT y, ntile(10) OVER (ORDER BY score, vec_id) AS bin FROM s),
@@ -6703,14 +5886,6 @@ object Queries {
     // rows removable by keep-first. Two hash aggs, any scale.
     q("x315_dup_size_dist",
       """WITH k AS (SELECT doc_id,
-        |  md5(array_join(sort_array(array_distinct(split(text,' '))),' ')) AS key
-        |  FROM documents),
-        |g AS (SELECT key, cast(count(*) AS BIGINT) AS sz FROM k GROUP BY 1)
-        |SELECT sz AS group_size, cast(count(*) AS BIGINT) AS n_groups,
-        |       cast(sz * count(*) AS BIGINT) AS docs,
-        |       cast((sz - 1) * count(*) AS BIGINT) AS removable
-        |FROM g GROUP BY sz ORDER BY sz""".stripMargin,
-      """WITH k AS (SELECT doc_id,
         |  md5(array_to_string(list_sort(list_distinct(string_split(text,' '))),' ')) AS key
         |  FROM documents),
         |g AS (SELECT key, cast(count(*) AS BIGINT) AS sz FROM k GROUP BY 1)
@@ -6725,20 +5900,21 @@ object Queries {
     q("x316_cycle_time",
       """SELECT o.o_orderpriority AS prio,
         |       cast(count(*) AS BIGINT) AS n,
-        |       cast(percentile_disc(0.5) WITHIN GROUP (ORDER BY datediff(l.l_shipdate, o.o_orderdate)) AS BIGINT) AS p50_days,
-        |       cast(percentile_disc(0.9) WITHIN GROUP (ORDER BY datediff(l.l_shipdate, o.o_orderdate)) AS BIGINT) AS p90_days,
-        |       cast(percentile_disc(0.99) WITHIN GROUP (ORDER BY datediff(l.l_shipdate, o.o_orderdate)) AS BIGINT) AS p99_days,
-        |       cast(max(datediff(l.l_shipdate, o.o_orderdate)) AS BIGINT) AS max_days
-        |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-      """SELECT o.o_orderpriority AS prio,
-        |       cast(count(*) AS BIGINT) AS n,
         |       cast(quantile_disc(datediff('day', o.o_orderdate, l.l_shipdate), 0.5) AS BIGINT) AS p50_days,
         |       cast(quantile_disc(datediff('day', o.o_orderdate, l.l_shipdate), 0.9) AS BIGINT) AS p90_days,
         |       cast(quantile_disc(datediff('day', o.o_orderdate, l.l_shipdate), 0.99) AS BIGINT) AS p99_days,
         |       cast(max(datediff('day', o.o_orderdate, l.l_shipdate)) AS BIGINT) AS max_days
         |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin),
+        |GROUP BY 1 ORDER BY 1""".stripMargin,
+      Hand("date_diff is datediff(b, a); quantile_disc is percentile_disc WITHIN GROUP",
+      """SELECT o.o_orderpriority AS prio,
+        |       cast(count(*) AS BIGINT) AS n,
+        |       cast(percentile_disc(0.5) WITHIN GROUP (ORDER BY datediff(l.l_shipdate, o.o_orderdate)) AS BIGINT) AS p50_days,
+        |       cast(percentile_disc(0.9) WITHIN GROUP (ORDER BY datediff(l.l_shipdate, o.o_orderdate)) AS BIGINT) AS p90_days,
+        |       cast(percentile_disc(0.99) WITHIN GROUP (ORDER BY datediff(l.l_shipdate, o.o_orderdate)) AS BIGINT) AS p99_days,
+        |       cast(max(datediff(l.l_shipdate, o.o_orderdate)) AS BIGINT) AS max_days
+        |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // Wald-Wolfowitz runs test on the daily up/down move sequence —
     // "is the series random, or do moves cluster?" (the independence
@@ -6793,23 +5969,6 @@ object Queries {
     // closed form on both engines. The LLM-data question it answers:
     // how fast does each source keep minting new tokens?
     q("x319_heaps_law",
-      """WITH w AS (SELECT source, doc_id, t FROM (
-        |        SELECT source, doc_id, explode(split(lower(text), ' ')) AS t FROM documents)
-        |      WHERE t <> ''),
-        |tok AS (SELECT source, doc_id, cast(count(*) AS BIGINT) AS toks FROM w GROUP BY 1, 2),
-        |ft AS (SELECT source, t, min(doc_id) AS first_doc FROM w GROUP BY 1, 2),
-        |nv AS (SELECT source, first_doc AS doc_id, cast(count(*) AS BIGINT) AS new_terms
-        |       FROM ft GROUP BY 1, 2),
-        |cum AS (SELECT tok.source, tok.doc_id,
-        |          cast(sum(tok.toks) OVER (PARTITION BY tok.source ORDER BY tok.doc_id) AS BIGINT) AS cum_toks,
-        |          cast(sum(coalesce(nv.new_terms, 0)) OVER (PARTITION BY tok.source ORDER BY tok.doc_id) AS BIGINT) AS cum_vocab
-        |        FROM tok LEFT JOIN nv ON tok.source = nv.source AND tok.doc_id = nv.doc_id)
-        |SELECT source,
-        |       cast(count(*) AS BIGINT) AS checkpoints,
-        |       cast(max(cum_toks) AS BIGINT) AS total_tokens,
-        |       cast(max(cum_vocab) AS BIGINT) AS vocabulary,
-        |       round(regr_slope(ln(cum_vocab * 1e0), ln(cum_toks * 1e0)), 4) + 0e0 AS heaps_beta
-        |FROM cum GROUP BY source ORDER BY source""".stripMargin,
       """WITH w AS (SELECT source, doc_id, t FROM (
         |        SELECT source, doc_id, unnest(string_split(lower(text), ' ')) AS t FROM documents)
         |      WHERE t <> ''),
@@ -6936,24 +6095,6 @@ object Queries {
         |          FROM u)
         |SELECT both_active, b AS dropped, c AS joined,
         |       cast(CASE WHEN b + c = 0 THEN 0
-        |                 ELSE ((b - c) * (b - c) * 10000) / (b + c) END AS BIGINT) AS chi2_x10000,
-        |       CASE WHEN (b - c) * (b - c) * 100 > 384 * (b + c) THEN 1 ELSE 0 END AS significant
-        |FROM cells""".stripMargin,
-      """WITH bnd AS (SELECT cast(min(cast(ts AS DATE)) AS DATE) AS d0 FROM events),
-        |w1 AS (SELECT DISTINCT user_id FROM events, bnd
-        |       WHERE cast(ts AS DATE) >= bnd.d0 AND cast(ts AS DATE) < bnd.d0 + 7),
-        |w2 AS (SELECT DISTINCT user_id FROM events, bnd
-        |       WHERE cast(ts AS DATE) >= bnd.d0 + 7 AND cast(ts AS DATE) < bnd.d0 + 14),
-        |u AS (SELECT coalesce(w1.user_id, w2.user_id) AS user_id,
-        |             CASE WHEN w1.user_id IS NOT NULL THEN 1 ELSE 0 END AS a1,
-        |             CASE WHEN w2.user_id IS NOT NULL THEN 1 ELSE 0 END AS a2
-        |      FROM w1 FULL OUTER JOIN w2 ON w1.user_id = w2.user_id),
-        |cells AS (SELECT cast(sum(CASE WHEN a1 = 1 AND a2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS both_active,
-        |                 cast(sum(CASE WHEN a1 = 1 AND a2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS b,
-        |                 cast(sum(CASE WHEN a1 = 0 AND a2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c
-        |          FROM u)
-        |SELECT both_active, b AS dropped, c AS joined,
-        |       cast(CASE WHEN b + c = 0 THEN 0
         |                 ELSE ((b - c) * (b - c) * 10000) // (b + c) END AS BIGINT) AS chi2_x10000,
         |       CASE WHEN (b - c) * (b - c) * 100 > 384 * (b + c) THEN 1 ELSE 0 END AS significant
         |FROM cells""".stripMargin),
@@ -6963,29 +6104,6 @@ object Queries {
     // than the rest? Rate and risk-ratio in integer basis points per
     // entry type — the landing-page question over q31's sessions.
     q("x325_entry_conversion",
-      """WITH s AS (SELECT user_id, ts, event_id, event_type,
-        |             CASE WHEN unix_micros(ts) - lag(unix_micros(ts))
-        |                    OVER (PARTITION BY user_id ORDER BY ts, event_id) > 1800000000
-        |                  OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-        |                  THEN 1 ELSE 0 END AS new_s
-        |           FROM events),
-        |sid AS (SELECT user_id, ts, event_id, event_type,
-        |               sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS sess
-        |        FROM s),
-        |agg AS (SELECT user_id, sess,
-        |          min(CASE WHEN rn = 1 THEN event_type END) AS entry,
-        |          max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS converted
-        |        FROM (SELECT *, row_number() OVER (PARTITION BY user_id, sess
-        |                         ORDER BY ts, event_id) AS rn FROM sid) t
-        |        GROUP BY 1, 2),
-        |e AS (SELECT entry, cast(count(*) AS BIGINT) AS sessions,
-        |             cast(sum(converted) AS BIGINT) AS conversions FROM agg GROUP BY 1),
-        |t AS (SELECT cast(sum(sessions) AS BIGINT) AS st, cast(sum(conversions) AS BIGINT) AS ct FROM e)
-        |SELECT e.entry, e.sessions, e.conversions,
-        |       cast(floor(e.conversions * 10000e0 / e.sessions) AS BIGINT) AS conv_bp,
-        |       cast(floor((e.conversions * 1e0 / e.sessions)
-        |             / nullif((t.ct - e.conversions) * 1e0 / nullif(t.st - e.sessions, 0), 0e0) * 10000) AS BIGINT) AS lift_bp
-        |FROM e CROSS JOIN t ORDER BY e.entry""".stripMargin,
       """WITH s AS (SELECT user_id, ts, event_id, event_type,
         |             CASE WHEN epoch_us(ts) - lag(epoch_us(ts))
         |                    OVER (PARTITION BY user_id ORDER BY ts, event_id) > 1800000000
@@ -7037,28 +6155,6 @@ object Queries {
         |h0 AS (SELECT node, cast(1000000 AS BIGINT) AS h FROM n),
         |a1r AS (SELECT n.node, cast(coalesce(sum(h0.h * e.w), 0) AS BIGINT) AS v
         |        FROM n LEFT JOIN e ON e.dst = n.node LEFT JOIN h0 ON h0.node = e.src GROUP BY 1),
-        |a1 AS (SELECT node, cast((v * 1000000) div (SELECT max(v) FROM a1r) AS BIGINT) AS a FROM a1r),
-        |h1r AS (SELECT n.node, cast(coalesce(sum(a1.a * e.w), 0) AS BIGINT) AS v
-        |        FROM n LEFT JOIN e ON e.src = n.node LEFT JOIN a1 ON a1.node = e.dst GROUP BY 1),
-        |h1 AS (SELECT node, cast((v * 1000000) div (SELECT max(v) FROM h1r) AS BIGINT) AS h FROM h1r),
-        |a2r AS (SELECT n.node, cast(coalesce(sum(h1.h * e.w), 0) AS BIGINT) AS v
-        |        FROM n LEFT JOIN e ON e.dst = n.node LEFT JOIN h1 ON h1.node = e.src GROUP BY 1),
-        |a2 AS (SELECT node, cast((v * 1000000) div (SELECT max(v) FROM a2r) AS BIGINT) AS a FROM a2r),
-        |h2r AS (SELECT n.node, cast(coalesce(sum(a2.a * e.w), 0) AS BIGINT) AS v
-        |        FROM n LEFT JOIN e ON e.src = n.node LEFT JOIN a2 ON a2.node = e.dst GROUP BY 1),
-        |h2 AS (SELECT node, cast((v * 1000000) div (SELECT max(v) FROM h2r) AS BIGINT) AS h FROM h2r)
-        |SELECT h2.node AS nationkey, nat.n_name AS nation, h2.h AS hub_micro, a2.a AS auth_micro
-        |FROM h2 JOIN a2 ON a2.node = h2.node JOIN nation nat ON nat.n_nationkey = h2.node
-        |ORDER BY 1""".stripMargin,
-      """WITH e AS (SELECT c.c_nationkey AS src, s.s_nationkey AS dst, cast(count(*) AS BIGINT) AS w
-        |           FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |                JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-        |                JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        |           GROUP BY 1, 2),
-        |n AS (SELECT n_nationkey AS node FROM nation),
-        |h0 AS (SELECT node, cast(1000000 AS BIGINT) AS h FROM n),
-        |a1r AS (SELECT n.node, cast(coalesce(sum(h0.h * e.w), 0) AS BIGINT) AS v
-        |        FROM n LEFT JOIN e ON e.dst = n.node LEFT JOIN h0 ON h0.node = e.src GROUP BY 1),
         |a1 AS (SELECT node, cast((v * 1000000) // (SELECT max(v) FROM a1r) AS BIGINT) AS a FROM a1r),
         |h1r AS (SELECT n.node, cast(coalesce(sum(a1.a * e.w), 0) AS BIGINT) AS v
         |        FROM n LEFT JOIN e ON e.src = n.node LEFT JOIN a1 ON a1.node = e.dst GROUP BY 1),
@@ -7086,29 +6182,6 @@ object Queries {
     // Docs with nothing to remove are excluded (their "cleaned" is the
     // identity — the spec asserts that invariant instead of shipping it).
     q("x332_substring_dedup_apply",
-      """WITH t AS (SELECT doc_id, split(text,' ') AS w FROM documents WHERE size(split(text,' ')) >= 8),
-        |wins AS (SELECT doc_id, i, md5(concat_ws(' ', slice(w, i, 8))) AS h
-        |         FROM (SELECT doc_id, w, explode(sequence(1, size(w)-7)) AS i FROM t)),
-        |own AS (SELECT h, min(doc_id) AS keeper FROM wins GROUP BY h HAVING count(DISTINCT doc_id) >= 2),
-        |dup AS (SELECT w.doc_id, w.i AS s, w.i + 8 AS e FROM wins w JOIN own o ON w.h = o.h WHERE w.doc_id > o.keeper),
-        |m AS (SELECT doc_id, s, e, max(e) OVER (PARTITION BY doc_id ORDER BY s ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pe FROM dup),
-        |isl AS (SELECT doc_id, s, e, sum(CASE WHEN pe IS NULL OR s > pe THEN 1 ELSE 0 END) OVER (PARTITION BY doc_id ORDER BY s ROWS UNBOUNDED PRECEDING) AS g FROM m),
-        |mg AS (SELECT doc_id, min(s) AS s, max(e) AS e FROM isl GROUP BY doc_id, g),
-        |cov AS (SELECT DISTINCT doc_id, explode(sequence(s, e-1)) AS j FROM mg),
-        |tokpos AS (SELECT doc_id, j, element_at(w, cast(j AS INT)) AS tok
-        |           FROM (SELECT doc_id, w, explode(sequence(1, size(w))) AS j FROM t)
-        |           WHERE doc_id IN (SELECT doc_id FROM mg)),
-        |kept AS (SELECT tp.doc_id, tp.j, tp.tok FROM tokpos tp
-        |         WHERE NOT EXISTS (SELECT 1 FROM cov c WHERE c.doc_id = tp.doc_id AND c.j = tp.j)),
-        |agg AS (SELECT doc_id, cast(count(*) AS BIGINT) AS n_kept,
-        |          array_join(transform(array_sort(collect_list(struct(j, tok))), x -> x.tok), ' ') AS cleaned
-        |        FROM kept GROUP BY doc_id),
-        |tot AS (SELECT doc_id, cast(size(w) AS BIGINT) AS n_tok FROM t WHERE doc_id IN (SELECT doc_id FROM mg))
-        |SELECT tt.doc_id, tt.n_tok, coalesce(a.n_kept, 0) AS n_kept,
-        |       tt.n_tok - coalesce(a.n_kept, 0) AS n_removed,
-        |       coalesce(a.cleaned, '') AS cleaned
-        |FROM tot tt LEFT JOIN agg a ON a.doc_id = tt.doc_id
-        |ORDER BY n_removed DESC, tt.doc_id LIMIT 15""".stripMargin,
       """WITH t AS (SELECT doc_id, string_split(text,' ') AS w FROM documents WHERE len(string_split(text,' ')) >= 8),
         |wins AS (SELECT doc_id, i, md5(array_to_string(w[i:i+7], ' ')) AS h
         |         FROM (SELECT doc_id, w, unnest(generate_series(1, len(w)-7)) AS i FROM t)),
@@ -7131,7 +6204,31 @@ object Queries {
         |       tt.n_tok - coalesce(a.n_kept, 0) AS n_removed,
         |       coalesce(a.cleaned, '') AS cleaned
         |FROM tot tt LEFT JOIN agg a ON a.doc_id = tt.doc_id
-        |ORDER BY n_removed DESC, tt.doc_id LIMIT 15""".stripMargin),
+        |ORDER BY n_removed DESC, tt.doc_id LIMIT 15""".stripMargin,
+      Hand("list slice via slice(); ordered string_agg via a sorted collect_list",
+      """WITH t AS (SELECT doc_id, split(text,' ') AS w FROM documents WHERE size(split(text,' ')) >= 8),
+        |wins AS (SELECT doc_id, i, md5(concat_ws(' ', slice(w, i, 8))) AS h
+        |         FROM (SELECT doc_id, w, explode(sequence(1, size(w)-7)) AS i FROM t)),
+        |own AS (SELECT h, min(doc_id) AS keeper FROM wins GROUP BY h HAVING count(DISTINCT doc_id) >= 2),
+        |dup AS (SELECT w.doc_id, w.i AS s, w.i + 8 AS e FROM wins w JOIN own o ON w.h = o.h WHERE w.doc_id > o.keeper),
+        |m AS (SELECT doc_id, s, e, max(e) OVER (PARTITION BY doc_id ORDER BY s ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pe FROM dup),
+        |isl AS (SELECT doc_id, s, e, sum(CASE WHEN pe IS NULL OR s > pe THEN 1 ELSE 0 END) OVER (PARTITION BY doc_id ORDER BY s ROWS UNBOUNDED PRECEDING) AS g FROM m),
+        |mg AS (SELECT doc_id, min(s) AS s, max(e) AS e FROM isl GROUP BY doc_id, g),
+        |cov AS (SELECT DISTINCT doc_id, explode(sequence(s, e-1)) AS j FROM mg),
+        |tokpos AS (SELECT doc_id, j, element_at(w, cast(j AS INT)) AS tok
+        |           FROM (SELECT doc_id, w, explode(sequence(1, size(w))) AS j FROM t)
+        |           WHERE doc_id IN (SELECT doc_id FROM mg)),
+        |kept AS (SELECT tp.doc_id, tp.j, tp.tok FROM tokpos tp
+        |         WHERE NOT EXISTS (SELECT 1 FROM cov c WHERE c.doc_id = tp.doc_id AND c.j = tp.j)),
+        |agg AS (SELECT doc_id, cast(count(*) AS BIGINT) AS n_kept,
+        |          array_join(transform(array_sort(collect_list(struct(j, tok))), x -> x.tok), ' ') AS cleaned
+        |        FROM kept GROUP BY doc_id),
+        |tot AS (SELECT doc_id, cast(size(w) AS BIGINT) AS n_tok FROM t WHERE doc_id IN (SELECT doc_id FROM mg))
+        |SELECT tt.doc_id, tt.n_tok, coalesce(a.n_kept, 0) AS n_kept,
+        |       tt.n_tok - coalesce(a.n_kept, 0) AS n_removed,
+        |       coalesce(a.cleaned, '') AS cleaned
+        |FROM tot tt LEFT JOIN agg a ON a.doc_id = tt.doc_id
+        |ORDER BY n_removed DESC, tt.doc_id LIMIT 15""".stripMargin)),
 
     // One Lloyd k-means step over the embedding corpus (r14): the
     // TRAINING half the frozen-anchor entries (x117 assignment, x119
@@ -7150,33 +6247,6 @@ object Queries {
     // The iterative production form would persist c1 per round (the
     // x140 policy); one declared step keeps the oracle closed-form.
     q("x333_kmeans_step",
-      """WITH q AS (SELECT vec_id, transform(embedding, x -> cast(round(cast(x AS DOUBLE)*10000) AS BIGINT)) AS qv FROM embeddings),
-        |d AS (SELECT vec_id, i AS dim, element_at(qv, i) AS val FROM (SELECT vec_id, qv, explode(sequence(1, 64)) AS i FROM q)),
-        |c0 AS (SELECT vec_id AS cid, dim, val AS cval FROM d WHERE vec_id < 8),
-        |pts AS (SELECT vec_id, dim, val FROM d WHERE vec_id >= 8),
-        |d0 AS (SELECT p.vec_id, c.cid, cast(sum((p.val - c.cval)*(p.val - c.cval)) AS BIGINT) AS dist
-        |       FROM pts p JOIN c0 c ON p.dim = c.dim GROUP BY 1, 2),
-        |a0 AS (SELECT vec_id, cid, dist FROM
-        |       (SELECT vec_id, cid, dist, row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn FROM d0)
-        |       WHERE rn = 1),
-        |c1 AS (SELECT a.cid, p.dim,
-        |         cast(cast(sum(p.val + 10000) AS BIGINT) div count(*) AS BIGINT) - 10000 AS cval
-        |       FROM a0 a JOIN pts p ON p.vec_id = a.vec_id GROUP BY 1, 2),
-        |d1 AS (SELECT p.vec_id, c.cid, cast(sum((p.val - c.cval)*(p.val - c.cval)) AS BIGINT) AS dist
-        |       FROM pts p JOIN c1 c ON p.dim = c.dim GROUP BY 1, 2),
-        |a1 AS (SELECT vec_id, cid, dist FROM
-        |       (SELECT vec_id, cid, dist, row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn FROM d1)
-        |       WHERE rn = 1),
-        |s0 AS (SELECT cid, cast(count(*) AS BIGINT) AS n0, cast(sum(dist) AS BIGINT) AS inertia0 FROM a0 GROUP BY 1),
-        |s1 AS (SELECT cid, cast(count(*) AS BIGINT) AS n1, cast(sum(dist) AS BIGINT) AS inertia1 FROM a1 GROUP BY 1),
-        |mv AS (SELECT a0.cid, cast(count(*) FILTER (WHERE a0.cid <> a1.cid) AS BIGINT) AS moved_out
-        |       FROM a0 JOIN a1 ON a0.vec_id = a1.vec_id GROUP BY 1)
-        |SELECT k.cid AS cluster_id, coalesce(s0.n0, 0) AS n0, coalesce(s1.n1, 0) AS n1,
-        |       coalesce(mv.moved_out, 0) AS moved_out,
-        |       coalesce(s0.inertia0, 0) AS inertia0, coalesce(s1.inertia1, 0) AS inertia1
-        |FROM (SELECT DISTINCT vec_id AS cid FROM embeddings WHERE vec_id < 8) k
-        |LEFT JOIN s0 ON s0.cid = k.cid LEFT JOIN s1 ON s1.cid = k.cid LEFT JOIN mv ON mv.cid = k.cid
-        |ORDER BY 1""".stripMargin,
       """WITH q AS (SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT)) AS qv FROM embeddings),
         |d AS (SELECT vec_id, i AS dim, qv[i] AS val FROM (SELECT vec_id, qv, unnest(generate_series(1, 64)) AS i FROM q)),
         |c0 AS (SELECT vec_id AS cid, dim, val AS cval FROM d WHERE vec_id < 8),
@@ -7221,23 +6291,6 @@ object Queries {
     q("x334_registrable_domain",
       """WITH u AS (SELECT c_custkey,
         |             concat(CASE WHEN c_custkey % 3 = 0 THEN 'www.' ELSE '' END,
-        |                    'n', cast(c_nationkey AS STRING), '.',
-        |                    lower(replace(c_mktsegment, ' ', '')), '.',
-        |                    CASE cast(c_nationkey % 4 AS INT) WHEN 0 THEN 'co.uk' WHEN 1 THEN 'com' WHEN 2 THEN 'org.au' ELSE 'io' END) AS host
-        |           FROM customer),
-        |psl AS (SELECT explode(array('co.uk','org.au','com','org','io','net','uk','au')) AS sfx),
-        |lab AS (SELECT c_custkey, host, split(host, '\\.') AS l, size(split(host, '\\.')) AS n FROM u),
-        |cand AS (SELECT c_custkey, host, l, n,
-        |           concat_ws('.', slice(l, n-1, 2)) AS s2, element_at(l, n) AS s1 FROM lab),
-        |reg AS (SELECT c.c_custkey, c.host,
-        |          CASE WHEN p2.sfx IS NOT NULL THEN concat(element_at(c.l, c.n-2), '.', c.s2)
-        |               WHEN p1.sfx IS NOT NULL THEN concat(element_at(c.l, c.n-1), '.', c.s1)
-        |               ELSE c.host END AS reg_dom
-        |        FROM cand c LEFT JOIN psl p2 ON c.s2 = p2.sfx LEFT JOIN psl p1 ON c.s1 = p1.sfx)
-        |SELECT reg_dom, cast(count(*) AS BIGINT) AS n_urls, cast(count(DISTINCT host) AS BIGINT) AS n_hosts
-        |FROM reg GROUP BY 1 ORDER BY n_urls DESC, reg_dom""".stripMargin,
-      """WITH u AS (SELECT c_custkey,
-        |             concat(CASE WHEN c_custkey % 3 = 0 THEN 'www.' ELSE '' END,
         |                    'n', CAST(c_nationkey AS VARCHAR), '.',
         |                    lower(replace(c_mktsegment, ' ', '')), '.',
         |                    CASE CAST(c_nationkey % 4 AS INT) WHEN 0 THEN 'co.uk' WHEN 1 THEN 'com' WHEN 2 THEN 'org.au' ELSE 'io' END) AS host
@@ -7252,7 +6305,25 @@ object Queries {
         |               ELSE c.host END AS reg_dom
         |        FROM cand c LEFT JOIN psl p2 ON c.s2 = p2.sfx LEFT JOIN psl p1 ON c.s1 = p1.sfx)
         |SELECT reg_dom, CAST(count(*) AS BIGINT) AS n_urls, CAST(count(DISTINCT host) AS BIGINT) AS n_hosts
-        |FROM reg GROUP BY 1 ORDER BY n_urls DESC, reg_dom""".stripMargin),
+        |FROM reg GROUP BY 1 ORDER BY n_urls DESC, reg_dom""".stripMargin,
+      Hand("list slice via slice(); split takes a regex, so '.' is escaped",
+      """WITH u AS (SELECT c_custkey,
+        |             concat(CASE WHEN c_custkey % 3 = 0 THEN 'www.' ELSE '' END,
+        |                    'n', cast(c_nationkey AS STRING), '.',
+        |                    lower(replace(c_mktsegment, ' ', '')), '.',
+        |                    CASE cast(c_nationkey % 4 AS INT) WHEN 0 THEN 'co.uk' WHEN 1 THEN 'com' WHEN 2 THEN 'org.au' ELSE 'io' END) AS host
+        |           FROM customer),
+        |psl AS (SELECT explode(array('co.uk','org.au','com','org','io','net','uk','au')) AS sfx),
+        |lab AS (SELECT c_custkey, host, split(host, '\\.') AS l, size(split(host, '\\.')) AS n FROM u),
+        |cand AS (SELECT c_custkey, host, l, n,
+        |           concat_ws('.', slice(l, n-1, 2)) AS s2, element_at(l, n) AS s1 FROM lab),
+        |reg AS (SELECT c.c_custkey, c.host,
+        |          CASE WHEN p2.sfx IS NOT NULL THEN concat(element_at(c.l, c.n-2), '.', c.s2)
+        |               WHEN p1.sfx IS NOT NULL THEN concat(element_at(c.l, c.n-1), '.', c.s1)
+        |               ELSE c.host END AS reg_dom
+        |        FROM cand c LEFT JOIN psl p2 ON c.s2 = p2.sfx LEFT JOIN psl p1 ON c.s1 = p1.sfx)
+        |SELECT reg_dom, cast(count(*) AS BIGINT) AS n_urls, cast(count(DISTINCT host) AS BIGINT) AS n_hosts
+        |FROM reg GROUP BY 1 ORDER BY n_urls DESC, reg_dom""".stripMargin)),
 
     // Markup stripping, oracle-gated round-trip (r14 — x328's
     // render→parse pattern applied to HTML): the corpus ships plain
@@ -7267,22 +6338,6 @@ object Queries {
     // either engine's strip chain is a hash mismatch. Per-row HOFs +
     // regexes, codegen end-to-end, no shuffle beyond the 20-group agg.
     q("x335_markup_strip",
-      """WITH t AS (SELECT doc_id, source, split(text,' ') AS w FROM documents),
-        |html AS (SELECT doc_id, source,
-        |           concat('<p>', array_join(transform(w, (x, i) ->
-        |             CASE WHEN (i+1) % 5 = 0 THEN concat('<b>', x, '</b>')
-        |                  WHEN (i+1) % 11 = 0 THEN concat('<i>', x, '</i>')
-        |                  WHEN (i+1) % 7 = 0 THEN concat('</p><p>', x)
-        |                  ELSE x END), ' '), '</p>') AS markup
-        |         FROM t),
-        |strip AS (SELECT doc_id, source,
-        |            trim(regexp_replace(regexp_replace(markup, '<[^>]+>', ' '), ' +', ' ')) AS recovered
-        |          FROM html),
-        |chk AS (SELECT s.doc_id, s.source,
-        |          CASE WHEN s.recovered = d.text THEN 1 ELSE 0 END AS ok
-        |        FROM strip s JOIN documents d ON d.doc_id = s.doc_id)
-        |SELECT source, cast(count(*) AS BIGINT) AS n_docs, cast(sum(ok) AS BIGINT) AS n_roundtrip_ok
-        |FROM chk GROUP BY 1 ORDER BY 1""".stripMargin,
       """WITH t AS (SELECT doc_id, source, string_split(text,' ') AS w FROM documents),
         |html AS (SELECT doc_id, source,
         |           concat('<p>', array_to_string(list_transform(w, (x, i) ->
@@ -7298,7 +6353,24 @@ object Queries {
         |          CASE WHEN s.recovered = d.text THEN 1 ELSE 0 END AS ok
         |        FROM strip s JOIN documents d ON d.doc_id = s.doc_id)
         |SELECT source, CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(ok) AS BIGINT) AS n_roundtrip_ok
-        |FROM chk GROUP BY 1 ORDER BY 1""".stripMargin),
+        |FROM chk GROUP BY 1 ORDER BY 1""".stripMargin,
+      Hand("no 'g' flag: Spark replaces every match; lambda indexes count from 0",
+      """WITH t AS (SELECT doc_id, source, split(text,' ') AS w FROM documents),
+        |html AS (SELECT doc_id, source,
+        |           concat('<p>', array_join(transform(w, (x, i) ->
+        |             CASE WHEN (i+1) % 5 = 0 THEN concat('<b>', x, '</b>')
+        |                  WHEN (i+1) % 11 = 0 THEN concat('<i>', x, '</i>')
+        |                  WHEN (i+1) % 7 = 0 THEN concat('</p><p>', x)
+        |                  ELSE x END), ' '), '</p>') AS markup
+        |         FROM t),
+        |strip AS (SELECT doc_id, source,
+        |            trim(regexp_replace(regexp_replace(markup, '<[^>]+>', ' '), ' +', ' ')) AS recovered
+        |          FROM html),
+        |chk AS (SELECT s.doc_id, s.source,
+        |          CASE WHEN s.recovered = d.text THEN 1 ELSE 0 END AS ok
+        |        FROM strip s JOIN documents d ON d.doc_id = s.doc_id)
+        |SELECT source, cast(count(*) AS BIGINT) AS n_docs, cast(sum(ok) AS BIGINT) AS n_roundtrip_ok
+        |FROM chk GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // N-gram novelty vs a reference corpus (r14): the "how much of this
     // doc is NEW against what we already have" number that gates
@@ -7311,19 +6383,6 @@ object Queries {
     // gram hash — at 100 TB the reference side is the smaller relation
     // and bloom-prunes the probe (the x242 skip-source machinery).
     q("x336_ngram_novelty",
-      """WITH t AS (SELECT doc_id, source, split(text,' ') AS w FROM documents WHERE size(split(text,' ')) >= 3),
-        |grams AS (SELECT doc_id, source, md5(concat_ws(' ', slice(w, i, 3))) AS g
-        |          FROM (SELECT doc_id, source, w, explode(sequence(1, size(w)-2)) AS i FROM t)),
-        |ref AS (SELECT DISTINCT g FROM grams WHERE source = 'src0'),
-        |nov AS (SELECT gr.doc_id, gr.source,
-        |          cast(count(*) AS BIGINT) AS n_grams,
-        |          cast(count(*) FILTER (WHERE r.g IS NULL) AS BIGINT) AS n_novel
-        |        FROM grams gr LEFT JOIN ref r ON gr.g = r.g
-        |        WHERE gr.source <> 'src0'
-        |        GROUP BY 1, 2)
-        |SELECT doc_id, source, n_grams, n_novel,
-        |       cast((n_novel * 10000) div n_grams AS BIGINT) AS novelty_bp
-        |FROM nov ORDER BY novelty_bp DESC, doc_id LIMIT 20""".stripMargin,
       """WITH t AS (SELECT doc_id, source, string_split(text,' ') AS w FROM documents WHERE len(string_split(text,' ')) >= 3),
         |grams AS (SELECT doc_id, source, md5(array_to_string(w[i:i+2], ' ')) AS g
         |          FROM (SELECT doc_id, source, w, unnest(generate_series(1, len(w)-2)) AS i FROM t)),
@@ -7336,7 +6395,21 @@ object Queries {
         |        GROUP BY 1, 2)
         |SELECT doc_id, source, n_grams, n_novel,
         |       CAST((n_novel * 10000) // n_grams AS BIGINT) AS novelty_bp
-        |FROM nov ORDER BY novelty_bp DESC, doc_id LIMIT 20""".stripMargin),
+        |FROM nov ORDER BY novelty_bp DESC, doc_id LIMIT 20""".stripMargin,
+      Hand("list slice w[a:b]: Spark takes slice(w, start, length)",
+      """WITH t AS (SELECT doc_id, source, split(text,' ') AS w FROM documents WHERE size(split(text,' ')) >= 3),
+        |grams AS (SELECT doc_id, source, md5(concat_ws(' ', slice(w, i, 3))) AS g
+        |          FROM (SELECT doc_id, source, w, explode(sequence(1, size(w)-2)) AS i FROM t)),
+        |ref AS (SELECT DISTINCT g FROM grams WHERE source = 'src0'),
+        |nov AS (SELECT gr.doc_id, gr.source,
+        |          cast(count(*) AS BIGINT) AS n_grams,
+        |          cast(count(*) FILTER (WHERE r.g IS NULL) AS BIGINT) AS n_novel
+        |        FROM grams gr LEFT JOIN ref r ON gr.g = r.g
+        |        WHERE gr.source <> 'src0'
+        |        GROUP BY 1, 2)
+        |SELECT doc_id, source, n_grams, n_novel,
+        |       cast((n_novel * 10000) div n_grams AS BIGINT) AS novelty_bp
+        |FROM nov ORDER BY novelty_bp DESC, doc_id LIMIT 20""".stripMargin)),
 
     // Incremental EXACT dedup across snapshots (r14): the daily-ingest
     // classification the near-dup incrementals (x118 text, x330 images)
@@ -7349,20 +6422,6 @@ object Queries {
     // corpus ships as a materialized key table in production), batch
     // side one window over the day's data — O(batch), never O(corpus).
     q("x337_incremental_exact_dedup",
-      """WITH k AS (SELECT doc_id, source,
-        |             md5(concat_ws(' ', array_sort(array_distinct(split(text,' '))))) AS kk
-        |           FROM documents),
-        |corpus AS (SELECT DISTINCT kk FROM k WHERE source <> 'src19'),
-        |batch AS (SELECT doc_id, kk,
-        |            row_number() OVER (PARTITION BY kk ORDER BY doc_id) AS rn
-        |          FROM k WHERE source = 'src19'),
-        |cls AS (SELECT b.doc_id,
-        |          CASE WHEN c.kk IS NOT NULL THEN 'dup_of_corpus'
-        |               WHEN b.rn > 1 THEN 'dup_within_batch'
-        |               ELSE 'unique' END AS class
-        |        FROM batch b LEFT JOIN corpus c ON b.kk = c.kk)
-        |SELECT class, cast(count(*) AS BIGINT) AS n, cast(min(doc_id) AS BIGINT) AS first_doc
-        |FROM cls GROUP BY 1 ORDER BY 1""".stripMargin,
       """WITH k AS (SELECT doc_id, source,
         |             md5(array_to_string(list_sort(list_distinct(string_split(text,' '))), ' ')) AS kk
         |           FROM documents),
@@ -7388,15 +6447,6 @@ object Queries {
     // window, one agg — vocabulary-sized state, not corpus-sized.
     q("x338_zipf_slope",
       """WITH tok AS (SELECT source, lower(w) AS w
-        |             FROM (SELECT source, explode(split(text,' ')) AS w FROM documents)),
-        |cnt AS (SELECT source, w, cast(count(*) AS BIGINT) AS c FROM tok GROUP BY 1, 2),
-        |r AS (SELECT source, w, c,
-        |        row_number() OVER (PARTITION BY source ORDER BY c DESC, w) AS rnk
-        |      FROM cnt)
-        |SELECT source, cast(count(*) AS BIGINT) AS vocab,
-        |       round(regr_slope(ln(c * 1e0), ln(rnk * 1e0)), 4) + 0e0 AS zipf_beta
-        |FROM r GROUP BY 1 ORDER BY 1""".stripMargin,
-      """WITH tok AS (SELECT source, lower(w) AS w
         |             FROM (SELECT source, unnest(string_split(text,' ')) AS w FROM documents)),
         |cnt AS (SELECT source, w, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY 1, 2),
         |r AS (SELECT source, w, c,
@@ -7409,12 +6459,11 @@ object Queries {
     // k-means TRAINING, 3 Lloyd rounds unrolled (r15) — the iterative
     // half x333's single step presupposed, under the x148_bpe_train3
     // precedent (fixed round count keeps the oracle closed-form).
-    // Generated dual-dialect by kmeansTrain3 (see its scaladoc for the
-    // round semantics and the scale story); the production loop with
+    // Generated by kmeansTrain3 (see its scaladoc for the round
+    // semantics and the scale story); the production loop with
     // driver-held centroids, persisted assignments, and a convergence
     // stop is llm/KMeans.scala (x341, same oracle).
-    q("x340_kmeans_train3", kmeansTrain3(sparkDialect = true),
-      kmeansTrain3(sparkDialect = false)),
+    q("x340_kmeans_train3", kmeansTrain3),
 
     // Product-quantization codebook training (r15): ONE Lloyd round for
     // all 8 sub-space quantizers in ONE pass — the codebook-build half
@@ -7429,39 +6478,6 @@ object Queries {
     // spec-asserted); per (sub, code): members before/after, movers,
     // exact inertia.
     q("x342_pq_codebook_train",
-      """WITH q AS (SELECT vec_id, transform(embedding, x -> cast(round(cast(x AS DOUBLE)*10000) AS BIGINT)) AS qv FROM embeddings),
-        |d AS (SELECT vec_id, i, element_at(qv, i) AS val FROM (SELECT vec_id, qv, explode(sequence(1, 64)) AS i FROM q)),
-        |s AS (SELECT vec_id, cast((i-1) div 8 AS BIGINT) AS sub, cast((i-1) % 8 + 1 AS BIGINT) AS j, val FROM d),
-        |c0 AS (SELECT sub, vec_id AS code, j, val AS cval FROM s WHERE vec_id < 4),
-        |pts AS (SELECT vec_id, sub, j, val FROM s WHERE vec_id >= 4),
-        |d0 AS (SELECT p.vec_id, p.sub, c.code, cast(sum((p.val - c.cval)*(p.val - c.cval)) AS BIGINT) AS dist
-        |       FROM pts p JOIN c0 c ON p.sub = c.sub AND p.j = c.j GROUP BY 1, 2, 3),
-        |a0 AS (SELECT vec_id, sub, code, dist FROM
-        |       (SELECT vec_id, sub, code, dist, row_number() OVER (PARTITION BY vec_id, sub ORDER BY dist, code) AS rn FROM d0)
-        |       WHERE rn = 1),
-        |c1 AS (SELECT a.sub, a.code, p.j,
-        |         cast(cast(sum(p.val + 10000) AS BIGINT) div count(*) AS BIGINT) - 10000 AS cval
-        |       FROM a0 a JOIN pts p ON p.vec_id = a.vec_id AND p.sub = a.sub GROUP BY 1, 2, 3),
-        |d1 AS (SELECT p.vec_id, p.sub, c.code, cast(sum((p.val - c.cval)*(p.val - c.cval)) AS BIGINT) AS dist
-        |       FROM pts p JOIN c1 c ON p.sub = c.sub AND p.j = c.j GROUP BY 1, 2, 3),
-        |a1 AS (SELECT vec_id, sub, code, dist FROM
-        |       (SELECT vec_id, sub, code, dist, row_number() OVER (PARTITION BY vec_id, sub ORDER BY dist, code) AS rn FROM d1)
-        |       WHERE rn = 1),
-        |s0 AS (SELECT sub, code, cast(count(*) AS BIGINT) AS n0, cast(sum(dist) AS BIGINT) AS inertia0 FROM a0 GROUP BY 1, 2),
-        |s1 AS (SELECT sub, code, cast(count(*) AS BIGINT) AS n1, cast(sum(dist) AS BIGINT) AS inertia1 FROM a1 GROUP BY 1, 2),
-        |mv AS (SELECT a0.sub, a0.code, cast(count(*) FILTER (WHERE a0.code <> a1.code) AS BIGINT) AS moved_out
-        |       FROM a0 JOIN a1 ON a0.vec_id = a1.vec_id AND a0.sub = a1.sub GROUP BY 1, 2),
-        |k AS (SELECT cast(sb AS BIGINT) AS sub, code
-        |      FROM (SELECT explode(sequence(0, 7)) AS sb)
-        |      CROSS JOIN (SELECT DISTINCT vec_id AS code FROM embeddings WHERE vec_id < 4))
-        |SELECT k.sub AS subspace, k.code AS code,
-        |       coalesce(s0.n0, cast(0 AS BIGINT)) AS n0, coalesce(s1.n1, cast(0 AS BIGINT)) AS n1,
-        |       coalesce(mv.moved_out, cast(0 AS BIGINT)) AS moved_out,
-        |       coalesce(s0.inertia0, cast(0 AS BIGINT)) AS inertia0, coalesce(s1.inertia1, cast(0 AS BIGINT)) AS inertia1
-        |FROM k LEFT JOIN s0 ON s0.sub = k.sub AND s0.code = k.code
-        |       LEFT JOIN s1 ON s1.sub = k.sub AND s1.code = k.code
-        |       LEFT JOIN mv ON mv.sub = k.sub AND mv.code = k.code
-        |ORDER BY subspace, code""".stripMargin,
       """WITH q AS (SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT)) AS qv FROM embeddings),
         |d AS (SELECT vec_id, i, qv[i] AS val FROM (SELECT vec_id, qv, unnest(generate_series(1, 64)) AS i FROM q)),
         |s AS (SELECT vec_id, CAST((i-1) // 8 AS BIGINT) AS sub, CAST((i-1) % 8 + 1 AS BIGINT) AS j, val FROM d),
@@ -7507,17 +6523,6 @@ object Queries {
     // x47/x332. Dialect delta: Spark split() takes a regex ('\\. '),
     // DuckDB string_split a literal ('. ').
     q("x343_paragraph_dedup",
-      """WITH par AS (SELECT doc_id, source, i, trim(element_at(ps, i)) AS p
-        |             FROM (SELECT doc_id, source, ps, explode(sequence(1, size(ps))) AS i
-        |                   FROM (SELECT doc_id, source, split(text, '\\. ') AS ps FROM documents))),
-        |np AS (SELECT doc_id, source, i, md5(lower(p)) AS h FROM par WHERE p <> ''),
-        |r AS (SELECT source, row_number() OVER (PARTITION BY h ORDER BY doc_id, i) AS rn FROM np),
-        |per AS (SELECT source, cast(count(*) AS BIGINT) AS n_par,
-        |          cast(count(*) FILTER (WHERE rn > 1) AS BIGINT) AS n_removed
-        |        FROM r GROUP BY 1)
-        |SELECT source, n_par, n_removed,
-        |       cast(n_removed * 10000 div n_par AS BIGINT) AS removed_bp
-        |FROM per ORDER BY source""".stripMargin,
       """WITH par AS (SELECT doc_id, source, i, trim(ps[i]) AS p
         |             FROM (SELECT doc_id, source, ps, unnest(generate_series(1, len(ps))) AS i
         |                   FROM (SELECT doc_id, source, string_split(text, '. ') AS ps FROM documents))),
@@ -7528,7 +6533,19 @@ object Queries {
         |        FROM r GROUP BY 1)
         |SELECT source, n_par, n_removed,
         |       CAST(n_removed * 10000 // n_par AS BIGINT) AS removed_bp
-        |FROM per ORDER BY source""".stripMargin),
+        |FROM per ORDER BY source""".stripMargin,
+      Hand("split takes a regex in Spark, so '.' is escaped",
+      """WITH par AS (SELECT doc_id, source, i, trim(element_at(ps, i)) AS p
+        |             FROM (SELECT doc_id, source, ps, explode(sequence(1, size(ps))) AS i
+        |                   FROM (SELECT doc_id, source, split(text, '\\. ') AS ps FROM documents))),
+        |np AS (SELECT doc_id, source, i, md5(lower(p)) AS h FROM par WHERE p <> ''),
+        |r AS (SELECT source, row_number() OVER (PARTITION BY h ORDER BY doc_id, i) AS rn FROM np),
+        |per AS (SELECT source, cast(count(*) AS BIGINT) AS n_par,
+        |          cast(count(*) FILTER (WHERE rn > 1) AS BIGINT) AS n_removed
+        |        FROM r GROUP BY 1)
+        |SELECT source, n_par, n_removed,
+        |       cast(n_removed * 10000 div n_par AS BIGINT) AS removed_bp
+        |FROM per ORDER BY source""".stripMargin)),
 
     // Domain-level split leakage (r15): x298's leakage question asked
     // at x334's granularity — a row-level content-hash split (x106's
@@ -7540,33 +6557,6 @@ object Queries {
     // this census motivates; at crawl scale it is one hash agg over the
     // domain key after the broadcast suffix joins.
     q("x344_domain_split_leakage",
-      """WITH u AS (SELECT c_custkey,
-        |             concat(CASE WHEN c_custkey % 3 = 0 THEN 'www.' ELSE '' END,
-        |                    'n', cast(c_nationkey AS STRING), '.',
-        |                    lower(replace(c_mktsegment, ' ', '')), '.',
-        |                    CASE cast(c_nationkey % 4 AS INT) WHEN 0 THEN 'co.uk' WHEN 1 THEN 'com' WHEN 2 THEN 'org.au' ELSE 'io' END) AS host
-        |           FROM customer),
-        |sp AS (SELECT c_custkey, host,
-        |         CASE WHEN cast(conv(substr(md5(cast(c_custkey AS STRING)),1,8),16,10) AS BIGINT) % 100 < 90
-        |              THEN 'train' ELSE 'test' END AS split
-        |       FROM u),
-        |psl AS (SELECT explode(array('co.uk','org.au','com','org','io','net','uk','au')) AS sfx),
-        |lab AS (SELECT c_custkey, host, split, split(host, '\\.') AS l, size(split(host, '\\.')) AS n FROM sp),
-        |cand AS (SELECT c_custkey, host, split, l, n,
-        |           concat_ws('.', slice(l, n-1, 2)) AS s2, element_at(l, n) AS s1 FROM lab),
-        |reg AS (SELECT c.c_custkey, c.split,
-        |          CASE WHEN p2.sfx IS NOT NULL THEN concat(element_at(c.l, c.n-2), '.', c.s2)
-        |               WHEN p1.sfx IS NOT NULL THEN concat(element_at(c.l, c.n-1), '.', c.s1)
-        |               ELSE c.host END AS reg_dom
-        |        FROM cand c LEFT JOIN psl p2 ON c.s2 = p2.sfx LEFT JOIN psl p1 ON c.s1 = p1.sfx),
-        |agg AS (SELECT reg_dom,
-        |          cast(count(*) FILTER (WHERE split = 'train') AS BIGINT) AS n_train,
-        |          cast(count(*) FILTER (WHERE split = 'test') AS BIGINT) AS n_test
-        |        FROM reg GROUP BY 1)
-        |SELECT reg_dom, n_train, n_test,
-        |       cast(n_test * 10000 div (n_train + n_test) AS BIGINT) AS test_share_bp
-        |FROM agg WHERE n_train > 0 AND n_test > 0
-        |ORDER BY n_test DESC, reg_dom""".stripMargin,
       """WITH u AS (SELECT c_custkey,
         |             concat(CASE WHEN c_custkey % 3 = 0 THEN 'www.' ELSE '' END,
         |                    'n', CAST(c_nationkey AS VARCHAR), '.',
@@ -7593,7 +6583,35 @@ object Queries {
         |SELECT reg_dom, n_train, n_test,
         |       CAST(n_test * 10000 // (n_train + n_test) AS BIGINT) AS test_share_bp
         |FROM agg WHERE n_train > 0 AND n_test > 0
-        |ORDER BY n_test DESC, reg_dom""".stripMargin),
+        |ORDER BY n_test DESC, reg_dom""".stripMargin,
+      Hand("list slice via slice(); '.' escaped for split; hex via conv",
+      """WITH u AS (SELECT c_custkey,
+        |             concat(CASE WHEN c_custkey % 3 = 0 THEN 'www.' ELSE '' END,
+        |                    'n', cast(c_nationkey AS STRING), '.',
+        |                    lower(replace(c_mktsegment, ' ', '')), '.',
+        |                    CASE cast(c_nationkey % 4 AS INT) WHEN 0 THEN 'co.uk' WHEN 1 THEN 'com' WHEN 2 THEN 'org.au' ELSE 'io' END) AS host
+        |           FROM customer),
+        |sp AS (SELECT c_custkey, host,
+        |         CASE WHEN cast(conv(substr(md5(cast(c_custkey AS STRING)),1,8),16,10) AS BIGINT) % 100 < 90
+        |              THEN 'train' ELSE 'test' END AS split
+        |       FROM u),
+        |psl AS (SELECT explode(array('co.uk','org.au','com','org','io','net','uk','au')) AS sfx),
+        |lab AS (SELECT c_custkey, host, split, split(host, '\\.') AS l, size(split(host, '\\.')) AS n FROM sp),
+        |cand AS (SELECT c_custkey, host, split, l, n,
+        |           concat_ws('.', slice(l, n-1, 2)) AS s2, element_at(l, n) AS s1 FROM lab),
+        |reg AS (SELECT c.c_custkey, c.split,
+        |          CASE WHEN p2.sfx IS NOT NULL THEN concat(element_at(c.l, c.n-2), '.', c.s2)
+        |               WHEN p1.sfx IS NOT NULL THEN concat(element_at(c.l, c.n-1), '.', c.s1)
+        |               ELSE c.host END AS reg_dom
+        |        FROM cand c LEFT JOIN psl p2 ON c.s2 = p2.sfx LEFT JOIN psl p1 ON c.s1 = p1.sfx),
+        |agg AS (SELECT reg_dom,
+        |          cast(count(*) FILTER (WHERE split = 'train') AS BIGINT) AS n_train,
+        |          cast(count(*) FILTER (WHERE split = 'test') AS BIGINT) AS n_test
+        |        FROM reg GROUP BY 1)
+        |SELECT reg_dom, n_train, n_test,
+        |       cast(n_test * 10000 div (n_train + n_test) AS BIGINT) AS test_share_bp
+        |FROM agg WHERE n_train > 0 AND n_test > 0
+        |ORDER BY n_test DESC, reg_dom""".stripMargin)),
 
     // Paragraph-dedup APPLY (r15): x343's census tells you HOW MUCH
     // repeats; this emits the rewritten documents — every paragraph
@@ -7604,6 +6622,21 @@ object Queries {
     // paragraphs removed; the full-corpus surface is the x347 native
     // (llm/ParagraphDedup, same oracle).
     q("x346_paragraph_dedup_apply",
+      """WITH par AS (SELECT doc_id, i, trim(ps[i]) AS p
+        |             FROM (SELECT doc_id, ps, unnest(generate_series(1, len(ps))) AS i
+        |                   FROM (SELECT doc_id, string_split(text, '. ') AS ps FROM documents))),
+        |np AS (SELECT doc_id, i, p, md5(lower(p)) AS h FROM par WHERE p <> ''),
+        |r AS (SELECT doc_id, i, p, row_number() OVER (PARTITION BY h ORDER BY doc_id, i) AS rn FROM np),
+        |tot AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_par,
+        |          CAST(count(*) FILTER (WHERE rn > 1) AS BIGINT) AS n_removed
+        |        FROM r GROUP BY 1),
+        |reb AS (SELECT doc_id, string_agg(p, '. ' ORDER BY i) AS cleaned
+        |        FROM r WHERE rn = 1 GROUP BY doc_id)
+        |SELECT t.doc_id, t.n_par, t.n_par - t.n_removed AS n_kept, t.n_removed,
+        |       coalesce(rb.cleaned, '') AS cleaned
+        |FROM tot t LEFT JOIN reb rb ON rb.doc_id = t.doc_id
+        |ORDER BY t.n_removed DESC, t.doc_id LIMIT 15""".stripMargin,
+      Hand("ordered string_agg is array_join over a sorted collect_list",
       """WITH par AS (SELECT doc_id, i, trim(element_at(ps, i)) AS p
         |             FROM (SELECT doc_id, ps, explode(sequence(1, size(ps))) AS i
         |                   FROM (SELECT doc_id, split(text, '\\. ') AS ps FROM documents))),
@@ -7618,21 +6651,7 @@ object Queries {
         |SELECT t.doc_id, t.n_par, t.n_par - t.n_removed AS n_kept, t.n_removed,
         |       coalesce(rb.cleaned, '') AS cleaned
         |FROM tot t LEFT JOIN reb rb ON rb.doc_id = t.doc_id
-        |ORDER BY t.n_removed DESC, t.doc_id LIMIT 15""".stripMargin,
-      """WITH par AS (SELECT doc_id, i, trim(ps[i]) AS p
-        |             FROM (SELECT doc_id, ps, unnest(generate_series(1, len(ps))) AS i
-        |                   FROM (SELECT doc_id, string_split(text, '. ') AS ps FROM documents))),
-        |np AS (SELECT doc_id, i, p, md5(lower(p)) AS h FROM par WHERE p <> ''),
-        |r AS (SELECT doc_id, i, p, row_number() OVER (PARTITION BY h ORDER BY doc_id, i) AS rn FROM np),
-        |tot AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_par,
-        |          CAST(count(*) FILTER (WHERE rn > 1) AS BIGINT) AS n_removed
-        |        FROM r GROUP BY 1),
-        |reb AS (SELECT doc_id, string_agg(p, '. ' ORDER BY i) AS cleaned
-        |        FROM r WHERE rn = 1 GROUP BY doc_id)
-        |SELECT t.doc_id, t.n_par, t.n_par - t.n_removed AS n_kept, t.n_removed,
-        |       coalesce(rb.cleaned, '') AS cleaned
-        |FROM tot t LEFT JOIN reb rb ON rb.doc_id = t.doc_id
-        |ORDER BY t.n_removed DESC, t.doc_id LIMIT 15""".stripMargin),
+        |ORDER BY t.n_removed DESC, t.doc_id LIMIT 15""".stripMargin)),
 
     // Dedup savings forecast (r15): what exact dedup BUYS, per source —
     // x47's keep-first applied as an accounting pass: docs and
@@ -7643,16 +6662,6 @@ object Queries {
     // lower doc_id elsewhere books the saving here). One key census +
     // one window + one source rollup — keys shuffle, never text.
     q("x348_dedup_savings",
-      """WITH k AS (SELECT doc_id, source, size(split(text,' ')) AS n,
-        |             md5(array_join(sort_array(array_distinct(split(text,' '))),' ')) AS key
-        |           FROM documents),
-        |r AS (SELECT source, n, row_number() OVER (PARTITION BY key ORDER BY doc_id) AS rn FROM k)
-        |SELECT source, cast(count(*) AS BIGINT) AS docs,
-        |       cast(count(*) FILTER (WHERE rn = 1) AS BIGINT) AS keepers,
-        |       cast(sum(n) AS BIGINT) AS toks,
-        |       cast(coalesce(sum(n) FILTER (WHERE rn = 1), 0) AS BIGINT) AS toks_kept,
-        |       cast((sum(n) - coalesce(sum(n) FILTER (WHERE rn = 1), 0)) * 10000 div sum(n) AS BIGINT) AS saved_bp
-        |FROM r GROUP BY 1 ORDER BY 1""".stripMargin,
       """WITH k AS (SELECT doc_id, source, len(string_split(text,' ')) AS n,
         |             md5(array_to_string(list_sort(list_distinct(string_split(text,' '))),' ')) AS key
         |           FROM documents),
@@ -7672,23 +6681,6 @@ object Queries {
     // that decides whether quality filtering and dedup are redundant
     // passes or independent ones.
     q("x349_quality_dup_deciles",
-      """WITH k AS (SELECT doc_id, split(text,' ') AS w,
-        |             md5(array_join(sort_array(array_distinct(split(text,' '))),' ')) AS key
-        |           FROM documents),
-        |q AS (SELECT doc_id, key,
-        |        cast(floor((0.4*(size(array_distinct(w))/cast(size(w) AS DOUBLE))
-        |              + 0.3*(1.0 - size(filter(w, x -> x IN ('a','the')))/cast(size(w) AS DOUBLE))
-        |              + 0.3*least(size(w)/100.0, 1.0))*10000.0) AS BIGINT) AS quality_bp
-        |      FROM k),
-        |d AS (SELECT key, count(*) AS cnt FROM q GROUP BY 1),
-        |j AS (SELECT q.doc_id, q.quality_bp, CASE WHEN d.cnt > 1 THEN 1 ELSE 0 END AS is_dup,
-        |        cast(ntile(10) OVER (ORDER BY q.quality_bp, q.doc_id) AS BIGINT) AS decile
-        |      FROM q JOIN d ON q.key = d.key)
-        |SELECT decile, cast(count(*) AS BIGINT) AS docs,
-        |       cast(sum(is_dup) AS BIGINT) AS dup_docs,
-        |       cast(sum(is_dup) * 10000 div count(*) AS BIGINT) AS dup_bp,
-        |       cast(min(quality_bp) AS BIGINT) AS q_min, cast(max(quality_bp) AS BIGINT) AS q_max
-        |FROM j GROUP BY 1 ORDER BY 1""".stripMargin,
       """WITH k AS (SELECT doc_id, string_split(text,' ') AS w,
         |             md5(array_to_string(list_sort(list_distinct(string_split(text,' '))),' ')) AS key
         |           FROM documents),
@@ -7718,30 +6710,6 @@ object Queries {
     // signal a mixture designer rebalances on. The cumulative window is
     // per-source partitioned (scales); integer arithmetic throughout.
     q("x350_budgeted_mixture",
-      """WITH t AS (SELECT doc_id, source, w FROM (SELECT doc_id, source, split(text,' ') AS w FROM documents)),
-        |q AS (SELECT doc_id, source, cast(size(w) AS BIGINT) AS n,
-        |        cast(floor((0.4*(size(array_distinct(w))/cast(size(w) AS DOUBLE))
-        |              + 0.3*(1.0 - size(filter(w, x -> x IN ('a','the')))/cast(size(w) AS DOUBLE))
-        |              + 0.3*least(size(w)/100.0, 1.0))*10000.0) AS BIGINT) AS quality_bp
-        |      FROM t),
-        |tot AS (SELECT cast(sum(n) div 2 AS BIGINT) AS budget FROM q),
-        |w AS (SELECT source,
-        |        CASE WHEN right(source, 1) IN ('0','2','4','6','8')
-        |             THEN cast(750 AS BIGINT) ELSE cast(250 AS BIGINT) END AS w_bp
-        |      FROM (SELECT DISTINCT source FROM q)),
-        |sw AS (SELECT source, w_bp,
-        |         cast(w_bp * (SELECT budget FROM tot) div (SELECT sum(w_bp) FROM w) AS BIGINT) AS src_budget
-        |       FROM w),
-        |r AS (SELECT source, n,
-        |        sum(n) OVER (PARTITION BY source ORDER BY quality_bp DESC, doc_id) AS cum
-        |      FROM q)
-        |SELECT r.source, sw.w_bp, sw.src_budget,
-        |       cast(count(*) FILTER (WHERE r.cum <= sw.src_budget) AS BIGINT) AS docs_taken,
-        |       cast(coalesce(sum(r.n) FILTER (WHERE r.cum <= sw.src_budget), 0) AS BIGINT) AS toks_taken,
-        |       cast(coalesce(sum(r.n) FILTER (WHERE r.cum <= sw.src_budget), 0) * 10000 div sw.src_budget AS BIGINT) AS fill_bp
-        |FROM r JOIN sw ON r.source = sw.source
-        |GROUP BY r.source, sw.w_bp, sw.src_budget
-        |ORDER BY r.source""".stripMargin,
       """WITH t AS (SELECT doc_id, source, w FROM (SELECT doc_id, source, string_split(text,' ') AS w FROM documents)),
         |q AS (SELECT doc_id, source, CAST(len(w) AS BIGINT) AS n,
         |        CAST(floor((0.4*(len(list_distinct(w))/CAST(len(w) AS DOUBLE))
@@ -7779,25 +6747,6 @@ object Queries {
     // × queries), one sqrt per (query, vec) rounded to bp at the end
     // (x345's discipline).
     q("x351_hard_negatives",
-      """WITH q AS (SELECT vec_id, transform(embedding, x -> cast(round(cast(x AS DOUBLE)*10000) AS BIGINT)) AS qv FROM embeddings),
-        |d AS (SELECT vec_id, i, element_at(qv, i) AS val FROM (SELECT vec_id, qv, explode(sequence(1, 64)) AS i FROM q)),
-        |nrm AS (SELECT vec_id, cast(sum(val*val) AS BIGINT) AS n2 FROM d GROUP BY 1),
-        |dots AS (SELECT p.vec_id, c.qid, cast(sum(p.val * c.qval) AS BIGINT) AS dot
-        |         FROM (SELECT vec_id, i, val FROM d WHERE vec_id >= 8) p
-        |         JOIN (SELECT vec_id AS qid, i, val AS qval FROM d WHERE vec_id < 8) c ON p.i = c.i
-        |         GROUP BY 1, 2),
-        |cosb AS (SELECT dt.qid, dt.vec_id,
-        |           cast(round(dt.dot / (sqrt(cast(nc.n2 AS DOUBLE)) * sqrt(cast(nq.n2 AS DOUBLE))) * 10000) AS BIGINT) AS cos_bp
-        |         FROM dots dt JOIN nrm nc ON nc.vec_id = dt.vec_id JOIN nrm nq ON nq.vec_id = dt.qid),
-        |band AS (SELECT * FROM cosb WHERE cos_bp >= 1500 AND cos_bp < 9500),
-        |cnt AS (SELECT qid, cast(count(*) AS BIGINT) AS n_band FROM band GROUP BY 1),
-        |top AS (SELECT qid, vec_id, cos_bp,
-        |          row_number() OVER (PARTITION BY qid ORDER BY cos_bp DESC, vec_id) AS rn
-        |        FROM band)
-        |SELECT t.qid AS query_id, cast(t.rn AS BIGINT) AS rnk,
-        |       t.vec_id AS negative_id, t.cos_bp, c.n_band
-        |FROM top t JOIN cnt c ON c.qid = t.qid
-        |WHERE t.rn <= 3 ORDER BY query_id, rnk""".stripMargin,
       """WITH q AS (SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT)) AS qv FROM embeddings),
         |d AS (SELECT vec_id, i, qv[i] AS val FROM (SELECT vec_id, qv, unnest(generate_series(1, 64)) AS i FROM q)),
         |nrm AS (SELECT vec_id, CAST(sum(val*val) AS BIGINT) AS n2 FROM d GROUP BY 1),
@@ -7829,17 +6778,6 @@ object Queries {
     // sqrt(exact/exact) per (vec, k), rounded to bp; the per-k mean is
     // integer division of exact sums.
     q("x345_matryoshka_fidelity",
-      """WITH q AS (SELECT vec_id, transform(embedding, x -> cast(round(cast(x AS DOUBLE)*10000) AS BIGINT)) AS qv FROM embeddings),
-        |d AS (SELECT vec_id, i, element_at(qv, i) AS v FROM (SELECT vec_id, qv, explode(sequence(1, 64)) AS i FROM q)),
-        |n AS (SELECT vec_id, k, cast(sum(v*v) FILTER (WHERE i <= k) AS BIGINT) AS pk, cast(sum(v*v) AS BIGINT) AS nf
-        |      FROM d CROSS JOIN (SELECT explode(array(8, 16, 32, 64)) AS k) GROUP BY 1, 2),
-        |f AS (SELECT vec_id, k, cast(round(sqrt(cast(pk AS DOUBLE) / cast(nf AS DOUBLE)) * 10000) AS BIGINT) AS fid_bp
-        |      FROM n WHERE nf > 0)
-        |SELECT cast(k AS BIGINT) AS prefix_dims,
-        |       cast(cast(sum(fid_bp) AS BIGINT) div count(*) AS BIGINT) AS mean_fid_bp,
-        |       cast(min(fid_bp) AS BIGINT) AS min_fid_bp,
-        |       cast(count(*) AS BIGINT) AS n_vecs
-        |FROM f GROUP BY k ORDER BY prefix_dims""".stripMargin,
       """WITH q AS (SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT)) AS qv FROM embeddings),
         |d AS (SELECT vec_id, i, qv[i] AS v FROM (SELECT vec_id, qv, unnest(generate_series(1, 64)) AS i FROM q)),
         |n AS (SELECT vec_id, k, CAST(sum(v*v) FILTER (WHERE i <= k) AS BIGINT) AS pk, CAST(sum(v*v) AS BIGINT) AS nf
@@ -7863,37 +6801,6 @@ object Queries {
     // pairwise block is pool×pool = 8×8 — candidate-set-sized, never
     // corpus-sized.
     q("x353_mmr_rerank",
-      """WITH q AS (SELECT vec_id, transform(embedding, x -> cast(round(cast(x AS DOUBLE)*10000) AS BIGINT)) AS qv FROM embeddings),
-        |d AS (SELECT vec_id, i, element_at(qv, i) AS val FROM (SELECT vec_id, qv, explode(sequence(1, 64)) AS i FROM q)),
-        |nrm AS (SELECT vec_id, cast(sum(val*val) AS BIGINT) AS n2 FROM d GROUP BY 1),
-        |dots0 AS (SELECT p.vec_id, cast(sum(p.val * c.val) AS BIGINT) AS dot
-        |          FROM (SELECT vec_id, i, val FROM d WHERE vec_id >= 1) p
-        |          JOIN (SELECT i, val FROM d WHERE vec_id = 0) c ON p.i = c.i GROUP BY 1),
-        |rel AS (SELECT dt.vec_id, cast(round(dt.dot / (sqrt(cast(nv.n2 AS DOUBLE)) * sqrt(cast(n0.n2 AS DOUBLE))) * 10000) AS BIGINT) AS rel_bp
-        |        FROM dots0 dt JOIN nrm nv ON nv.vec_id = dt.vec_id
-        |        CROSS JOIN (SELECT n2 FROM nrm WHERE vec_id = 0) n0),
-        |pool AS (SELECT vec_id, rel_bp FROM rel ORDER BY rel_bp DESC, vec_id LIMIT 8),
-        |pd AS (SELECT d.vec_id, d.i, d.val FROM d JOIN pool ON pool.vec_id = d.vec_id),
-        |pp AS (SELECT x.vec_id AS a, y.vec_id AS b, cast(sum(x.val*y.val) AS BIGINT) AS dot
-        |       FROM pd x JOIN pd y ON x.i = y.i AND x.vec_id <> y.vec_id GROUP BY 1, 2),
-        |psim AS (SELECT pp.a, pp.b, cast(round(pp.dot / (sqrt(cast(na.n2 AS DOUBLE)) * sqrt(cast(nb.n2 AS DOUBLE))) * 10000) AS BIGINT) AS sim_bp
-        |         FROM pp JOIN nrm na ON na.vec_id = pp.a JOIN nrm nb ON nb.vec_id = pp.b),
-        |p1 AS (SELECT vec_id, rel_bp FROM pool ORDER BY rel_bp DESC, vec_id LIMIT 1),
-        |c2 AS (SELECT c.vec_id, c.rel_bp, s.sim_bp AS mx
-        |       FROM pool c CROSS JOIN p1
-        |       JOIN psim s ON s.a = c.vec_id AND s.b = p1.vec_id
-        |       WHERE c.vec_id <> p1.vec_id),
-        |p2 AS (SELECT vec_id, rel_bp, 7*rel_bp - 3*mx AS mmr FROM c2 ORDER BY mmr DESC, vec_id LIMIT 1),
-        |c3 AS (SELECT c.vec_id, c.rel_bp, max(s.sim_bp) AS mx
-        |       FROM pool c CROSS JOIN p1 CROSS JOIN p2
-        |       JOIN psim s ON s.a = c.vec_id AND (s.b = p1.vec_id OR s.b = p2.vec_id)
-        |       WHERE c.vec_id <> p1.vec_id AND c.vec_id <> p2.vec_id
-        |       GROUP BY c.vec_id, c.rel_bp),
-        |p3 AS (SELECT vec_id, rel_bp, 7*rel_bp - 3*mx AS mmr FROM c3 ORDER BY mmr DESC, vec_id LIMIT 1)
-        |SELECT cast(1 AS BIGINT) AS rnk, vec_id, rel_bp, 7*rel_bp AS mmr_bp FROM p1
-        |UNION ALL SELECT cast(2 AS BIGINT), vec_id, rel_bp, mmr FROM p2
-        |UNION ALL SELECT cast(3 AS BIGINT), vec_id, rel_bp, mmr FROM p3
-        |ORDER BY rnk""".stripMargin,
       """WITH q AS (SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT)) AS qv FROM embeddings),
         |d AS (SELECT vec_id, i, qv[i] AS val FROM (SELECT vec_id, qv, unnest(generate_series(1, 64)) AS i FROM q)),
         |nrm AS (SELECT vec_id, CAST(sum(val*val) AS BIGINT) AS n2 FROM d GROUP BY 1),
@@ -7936,16 +6843,6 @@ object Queries {
     // the single division of two exact integers happens once per group
     // in IEEE doubles, rounded to bp.
     q("x354_embedding_anisotropy",
-      """WITH q AS (SELECT vec_id, label, transform(embedding, x -> cast(round(cast(x AS DOUBLE)*10000) AS BIGINT)) AS qv FROM embeddings),
-        |d AS (SELECT vec_id, label, i, element_at(qv, i) AS val FROM (SELECT vec_id, label, qv, explode(sequence(1, 64)) AS i FROM q)),
-        |g AS (SELECT cast(label AS STRING) AS grp, vec_id, i, val FROM d
-        |      UNION ALL SELECT 'all', vec_id, i, val FROM d),
-        |sums AS (SELECT grp, i, cast(sum(val) AS BIGINT) AS sd FROM g GROUP BY 1, 2),
-        |s2 AS (SELECT grp, cast(sum(sd*sd) AS BIGINT) AS sq FROM sums GROUP BY 1),
-        |tn AS (SELECT grp, cast(sum(val*val) AS BIGINT) AS t, cast(count(DISTINCT vec_id) AS BIGINT) AS n FROM g GROUP BY 1)
-        |SELECT tn.grp AS grp, tn.n AS n_vecs,
-        |       cast(round(cast(s2.sq AS DOUBLE) / cast(tn.n * tn.t AS DOUBLE) * 10000) AS BIGINT) AS aniso_bp
-        |FROM s2 JOIN tn ON s2.grp = tn.grp ORDER BY grp""".stripMargin,
       """WITH q AS (SELECT vec_id, label, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT)) AS qv FROM embeddings),
         |d AS (SELECT vec_id, label, i, qv[i] AS val FROM (SELECT vec_id, label, qv, unnest(generate_series(1, 64)) AS i FROM q)),
         |g AS (SELECT CAST(label AS VARCHAR) AS grp, vec_id, i, val FROM d
@@ -7964,17 +6861,6 @@ object Queries {
     // docs/tokens cut and the savings in bp. One key census (the x47
     // shuffle — hashes only, never text) feeds all four thresholds.
     q("x355_dedup_occurrence_sweep",
-      """WITH k AS (SELECT doc_id, md5(array_join(sort_array(array_distinct(split(text,' '))),' ')) AS key,
-        |             cast(size(split(text, ' ')) AS BIGINT) AS ntok FROM documents),
-        |r AS (SELECT key, ntok, row_number() OVER (PARTITION BY key ORDER BY doc_id) AS rn,
-        |             count(*) OVER (PARTITION BY key) AS occ FROM k),
-        |tot AS (SELECT cast(sum(ntok) AS BIGINT) AS toks FROM r)
-        |SELECT cast(kk AS BIGINT) AS min_occ,
-        |       cast(count(*) FILTER (WHERE rn > 1 AND occ >= kk) AS BIGINT) AS docs_cut,
-        |       cast(coalesce(sum(ntok) FILTER (WHERE rn > 1 AND occ >= kk), 0) AS BIGINT) AS tokens_cut,
-        |       (SELECT toks FROM tot) AS total_toks,
-        |       cast(coalesce(sum(ntok) FILTER (WHERE rn > 1 AND occ >= kk), 0) * 10000 div (SELECT toks FROM tot) AS BIGINT) AS savings_bp
-        |FROM r CROSS JOIN (SELECT explode(array(2, 3, 5, 10)) AS kk) GROUP BY kk ORDER BY min_occ""".stripMargin,
       """WITH k AS (SELECT doc_id, md5(array_to_string(list_sort(list_distinct(string_split(text,' '))),' ')) AS key,
         |             CAST(len(string_split(text, ' ')) AS BIGINT) AS ntok FROM documents),
         |r AS (SELECT key, ntok, row_number() OVER (PARTITION BY key ORDER BY doc_id) AS rn,
@@ -7995,14 +6881,6 @@ object Queries {
     // arithmetic per row + one rollup; the numbers a batch-size/packing
     // planner consumes next to x107/x271.
     q("x356_span_corruption_plan",
-      """WITH t AS (SELECT source, cast(size(split(text,' ')) AS BIGINT) AS n FROM documents),
-        |c AS (SELECT source, n, (n*15) div 100 AS masked, ((n*15) div 100 + 2) div 3 AS spans FROM t)
-        |SELECT source, cast(count(*) AS BIGINT) AS docs, cast(sum(n) AS BIGINT) AS toks,
-        |       cast(sum(masked) AS BIGINT) AS masked_toks, cast(sum(spans) AS BIGINT) AS n_spans,
-        |       cast(sum(n - masked + spans) AS BIGINT) AS enc_toks,
-        |       cast(sum(masked + spans + 1) AS BIGINT) AS dec_toks,
-        |       cast(sum(masked) * 10000 div sum(n) AS BIGINT) AS mask_bp
-        |FROM c GROUP BY 1 ORDER BY 1""".stripMargin,
       """WITH t AS (SELECT source, CAST(len(string_split(text,' ')) AS BIGINT) AS n FROM documents),
         |c AS (SELECT source, n, (n*15) // 100 AS masked, ((n*15) // 100 + 2) // 3 AS spans FROM t)
         |SELECT source, CAST(count(*) AS BIGINT) AS docs, CAST(sum(n) AS BIGINT) AS toks,
@@ -8019,15 +6897,6 @@ object Queries {
     // or per-source suffices. Keys shuffle, never text; the matrix is
     // source²-sized (index-sized output).
     q("x357_cross_source_dup_matrix",
-      """WITH k AS (SELECT doc_id, source, md5(array_join(sort_array(array_distinct(split(text,' '))),' ')) AS key FROM documents),
-        |ks AS (SELECT key, source FROM k GROUP BY 1, 2),
-        |docs AS (SELECT key, source, cast(count(*) AS BIGINT) AS nd FROM k GROUP BY 1, 2)
-        |SELECT a.source AS src_a, b.source AS src_b, cast(count(*) AS BIGINT) AS shared_keys,
-        |       cast(sum(da.nd) AS BIGINT) AS docs_a, cast(sum(db.nd) AS BIGINT) AS docs_b
-        |FROM ks a JOIN ks b ON a.key = b.key AND a.source < b.source
-        |JOIN docs da ON da.key = a.key AND da.source = a.source
-        |JOIN docs db ON db.key = b.key AND db.source = b.source
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
       """WITH k AS (SELECT doc_id, source, md5(array_to_string(list_sort(list_distinct(string_split(text,' '))),' ')) AS key FROM documents),
         |ks AS (SELECT key, source FROM k GROUP BY 1, 2),
         |docs AS (SELECT key, source, CAST(count(*) AS BIGINT) AS nd FROM k GROUP BY 1, 2)
@@ -8047,13 +6916,6 @@ object Queries {
     // 20-double sum is order-sensitive; 20 BIGINTs are not).
     // Proportional bp rides along as the comparison column.
     q("x358_temperature_weights",
-      """WITH t AS (SELECT source, cast(sum(size(split(text,' '))) AS BIGINT) AS toks FROM documents GROUP BY 1),
-        |r AS (SELECT source, toks, cast(round(sqrt(cast(toks AS DOUBLE))) AS BIGINT) AS su FROM t),
-        |s AS (SELECT cast(sum(su) AS BIGINT) AS tot FROM r)
-        |SELECT source, toks, su AS sqrt_units,
-        |       cast(su * 10000 div (SELECT tot FROM s) AS BIGINT) AS w_bp,
-        |       cast(toks * 10000 div (SELECT cast(sum(toks) AS BIGINT) FROM t) AS BIGINT) AS prop_bp
-        |FROM r ORDER BY source""".stripMargin,
       """WITH t AS (SELECT source, CAST(sum(len(string_split(text,' '))) AS BIGINT) AS toks FROM documents GROUP BY 1),
         |r AS (SELECT source, toks, CAST(round(sqrt(CAST(toks AS DOUBLE))) AS BIGINT) AS su FROM t),
         |s AS (SELECT CAST(sum(su) AS BIGINT) AS tot FROM r)
@@ -8070,14 +6932,6 @@ object Queries {
     // differently from one with many pairs). One key census; buckets
     // are group-sized.
     q("x361_dup_cluster_profile",
-      """WITH k AS (SELECT doc_id, md5(array_join(sort_array(array_distinct(split(text,' '))),' ')) AS key FROM documents),
-        |g AS (SELECT key, cast(count(*) AS BIGINT) AS sz FROM k GROUP BY 1),
-        |b AS (SELECT CASE WHEN sz = 1 THEN '1' WHEN sz = 2 THEN '2'
-        |                  WHEN sz <= 4 THEN '3-4' WHEN sz <= 8 THEN '5-8'
-        |                  ELSE '9+' END AS bucket, sz FROM g)
-        |SELECT bucket, cast(count(*) AS BIGINT) AS n_groups, cast(sum(sz) AS BIGINT) AS n_docs,
-        |       cast(sum(sz - 1) AS BIGINT) AS n_removable
-        |FROM b GROUP BY 1 ORDER BY 1""".stripMargin,
       """WITH k AS (SELECT doc_id, md5(array_to_string(list_sort(list_distinct(string_split(text,' '))),' ')) AS key FROM documents),
         |g AS (SELECT key, CAST(count(*) AS BIGINT) AS sz FROM k GROUP BY 1),
         |b AS (SELECT CASE WHEN sz = 1 THEN '1' WHEN sz = 2 THEN '2'
@@ -8097,23 +6951,6 @@ object Queries {
     // semi-join of test grams against the distinct train-gram set.
     q("x362_split_ngram_leakage",
       """WITH s AS (SELECT doc_id, text,
-        |    cast(conv(substr(md5(cast(doc_id AS STRING)),1,8),16,10) AS BIGINT) % 100 AS b
-        |  FROM documents),
-        |sp AS (SELECT doc_id, text, CASE WHEN b < 80 THEN 'train' ELSE 'test' END AS split FROM s),
-        |t AS (SELECT doc_id, split, split(text, ' ') AS w FROM sp),
-        |g AS (SELECT doc_id, split, md5(array_join(slice(w, i, 8), ' ')) AS h
-        |      FROM (SELECT doc_id, split, w, explode(sequence(1, size(w) - 7)) AS i FROM t WHERE size(w) >= 8)),
-        |tr AS (SELECT h FROM g WHERE split = 'train' GROUP BY 1),
-        |te AS (SELECT doc_id, h FROM g WHERE split = 'test' GROUP BY 1, 2),
-        |hit AS (SELECT te.doc_id, te.h FROM te JOIN tr ON te.h = tr.h),
-        |docs AS (SELECT cast(count(DISTINCT doc_id) AS BIGINT) AS test_docs,
-        |                cast(count(*) AS BIGINT) AS test_grams FROM te),
-        |leak AS (SELECT cast(count(DISTINCT doc_id) AS BIGINT) AS leaked_docs,
-        |                cast(count(*) AS BIGINT) AS leaked_grams FROM hit)
-        |SELECT d.test_docs, l.leaked_docs, d.test_grams, l.leaked_grams,
-        |       cast(l.leaked_grams * 10000 div d.test_grams AS BIGINT) AS leak_bp
-        |FROM docs d CROSS JOIN leak l""".stripMargin,
-      """WITH s AS (SELECT doc_id, text,
         |    cast(('0x'||substr(md5(cast(doc_id AS VARCHAR)),1,8)) AS BIGINT) % 100 AS b
         |  FROM documents),
         |sp AS (SELECT doc_id, text, CASE WHEN b < 80 THEN 'train' ELSE 'test' END AS split FROM s),
@@ -8129,7 +6966,25 @@ object Queries {
         |                CAST(count(*) AS BIGINT) AS leaked_grams FROM hit)
         |SELECT d.test_docs, l.leaked_docs, d.test_grams, l.leaked_grams,
         |       CAST(l.leaked_grams * 10000 // d.test_grams AS BIGINT) AS leak_bp
-        |FROM docs d CROSS JOIN leak l""".stripMargin),
+        |FROM docs d CROSS JOIN leak l""".stripMargin,
+      Hand("list slice via slice(); hex via conv(hex, 16, 10)",
+      """WITH s AS (SELECT doc_id, text,
+        |    cast(conv(substr(md5(cast(doc_id AS STRING)),1,8),16,10) AS BIGINT) % 100 AS b
+        |  FROM documents),
+        |sp AS (SELECT doc_id, text, CASE WHEN b < 80 THEN 'train' ELSE 'test' END AS split FROM s),
+        |t AS (SELECT doc_id, split, split(text, ' ') AS w FROM sp),
+        |g AS (SELECT doc_id, split, md5(array_join(slice(w, i, 8), ' ')) AS h
+        |      FROM (SELECT doc_id, split, w, explode(sequence(1, size(w) - 7)) AS i FROM t WHERE size(w) >= 8)),
+        |tr AS (SELECT h FROM g WHERE split = 'train' GROUP BY 1),
+        |te AS (SELECT doc_id, h FROM g WHERE split = 'test' GROUP BY 1, 2),
+        |hit AS (SELECT te.doc_id, te.h FROM te JOIN tr ON te.h = tr.h),
+        |docs AS (SELECT cast(count(DISTINCT doc_id) AS BIGINT) AS test_docs,
+        |                cast(count(*) AS BIGINT) AS test_grams FROM te),
+        |leak AS (SELECT cast(count(DISTINCT doc_id) AS BIGINT) AS leaked_docs,
+        |                cast(count(*) AS BIGINT) AS leaked_grams FROM hit)
+        |SELECT d.test_docs, l.leaked_docs, d.test_grams, l.leaked_grams,
+        |       cast(l.leaked_grams * 10000 div d.test_grams AS BIGINT) AS leak_bp
+        |FROM docs d CROSS JOIN leak l""".stripMargin)),
 
     // Vocabulary coverage curve (r16): the cumulative token share the
     // top-N most frequent words cover, for N ∈ {4,8,16,32} — the
@@ -8139,19 +6994,6 @@ object Queries {
     // One word census (the x13 wordcount shuffle), one ranked window
     // over the census (vocab-sized, not corpus-sized).
     q("x359_vocab_coverage",
-      """WITH w AS (SELECT explode(split(text,' ')) AS word FROM documents),
-        |c AS (SELECT word, cast(count(*) AS BIGINT) AS n FROM w GROUP BY 1),
-        |r AS (SELECT word, n, row_number() OVER (ORDER BY n DESC, word) AS rk,
-        |             cast(sum(n) OVER (ORDER BY n DESC, word ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
-        |      FROM c),
-        |tot AS (SELECT cast(sum(n) AS BIGINT) AS t, cast(count(*) AS BIGINT) AS v FROM c)
-        |SELECT cast(k AS BIGINT) AS vocab_size,
-        |       cast(max(cum) FILTER (WHERE rk <= k) AS BIGINT) AS covered_toks,
-        |       (SELECT t FROM tot) AS total_toks,
-        |       cast(max(cum) FILTER (WHERE rk <= k) * 10000 div (SELECT t FROM tot) AS BIGINT) AS coverage_bp,
-        |       (SELECT v FROM tot) AS distinct_words
-        |FROM r CROSS JOIN (SELECT explode(array(4, 8, 16, 32)) AS k)
-        |GROUP BY k ORDER BY vocab_size""".stripMargin,
       """WITH w AS (SELECT unnest(string_split(text,' ')) AS word FROM documents),
         |c AS (SELECT word, CAST(count(*) AS BIGINT) AS n FROM w GROUP BY 1),
         |r AS (SELECT word, n, row_number() OVER (ORDER BY n DESC, word) AS rk,
@@ -8175,16 +7017,6 @@ object Queries {
     // component maps the int8 code back); error/energy sums are exact
     // BIGINTs, the final ratio is integer division.
     q("x360_int8_quant_error",
-      """WITH q AS (SELECT vec_id, label, transform(embedding, x -> cast(round(cast(x AS DOUBLE)*10000) AS BIGINT)) AS vbp,
-        |               transform(embedding, x -> greatest(least(cast(round(cast(x AS DOUBLE)*127) AS BIGINT), 127), -127)) AS q8 FROM embeddings),
-        |d AS (SELECT vec_id, label, element_at(vbp, i) AS v, cast(round(element_at(q8, i) * 10000 / 127.0) AS BIGINT) AS r
-        |      FROM (SELECT vec_id, label, vbp, q8, explode(sequence(1, 64)) AS i FROM q)),
-        |per AS (SELECT vec_id, label, cast(sum((v-r)*(v-r)) AS BIGINT) AS err, cast(sum(v*v) AS BIGINT) AS n2 FROM d GROUP BY 1, 2),
-        |rel AS (SELECT vec_id, label, cast(err * 10000 div n2 AS BIGINT) AS rel_bp FROM per WHERE n2 > 0)
-        |SELECT cast(label AS BIGINT) AS label, cast(count(*) AS BIGINT) AS n_vecs,
-        |       cast(cast(sum(rel_bp) AS BIGINT) div count(*) AS BIGINT) AS mean_err_bp,
-        |       cast(max(rel_bp) AS BIGINT) AS max_err_bp
-        |FROM rel GROUP BY label ORDER BY label""".stripMargin,
       """WITH q AS (SELECT vec_id, label, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT)) AS vbp,
         |               list_transform(embedding, x -> greatest(least(CAST(round(CAST(x AS DOUBLE)*127) AS BIGINT), 127), -127)) AS q8 FROM embeddings),
         |d AS (SELECT vec_id, label, vbp[i] AS v, CAST(round(q8[i] * 10000 / 127.0) AS BIGINT) AS r
@@ -8235,6 +7067,35 @@ object Queries {
     // canonical statement of the semantics, and the driver's hash gate
     // is the equivalence proof.
     q("x363_kmv_source_jaccard",
+      """WITH w AS (SELECT doc_id, source, string_split(text,' ') AS w FROM documents),
+        |sh AS (SELECT DISTINCT source, sh FROM
+        |       (SELECT source, unnest(list_distinct([array_to_string(w[i:i+2],' ') FOR i IN range(1, len(w)-1)])) AS sh
+        |        FROM w WHERE len(w) >= 3)),
+        |hv AS (SELECT DISTINCT source, cast(('0x'||substr(md5(sh),1,8)) AS BIGINT) AS hv FROM sh),
+        |srcs AS (SELECT DISTINCT source FROM documents),
+        |pairs AS (SELECT a.source AS s1, b.source AS s2 FROM srcs a JOIN srcs b ON a.source < b.source),
+        |mem AS (SELECT s1, s2, s1 AS member FROM pairs UNION ALL SELECT s1, s2, s2 AS member FROM pairs),
+        |merged AS (SELECT m.s1, m.s2, h.hv,
+        |                  max(CASE WHEN h.source = m.s1 THEN 1 ELSE 0 END) AS in1,
+        |                  max(CASE WHEN h.source = m.s2 THEN 1 ELSE 0 END) AS in2
+        |           FROM mem m JOIN hv h ON h.source = m.member GROUP BY 1, 2, 3),
+        |ranked AS (SELECT *, row_number() OVER (PARTITION BY s1, s2 ORDER BY hv) AS rn FROM merged),
+        |kmv AS (SELECT s1, s2, CAST(sum(CASE WHEN in1 = 1 AND in2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS nboth,
+        |               CAST(count(*) AS BIGINT) AS kk
+        |        FROM ranked WHERE rn <= 64 GROUP BY 1, 2),
+        |sizes AS (SELECT source, CAST(count(*) AS BIGINT) AS n FROM sh GROUP BY 1),
+        |inter AS (SELECT a.source AS s1, b.source AS s2, CAST(count(*) AS BIGINT) AS ni
+        |          FROM sh a JOIN sh b ON a.sh = b.sh AND a.source < b.source GROUP BY 1, 2),
+        |ex AS (SELECT p.s1, p.s2, coalesce(i.ni, 0) AS ni FROM pairs p
+        |       LEFT JOIN inter i ON i.s1 = p.s1 AND i.s2 = p.s2)
+        |SELECT k.s1 AS s1, k.s2 AS s2,
+        |       CAST(ex.ni * 10000 // (n1.n + n2.n - ex.ni) AS BIGINT) AS exact_bp,
+        |       CAST(k.nboth * 10000 // k.kk AS BIGINT) AS kmv_bp,
+        |       CAST(abs(ex.ni * 10000 // (n1.n + n2.n - ex.ni) - k.nboth * 10000 // k.kk) AS BIGINT) AS err_bp
+        |FROM kmv k JOIN ex ON ex.s1 = k.s1 AND ex.s2 = k.s2
+        |JOIN sizes n1 ON n1.source = k.s1 JOIN sizes n2 ON n2.source = k.s2
+        |ORDER BY s1, s2""".stripMargin,
+      Hand("shingles via transform/slice; hex via conv(hex, 16, 10)",
       """WITH w AS (SELECT doc_id, source, split(text,' ') AS w FROM documents),
         |sh AS (SELECT DISTINCT source, sh FROM
         |       (SELECT source, explode(array_distinct(transform(sequence(1, size(w)-2), i -> concat_ws(' ', slice(w, i, 3))))) AS sh
@@ -8271,35 +7132,7 @@ object Queries {
         |       cast(abs(ex.ni * 10000 div (z.n1 + z.n2 - ex.ni) - k.nboth * 10000 div k.kk) AS BIGINT) AS err_bp
         |FROM kmv k JOIN ex ON ex.s1 = k.s1 AND ex.s2 = k.s2
         |JOIN pairsz z ON z.s1 = k.s1 AND z.s2 = k.s2
-        |ORDER BY s1, s2""".stripMargin,
-      """WITH w AS (SELECT doc_id, source, string_split(text,' ') AS w FROM documents),
-        |sh AS (SELECT DISTINCT source, sh FROM
-        |       (SELECT source, unnest(list_distinct([array_to_string(w[i:i+2],' ') FOR i IN range(1, len(w)-1)])) AS sh
-        |        FROM w WHERE len(w) >= 3)),
-        |hv AS (SELECT DISTINCT source, cast(('0x'||substr(md5(sh),1,8)) AS BIGINT) AS hv FROM sh),
-        |srcs AS (SELECT DISTINCT source FROM documents),
-        |pairs AS (SELECT a.source AS s1, b.source AS s2 FROM srcs a JOIN srcs b ON a.source < b.source),
-        |mem AS (SELECT s1, s2, s1 AS member FROM pairs UNION ALL SELECT s1, s2, s2 AS member FROM pairs),
-        |merged AS (SELECT m.s1, m.s2, h.hv,
-        |                  max(CASE WHEN h.source = m.s1 THEN 1 ELSE 0 END) AS in1,
-        |                  max(CASE WHEN h.source = m.s2 THEN 1 ELSE 0 END) AS in2
-        |           FROM mem m JOIN hv h ON h.source = m.member GROUP BY 1, 2, 3),
-        |ranked AS (SELECT *, row_number() OVER (PARTITION BY s1, s2 ORDER BY hv) AS rn FROM merged),
-        |kmv AS (SELECT s1, s2, CAST(sum(CASE WHEN in1 = 1 AND in2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS nboth,
-        |               CAST(count(*) AS BIGINT) AS kk
-        |        FROM ranked WHERE rn <= 64 GROUP BY 1, 2),
-        |sizes AS (SELECT source, CAST(count(*) AS BIGINT) AS n FROM sh GROUP BY 1),
-        |inter AS (SELECT a.source AS s1, b.source AS s2, CAST(count(*) AS BIGINT) AS ni
-        |          FROM sh a JOIN sh b ON a.sh = b.sh AND a.source < b.source GROUP BY 1, 2),
-        |ex AS (SELECT p.s1, p.s2, coalesce(i.ni, 0) AS ni FROM pairs p
-        |       LEFT JOIN inter i ON i.s1 = p.s1 AND i.s2 = p.s2)
-        |SELECT k.s1 AS s1, k.s2 AS s2,
-        |       CAST(ex.ni * 10000 // (n1.n + n2.n - ex.ni) AS BIGINT) AS exact_bp,
-        |       CAST(k.nboth * 10000 // k.kk AS BIGINT) AS kmv_bp,
-        |       CAST(abs(ex.ni * 10000 // (n1.n + n2.n - ex.ni) - k.nboth * 10000 // k.kk) AS BIGINT) AS err_bp
-        |FROM kmv k JOIN ex ON ex.s1 = k.s1 AND ex.s2 = k.s2
-        |JOIN sizes n1 ON n1.source = k.s1 JOIN sizes n2 ON n2.source = k.s2
-        |ORDER BY s1, s2""".stripMargin),
+        |ORDER BY s1, s2""".stripMargin)),
 
     // LSH banding sensitivity (r17): the closed-form detection S-curve
     // 1−(1−s^r)^b (the MMDS banding analysis) evaluated over the
@@ -8315,35 +7148,6 @@ object Queries {
     // r18b: x48-class serialized-expansion fix (see hintPar /
     // OPTIMIZATION_r18.md §8) — hint on the Spark side only.
     q("x364_lsh_band_sensitivity",
-      s"""WITH w AS (SELECT doc_id, split(text,' ') AS w FROM (SELECT /*+ REPARTITION($hintPar, doc_id) */ doc_id, text FROM documents)),
-        |sh AS (SELECT doc_id, explode(array_distinct(transform(sequence(1, size(w)-2), i -> concat_ws(' ', slice(w, i, 3))))) AS sh
-        |       FROM w WHERE size(w) >= 3),
-        |n AS (SELECT doc_id, cast(count(*) AS BIGINT) AS n FROM sh GROUP BY 1),
-        |j AS (SELECT a.doc_id AS a, b.doc_id AS b, cast(count(*) AS BIGINT) AS c
-        |      FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |jac AS (SELECT j.a, j.b, cast(j.c * 10000 div (na.n + nb.n - j.c) AS BIGINT) AS jac_bp
-        |        FROM j JOIN n na ON na.doc_id = j.a JOIN n nb ON nb.doc_id = j.b),
-        |bk AS (SELECT cast(jac_bp div 1000 AS BIGINT) AS decile, cast(count(*) AS BIGINT) AS n_pairs
-        |       FROM jac GROUP BY 1),
-        |base AS (SELECT decile, n_pairs, cast(decile * 1000 + 500 AS DOUBLE) / 10000.0 AS s FROM bk),
-        |l1 AS (SELECT *, s*s AS s_2 FROM base),
-        |l2 AS (SELECT *, s_2*s_2 AS s_4 FROM l1),
-        |l3 AS (SELECT *, s_4*s_4 AS s_8 FROM l2),
-        |cfg AS (SELECT * FROM VALUES (16, 4), (8, 8), (32, 2) AS cfg(b, r)),
-        |sr AS (SELECT l3.*, cfg.b, cfg.r,
-        |              CASE cfg.r WHEN 2 THEN s_2 WHEN 4 THEN s_4 ELSE s_8 END AS srv
-        |       FROM l3 CROSS JOIN cfg),
-        |y0 AS (SELECT *, 1.0 - srv AS y FROM sr),
-        |y1 AS (SELECT *, y*y AS y_2 FROM y0),
-        |y2c AS (SELECT *, y_2*y_2 AS y_4 FROM y1),
-        |y3 AS (SELECT *, y_4*y_4 AS y_8 FROM y2c),
-        |y4c AS (SELECT *, y_8*y_8 AS y_16 FROM y3),
-        |y5 AS (SELECT *, y_16*y_16 AS y_32 FROM y4c)
-        |SELECT cast(b AS BIGINT) AS bands, cast(r AS BIGINT) AS rows_per_band,
-        |       decile AS jac_decile, n_pairs,
-        |       cast(round((1.0 - CASE b WHEN 8 THEN y_8 WHEN 16 THEN y_16 ELSE y_32 END) * 10000) AS BIGINT) AS detect_bp,
-        |       cast(round((1.0 - CASE b WHEN 8 THEN y_8 WHEN 16 THEN y_16 ELSE y_32 END) * n_pairs) AS BIGINT) AS exp_caught
-        |FROM y5 ORDER BY bands, rows_per_band, jac_decile""".stripMargin,
       """WITH w AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
         |sh AS (SELECT doc_id, unnest(list_distinct([array_to_string(w[i:i+2],' ') FOR i IN range(1, len(w)-1)])) AS sh
         |       FROM w WHERE len(w) >= 3),
@@ -8372,7 +7176,37 @@ object Queries {
         |       decile AS jac_decile, n_pairs,
         |       CAST(round((1.0 - CASE b WHEN 8 THEN y_8 WHEN 16 THEN y_16 ELSE y_32 END) * 10000) AS BIGINT) AS detect_bp,
         |       CAST(round((1.0 - CASE b WHEN 8 THEN y_8 WHEN 16 THEN y_16 ELSE y_32 END) * n_pairs) AS BIGINT) AS exp_caught
-        |FROM y5 ORDER BY bands, rows_per_band, jac_decile""".stripMargin),
+        |FROM y5 ORDER BY bands, rows_per_band, jac_decile""".stripMargin,
+      Hand("REPARTITION hint on the exploding join; shingles via transform/slice",
+      s"""WITH w AS (SELECT doc_id, split(text,' ') AS w FROM (SELECT /*+ REPARTITION($hintPar, doc_id) */ doc_id, text FROM documents)),
+        |sh AS (SELECT doc_id, explode(array_distinct(transform(sequence(1, size(w)-2), i -> concat_ws(' ', slice(w, i, 3))))) AS sh
+        |       FROM w WHERE size(w) >= 3),
+        |n AS (SELECT doc_id, cast(count(*) AS BIGINT) AS n FROM sh GROUP BY 1),
+        |j AS (SELECT a.doc_id AS a, b.doc_id AS b, cast(count(*) AS BIGINT) AS c
+        |      FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2),
+        |jac AS (SELECT j.a, j.b, cast(j.c * 10000 div (na.n + nb.n - j.c) AS BIGINT) AS jac_bp
+        |        FROM j JOIN n na ON na.doc_id = j.a JOIN n nb ON nb.doc_id = j.b),
+        |bk AS (SELECT cast(jac_bp div 1000 AS BIGINT) AS decile, cast(count(*) AS BIGINT) AS n_pairs
+        |       FROM jac GROUP BY 1),
+        |base AS (SELECT decile, n_pairs, cast(decile * 1000 + 500 AS DOUBLE) / 10000.0 AS s FROM bk),
+        |l1 AS (SELECT *, s*s AS s_2 FROM base),
+        |l2 AS (SELECT *, s_2*s_2 AS s_4 FROM l1),
+        |l3 AS (SELECT *, s_4*s_4 AS s_8 FROM l2),
+        |cfg AS (SELECT * FROM VALUES (16, 4), (8, 8), (32, 2) AS cfg(b, r)),
+        |sr AS (SELECT l3.*, cfg.b, cfg.r,
+        |              CASE cfg.r WHEN 2 THEN s_2 WHEN 4 THEN s_4 ELSE s_8 END AS srv
+        |       FROM l3 CROSS JOIN cfg),
+        |y0 AS (SELECT *, 1.0 - srv AS y FROM sr),
+        |y1 AS (SELECT *, y*y AS y_2 FROM y0),
+        |y2c AS (SELECT *, y_2*y_2 AS y_4 FROM y1),
+        |y3 AS (SELECT *, y_4*y_4 AS y_8 FROM y2c),
+        |y4c AS (SELECT *, y_8*y_8 AS y_16 FROM y3),
+        |y5 AS (SELECT *, y_16*y_16 AS y_32 FROM y4c)
+        |SELECT cast(b AS BIGINT) AS bands, cast(r AS BIGINT) AS rows_per_band,
+        |       decile AS jac_decile, n_pairs,
+        |       cast(round((1.0 - CASE b WHEN 8 THEN y_8 WHEN 16 THEN y_16 ELSE y_32 END) * 10000) AS BIGINT) AS detect_bp,
+        |       cast(round((1.0 - CASE b WHEN 8 THEN y_8 WHEN 16 THEN y_16 ELSE y_32 END) * n_pairs) AS BIGINT) AS exp_caught
+        |FROM y5 ORDER BY bands, rows_per_band, jac_decile""".stripMargin)),
 
     // MinHash Jaccard estimator error (r17): for every banded candidate
     // pair with ≥4/16 agreeing signature components, the signature
@@ -8386,29 +7220,6 @@ object Queries {
     // r18b: x48-class serialized-expansion fix (see hintPar /
     // OPTIMIZATION_r18.md §8) — hint on the Spark side only.
     q("x365_minhash_jaccard_err",
-      s"""WITH w AS (SELECT doc_id, split(text,' ') AS w FROM (SELECT /*+ REPARTITION($hintPar, doc_id) */ doc_id, text FROM documents)),
-        |sh AS (SELECT doc_id, explode(array_distinct(transform(sequence(1, size(w)-2), i -> concat_ws(' ', slice(w, i, 3))))) AS sh
-        |       FROM w WHERE size(w) >= 3),
-        |hv AS (SELECT doc_id, cast(conv(substr(md5(sh),1,8),16,10) AS BIGINT) AS hv FROM sh),
-        |perm AS (SELECT * FROM VALUES (0,1299721,104729),(1,1299827,104743),(2,1300021,104759),
-        |         (3,1300033,104761),(4,1300109,104773),(5,1300151,104779),(6,1300187,104789),
-        |         (7,1300201,104801),(8,1300247,104803),(9,1300289,104827),(10,1300303,104831),
-        |         (11,1300313,104849),(12,1300333,104851),(13,1300351,104869),(14,1300369,104879),
-        |         (15,1300387,104891) AS perm(i,a,b)),
-        |sig AS (SELECT doc_id, p.i, min(mod(p.a*hv.hv + p.b, 2147483647)) AS mh
-        |        FROM hv CROSS JOIN perm p GROUP BY 1,2),
-        |m AS (SELECT sa.doc_id AS a, sb.doc_id AS b, cast(count(*) AS BIGINT) AS m
-        |      FROM sig sa JOIN sig sb ON sa.i = sb.i AND sa.mh = sb.mh AND sa.doc_id < sb.doc_id
-        |      GROUP BY 1,2 HAVING count(*) >= 4),
-        |n AS (SELECT doc_id, cast(count(*) AS BIGINT) AS n FROM sh GROUP BY 1),
-        |c AS (SELECT m.a, m.b, m.m, cast(count(*) AS BIGINT) AS c
-        |      FROM m JOIN sh x ON x.doc_id = m.a JOIN sh y ON y.doc_id = m.b AND y.sh = x.sh
-        |      GROUP BY 1, 2, 3)
-        |SELECT c.a AS a, c.b AS b, cast(c.m * 10000 div 16 AS BIGINT) AS est_bp,
-        |       cast(c.c * 10000 div (na.n + nb.n - c.c) AS BIGINT) AS exact_bp,
-        |       cast(abs(c.m * 10000 div 16 - c.c * 10000 div (na.n + nb.n - c.c)) AS BIGINT) AS err_bp
-        |FROM c JOIN n na ON na.doc_id = c.a JOIN n nb ON nb.doc_id = c.b
-        |ORDER BY a, b""".stripMargin,
       """WITH w AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
         |sh AS (SELECT doc_id, unnest(list_distinct([array_to_string(w[i:i+2],' ') FOR i IN range(1, len(w)-1)])) AS sh
         |       FROM w WHERE len(w) >= 3),
@@ -8431,7 +7242,31 @@ object Queries {
         |       CAST(c.c * 10000 // (na.n + nb.n - c.c) AS BIGINT) AS exact_bp,
         |       CAST(abs(c.m * 10000 // 16 - c.c * 10000 // (na.n + nb.n - c.c)) AS BIGINT) AS err_bp
         |FROM c JOIN n na ON na.doc_id = c.a JOIN n nb ON nb.doc_id = c.b
-        |ORDER BY a, b""".stripMargin),
+        |ORDER BY a, b""".stripMargin,
+      Hand("REPARTITION hint on the exploding join; shingles via transform/slice",
+      s"""WITH w AS (SELECT doc_id, split(text,' ') AS w FROM (SELECT /*+ REPARTITION($hintPar, doc_id) */ doc_id, text FROM documents)),
+        |sh AS (SELECT doc_id, explode(array_distinct(transform(sequence(1, size(w)-2), i -> concat_ws(' ', slice(w, i, 3))))) AS sh
+        |       FROM w WHERE size(w) >= 3),
+        |hv AS (SELECT doc_id, cast(conv(substr(md5(sh),1,8),16,10) AS BIGINT) AS hv FROM sh),
+        |perm AS (SELECT * FROM VALUES (0,1299721,104729),(1,1299827,104743),(2,1300021,104759),
+        |         (3,1300033,104761),(4,1300109,104773),(5,1300151,104779),(6,1300187,104789),
+        |         (7,1300201,104801),(8,1300247,104803),(9,1300289,104827),(10,1300303,104831),
+        |         (11,1300313,104849),(12,1300333,104851),(13,1300351,104869),(14,1300369,104879),
+        |         (15,1300387,104891) AS perm(i,a,b)),
+        |sig AS (SELECT doc_id, p.i, min(mod(p.a*hv.hv + p.b, 2147483647)) AS mh
+        |        FROM hv CROSS JOIN perm p GROUP BY 1,2),
+        |m AS (SELECT sa.doc_id AS a, sb.doc_id AS b, cast(count(*) AS BIGINT) AS m
+        |      FROM sig sa JOIN sig sb ON sa.i = sb.i AND sa.mh = sb.mh AND sa.doc_id < sb.doc_id
+        |      GROUP BY 1,2 HAVING count(*) >= 4),
+        |n AS (SELECT doc_id, cast(count(*) AS BIGINT) AS n FROM sh GROUP BY 1),
+        |c AS (SELECT m.a, m.b, m.m, cast(count(*) AS BIGINT) AS c
+        |      FROM m JOIN sh x ON x.doc_id = m.a JOIN sh y ON y.doc_id = m.b AND y.sh = x.sh
+        |      GROUP BY 1, 2, 3)
+        |SELECT c.a AS a, c.b AS b, cast(c.m * 10000 div 16 AS BIGINT) AS est_bp,
+        |       cast(c.c * 10000 div (na.n + nb.n - c.c) AS BIGINT) AS exact_bp,
+        |       cast(abs(c.m * 10000 div 16 - c.c * 10000 div (na.n + nb.n - c.c)) AS BIGINT) AS err_bp
+        |FROM c JOIN n na ON na.doc_id = c.a JOIN n nb ON nb.doc_id = c.b
+        |ORDER BY a, b""".stripMargin)),
 
     // Embedding centroid shift (r17): per label, the squared distance
     // between the even-vec_id half's integer-mean centroid and the odd
@@ -8444,21 +7279,6 @@ object Queries {
     // BIGINT arithmetic. Scale: one (label, half, dim)-keyed partial
     // agg — index-sized state, no pairs.
     q("x366_embedding_centroid_shift",
-      """WITH q AS (SELECT vec_id, label, transform(embedding, x -> cast(round(cast(x AS DOUBLE)*10000) AS BIGINT)) AS qv FROM embeddings),
-        |d AS (SELECT vec_id, label, i, element_at(qv, i) AS val FROM (SELECT vec_id, label, qv, explode(sequence(1, 64)) AS i FROM q)),
-        |m AS (SELECT label, vec_id % 2 AS half, i,
-        |             cast(cast(sum(val + 10000) AS BIGINT) div count(*) AS BIGINT) - 10000 AS mv
-        |      FROM d GROUP BY 1, 2, 3),
-        |s AS (SELECT e.label, cast(sum((e.mv - o.mv)*(e.mv - o.mv)) AS BIGINT) AS shift2
-        |      FROM (SELECT * FROM m WHERE half = 0) e
-        |      JOIN (SELECT * FROM m WHERE half = 1) o ON e.label = o.label AND e.i = o.i
-        |      GROUP BY 1),
-        |cnt AS (SELECT label,
-        |               cast(sum(CASE WHEN vec_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_even,
-        |               cast(sum(CASE WHEN vec_id % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_odd
-        |        FROM embeddings GROUP BY 1)
-        |SELECT cast(cnt.label AS BIGINT) AS label, cnt.n_even AS n_even, cnt.n_odd AS n_odd, s.shift2 AS shift2
-        |FROM cnt JOIN s ON s.label = cnt.label ORDER BY label""".stripMargin,
       """WITH q AS (SELECT vec_id, label, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT)) AS qv FROM embeddings),
         |d AS (SELECT vec_id, label, i, qv[i] AS val FROM (SELECT vec_id, label, qv, unnest(generate_series(1, 64)) AS i FROM q)),
         |m AS (SELECT label, vec_id % 2 AS half, i,
@@ -8488,24 +7308,6 @@ object Queries {
     // r18b: x48-class serialized-expansion fix (see hintPar /
     // OPTIMIZATION_r18.md §8) — hint on the Spark side only.
     q("x367_neardup_transitivity",
-      s"""WITH w AS (SELECT doc_id, split(text,' ') AS w FROM (SELECT /*+ REPARTITION($hintPar, doc_id) */ doc_id, text FROM documents)),
-        |sh AS (SELECT doc_id, explode(array_distinct(transform(sequence(1, size(w)-2), i -> concat_ws(' ', slice(w, i, 3))))) AS sh
-        |       FROM w WHERE size(w) >= 3),
-        |n AS (SELECT doc_id, cast(count(*) AS BIGINT) AS n FROM sh GROUP BY 1),
-        |j AS (SELECT a.doc_id AS a, b.doc_id AS b, cast(count(*) AS BIGINT) AS c
-        |      FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |jac AS (SELECT j.a, j.b, cast(j.c * 10000 div (na.n + nb.n - j.c) AS BIGINT) AS jac_bp
-        |        FROM j JOIN n na ON na.doc_id = j.a JOIN n nb ON nb.doc_id = j.b),
-        |thr AS (SELECT * FROM VALUES (1000), (3000), (5000) AS thr(t)),
-        |e AS (SELECT thr.t, jac.a, jac.b FROM jac CROSS JOIN thr WHERE jac.jac_bp >= thr.t),
-        |wdg AS (SELECT e1.t, e1.a, e1.b AS mid, e2.b AS c
-        |        FROM e e1 JOIN e e2 ON e1.t = e2.t AND e1.b = e2.a),
-        |chk AS (SELECT wdg.t, CASE WHEN coalesce(j2.jac_bp, 0) >= wdg.t THEN 1 ELSE 0 END AS closed
-        |        FROM wdg LEFT JOIN jac j2 ON j2.a = wdg.a AND j2.b = wdg.c)
-        |SELECT cast(t AS BIGINT) AS thr_bp, cast(count(*) AS BIGINT) AS wedges,
-        |       cast(sum(closed) AS BIGINT) AS closed,
-        |       cast(sum(closed) * 10000 div count(*) AS BIGINT) AS closure_bp
-        |FROM chk GROUP BY t ORDER BY thr_bp""".stripMargin,
       """WITH w AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
         |sh AS (SELECT doc_id, unnest(list_distinct([array_to_string(w[i:i+2],' ') FOR i IN range(1, len(w)-1)])) AS sh
         |       FROM w WHERE len(w) >= 3),
@@ -8523,7 +7325,26 @@ object Queries {
         |SELECT CAST(t AS BIGINT) AS thr_bp, CAST(count(*) AS BIGINT) AS wedges,
         |       CAST(sum(closed) AS BIGINT) AS closed,
         |       CAST(sum(closed) * 10000 // count(*) AS BIGINT) AS closure_bp
-        |FROM chk GROUP BY t ORDER BY thr_bp""".stripMargin),
+        |FROM chk GROUP BY t ORDER BY thr_bp""".stripMargin,
+      Hand("REPARTITION hint on the exploding join; shingles via transform/slice",
+      s"""WITH w AS (SELECT doc_id, split(text,' ') AS w FROM (SELECT /*+ REPARTITION($hintPar, doc_id) */ doc_id, text FROM documents)),
+        |sh AS (SELECT doc_id, explode(array_distinct(transform(sequence(1, size(w)-2), i -> concat_ws(' ', slice(w, i, 3))))) AS sh
+        |       FROM w WHERE size(w) >= 3),
+        |n AS (SELECT doc_id, cast(count(*) AS BIGINT) AS n FROM sh GROUP BY 1),
+        |j AS (SELECT a.doc_id AS a, b.doc_id AS b, cast(count(*) AS BIGINT) AS c
+        |      FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2),
+        |jac AS (SELECT j.a, j.b, cast(j.c * 10000 div (na.n + nb.n - j.c) AS BIGINT) AS jac_bp
+        |        FROM j JOIN n na ON na.doc_id = j.a JOIN n nb ON nb.doc_id = j.b),
+        |thr AS (SELECT * FROM VALUES (1000), (3000), (5000) AS thr(t)),
+        |e AS (SELECT thr.t, jac.a, jac.b FROM jac CROSS JOIN thr WHERE jac.jac_bp >= thr.t),
+        |wdg AS (SELECT e1.t, e1.a, e1.b AS mid, e2.b AS c
+        |        FROM e e1 JOIN e e2 ON e1.t = e2.t AND e1.b = e2.a),
+        |chk AS (SELECT wdg.t, CASE WHEN coalesce(j2.jac_bp, 0) >= wdg.t THEN 1 ELSE 0 END AS closed
+        |        FROM wdg LEFT JOIN jac j2 ON j2.a = wdg.a AND j2.b = wdg.c)
+        |SELECT cast(t AS BIGINT) AS thr_bp, cast(count(*) AS BIGINT) AS wedges,
+        |       cast(sum(closed) AS BIGINT) AS closed,
+        |       cast(sum(closed) * 10000 div count(*) AS BIGINT) AS closure_bp
+        |FROM chk GROUP BY t ORDER BY thr_bp""".stripMargin)),
 
     // Boilerplate edge census (r17): shared 8-token document PREFIXES
     // and SUFFIXES across the corpus — the chunk-boundary/boilerplate
@@ -8534,16 +7355,6 @@ object Queries {
     // dedup-resistant kind). Scale: one narrow scan, hash-keyed agg —
     // no pairs at all.
     q("x368_boilerplate_edges",
-      """WITH w AS (SELECT doc_id, source, split(text,' ') AS w FROM documents),
-        |edges AS (
-        | SELECT doc_id, source, 'prefix' AS part, md5(concat_ws(' ', slice(w, 1, 8))) AS h FROM w WHERE size(w) >= 8
-        | UNION ALL
-        | SELECT doc_id, source, 'suffix' AS part, md5(concat_ws(' ', slice(w, -8, 8))) AS h FROM w WHERE size(w) >= 8),
-        |g AS (SELECT part, h, cast(count(*) AS BIGINT) AS n_docs,
-        |             cast(count(DISTINCT source) AS BIGINT) AS n_sources,
-        |             cast(min(doc_id) AS BIGINT) AS first_doc
-        |      FROM edges GROUP BY 1, 2 HAVING count(*) >= 2)
-        |SELECT part, h, n_docs, n_sources, first_doc FROM g ORDER BY part, n_docs DESC, h""".stripMargin,
       """WITH w AS (SELECT doc_id, source, string_split(text,' ') AS w FROM documents),
         |edges AS (
         | SELECT doc_id, source, 'prefix' AS part, md5(array_to_string(w[1:8],' ')) AS h FROM w WHERE len(w) >= 8
@@ -8553,7 +7364,18 @@ object Queries {
         |             CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
         |             CAST(min(doc_id) AS BIGINT) AS first_doc
         |      FROM edges GROUP BY 1, 2 HAVING count(*) >= 2)
-        |SELECT part, h, n_docs, n_sources, first_doc FROM g ORDER BY part, n_docs DESC, h""".stripMargin),
+        |SELECT part, h, n_docs, n_sources, first_doc FROM g ORDER BY part, n_docs DESC, h""".stripMargin,
+      Hand("list slice w[a:b]: Spark takes slice(w, start, length)",
+      """WITH w AS (SELECT doc_id, source, split(text,' ') AS w FROM documents),
+        |edges AS (
+        | SELECT doc_id, source, 'prefix' AS part, md5(concat_ws(' ', slice(w, 1, 8))) AS h FROM w WHERE size(w) >= 8
+        | UNION ALL
+        | SELECT doc_id, source, 'suffix' AS part, md5(concat_ws(' ', slice(w, -8, 8))) AS h FROM w WHERE size(w) >= 8),
+        |g AS (SELECT part, h, cast(count(*) AS BIGINT) AS n_docs,
+        |             cast(count(DISTINCT source) AS BIGINT) AS n_sources,
+        |             cast(min(doc_id) AS BIGINT) AS first_doc
+        |      FROM edges GROUP BY 1, 2 HAVING count(*) >= 2)
+        |SELECT part, h, n_docs, n_sources, first_doc FROM g ORDER BY part, n_docs DESC, h""".stripMargin)),
 
     // int8 rank stability (r17): does x360's per-vector max-abs int8
     // quantization CHANGE retrieval rankings, not just add numeric
@@ -8566,23 +7388,6 @@ object Queries {
     // discipline. Scale: 8 broadcast queries × corpus — one pass, two
     // rankings, no corpus self-join.
     q("x369_int8_rank_stability",
-      """WITH q AS (SELECT vec_id, transform(embedding, x -> cast(round(cast(x AS DOUBLE)*10000) AS BIGINT)) AS qv FROM embeddings),
-        |d AS (SELECT vec_id, i, element_at(qv, i) AS val FROM (SELECT vec_id, qv, explode(sequence(1, 64)) AS i FROM q)),
-        |mx AS (SELECT vec_id, cast(max(abs(val)) AS BIGINT) AS m FROM d GROUP BY 1),
-        |q8 AS (SELECT d.vec_id, d.i, cast(round(cast(d.val AS DOUBLE) * 127.0 / cast(greatest(mx.m, cast(1 AS BIGINT)) AS DOUBLE)) AS BIGINT) AS v8
-        |       FROM d JOIN mx ON mx.vec_id = d.vec_id),
-        |de AS (SELECT qd.vec_id AS qid, cd.vec_id AS vid, cast(sum(qd.val * cd.val) AS BIGINT) AS dot
-        |       FROM (SELECT * FROM d WHERE vec_id < 8) qd
-        |       JOIN (SELECT * FROM d WHERE vec_id >= 8) cd ON qd.i = cd.i GROUP BY 1, 2),
-        |d8 AS (SELECT qd.vec_id AS qid, cd.vec_id AS vid, cast(sum(qd.v8 * cd.v8) AS BIGINT) AS dot
-        |       FROM (SELECT * FROM q8 WHERE vec_id < 8) qd
-        |       JOIN (SELECT * FROM q8 WHERE vec_id >= 8) cd ON qd.i = cd.i GROUP BY 1, 2),
-        |rexact AS (SELECT qid, vid, row_number() OVER (PARTITION BY qid ORDER BY dot DESC, vid) AS rn FROM de),
-        |r8 AS (SELECT qid, vid, row_number() OVER (PARTITION BY qid ORDER BY dot DESC, vid) AS rn FROM d8)
-        |SELECT e.qid AS qid, cast(count(*) AS BIGINT) AS overlap10
-        |FROM (SELECT qid, vid FROM rexact WHERE rn <= 10) e
-        |JOIN (SELECT qid, vid FROM r8 WHERE rn <= 10) g ON e.qid = g.qid AND e.vid = g.vid
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
       """WITH q AS (SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT)) AS qv FROM embeddings),
         |d AS (SELECT vec_id, i, qv[i] AS val FROM (SELECT vec_id, qv, unnest(generate_series(1, 64)) AS i FROM q)),
         |mx AS (SELECT vec_id, CAST(max(abs(val)) AS BIGINT) AS m FROM d GROUP BY 1),
@@ -8612,19 +7417,6 @@ object Queries {
     // shuffle (n_chars is precomputed).
     q("x370_dedup_keep_bias",
       """WITH k AS (SELECT doc_id, source, n_chars,
-        |  md5(array_join(sort_array(array_distinct(split(text,' '))),' ')) AS key FROM documents),
-        |f AS (SELECT *, CASE WHEN doc_id = min(doc_id) OVER (PARTITION BY key) THEN 1 ELSE 0 END AS kept FROM k),
-        |g AS (SELECT source,
-        |             cast(count(*) AS BIGINT) AS n_docs,
-        |             cast(sum(kept) AS BIGINT) AS n_kept,
-        |             cast(sum(CASE WHEN kept = 1 THEN n_chars ELSE 0 END) AS BIGINT) AS kept_chars,
-        |             cast(sum(CASE WHEN kept = 0 THEN n_chars ELSE 0 END) AS BIGINT) AS dropped_chars
-        |      FROM f GROUP BY 1)
-        |SELECT source, n_docs, n_kept,
-        |       CASE WHEN n_kept > 0 THEN cast(kept_chars div n_kept AS BIGINT) ELSE cast(0 AS BIGINT) END AS kept_mean_chars,
-        |       CASE WHEN n_docs - n_kept > 0 THEN cast(dropped_chars div (n_docs - n_kept) AS BIGINT) ELSE cast(0 AS BIGINT) END AS dropped_mean_chars
-        |FROM g ORDER BY source""".stripMargin,
-      """WITH k AS (SELECT doc_id, source, n_chars,
         |  md5(array_to_string(list_sort(list_distinct(string_split(text,' '))),' ')) AS key FROM documents),
         |f AS (SELECT *, CASE WHEN doc_id = min(doc_id) OVER (PARTITION BY key) THEN 1 ELSE 0 END AS kept FROM k),
         |g AS (SELECT source,
@@ -8645,13 +7437,6 @@ object Queries {
     // lang column; x51 is the inference path for corpora that don't).
     // One grouped rollup + a language-keyed total join — census shapes.
     q("x371_lang_source_mix",
-      """WITH m AS (SELECT lang, source, cast(count(*) AS BIGINT) AS n_docs,
-        |                  cast(sum(n_chars) AS BIGINT) AS chars FROM documents GROUP BY 1, 2),
-        |t AS (SELECT lang, cast(sum(n_docs) AS BIGINT) AS lang_docs FROM m GROUP BY 1)
-        |SELECT m.lang AS lang, m.source AS source, m.n_docs AS n_docs, m.chars AS chars,
-        |       cast(m.n_docs * 10000 div t.lang_docs AS BIGINT) AS lang_share_bp
-        |FROM m JOIN t ON t.lang = m.lang
-        |ORDER BY lang, source""".stripMargin,
       """WITH m AS (SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs,
         |                  CAST(sum(n_chars) AS BIGINT) AS chars FROM documents GROUP BY 1, 2),
         |t AS (SELECT lang, CAST(sum(n_docs) AS BIGINT) AS lang_docs FROM m GROUP BY 1)
@@ -8671,26 +7456,6 @@ object Queries {
     // grouping only — no pair join anywhere (the census prices the
     // pair join without running it).
     q("x372_lsh_bucket_skew",
-      """WITH w AS (SELECT doc_id, split(text,' ') AS w FROM documents),
-        |sh AS (SELECT doc_id, explode(array_distinct(transform(sequence(1, size(w)-2), i -> concat_ws(' ', slice(w, i, 3))))) AS sh
-        |       FROM w WHERE size(w) >= 3),
-        |hv AS (SELECT doc_id, cast(conv(substr(md5(sh),1,8),16,10) AS BIGINT) AS hv FROM sh),
-        |perm AS (SELECT * FROM VALUES (0,1299721,104729),(1,1299827,104743),(2,1300021,104759),
-        |         (3,1300033,104761),(4,1300109,104773),(5,1300151,104779),(6,1300187,104789),
-        |         (7,1300201,104801),(8,1300247,104803),(9,1300289,104827),(10,1300303,104831),
-        |         (11,1300313,104849),(12,1300333,104851),(13,1300351,104869),(14,1300369,104879),
-        |         (15,1300387,104891) AS perm(i,a,b)),
-        |sig AS (SELECT doc_id, p.i, min(mod(p.a*hv.hv + p.b, 2147483647)) AS mh
-        |        FROM hv CROSS JOIN perm p GROUP BY 1,2),
-        |bk AS (SELECT doc_id, cast(i div 4 AS BIGINT) AS band,
-        |              md5(listagg(cast(mh AS STRING), ',') WITHIN GROUP (ORDER BY i)) AS bkey
-        |       FROM sig GROUP BY doc_id, cast(i div 4 AS BIGINT)),
-        |b2 AS (SELECT band, bkey, cast(count(*) AS BIGINT) AS sz FROM bk GROUP BY 1, 2)
-        |SELECT band, cast(count(*) AS BIGINT) AS n_buckets,
-        |       cast(sum(CASE WHEN sz >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS colliding_buckets,
-        |       cast(max(sz) AS BIGINT) AS max_bucket,
-        |       cast(sum(sz*(sz-1) div 2) AS BIGINT) AS cand_pairs
-        |FROM b2 GROUP BY band ORDER BY band""".stripMargin,
       """WITH w AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
         |sh AS (SELECT doc_id, unnest(list_distinct([array_to_string(w[i:i+2],' ') FOR i IN range(1, len(w)-1)])) AS sh
         |       FROM w WHERE len(w) >= 3),
@@ -8710,7 +7475,28 @@ object Queries {
         |       CAST(sum(CASE WHEN sz >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS colliding_buckets,
         |       CAST(max(sz) AS BIGINT) AS max_bucket,
         |       CAST(sum(sz*(sz-1) // 2) AS BIGINT) AS cand_pairs
-        |FROM b2 GROUP BY band ORDER BY band""".stripMargin),
+        |FROM b2 GROUP BY band ORDER BY band""".stripMargin,
+      Hand("shingles via transform/slice; hex via conv(hex, 16, 10)",
+      """WITH w AS (SELECT doc_id, split(text,' ') AS w FROM documents),
+        |sh AS (SELECT doc_id, explode(array_distinct(transform(sequence(1, size(w)-2), i -> concat_ws(' ', slice(w, i, 3))))) AS sh
+        |       FROM w WHERE size(w) >= 3),
+        |hv AS (SELECT doc_id, cast(conv(substr(md5(sh),1,8),16,10) AS BIGINT) AS hv FROM sh),
+        |perm AS (SELECT * FROM VALUES (0,1299721,104729),(1,1299827,104743),(2,1300021,104759),
+        |         (3,1300033,104761),(4,1300109,104773),(5,1300151,104779),(6,1300187,104789),
+        |         (7,1300201,104801),(8,1300247,104803),(9,1300289,104827),(10,1300303,104831),
+        |         (11,1300313,104849),(12,1300333,104851),(13,1300351,104869),(14,1300369,104879),
+        |         (15,1300387,104891) AS perm(i,a,b)),
+        |sig AS (SELECT doc_id, p.i, min(mod(p.a*hv.hv + p.b, 2147483647)) AS mh
+        |        FROM hv CROSS JOIN perm p GROUP BY 1,2),
+        |bk AS (SELECT doc_id, cast(i div 4 AS BIGINT) AS band,
+        |              md5(listagg(cast(mh AS STRING), ',') WITHIN GROUP (ORDER BY i)) AS bkey
+        |       FROM sig GROUP BY doc_id, cast(i div 4 AS BIGINT)),
+        |b2 AS (SELECT band, bkey, cast(count(*) AS BIGINT) AS sz FROM bk GROUP BY 1, 2)
+        |SELECT band, cast(count(*) AS BIGINT) AS n_buckets,
+        |       cast(sum(CASE WHEN sz >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS colliding_buckets,
+        |       cast(max(sz) AS BIGINT) AS max_bucket,
+        |       cast(sum(sz*(sz-1) div 2) AS BIGINT) AS cand_pairs
+        |FROM b2 GROUP BY band ORDER BY band""".stripMargin)),
 
     // Duplicate-group purity (r17b): of x47's normalized-key duplicate
     // groups (size ≥ 2), how many span multiple sources or multiple
@@ -8721,20 +7507,6 @@ object Queries {
     // (size profile) with the group-level composition. Scale: x47's
     // key shuffle + a bucket rollup — census shapes only.
     q("x373_dup_group_purity",
-      """WITH k AS (SELECT doc_id, source, lang,
-        |  md5(array_join(sort_array(array_distinct(split(text,' '))),' ')) AS key FROM documents),
-        |g AS (SELECT key, cast(count(*) AS BIGINT) AS n,
-        |             cast(count(DISTINCT source) AS BIGINT) AS ns,
-        |             cast(count(DISTINCT lang) AS BIGINT) AS nl
-        |      FROM k GROUP BY 1 HAVING count(*) >= 2),
-        |b AS (SELECT CASE WHEN n = 2 THEN '2' WHEN n <= 4 THEN '3-4'
-        |                  WHEN n <= 8 THEN '5-8' ELSE '9+' END AS bucket, n, ns, nl FROM g)
-        |SELECT bucket, cast(count(*) AS BIGINT) AS groups,
-        |       cast(sum(CASE WHEN ns > 1 THEN 1 ELSE 0 END) AS BIGINT) AS cross_source,
-        |       cast(sum(CASE WHEN nl > 1 THEN 1 ELSE 0 END) AS BIGINT) AS cross_lang,
-        |       cast(sum(n) AS BIGINT) AS docs,
-        |       cast(sum(CASE WHEN ns > 1 THEN n ELSE 0 END) AS BIGINT) AS docs_cross_source
-        |FROM b GROUP BY 1 ORDER BY bucket""".stripMargin,
       """WITH k AS (SELECT doc_id, source, lang,
         |  md5(array_to_string(list_sort(list_distinct(string_split(text,' '))),' ')) AS key FROM documents),
         |g AS (SELECT key, CAST(count(*) AS BIGINT) AS n,
@@ -8759,17 +7531,6 @@ object Queries {
     // integer (t+511) div 512 — no floats anywhere. Scale: one narrow
     // scan + a per-source rollup.
     q("x374_padding_waste",
-      """WITH t AS (SELECT source, size(split(text,' ')) AS n FROM documents),
-        |s AS (SELECT source, cast(count(*) AS BIGINT) AS docs, cast(sum(n) AS BIGINT) AS toks,
-        |             cast(sum(least(n, 512)) AS BIGINT) AS kept,
-        |             cast(sum(greatest(n - 512, 0)) AS BIGINT) AS truncated
-        |      FROM t GROUP BY 1)
-        |SELECT source, docs, toks, kept,
-        |       cast(docs*512 - kept AS BIGINT) AS pad, truncated,
-        |       cast(kept * 10000 div (docs * 512) AS BIGINT) AS util_single_bp,
-        |       cast((toks + 511) div 512 AS BIGINT) AS packed_windows,
-        |       cast(toks * 10000 div (((toks + 511) div 512) * 512) AS BIGINT) AS util_packed_bp
-        |FROM s ORDER BY source""".stripMargin,
       """WITH t AS (SELECT source, len(string_split(text,' ')) AS n FROM documents),
         |s AS (SELECT source, CAST(count(*) AS BIGINT) AS docs, CAST(sum(n) AS BIGINT) AS toks,
         |             CAST(sum(least(n, 512)) AS BIGINT) AS kept,
@@ -8791,23 +7552,6 @@ object Queries {
     // and the round-to-4 discipline is its. Scale: two hash-keyed
     // token censuses per source — no pairs, no windows.
     q("x375_bigram_entropy_rate",
-      """WITH w AS (SELECT source, split(text,' ') AS w FROM documents),
-        |u AS (SELECT source, tok, count(*) AS n
-        |      FROM (SELECT source, explode(w) AS tok FROM w) GROUP BY 1, 2),
-        |ut AS (SELECT source, sum(n) AS tot FROM u GROUP BY 1),
-        |hu AS (SELECT u.source, -sum((n*1e0/tot) * ln(n*1e0/tot)) AS h
-        |       FROM u JOIN ut ON ut.source = u.source GROUP BY u.source),
-        |bg AS (SELECT source, g, count(*) AS n
-        |       FROM (SELECT source, explode(transform(sequence(1, size(w)-1), i -> concat_ws(' ', slice(w, i, 2)))) AS g
-        |             FROM w WHERE size(w) >= 2) GROUP BY 1, 2),
-        |bt AS (SELECT source, sum(n) AS tot FROM bg GROUP BY 1),
-        |hb AS (SELECT bg.source, -sum((n*1e0/tot) * ln(n*1e0/tot)) AS h
-        |       FROM bg JOIN bt ON bt.source = bg.source GROUP BY bg.source)
-        |SELECT hu.source AS source, cast(ut.tot AS BIGINT) AS n_toks, cast(bt.tot AS BIGINT) AS n_bigrams,
-        |       round(hu.h, 4) AS h_uni, round(hb.h, 4) AS h_bi, round(hb.h - hu.h, 4) AS h_cond
-        |FROM hu JOIN hb ON hb.source = hu.source
-        |JOIN ut ON ut.source = hu.source JOIN bt ON bt.source = hu.source
-        |ORDER BY source""".stripMargin,
       """WITH w AS (SELECT source, string_split(text,' ') AS w FROM documents),
         |u AS (SELECT source, tok, count(*) AS n
         |      FROM (SELECT source, unnest(w) AS tok FROM w) GROUP BY 1, 2),
@@ -8824,7 +7568,25 @@ object Queries {
         |       round(hu.h, 4) AS h_uni, round(hb.h, 4) AS h_bi, round(hb.h - hu.h, 4) AS h_cond
         |FROM hu JOIN hb ON hb.source = hu.source
         |JOIN ut ON ut.source = hu.source JOIN bt ON bt.source = hu.source
-        |ORDER BY source""".stripMargin),
+        |ORDER BY source""".stripMargin,
+      Hand("list comprehension: shingles via transform over slice",
+      """WITH w AS (SELECT source, split(text,' ') AS w FROM documents),
+        |u AS (SELECT source, tok, count(*) AS n
+        |      FROM (SELECT source, explode(w) AS tok FROM w) GROUP BY 1, 2),
+        |ut AS (SELECT source, sum(n) AS tot FROM u GROUP BY 1),
+        |hu AS (SELECT u.source, -sum((n*1e0/tot) * ln(n*1e0/tot)) AS h
+        |       FROM u JOIN ut ON ut.source = u.source GROUP BY u.source),
+        |bg AS (SELECT source, g, count(*) AS n
+        |       FROM (SELECT source, explode(transform(sequence(1, size(w)-1), i -> concat_ws(' ', slice(w, i, 2)))) AS g
+        |             FROM w WHERE size(w) >= 2) GROUP BY 1, 2),
+        |bt AS (SELECT source, sum(n) AS tot FROM bg GROUP BY 1),
+        |hb AS (SELECT bg.source, -sum((n*1e0/tot) * ln(n*1e0/tot)) AS h
+        |       FROM bg JOIN bt ON bt.source = bg.source GROUP BY bg.source)
+        |SELECT hu.source AS source, cast(ut.tot AS BIGINT) AS n_toks, cast(bt.tot AS BIGINT) AS n_bigrams,
+        |       round(hu.h, 4) AS h_uni, round(hb.h, 4) AS h_bi, round(hb.h - hu.h, 4) AS h_cond
+        |FROM hu JOIN hb ON hb.source = hu.source
+        |JOIN ut ON ut.source = hu.source JOIN bt ON bt.source = hu.source
+        |ORDER BY source""".stripMargin)),
 
     // Quality-aware keeper uplift (r17b): what changes if x47's
     // keep-first canonical rule becomes keep-best-quality (x50's
@@ -8836,32 +7598,6 @@ object Queries {
     // a shuffle (the key and score are per-row). Scale: x47's key
     // shuffle + two windows + census rollups.
     q("x376_quality_keeper_uplift",
-      """WITH w0 AS (SELECT doc_id, source, split(text,' ') AS w FROM documents),
-        |k AS (SELECT doc_id, source,
-        |        md5(array_join(sort_array(array_distinct(w)),' ')) AS key,
-        |        cast(floor((0.4*(size(array_distinct(w))/cast(size(w) AS DOUBLE))
-        |              + 0.3*(1.0 - size(filter(w, x -> x IN ('a','the')))/cast(size(w) AS DOUBLE))
-        |              + 0.3*least(size(w)/100.0, 1.0))*10000.0) AS BIGINT) AS q
-        |      FROM w0),
-        |f AS (SELECT *, row_number() OVER (PARTITION BY key ORDER BY doc_id) AS rf,
-        |             row_number() OVER (PARTITION BY key ORDER BY q DESC, doc_id) AS rq FROM k),
-        |a AS (SELECT source, cast(count(*) AS BIGINT) AS kept_first, cast(sum(q) AS BIGINT) AS q_first
-        |      FROM f WHERE rf = 1 GROUP BY 1),
-        |b AS (SELECT source, cast(count(*) AS BIGINT) AS kept_best, cast(sum(q) AS BIGINT) AS q_best
-        |      FROM f WHERE rq = 1 GROUP BY 1),
-        |g AS (SELECT key, max(CASE WHEN rf = 1 THEN source END) AS src_first,
-        |             max(CASE WHEN rf = 1 THEN doc_id END) AS d_first,
-        |             max(CASE WHEN rq = 1 THEN doc_id END) AS d_best
-        |      FROM f GROUP BY 1),
-        |ch AS (SELECT src_first AS source, cast(count(*) AS BIGINT) AS n_groups,
-        |              cast(sum(CASE WHEN d_first <> d_best THEN 1 ELSE 0 END) AS BIGINT) AS changed
-        |       FROM g GROUP BY 1)
-        |SELECT ch.source AS source, ch.n_groups AS n_groups, ch.changed AS changed,
-        |       a.kept_first AS kept_first, b.kept_best AS kept_best,
-        |       cast(a.q_first div a.kept_first AS BIGINT) AS mean_q_first,
-        |       cast(b.q_best div b.kept_best AS BIGINT) AS mean_q_best
-        |FROM ch JOIN a ON a.source = ch.source JOIN b ON b.source = ch.source
-        |ORDER BY source""".stripMargin,
       """WITH w0 AS (SELECT doc_id, source, string_split(text,' ') AS w FROM documents),
         |k AS (SELECT doc_id, source,
         |        md5(array_to_string(list_sort(list_distinct(w)),' ')) AS key,
@@ -8901,24 +7637,6 @@ object Queries {
     // window; the x100 two-pass tier is the scale form) + an
     // explode over boundary hits only.
     q("x377_chunk_boundary_loss",
-      """WITH t AS (SELECT doc_id, source, size(split(text,' ')) AS n FROM documents),
-        |c AS (SELECT doc_id, source, cast(n AS BIGINT) AS n,
-        |        cast(sum(n) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) - n AS BIGINT) AS start
-        |      FROM t),
-        |v AS (SELECT *, cast(floor(start/512.0) AS BIGINT) AS fw,
-        |             cast(floor((start + n - 1)/512.0) AS BIGINT) AS lw FROM c),
-        |b AS (SELECT source, n, start, explode(sequence(fw + 1, lw)) AS wb
-        |      FROM v WHERE lw > fw AND n >= 8),
-        |d AS (SELECT source, greatest(cast(0 AS BIGINT),
-        |        least(wb*512 - 1, start + n - 8) - greatest(start, wb*512 - 7) + 1) AS destroyed FROM b),
-        |g AS (SELECT source, cast(sum(CASE WHEN n >= 8 THEN n - 7 ELSE 0 END) AS BIGINT) AS grams,
-        |             cast(sum(CASE WHEN n >= 8 THEN lw - fw ELSE 0 END) AS BIGINT) AS boundaries
-        |      FROM v GROUP BY 1),
-        |e AS (SELECT source, cast(sum(destroyed) AS BIGINT) AS destroyed FROM d GROUP BY 1)
-        |SELECT g.source AS source, g.grams AS grams, g.boundaries AS boundaries,
-        |       coalesce(e.destroyed, cast(0 AS BIGINT)) AS destroyed,
-        |       cast(coalesce(e.destroyed, cast(0 AS BIGINT)) * 10000 div g.grams AS BIGINT) AS loss_bp
-        |FROM g LEFT JOIN e ON e.source = g.source ORDER BY source""".stripMargin,
       """WITH t AS (SELECT doc_id, source, len(string_split(text,' ')) AS n FROM documents),
         |c AS (SELECT doc_id, source, CAST(n AS BIGINT) AS n,
         |        CAST(sum(n) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS BIGINT) - n AS start
@@ -8949,22 +7667,6 @@ object Queries {
     // the scalar MAD sibling; this is its vector-norm form. Scale:
     // label-keyed windows over index-sized rows.
     q("x378_embedding_norm_outliers",
-      """WITH q AS (SELECT vec_id, label, transform(embedding, x -> cast(round(cast(x AS DOUBLE)*10000) AS BIGINT)) AS qv FROM embeddings),
-        |d AS (SELECT vec_id, label, element_at(qv, i) AS val FROM (SELECT vec_id, label, qv, explode(sequence(1, 64)) AS i FROM q)),
-        |t AS (SELECT vec_id, label, cast(sum(val*val) AS BIGINT) AS norm2 FROM d GROUP BY 1, 2),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY label ORDER BY norm2, vec_id) AS rn,
-        |             count(*) OVER (PARTITION BY label) AS cnt FROM t),
-        |med AS (SELECT label, norm2 AS med FROM r WHERE rn = (cnt + 1) div 2),
-        |dev AS (SELECT t.label, t.vec_id, abs(t.norm2 - med.med) AS dev
-        |        FROM t JOIN med ON med.label = t.label),
-        |r2 AS (SELECT *, row_number() OVER (PARTITION BY label ORDER BY dev, vec_id) AS rn,
-        |              count(*) OVER (PARTITION BY label) AS cnt FROM dev),
-        |mad AS (SELECT label, dev AS mad FROM r2 WHERE rn = (cnt + 1) div 2)
-        |SELECT cast(t.label AS BIGINT) AS label, cast(count(*) AS BIGINT) AS n,
-        |       cast(max(med.med) AS BIGINT) AS med_norm2, cast(max(mad.mad) AS BIGINT) AS mad,
-        |       cast(sum(CASE WHEN abs(t.norm2 - med.med) > 3 * mad.mad THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
-        |FROM t JOIN med ON med.label = t.label JOIN mad ON mad.label = t.label
-        |GROUP BY t.label ORDER BY label""".stripMargin,
       """WITH q AS (SELECT vec_id, label, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT)) AS qv FROM embeddings),
         |d AS (SELECT vec_id, label, qv[i] AS val FROM (SELECT vec_id, label, qv, unnest(generate_series(1, 64)) AS i FROM q)),
         |t AS (SELECT vec_id, label, CAST(sum(val*val) AS BIGINT) AS norm2 FROM d GROUP BY 1, 2),
@@ -8995,45 +7697,6 @@ object Queries {
     // r18b: x48-class serialized-expansion fix (see hintPar /
     // OPTIMIZATION_r18.md §8) — hint on the Spark side only.
     q("x379_shingle_size_sensitivity",
-      s"""WITH w AS (SELECT doc_id, split(text,' ') AS w FROM (SELECT /*+ REPARTITION($hintPar, doc_id) */ doc_id, text FROM documents)),
-        |sh AS (SELECT doc_id, explode(array_distinct(transform(sequence(1, size(w)-2), i -> concat_ws(' ', slice(w, i, 3))))) AS sh
-        |       FROM w WHERE size(w) >= 3),
-        |hv AS (SELECT doc_id, cast(conv(substr(md5(sh),1,8),16,10) AS BIGINT) AS hv FROM sh),
-        |perm AS (SELECT * FROM VALUES (0,1299721,104729),(1,1299827,104743),(2,1300021,104759),
-        |         (3,1300033,104761),(4,1300109,104773),(5,1300151,104779),(6,1300187,104789),
-        |         (7,1300201,104801),(8,1300247,104803),(9,1300289,104827),(10,1300303,104831),
-        |         (11,1300313,104849),(12,1300333,104851),(13,1300351,104869),(14,1300369,104879),
-        |         (15,1300387,104891) AS perm(i,a,b)),
-        |sig AS (SELECT doc_id, p.i, min(mod(p.a*hv.hv + p.b, 2147483647)) AS mh
-        |        FROM hv CROSS JOIN perm p GROUP BY 1,2),
-        |pairs AS (SELECT sa.doc_id AS a, sb.doc_id AS b
-        |          FROM sig sa JOIN sig sb ON sa.i = sb.i AND sa.mh = sb.mh AND sa.doc_id < sb.doc_id
-        |          GROUP BY 1,2 HAVING count(*) >= 8),
-        |s5 AS (SELECT doc_id, explode(array_distinct(transform(sequence(1, size(w)-4), i -> concat_ws(' ', slice(w, i, 5))))) AS sh
-        |       FROM w WHERE size(w) >= 5),
-        |s8 AS (SELECT doc_id, explode(array_distinct(transform(sequence(1, size(w)-7), i -> concat_ws(' ', slice(w, i, 8))))) AS sh
-        |       FROM w WHERE size(w) >= 8),
-        |n3 AS (SELECT doc_id, cast(count(*) AS BIGINT) AS n FROM sh GROUP BY 1),
-        |n5 AS (SELECT doc_id, cast(count(*) AS BIGINT) AS n FROM s5 GROUP BY 1),
-        |n8 AS (SELECT doc_id, cast(count(*) AS BIGINT) AS n FROM s8 GROUP BY 1),
-        |i3 AS (SELECT p.a, p.b, cast(count(*) AS BIGINT) AS c FROM pairs p
-        |       JOIN sh x ON x.doc_id = p.a JOIN sh y ON y.doc_id = p.b AND y.sh = x.sh GROUP BY 1,2),
-        |i5 AS (SELECT p.a, p.b, cast(count(*) AS BIGINT) AS c FROM pairs p
-        |       JOIN s5 x ON x.doc_id = p.a JOIN s5 y ON y.doc_id = p.b AND y.sh = x.sh GROUP BY 1,2),
-        |i8 AS (SELECT p.a, p.b, cast(count(*) AS BIGINT) AS c FROM pairs p
-        |       JOIN s8 x ON x.doc_id = p.a JOIN s8 y ON y.doc_id = p.b AND y.sh = x.sh GROUP BY 1,2)
-        |SELECT p.a AS a, p.b AS b,
-        |       cast(coalesce(i3.c, cast(0 AS BIGINT)) * 10000 div (a3.n + b3.n - coalesce(i3.c, cast(0 AS BIGINT))) AS BIGINT) AS jac3_bp,
-        |       cast(coalesce(i5.c, cast(0 AS BIGINT)) * 10000 div (a5.n + b5.n - coalesce(i5.c, cast(0 AS BIGINT))) AS BIGINT) AS jac5_bp,
-        |       cast(coalesce(i8.c, cast(0 AS BIGINT)) * 10000 div (a8.n + b8.n - coalesce(i8.c, cast(0 AS BIGINT))) AS BIGINT) AS jac8_bp
-        |FROM pairs p
-        |JOIN n3 a3 ON a3.doc_id = p.a JOIN n3 b3 ON b3.doc_id = p.b
-        |JOIN n5 a5 ON a5.doc_id = p.a JOIN n5 b5 ON b5.doc_id = p.b
-        |JOIN n8 a8 ON a8.doc_id = p.a JOIN n8 b8 ON b8.doc_id = p.b
-        |LEFT JOIN i3 ON i3.a = p.a AND i3.b = p.b
-        |LEFT JOIN i5 ON i5.a = p.a AND i5.b = p.b
-        |LEFT JOIN i8 ON i8.a = p.a AND i8.b = p.b
-        |ORDER BY a, b""".stripMargin,
       """WITH w AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
         |sh AS (SELECT doc_id, unnest(list_distinct([array_to_string(w[i:i+2],' ') FOR i IN range(1, len(w)-1)])) AS sh
         |       FROM w WHERE len(w) >= 3),
@@ -9072,7 +7735,47 @@ object Queries {
         |LEFT JOIN i3 ON i3.a = p.a AND i3.b = p.b
         |LEFT JOIN i5 ON i5.a = p.a AND i5.b = p.b
         |LEFT JOIN i8 ON i8.a = p.a AND i8.b = p.b
-        |ORDER BY a, b""".stripMargin),
+        |ORDER BY a, b""".stripMargin,
+      Hand("REPARTITION hint on the exploding join; shingles via transform/slice",
+      s"""WITH w AS (SELECT doc_id, split(text,' ') AS w FROM (SELECT /*+ REPARTITION($hintPar, doc_id) */ doc_id, text FROM documents)),
+        |sh AS (SELECT doc_id, explode(array_distinct(transform(sequence(1, size(w)-2), i -> concat_ws(' ', slice(w, i, 3))))) AS sh
+        |       FROM w WHERE size(w) >= 3),
+        |hv AS (SELECT doc_id, cast(conv(substr(md5(sh),1,8),16,10) AS BIGINT) AS hv FROM sh),
+        |perm AS (SELECT * FROM VALUES (0,1299721,104729),(1,1299827,104743),(2,1300021,104759),
+        |         (3,1300033,104761),(4,1300109,104773),(5,1300151,104779),(6,1300187,104789),
+        |         (7,1300201,104801),(8,1300247,104803),(9,1300289,104827),(10,1300303,104831),
+        |         (11,1300313,104849),(12,1300333,104851),(13,1300351,104869),(14,1300369,104879),
+        |         (15,1300387,104891) AS perm(i,a,b)),
+        |sig AS (SELECT doc_id, p.i, min(mod(p.a*hv.hv + p.b, 2147483647)) AS mh
+        |        FROM hv CROSS JOIN perm p GROUP BY 1,2),
+        |pairs AS (SELECT sa.doc_id AS a, sb.doc_id AS b
+        |          FROM sig sa JOIN sig sb ON sa.i = sb.i AND sa.mh = sb.mh AND sa.doc_id < sb.doc_id
+        |          GROUP BY 1,2 HAVING count(*) >= 8),
+        |s5 AS (SELECT doc_id, explode(array_distinct(transform(sequence(1, size(w)-4), i -> concat_ws(' ', slice(w, i, 5))))) AS sh
+        |       FROM w WHERE size(w) >= 5),
+        |s8 AS (SELECT doc_id, explode(array_distinct(transform(sequence(1, size(w)-7), i -> concat_ws(' ', slice(w, i, 8))))) AS sh
+        |       FROM w WHERE size(w) >= 8),
+        |n3 AS (SELECT doc_id, cast(count(*) AS BIGINT) AS n FROM sh GROUP BY 1),
+        |n5 AS (SELECT doc_id, cast(count(*) AS BIGINT) AS n FROM s5 GROUP BY 1),
+        |n8 AS (SELECT doc_id, cast(count(*) AS BIGINT) AS n FROM s8 GROUP BY 1),
+        |i3 AS (SELECT p.a, p.b, cast(count(*) AS BIGINT) AS c FROM pairs p
+        |       JOIN sh x ON x.doc_id = p.a JOIN sh y ON y.doc_id = p.b AND y.sh = x.sh GROUP BY 1,2),
+        |i5 AS (SELECT p.a, p.b, cast(count(*) AS BIGINT) AS c FROM pairs p
+        |       JOIN s5 x ON x.doc_id = p.a JOIN s5 y ON y.doc_id = p.b AND y.sh = x.sh GROUP BY 1,2),
+        |i8 AS (SELECT p.a, p.b, cast(count(*) AS BIGINT) AS c FROM pairs p
+        |       JOIN s8 x ON x.doc_id = p.a JOIN s8 y ON y.doc_id = p.b AND y.sh = x.sh GROUP BY 1,2)
+        |SELECT p.a AS a, p.b AS b,
+        |       cast(coalesce(i3.c, cast(0 AS BIGINT)) * 10000 div (a3.n + b3.n - coalesce(i3.c, cast(0 AS BIGINT))) AS BIGINT) AS jac3_bp,
+        |       cast(coalesce(i5.c, cast(0 AS BIGINT)) * 10000 div (a5.n + b5.n - coalesce(i5.c, cast(0 AS BIGINT))) AS BIGINT) AS jac5_bp,
+        |       cast(coalesce(i8.c, cast(0 AS BIGINT)) * 10000 div (a8.n + b8.n - coalesce(i8.c, cast(0 AS BIGINT))) AS BIGINT) AS jac8_bp
+        |FROM pairs p
+        |JOIN n3 a3 ON a3.doc_id = p.a JOIN n3 b3 ON b3.doc_id = p.b
+        |JOIN n5 a5 ON a5.doc_id = p.a JOIN n5 b5 ON b5.doc_id = p.b
+        |JOIN n8 a8 ON a8.doc_id = p.a JOIN n8 b8 ON b8.doc_id = p.b
+        |LEFT JOIN i3 ON i3.a = p.a AND i3.b = p.b
+        |LEFT JOIN i5 ON i5.a = p.a AND i5.b = p.b
+        |LEFT JOIN i8 ON i8.a = p.a AND i8.b = p.b
+        |ORDER BY a, b""".stripMargin)),
 
     // Dedup idempotence audit (r17b): apply x47's keep-first once,
     // re-census the keepers — pass 2 MUST find zero duplicates, the
@@ -9082,17 +7785,6 @@ object Queries {
     // needs periodic re-dedup). Two rows, one per pass. Scale: the
     // same key shuffle twice — the audit costs one extra census.
     q("x380_dedup_idempotence",
-      """WITH k AS (SELECT doc_id,
-        |  md5(array_join(sort_array(array_distinct(split(text,' '))),' ')) AS key FROM documents),
-        |f AS (SELECT doc_id, key, row_number() OVER (PARTITION BY key ORDER BY doc_id) AS rn FROM k),
-        |p1 AS (SELECT cast(count(*) AS BIGINT) AS docs, cast(count(DISTINCT key) AS BIGINT) AS keys FROM k),
-        |p2 AS (SELECT cast(count(*) AS BIGINT) AS docs, cast(count(DISTINCT key) AS BIGINT) AS keys
-        |       FROM f WHERE rn = 1)
-        |SELECT * FROM (
-        |  SELECT cast(1 AS BIGINT) AS pass, docs, keys, cast(docs - keys AS BIGINT) AS dups FROM p1
-        |  UNION ALL
-        |  SELECT cast(2 AS BIGINT) AS pass, docs, keys, cast(docs - keys AS BIGINT) AS dups FROM p2
-        |) ORDER BY pass""".stripMargin,
       """WITH k AS (SELECT doc_id,
         |  md5(array_to_string(list_sort(list_distinct(string_split(text,' '))),' ')) AS key FROM documents),
         |f AS (SELECT doc_id, key, row_number() OVER (PARTITION BY key ORDER BY doc_id) AS rn FROM k),
@@ -9115,17 +7807,6 @@ object Queries {
     // ntile (contract-scale window; x100's two-pass tier at scale).
     q("x381_novelty_decay",
       """WITH k AS (SELECT doc_id,
-        |  md5(array_join(sort_array(array_distinct(split(text,' '))),' ')) AS key FROM documents),
-        |f AS (SELECT doc_id, CASE WHEN doc_id = min(doc_id) OVER (PARTITION BY key) THEN 1 ELSE 0 END AS novel FROM k),
-        |d AS (SELECT doc_id, novel, ntile(10) OVER (ORDER BY doc_id) AS decile FROM f),
-        |g AS (SELECT cast(decile AS BIGINT) AS decile, cast(count(*) AS BIGINT) AS docs,
-        |             cast(sum(novel) AS BIGINT) AS novel FROM d GROUP BY 1)
-        |SELECT decile, docs, novel,
-        |       cast(novel * 10000 div docs AS BIGINT) AS novel_bp,
-        |       cast(sum(novel) OVER (ORDER BY decile) * 10000
-        |            div sum(docs) OVER (ORDER BY decile) AS BIGINT) AS cum_novel_bp
-        |FROM g ORDER BY decile""".stripMargin,
-      """WITH k AS (SELECT doc_id,
         |  md5(array_to_string(list_sort(list_distinct(string_split(text,' '))),' ')) AS key FROM documents),
         |f AS (SELECT doc_id, CASE WHEN doc_id = min(doc_id) OVER (PARTITION BY key) THEN 1 ELSE 0 END AS novel FROM k),
         |d AS (SELECT doc_id, novel, ntile(10) OVER (ORDER BY doc_id) AS decile FROM f),
@@ -9147,34 +7828,6 @@ object Queries {
     // later as error, this catches it at train time. Scale: the
     // encode is index-sized (points × 4 codes per subspace).
     q("x382_pq_code_balance",
-      """WITH q AS (SELECT vec_id, transform(embedding, x -> cast(round(cast(x AS DOUBLE)*10000) AS BIGINT)) AS qv FROM embeddings),
-        |d AS (SELECT vec_id, i, element_at(qv, i) AS val FROM (SELECT vec_id, qv, explode(sequence(1, 64)) AS i FROM q)),
-        |s AS (SELECT vec_id, cast((i-1) div 8 AS BIGINT) AS sub, cast((i-1) % 8 + 1 AS BIGINT) AS j, val FROM d),
-        |c0 AS (SELECT sub, vec_id AS code, j, val AS cval FROM s WHERE vec_id < 4),
-        |pts AS (SELECT vec_id, sub, j, val FROM s WHERE vec_id >= 4),
-        |d0 AS (SELECT p.vec_id, p.sub, c.code, cast(sum((p.val - c.cval)*(p.val - c.cval)) AS BIGINT) AS dist
-        |       FROM pts p JOIN c0 c ON p.sub = c.sub AND p.j = c.j GROUP BY 1, 2, 3),
-        |a0 AS (SELECT vec_id, sub, code, dist FROM
-        |       (SELECT vec_id, sub, code, dist, row_number() OVER (PARTITION BY vec_id, sub ORDER BY dist, code) AS rn FROM d0)
-        |       WHERE rn = 1),
-        |c1 AS (SELECT a.sub, a.code, p.j,
-        |         cast(cast(sum(p.val + 10000) AS BIGINT) div count(*) AS BIGINT) - 10000 AS cval
-        |       FROM a0 a JOIN pts p ON p.vec_id = a.vec_id AND p.sub = a.sub GROUP BY 1, 2, 3),
-        |d1 AS (SELECT p.vec_id, p.sub, c.code, cast(sum((p.val - c.cval)*(p.val - c.cval)) AS BIGINT) AS dist
-        |       FROM pts p JOIN c1 c ON p.sub = c.sub AND p.j = c.j GROUP BY 1, 2, 3),
-        |a1 AS (SELECT vec_id, sub, code, dist FROM
-        |       (SELECT vec_id, sub, code, dist, row_number() OVER (PARTITION BY vec_id, sub ORDER BY dist, code) AS rn FROM d1)
-        |       WHERE rn = 1),
-        |b AS (SELECT sub, code, cast(count(*) AS BIGINT) AS n FROM a1 GROUP BY 1, 2),
-        |t AS (SELECT sub, cast(sum(n) AS BIGINT) AS tot, cast(count(*) AS BIGINT) AS used,
-        |             cast(max(n) AS BIGINT) AS mx FROM b GROUP BY 1),
-        |imb AS (SELECT b.sub, cast(sum((b.n * 4 - t.tot) * (b.n * 4 - t.tot)) AS BIGINT) AS i16
-        |        FROM b JOIN t ON t.sub = b.sub GROUP BY 1)
-        |SELECT t.sub AS subspace, t.tot AS n_points, t.used AS codes_used,
-        |       cast(4 - t.used AS BIGINT) AS dead_codes, t.mx AS max_code_n,
-        |       cast(t.mx * 10000 div t.tot AS BIGINT) AS max_share_bp,
-        |       cast(imb.i16 + (4 - t.used) * t.tot * t.tot AS BIGINT) AS imbalance16
-        |FROM t JOIN imb ON imb.sub = t.sub ORDER BY subspace""".stripMargin,
       """WITH q AS (SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT)) AS qv FROM embeddings),
         |d AS (SELECT vec_id, i, qv[i] AS val FROM (SELECT vec_id, qv, unnest(generate_series(1, 64)) AS i FROM q)),
         |s AS (SELECT vec_id, CAST((i-1) // 8 AS BIGINT) AS sub, CAST((i-1) % 8 + 1 AS BIGINT) AS j, val FROM d),
@@ -9217,21 +7870,6 @@ object Queries {
     // utility via a CASE ladder on full epochs — no pow, no floats.
     // Scale: one per-source rollup over token counts.
     q("x383_epoch_plan",
-      """WITH t AS (SELECT source, cast(sum(size(split(text,' '))) AS BIGINT) AS toks FROM documents GROUP BY 1),
-        |g AS (SELECT cast(count(*) AS BIGINT) AS n_sources, cast(sum(toks) AS BIGINT) AS total FROM t),
-        |p AS (SELECT t.source, t.toks, cast(2 * g.total div g.n_sources AS BIGINT) AS share FROM t CROSS JOIN g),
-        |e AS (SELECT source, toks, share,
-        |        least(cast(4 AS BIGINT), cast((share + toks - 1) div toks AS BIGINT)) AS epochs FROM p),
-        |s AS (SELECT *, cast(least(share, toks * epochs) AS BIGINT) AS served FROM e),
-        |x AS (SELECT *, cast(served div toks AS BIGINT) AS f, cast(served % toks AS BIGINT) AS r FROM s)
-        |SELECT source, toks, share AS target_toks, epochs,
-        |       served AS served_toks,
-        |       cast(greatest(cast(0 AS BIGINT), share - served) AS BIGINT) AS unmet_toks,
-        |       cast((CASE f WHEN 0 THEN cast(0 AS BIGINT) WHEN 1 THEN toks*10000 WHEN 2 THEN toks*15000
-        |                    WHEN 3 THEN toks*17500 ELSE toks*18750 END
-        |           + CASE f WHEN 0 THEN r*10000 WHEN 1 THEN r*5000 WHEN 2 THEN r*2500
-        |                    WHEN 3 THEN r*1250 ELSE cast(0 AS BIGINT) END) div 10000 AS BIGINT) AS effective_toks
-        |FROM x ORDER BY source""".stripMargin,
       """WITH t AS (SELECT source, CAST(sum(len(string_split(text,' '))) AS BIGINT) AS toks FROM documents GROUP BY 1),
         |g AS (SELECT CAST(count(*) AS BIGINT) AS n_sources, CAST(sum(toks) AS BIGINT) AS total FROM t),
         |p AS (SELECT t.source, t.toks, CAST(2 * g.total // g.n_sources AS BIGINT) AS share FROM t CROSS JOIN g),
@@ -9259,17 +7897,18 @@ object Queries {
     // one census over the key table.
     q("x384_key_partition_balance",
       """WITH k AS (SELECT doc_id,
-        |  md5(array_join(sort_array(array_distinct(split(text,' '))),' ')) AS key FROM documents),
-        |b AS (SELECT doc_id, key, cast(conv(substr(key,1,8),16,10) AS BIGINT) % 32 AS bucket FROM k)
-        |SELECT bucket, cast(count(DISTINCT key) AS BIGINT) AS n_keys,
-        |       cast(count(*) AS BIGINT) AS n_docs
-        |FROM b GROUP BY 1 ORDER BY bucket""".stripMargin,
-      """WITH k AS (SELECT doc_id,
         |  md5(array_to_string(list_sort(list_distinct(string_split(text,' '))),' ')) AS key FROM documents),
         |b AS (SELECT doc_id, key, CAST(('0x'||substr(key,1,8)) AS BIGINT) % 32 AS bucket FROM k)
         |SELECT bucket, CAST(count(DISTINCT key) AS BIGINT) AS n_keys,
         |       CAST(count(*) AS BIGINT) AS n_docs
-        |FROM b GROUP BY 1 ORDER BY bucket""".stripMargin),
+        |FROM b GROUP BY 1 ORDER BY bucket""".stripMargin,
+      Hand("hex to integer: DuckDB casts '0x' || hex, Spark calls conv(hex, 16, 10)",
+      """WITH k AS (SELECT doc_id,
+        |  md5(array_join(sort_array(array_distinct(split(text,' '))),' ')) AS key FROM documents),
+        |b AS (SELECT doc_id, key, cast(conv(substr(key,1,8),16,10) AS BIGINT) % 32 AS bucket FROM k)
+        |SELECT bucket, cast(count(DISTINCT key) AS BIGINT) AS n_keys,
+        |       cast(count(*) AS BIGINT) AS n_docs
+        |FROM b GROUP BY 1 ORDER BY bucket""".stripMargin)),
 
     // Document-frequency spectrum (r17b): how many vocabulary terms
     // appear in exactly 1 doc, 2–10, 11–100, 100+ — the IDF-health
@@ -9280,13 +7919,6 @@ object Queries {
     // distribution). Scale: one distinct-terms-per-doc explode + two
     // hash aggs — census shapes.
     q("x385_doc_freq_spectrum",
-      """WITH d AS (SELECT doc_id, explode(array_distinct(split(text,' '))) AS tok FROM documents),
-        |df AS (SELECT tok, cast(count(*) AS BIGINT) AS df FROM d GROUP BY 1),
-        |b AS (SELECT CASE WHEN df = 1 THEN '1' WHEN df <= 10 THEN '2-10'
-        |                  WHEN df <= 100 THEN '11-100' ELSE '100+' END AS bucket, df FROM df)
-        |SELECT bucket, cast(count(*) AS BIGINT) AS n_terms, cast(sum(df) AS BIGINT) AS postings,
-        |       cast(min(df) AS BIGINT) AS min_df, cast(max(df) AS BIGINT) AS max_df
-        |FROM b GROUP BY 1 ORDER BY min_df""".stripMargin,
       """WITH d AS (SELECT doc_id, unnest(list_distinct(string_split(text,' '))) AS tok FROM documents),
         |df AS (SELECT tok, CAST(count(*) AS BIGINT) AS df FROM d GROUP BY 1),
         |b AS (SELECT CASE WHEN df = 1 THEN '1' WHEN df <= 10 THEN '2-10'
@@ -9310,42 +7942,6 @@ object Queries {
     // r18b: x48-class serialized-expansion fix (see hintPar /
     // OPTIMIZATION_r18.md §8) — hint on the Spark side only.
     q("x386_lsh_recall_audit",
-      s"""WITH w AS (SELECT doc_id, split(text,' ') AS w FROM (SELECT /*+ REPARTITION($hintPar, doc_id) */ doc_id, text FROM documents)),
-        |sh AS (SELECT doc_id, explode(array_distinct(transform(sequence(1, size(w)-2), i -> concat_ws(' ', slice(w, i, 3))))) AS sh
-        |       FROM w WHERE size(w) >= 3),
-        |n AS (SELECT doc_id, cast(count(*) AS BIGINT) AS n FROM sh GROUP BY 1),
-        |j AS (SELECT a.doc_id AS a, b.doc_id AS b, cast(count(*) AS BIGINT) AS c
-        |      FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |jac AS (SELECT j.a, j.b, cast(j.c * 10000 div (na.n + nb.n - j.c) AS BIGINT) AS jac_bp
-        |        FROM j JOIN n na ON na.doc_id = j.a JOIN n nb ON nb.doc_id = j.b),
-        |hv AS (SELECT doc_id, cast(conv(substr(md5(sh),1,8),16,10) AS BIGINT) AS hv FROM sh),
-        |perm AS (SELECT * FROM VALUES (0,1299721,104729),(1,1299827,104743),(2,1300021,104759),
-        |         (3,1300033,104761),(4,1300109,104773),(5,1300151,104779),(6,1300187,104789),
-        |         (7,1300201,104801),(8,1300247,104803),(9,1300289,104827),(10,1300303,104831),
-        |         (11,1300313,104849),(12,1300333,104851),(13,1300351,104869),(14,1300369,104879),
-        |         (15,1300387,104891) AS perm(i,a,b)),
-        |sig AS (SELECT doc_id, p.i, min(mod(p.a*hv.hv + p.b, 2147483647)) AS mh
-        |        FROM hv CROSS JOIN perm p GROUP BY 1,2),
-        |bk AS (SELECT doc_id, cast(i div 4 AS BIGINT) AS band,
-        |              md5(listagg(cast(mh AS STRING), ',') WITHIN GROUP (ORDER BY i)) AS bkey
-        |       FROM sig GROUP BY doc_id, cast(i div 4 AS BIGINT)),
-        |cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-        |         FROM bk x JOIN bk y ON x.band = y.band AND x.bkey = y.bkey AND x.doc_id < y.doc_id),
-        |dec AS (SELECT jac.a, jac.b, least(cast(jac.jac_bp div 1000 AS BIGINT), cast(9 AS BIGINT)) AS decile,
-        |               CASE WHEN cand.a IS NULL THEN 0 ELSE 1 END AS caught
-        |        FROM jac LEFT JOIN cand ON cand.a = jac.a AND cand.b = jac.b),
-        |g AS (SELECT decile, cast(count(*) AS BIGINT) AS n_pairs,
-        |             cast(sum(caught) AS BIGINT) AS caught FROM dec GROUP BY 1),
-        |th AS (SELECT decile, n_pairs, caught,
-        |              cast(decile * 1000 + 500 AS DOUBLE) / 10000.0 AS s FROM g),
-        |l1 AS (SELECT *, s*s AS s2 FROM th),
-        |l2 AS (SELECT *, s2*s2 AS s4 FROM l1),
-        |l3 AS (SELECT *, (1.0 - s4)*(1.0 - s4) AS y2 FROM l2),
-        |l4 AS (SELECT *, y2*y2 AS y4 FROM l3)
-        |SELECT decile AS jac_decile, n_pairs, caught,
-        |       cast(caught * 10000 div n_pairs AS BIGINT) AS recall_bp,
-        |       cast(round((1.0 - y4) * 10000) AS BIGINT) AS theory_bp
-        |FROM l4 ORDER BY jac_decile""".stripMargin,
       """WITH w AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
         |sh AS (SELECT doc_id, unnest(list_distinct([array_to_string(w[i:i+2],' ') FOR i IN range(1, len(w)-1)])) AS sh
         |       FROM w WHERE len(w) >= 3),
@@ -9381,7 +7977,44 @@ object Queries {
         |SELECT decile AS jac_decile, n_pairs, caught,
         |       CAST(caught * 10000 // n_pairs AS BIGINT) AS recall_bp,
         |       CAST(round((1.0 - y4) * 10000) AS BIGINT) AS theory_bp
-        |FROM l4 ORDER BY jac_decile""".stripMargin),
+        |FROM l4 ORDER BY jac_decile""".stripMargin,
+      Hand("REPARTITION hint on the exploding join; shingles via transform/slice",
+      s"""WITH w AS (SELECT doc_id, split(text,' ') AS w FROM (SELECT /*+ REPARTITION($hintPar, doc_id) */ doc_id, text FROM documents)),
+        |sh AS (SELECT doc_id, explode(array_distinct(transform(sequence(1, size(w)-2), i -> concat_ws(' ', slice(w, i, 3))))) AS sh
+        |       FROM w WHERE size(w) >= 3),
+        |n AS (SELECT doc_id, cast(count(*) AS BIGINT) AS n FROM sh GROUP BY 1),
+        |j AS (SELECT a.doc_id AS a, b.doc_id AS b, cast(count(*) AS BIGINT) AS c
+        |      FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2),
+        |jac AS (SELECT j.a, j.b, cast(j.c * 10000 div (na.n + nb.n - j.c) AS BIGINT) AS jac_bp
+        |        FROM j JOIN n na ON na.doc_id = j.a JOIN n nb ON nb.doc_id = j.b),
+        |hv AS (SELECT doc_id, cast(conv(substr(md5(sh),1,8),16,10) AS BIGINT) AS hv FROM sh),
+        |perm AS (SELECT * FROM VALUES (0,1299721,104729),(1,1299827,104743),(2,1300021,104759),
+        |         (3,1300033,104761),(4,1300109,104773),(5,1300151,104779),(6,1300187,104789),
+        |         (7,1300201,104801),(8,1300247,104803),(9,1300289,104827),(10,1300303,104831),
+        |         (11,1300313,104849),(12,1300333,104851),(13,1300351,104869),(14,1300369,104879),
+        |         (15,1300387,104891) AS perm(i,a,b)),
+        |sig AS (SELECT doc_id, p.i, min(mod(p.a*hv.hv + p.b, 2147483647)) AS mh
+        |        FROM hv CROSS JOIN perm p GROUP BY 1,2),
+        |bk AS (SELECT doc_id, cast(i div 4 AS BIGINT) AS band,
+        |              md5(listagg(cast(mh AS STRING), ',') WITHIN GROUP (ORDER BY i)) AS bkey
+        |       FROM sig GROUP BY doc_id, cast(i div 4 AS BIGINT)),
+        |cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
+        |         FROM bk x JOIN bk y ON x.band = y.band AND x.bkey = y.bkey AND x.doc_id < y.doc_id),
+        |dec AS (SELECT jac.a, jac.b, least(cast(jac.jac_bp div 1000 AS BIGINT), cast(9 AS BIGINT)) AS decile,
+        |               CASE WHEN cand.a IS NULL THEN 0 ELSE 1 END AS caught
+        |        FROM jac LEFT JOIN cand ON cand.a = jac.a AND cand.b = jac.b),
+        |g AS (SELECT decile, cast(count(*) AS BIGINT) AS n_pairs,
+        |             cast(sum(caught) AS BIGINT) AS caught FROM dec GROUP BY 1),
+        |th AS (SELECT decile, n_pairs, caught,
+        |              cast(decile * 1000 + 500 AS DOUBLE) / 10000.0 AS s FROM g),
+        |l1 AS (SELECT *, s*s AS s2 FROM th),
+        |l2 AS (SELECT *, s2*s2 AS s4 FROM l1),
+        |l3 AS (SELECT *, (1.0 - s4)*(1.0 - s4) AS y2 FROM l2),
+        |l4 AS (SELECT *, y2*y2 AS y4 FROM l3)
+        |SELECT decile AS jac_decile, n_pairs, caught,
+        |       cast(caught * 10000 div n_pairs AS BIGINT) AS recall_bp,
+        |       cast(round((1.0 - y4) * 10000) AS BIGINT) AS theory_bp
+        |FROM l4 ORDER BY jac_decile""".stripMargin)),
 
     // Top principal component by integer power iteration (r17b): the
     // embedding-spectrum screen behind x354's anisotropy number —
@@ -9400,30 +8033,6 @@ object Queries {
     // Scale: covariance is a (dim × dim)-keyed agg — index-sized
     // state; iterations touch 64×64 rows.
     q("x387_top_pc_power",
-      """WITH q AS (SELECT vec_id, transform(embedding, x -> cast(round(cast(x AS DOUBLE)*10000) AS BIGINT)) AS qv FROM embeddings),
-        |d AS (SELECT vec_id, i, element_at(qv, i) AS val FROM (SELECT vec_id, qv, explode(sequence(1, 64)) AS i FROM q)),
-        |m AS (SELECT i, cast(cast(sum(val + 10000) AS BIGINT) div count(*) AS BIGINT) - 10000 AS mv FROM d GROUP BY 1),
-        |c AS (SELECT d.vec_id, d.i, cast((d.val - m.mv + 20000) div 200 AS BIGINT) - 100 AS cv FROM d JOIN m ON m.i = d.i),
-        |cov AS (SELECT a.i AS i, b.i AS j, cast(sum(a.cv * b.cv) AS BIGINT) AS s
-        |        FROM c a JOIN c b ON a.vec_id = b.vec_id GROUP BY 1, 2),
-        |v0 AS (SELECT i, cast(1000 AS BIGINT) AS w FROM m),
-        |p1 AS (SELECT cov.i, cast(sum(cov.s * v0.w) AS BIGINT) AS pw FROM cov JOIN v0 ON v0.i = cov.j GROUP BY 1),
-        |n1 AS (SELECT cast(max(abs(pw)) div 1000 + 1 AS BIGINT) AS dv, cast(max(abs(pw)) AS BIGINT) AS mx FROM p1),
-        |v1 AS (SELECT i, cast((pw + n1.mx) div n1.dv - n1.mx div n1.dv AS BIGINT) AS w FROM p1 CROSS JOIN n1),
-        |p2 AS (SELECT cov.i, cast(sum(cov.s * v1.w) AS BIGINT) AS pw FROM cov JOIN v1 ON v1.i = cov.j GROUP BY 1),
-        |n2 AS (SELECT cast(max(abs(pw)) div 1000 + 1 AS BIGINT) AS dv, cast(max(abs(pw)) AS BIGINT) AS mx FROM p2),
-        |v2 AS (SELECT i, cast((pw + n2.mx) div n2.dv - n2.mx div n2.dv AS BIGINT) AS w FROM p2 CROSS JOIN n2),
-        |p3 AS (SELECT cov.i, cast(sum(cov.s * v2.w) AS BIGINT) AS pw FROM cov JOIN v2 ON v2.i = cov.j GROUP BY 1),
-        |n3 AS (SELECT cast(max(abs(pw)) div 1000 + 1 AS BIGINT) AS dv, cast(max(abs(pw)) AS BIGINT) AS mx FROM p3),
-        |v3 AS (SELECT i, cast((pw + n3.mx) div n3.dv - n3.mx div n3.dv AS BIGINT) AS w FROM p3 CROSS JOIN n3),
-        |p4 AS (SELECT cov.i, cast(sum(cov.s * v3.w) AS BIGINT) AS pw FROM cov JOIN v3 ON v3.i = cov.j GROUP BY 1),
-        |n4 AS (SELECT cast(max(abs(pw)) AS BIGINT) AS mx FROM p4),
-        |m3 AS (SELECT cast(max(abs(w)) AS BIGINT) AS mw FROM v3),
-        |lam AS (SELECT cast(n4.mx div m3.mw AS BIGINT) AS lambda FROM n4 CROSS JOIN m3),
-        |tr AS (SELECT cast(sum(s) AS BIGINT) AS trace FROM cov WHERE i = j)
-        |SELECT cast(v3.i AS BIGINT) AS dim, v3.w AS weight, lam.lambda AS lambda,
-        |       cast(lam.lambda * 10000 div tr.trace AS BIGINT) AS explained_bp
-        |FROM v3 CROSS JOIN lam CROSS JOIN tr ORDER BY dim""".stripMargin,
       """WITH q AS (SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT)) AS qv FROM embeddings),
         |d AS (SELECT vec_id, i, qv[i] AS val FROM (SELECT vec_id, qv, unnest(generate_series(1, 64)) AS i FROM q)),
         |m AS (SELECT i, CAST(CAST(sum(val + 10000) AS BIGINT) // count(*) AS BIGINT) - 10000 AS mv FROM d GROUP BY 1),
@@ -9458,25 +8067,6 @@ object Queries {
     // tokenization. Scale: two edge-hash censuses + flag joins, text
     // never shuffles.
     q("x388_template_strip_savings",
-      """WITH w AS (SELECT doc_id, source, split(text,' ') AS w FROM documents),
-        |base AS (SELECT source, cast(count(*) AS BIGINT) AS docs,
-        |                cast(sum(size(w)) AS BIGINT) AS toks FROM w GROUP BY 1),
-        |pe AS (SELECT doc_id, source, cast(size(w) AS BIGINT) AS n,
-        |              md5(concat_ws(' ', slice(w, 1, 8))) AS ph,
-        |              md5(concat_ws(' ', slice(w, -8, 8))) AS sh
-        |       FROM w WHERE size(w) >= 8),
-        |p2 AS (SELECT ph, cast(1 AS BIGINT) AS pf FROM pe GROUP BY ph HAVING count(*) >= 2),
-        |s2 AS (SELECT sh, cast(1 AS BIGINT) AS sf FROM pe GROUP BY sh HAVING count(*) >= 2),
-        |r AS (SELECT pe.source,
-        |             least(pe.n, coalesce(p2.pf, cast(0 AS BIGINT))*8 + coalesce(s2.sf, cast(0 AS BIGINT))*8) AS removed
-        |      FROM pe LEFT JOIN p2 ON p2.ph = pe.ph LEFT JOIN s2 ON s2.sh = pe.sh),
-        |g AS (SELECT source, cast(sum(CASE WHEN removed > 0 THEN 1 ELSE 0 END) AS BIGINT) AS docs_stripped,
-        |             cast(sum(removed) AS BIGINT) AS removed_toks FROM r GROUP BY 1)
-        |SELECT base.source AS source, base.docs AS docs, base.toks AS toks,
-        |       coalesce(g.docs_stripped, cast(0 AS BIGINT)) AS docs_stripped,
-        |       coalesce(g.removed_toks, cast(0 AS BIGINT)) AS removed_toks,
-        |       cast(coalesce(g.removed_toks, cast(0 AS BIGINT)) * 10000 div base.toks AS BIGINT) AS savings_bp
-        |FROM base LEFT JOIN g ON g.source = base.source ORDER BY source""".stripMargin,
       """WITH w AS (SELECT doc_id, source, string_split(text,' ') AS w FROM documents),
         |base AS (SELECT source, CAST(count(*) AS BIGINT) AS docs,
         |                CAST(sum(len(w)) AS BIGINT) AS toks FROM w GROUP BY 1),
@@ -9495,7 +8085,27 @@ object Queries {
         |       coalesce(g.docs_stripped, CAST(0 AS BIGINT)) AS docs_stripped,
         |       coalesce(g.removed_toks, CAST(0 AS BIGINT)) AS removed_toks,
         |       CAST(coalesce(g.removed_toks, CAST(0 AS BIGINT)) * 10000 // base.toks AS BIGINT) AS savings_bp
-        |FROM base LEFT JOIN g ON g.source = base.source ORDER BY source""".stripMargin),
+        |FROM base LEFT JOIN g ON g.source = base.source ORDER BY source""".stripMargin,
+      Hand("list slice w[a:b]: Spark takes slice(w, start, length)",
+      """WITH w AS (SELECT doc_id, source, split(text,' ') AS w FROM documents),
+        |base AS (SELECT source, cast(count(*) AS BIGINT) AS docs,
+        |                cast(sum(size(w)) AS BIGINT) AS toks FROM w GROUP BY 1),
+        |pe AS (SELECT doc_id, source, cast(size(w) AS BIGINT) AS n,
+        |              md5(concat_ws(' ', slice(w, 1, 8))) AS ph,
+        |              md5(concat_ws(' ', slice(w, -8, 8))) AS sh
+        |       FROM w WHERE size(w) >= 8),
+        |p2 AS (SELECT ph, cast(1 AS BIGINT) AS pf FROM pe GROUP BY ph HAVING count(*) >= 2),
+        |s2 AS (SELECT sh, cast(1 AS BIGINT) AS sf FROM pe GROUP BY sh HAVING count(*) >= 2),
+        |r AS (SELECT pe.source,
+        |             least(pe.n, coalesce(p2.pf, cast(0 AS BIGINT))*8 + coalesce(s2.sf, cast(0 AS BIGINT))*8) AS removed
+        |      FROM pe LEFT JOIN p2 ON p2.ph = pe.ph LEFT JOIN s2 ON s2.sh = pe.sh),
+        |g AS (SELECT source, cast(sum(CASE WHEN removed > 0 THEN 1 ELSE 0 END) AS BIGINT) AS docs_stripped,
+        |             cast(sum(removed) AS BIGINT) AS removed_toks FROM r GROUP BY 1)
+        |SELECT base.source AS source, base.docs AS docs, base.toks AS toks,
+        |       coalesce(g.docs_stripped, cast(0 AS BIGINT)) AS docs_stripped,
+        |       coalesce(g.removed_toks, cast(0 AS BIGINT)) AS removed_toks,
+        |       cast(coalesce(g.removed_toks, cast(0 AS BIGINT)) * 10000 div base.toks AS BIGINT) AS savings_bp
+        |FROM base LEFT JOIN g ON g.source = base.source ORDER BY source""".stripMargin)),
 
     // Language-ID confusion matrix (r17b): the full predicted × true
     // matrix of x51's unigram naive-Bayes scorer (its arithmetic
@@ -9507,19 +8117,6 @@ object Queries {
     // (doc, candidate-language) agg over token joins — langs is a
     // small fixed set, so the cross join is a broadcast.
     q("x389_langid_confusion",
-      """WITH wt AS (SELECT doc_id, lang, explode(split(text,' ')) AS w FROM documents),
-        |counts AS (SELECT lang AS l, w, count(*) AS c FROM wt GROUP BY 1,2),
-        |tot AS (SELECT l, sum(c) AS tc FROM counts GROUP BY 1),
-        |dw AS (SELECT doc_id, lang, w, count(*) AS n FROM wt GROUP BY 1,2,3),
-        |sc AS (SELECT d.doc_id, d.lang AS true_lang, t.l AS cand,
-        |              sum(d.n * cast(floor(ln((coalesce(c.c,0)+1.0)/(t.tc+31.0))*1000000) AS BIGINT)) AS score
-        |       FROM dw d CROSS JOIN tot t LEFT JOIN counts c ON c.l = t.l AND c.w = d.w
-        |       GROUP BY 1,2,3),
-        |pred AS (SELECT doc_id, true_lang, cand,
-        |                row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, cand) AS rn
-        |         FROM sc)
-        |SELECT true_lang, cand AS pred_lang, cast(count(*) AS BIGINT) AS n
-        |FROM pred WHERE rn = 1 GROUP BY 1, 2 ORDER BY true_lang, pred_lang""".stripMargin,
       """WITH wt AS (SELECT doc_id, lang, unnest(string_split(text,' ')) AS w FROM documents),
         |counts AS (SELECT lang AS l, w, count(*) AS c FROM wt GROUP BY 1,2),
         |tot AS (SELECT l, sum(c) AS tc FROM counts GROUP BY 1),
@@ -9545,18 +8142,6 @@ object Queries {
     // join, no pairs (count(DISTINCT doc_id) ≥ 2 prices cross-doc
     // duplication without enumerating pairs).
     q("x390_dup_position_profile",
-      """WITH w AS (SELECT doc_id, split(text,' ') AS w FROM documents),
-        |win AS (SELECT doc_id, size(w) AS n, i, md5(concat_ws(' ', slice(w, i, 8))) AS h
-        |        FROM (SELECT doc_id, w, explode(sequence(1, size(w)-7)) AS i FROM w WHERE size(w) >= 8)),
-        |g AS (SELECT h FROM win GROUP BY h HAVING count(DISTINCT doc_id) >= 2),
-        |d AS (SELECT win.doc_id, win.n, win.i,
-        |             CASE WHEN g.h IS NULL THEN 0 ELSE 1 END AS dup
-        |      FROM win LEFT JOIN g ON g.h = win.h),
-        |p AS (SELECT least(cast(9 AS BIGINT), cast((i - 1) * 10 div greatest(n - 7, 1) AS BIGINT)) AS pos_decile, dup FROM d)
-        |SELECT pos_decile, cast(count(*) AS BIGINT) AS windows,
-        |       cast(sum(dup) AS BIGINT) AS duplicated,
-        |       cast(sum(dup) * 10000 div count(*) AS BIGINT) AS dup_bp
-        |FROM p GROUP BY 1 ORDER BY pos_decile""".stripMargin,
       """WITH w AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
         |win AS (SELECT doc_id, len(w) AS n, i, md5(array_to_string(w[i:i+7],' ')) AS h
         |        FROM (SELECT doc_id, w, unnest(generate_series(1, len(w)-7)) AS i FROM w WHERE len(w) >= 8)),
@@ -9568,7 +8153,20 @@ object Queries {
         |SELECT pos_decile, CAST(count(*) AS BIGINT) AS windows,
         |       CAST(sum(dup) AS BIGINT) AS duplicated,
         |       CAST(sum(dup) * 10000 // count(*) AS BIGINT) AS dup_bp
-        |FROM p GROUP BY 1 ORDER BY pos_decile""".stripMargin),
+        |FROM p GROUP BY 1 ORDER BY pos_decile""".stripMargin,
+      Hand("list slice w[a:b]: Spark takes slice(w, start, length)",
+      """WITH w AS (SELECT doc_id, split(text,' ') AS w FROM documents),
+        |win AS (SELECT doc_id, size(w) AS n, i, md5(concat_ws(' ', slice(w, i, 8))) AS h
+        |        FROM (SELECT doc_id, w, explode(sequence(1, size(w)-7)) AS i FROM w WHERE size(w) >= 8)),
+        |g AS (SELECT h FROM win GROUP BY h HAVING count(DISTINCT doc_id) >= 2),
+        |d AS (SELECT win.doc_id, win.n, win.i,
+        |             CASE WHEN g.h IS NULL THEN 0 ELSE 1 END AS dup
+        |      FROM win LEFT JOIN g ON g.h = win.h),
+        |p AS (SELECT least(cast(9 AS BIGINT), cast((i - 1) * 10 div greatest(n - 7, 1) AS BIGINT)) AS pos_decile, dup FROM d)
+        |SELECT pos_decile, cast(count(*) AS BIGINT) AS windows,
+        |       cast(sum(dup) AS BIGINT) AS duplicated,
+        |       cast(sum(dup) * 10000 div count(*) AS BIGINT) AS dup_bp
+        |FROM p GROUP BY 1 ORDER BY pos_decile""".stripMargin)),
 
     // Per-dimension variance spectrum (r17b): exact integer Σcv² per
     // embedding dimension on the ×10⁴ grid with its share of total
@@ -9578,16 +8176,6 @@ object Queries {
     // this is the axis-aligned spectrum that decides per-dim
     // treatments). Scale: one (dim)-keyed agg — 64 rows of state.
     q("x391_dim_variance_profile",
-      """WITH q AS (SELECT vec_id, transform(embedding, x -> cast(round(cast(x AS DOUBLE)*10000) AS BIGINT)) AS qv FROM embeddings),
-        |d AS (SELECT vec_id, i, element_at(qv, i) AS val FROM (SELECT vec_id, qv, explode(sequence(1, 64)) AS i FROM q)),
-        |m AS (SELECT i, cast(cast(sum(val + 10000) AS BIGINT) div count(*) AS BIGINT) - 10000 AS mv FROM d GROUP BY 1),
-        |v AS (SELECT d.i, cast(sum((d.val - m.mv)*(d.val - m.mv)) AS BIGINT) AS ss
-        |      FROM d JOIN m ON m.i = d.i GROUP BY 1),
-        |t AS (SELECT cast(sum(ss) AS BIGINT) AS tot FROM v)
-        |SELECT cast(v.i AS BIGINT) AS dim, v.ss AS var_sum,
-        |       cast(v.ss * 10000 div t.tot AS BIGINT) AS share_bp,
-        |       cast(row_number() OVER (ORDER BY v.ss DESC, v.i) AS BIGINT) AS var_rank
-        |FROM v CROSS JOIN t ORDER BY dim""".stripMargin,
       """WITH q AS (SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT)) AS qv FROM embeddings),
         |d AS (SELECT vec_id, i, qv[i] AS val FROM (SELECT vec_id, qv, unnest(generate_series(1, 64)) AS i FROM q)),
         |m AS (SELECT i, CAST(CAST(sum(val + 10000) AS BIGINT) // count(*) AS BIGINT) - 10000 AS mv FROM d GROUP BY 1),
@@ -9611,40 +8199,6 @@ object Queries {
     // CONSTRUCTION (the self-check row). Scale: assignment and dots
     // are query-broadcast × corpus passes — linear, no self-join.
     q("x392_ivf_recall_curve",
-      """WITH q AS (SELECT vec_id, transform(embedding, x -> cast(round(cast(x AS DOUBLE)*10000) AS BIGINT)) AS qv FROM embeddings),
-        |d AS (SELECT vec_id, i, element_at(qv, i) AS val FROM (SELECT vec_id, qv, explode(sequence(1, 64)) AS i FROM q)),
-        |qd AS (SELECT * FROM d WHERE vec_id < 8),
-        |ce AS (SELECT * FROM d WHERE vec_id >= 8 AND vec_id < 16),
-        |co AS (SELECT * FROM d WHERE vec_id >= 16),
-        |asg AS (SELECT vec_id, cid FROM (
-        |  SELECT c.vec_id, ctr.vec_id AS cid,
-        |         row_number() OVER (PARTITION BY c.vec_id ORDER BY sum((c.val - ctr.val)*(c.val - ctr.val)), ctr.vec_id) AS rn
-        |  FROM co c JOIN ce ctr ON ctr.i = c.i GROUP BY c.vec_id, ctr.vec_id) WHERE rn = 1),
-        |qc AS (SELECT qid, cid, rn FROM (
-        |  SELECT q.vec_id AS qid, ctr.vec_id AS cid,
-        |         row_number() OVER (PARTITION BY q.vec_id ORDER BY sum((q.val - ctr.val)*(q.val - ctr.val)), ctr.vec_id) AS rn
-        |  FROM qd q JOIN ce ctr ON ctr.i = q.i GROUP BY q.vec_id, ctr.vec_id)),
-        |dots AS (SELECT q.vec_id AS qid, c.vec_id AS vid, cast(sum(q.val * c.val) AS BIGINT) AS dot
-        |         FROM qd q JOIN co c ON c.i = q.i GROUP BY 1, 2),
-        |rex AS (SELECT qid, vid FROM (
-        |  SELECT qid, vid, row_number() OVER (PARTITION BY qid ORDER BY dot DESC, vid) AS rn FROM dots) WHERE rn <= 10),
-        |np AS (SELECT * FROM VALUES (1),(2),(4),(8) AS np(p)),
-        |cand AS (SELECT np.p, dots.qid, dots.vid, dots.dot
-        |         FROM dots JOIN asg ON asg.vec_id = dots.vid
-        |         JOIN qc ON qc.qid = dots.qid AND qc.cid = asg.cid
-        |         CROSS JOIN np WHERE qc.rn <= np.p),
-        |rc AS (SELECT p, qid, vid FROM (
-        |  SELECT p, qid, vid, row_number() OVER (PARTITION BY p, qid ORDER BY dot DESC, vid) AS rn FROM cand) WHERE rn <= 10),
-        |ov AS (SELECT rc.p, rc.qid, cast(count(*) AS BIGINT) AS hit
-        |       FROM rc JOIN rex ON rex.qid = rc.qid AND rex.vid = rc.vid GROUP BY 1, 2),
-        |u AS (SELECT np.p, qv.vec_id AS qid FROM np
-        |      CROSS JOIN (SELECT DISTINCT vec_id FROM embeddings WHERE vec_id < 8) qv),
-        |f AS (SELECT u.p, u.qid, coalesce(ov.hit, cast(0 AS BIGINT)) AS hit
-        |      FROM u LEFT JOIN ov ON ov.p = u.p AND ov.qid = u.qid)
-        |SELECT cast(p AS BIGINT) AS nprobe, cast(count(*) AS BIGINT) AS queries,
-        |       cast(sum(hit) * 10000 div (count(*) * 10) AS BIGINT) AS mean_recall_bp,
-        |       cast(min(hit) AS BIGINT) AS min_recall10
-        |FROM f GROUP BY p ORDER BY nprobe""".stripMargin,
       """WITH q AS (SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT)) AS qv FROM embeddings),
         |d AS (SELECT vec_id, i, qv[i] AS val FROM (SELECT vec_id, qv, unnest(generate_series(1, 64)) AS i FROM q)),
         |qd AS (SELECT * FROM d WHERE vec_id < 8),
@@ -9691,16 +8245,6 @@ object Queries {
     // between padding on short docs and truncation on long ones).
     // Scale: one token census crossed with a 4-row broadcast ladder.
     q("x393_context_ladder",
-      """WITH t AS (SELECT cast(size(split(text,' ')) AS BIGINT) AS n FROM documents),
-        |g AS (SELECT cast(count(*) AS BIGINT) AS docs, cast(sum(n) AS BIGINT) AS toks FROM t),
-        |l AS (SELECT explode(array(32, 48, 64, 128)) AS ctx)
-        |SELECT cast(l.ctx AS BIGINT) AS ctx_limit,
-        |       cast(sum(CASE WHEN t.n > l.ctx THEN 1 ELSE 0 END) AS BIGINT) AS docs_over,
-        |       cast(sum(greatest(t.n - l.ctx, cast(0 AS BIGINT))) AS BIGINT) AS trunc_toks,
-        |       cast(sum(CASE WHEN t.n > l.ctx THEN 1 ELSE 0 END) * 10000 div max(g.docs) AS BIGINT) AS over_bp,
-        |       cast(sum(greatest(t.n - l.ctx, cast(0 AS BIGINT))) * 10000 div max(g.toks) AS BIGINT) AS trunc_bp
-        |FROM t CROSS JOIN l CROSS JOIN g
-        |GROUP BY l.ctx ORDER BY ctx_limit""".stripMargin,
       """WITH t AS (SELECT CAST(len(string_split(text,' ')) AS BIGINT) AS n FROM documents),
         |g AS (SELECT CAST(count(*) AS BIGINT) AS docs, CAST(sum(n) AS BIGINT) AS toks FROM t),
         |l AS (SELECT unnest([32, 48, 64, 128]) AS ctx)
@@ -9721,22 +8265,6 @@ object Queries {
     // IVF analog of x384's reducer skew). Scale: assignment is a
     // center-broadcast × corpus pass; the census is 8 rows.
     q("x394_ivf_list_balance",
-      """WITH q AS (SELECT vec_id, transform(embedding, x -> cast(round(cast(x AS DOUBLE)*10000) AS BIGINT)) AS qv FROM embeddings),
-        |d AS (SELECT vec_id, i, element_at(qv, i) AS val FROM (SELECT vec_id, qv, explode(sequence(1, 64)) AS i FROM q)),
-        |ce AS (SELECT * FROM d WHERE vec_id >= 8 AND vec_id < 16),
-        |co AS (SELECT * FROM d WHERE vec_id >= 16),
-        |asg AS (SELECT vec_id, cid FROM (
-        |  SELECT c.vec_id, ctr.vec_id AS cid,
-        |         row_number() OVER (PARTITION BY c.vec_id ORDER BY sum((c.val - ctr.val)*(c.val - ctr.val)), ctr.vec_id) AS rn
-        |  FROM co c JOIN ce ctr ON ctr.i = c.i GROUP BY c.vec_id, ctr.vec_id) WHERE rn = 1),
-        |b AS (SELECT cid, cast(count(*) AS BIGINT) AS n FROM asg GROUP BY 1),
-        |t AS (SELECT cast(sum(n) AS BIGINT) AS tot FROM b),
-        |k AS (SELECT DISTINCT vec_id AS cid FROM embeddings WHERE vec_id >= 8 AND vec_id < 16)
-        |SELECT cast(k.cid AS BIGINT) AS center,
-        |       coalesce(b.n, cast(0 AS BIGINT)) AS n_vecs,
-        |       cast(coalesce(b.n, cast(0 AS BIGINT)) * 10000 div t.tot AS BIGINT) AS share_bp,
-        |       cast((coalesce(b.n, cast(0 AS BIGINT)) * 8 - t.tot) * (coalesce(b.n, cast(0 AS BIGINT)) * 8 - t.tot) AS BIGINT) AS deviation64
-        |FROM k LEFT JOIN b ON b.cid = k.cid CROSS JOIN t ORDER BY center""".stripMargin,
       """WITH q AS (SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT)) AS qv FROM embeddings),
         |d AS (SELECT vec_id, i, qv[i] AS val FROM (SELECT vec_id, qv, unnest(generate_series(1, 64)) AS i FROM q)),
         |ce AS (SELECT * FROM d WHERE vec_id >= 8 AND vec_id < 16),
@@ -9764,30 +8292,6 @@ object Queries {
     // half-trained models). Scale: token joins against the broadcast
     // language table, halves keyed per doc — no pairs.
     q("x395_code_switch_screen",
-      """WITH w AS (SELECT doc_id, source, split(text,' ') AS w FROM documents),
-        |wt AS (SELECT doc_id, source, cast(size(w) AS BIGINT) AS n, i, element_at(w, i) AS tok
-        |       FROM (SELECT doc_id, source, w, explode(sequence(1, size(w))) AS i FROM w)),
-        |full0 AS (SELECT d.lang, x.tok, count(*) AS c
-        |          FROM (SELECT doc_id, lang FROM documents) d
-        |          JOIN (SELECT doc_id, tok FROM wt) x ON x.doc_id = d.doc_id GROUP BY 1, 2),
-        |tot AS (SELECT lang AS l, sum(c) AS tc FROM full0 GROUP BY 1),
-        |h AS (SELECT doc_id, source, CASE WHEN i * 2 <= n THEN 0 ELSE 1 END AS half, tok FROM wt),
-        |hw AS (SELECT doc_id, source, half, tok, count(*) AS n FROM h GROUP BY 1, 2, 3, 4),
-        |sc AS (SELECT hw.doc_id, hw.source, hw.half, t.l AS cand,
-        |              sum(hw.n * cast(floor(ln((coalesce(f.c,0)+1.0)/(t.tc+31.0))*1000000) AS BIGINT)) AS score
-        |       FROM hw CROSS JOIN tot t
-        |       LEFT JOIN full0 f ON f.lang = t.l AND f.tok = hw.tok
-        |       GROUP BY 1, 2, 3, 4),
-        |pred AS (SELECT doc_id, source, half, cand FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY doc_id, half ORDER BY score DESC, cand) AS rn FROM sc) WHERE rn = 1),
-        |dd AS (SELECT p0.doc_id, p0.source,
-        |              CASE WHEN p0.cand <> p1.cand THEN 1 ELSE 0 END AS switched
-        |       FROM (SELECT * FROM pred WHERE half = 0) p0
-        |       JOIN (SELECT * FROM pred WHERE half = 1) p1 ON p1.doc_id = p0.doc_id)
-        |SELECT source, cast(count(*) AS BIGINT) AS docs,
-        |       cast(sum(switched) AS BIGINT) AS switched,
-        |       cast(sum(switched) * 10000 div count(*) AS BIGINT) AS switch_bp
-        |FROM dd GROUP BY 1 ORDER BY source""".stripMargin,
       """WITH w AS (SELECT doc_id, source, string_split(text,' ') AS w FROM documents),
         |wt AS (SELECT doc_id, source, CAST(len(w) AS BIGINT) AS n, i, w[i] AS tok
         |       FROM (SELECT doc_id, source, w, unnest(generate_series(1, len(w))) AS i FROM w)),
@@ -9814,13 +8318,11 @@ object Queries {
         |FROM dd GROUP BY 1 ORDER BY source""".stripMargin)
   )
 
-  /** Dual-dialect generator for the x340 unrolled 3-round k-means
-    * train (one text template, two dialects — the divergence surface
-    * between the engine SQL and the oracle SQL is exactly the dialect
-    * token table below, so the three structurally-identical round
-    * blocks can never drift apart the way hand-copied SQL can; x329's
-    * permValues interpolation is the precedent for generated contract
-    * text). Semantics per round r (x333's arithmetic verbatim):
+  /** The x340 unrolled 3-round k-means train, generated so the three
+    * structurally-identical round blocks can never drift apart the way
+    * hand-copied SQL can (x329's permValues interpolation is the
+    * precedent for generated contract text). Semantics per round r
+    * (x333's arithmetic verbatim):
     * c_r = integer-mean centroids from assignment a_{r-1}
     * (a_0 = assignment under the k-lowest-vec_id initial centroids),
     * a_r = nearest-centroid reassignment under c_r (ties → lowest cid),
@@ -9828,21 +8330,13 @@ object Queries {
     * Output: (rk, cluster_id, n, inertia) — one block per round, the
     * convergence trace a training loop reads. The iterative scale form
     * is llm/KMeans.scala (x341, same oracle — the x148/x149 policy). */
-  private def kmeansTrain3(sparkDialect: Boolean): String = {
-    val div = if (sparkDialect) "div" else "//"
-    val qv =
-      if (sparkDialect)
-        "transform(embedding, x -> cast(round(cast(x AS DOUBLE)*10000) AS BIGINT))"
-      else
-        "list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT))"
+  private def kmeansTrain3: String = {
+    val qv = "list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT))"
     val dimRows =
-      if (sparkDialect)
-        "SELECT vec_id, i AS dim, element_at(qv, i) AS val FROM (SELECT vec_id, qv, explode(sequence(1, 64)) AS i FROM q)"
-      else
-        "SELECT vec_id, i AS dim, qv[i] AS val FROM (SELECT vec_id, qv, unnest(generate_series(1, 64)) AS i FROM q)"
+      "SELECT vec_id, i AS dim, qv[i] AS val FROM (SELECT vec_id, qv, unnest(generate_series(1, 64)) AS i FROM q)"
     def round(r: Int) =
       s"""c$r AS (SELECT a.cid, p.dim,
-         |         cast(cast(sum(p.val + 10000) AS BIGINT) $div count(*) AS BIGINT) - 10000 AS cval
+         |         cast(cast(sum(p.val + 10000) AS BIGINT) // count(*) AS BIGINT) - 10000 AS cval
          |       FROM a${r - 1} a JOIN pts p ON p.vec_id = a.vec_id GROUP BY 1, 2),
          |d$r AS (SELECT p.vec_id, c.cid, cast(sum((p.val - c.cval)*(p.val - c.cval)) AS BIGINT) AS dist
          |       FROM pts p JOIN c$r c ON p.dim = c.dim GROUP BY 1, 2),
@@ -9875,8 +8369,8 @@ object Queries {
        |) ORDER BY rk, cluster_id""".stripMargin
   }
 
-  /** name → Spark SQL, insertion-ordered. */
-  val sparkSql: ListMap[String, String] =
+  /** name → Spark SQL, insertion-ordered (derives every text). */
+  lazy val sparkSql: ListMap[String, String] =
     ListMap(all.map(x => x.name -> x.spark): _*)
 
   /** name → DuckDB oracle SQL, insertion-ordered. */

@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
+import scala.collection.immutable.ListMap
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * Every entry in `queries` is a declared operator from SURVEY.md §2; each
@@ -21,9 +22,9 @@ object SparkEntry {
     * including inside Bench's per-rep lookups and Verify's per-query
     * loop — for a value that never changes after class load. */
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
-    Queries.sparkSql.map { case (name, sql) =>
-      name -> ((spark: SparkSession, dir: String) => Catalog.sql(spark, dir, sql))
-    } ++ Extensions.queries
+    ListMap(Queries.all.map { q =>
+      q.name -> ((spark: SparkSession, dir: String) => Catalog.sql(spark, dir, q.spark))
+    }: _*) ++ Extensions.queries
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

@@ -27,7 +27,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * Why an Expression: Spark evaluates HOF lambda bodies INTERPRETED per
   * element, so the HOF form paid numHashes × |shingles| boxed
   * multiply-mod closure dispatches per row — measured at ~1.7 s per full
-  * corpus pass at sf0.1 (Scratch sigkernel), a visible slice of every
+  * corpus pass at sf0.1, a visible slice of every
   * MinHash entry (x52/x74/x89/x118/x177). This loop is numHashes ×
   * |shingles| primitive ops. The 2⁵³ exactness invariant is inherited:
   * hv < 2³² (both hash families) and portablePerms' a < 2²¹ keep

@@ -49,17 +49,16 @@ object Dedup {
     * The previous form — element i = min of xxhash64(s, i) — re-hashed
     * every shingle STRING per signature slot: 64 string hashes per
     * shingle, vs one here plus 64 integer affine transforms. Honest
-    * measurement (Scratch `sigkernel`, fresh JVM, 3 alternating reps at
-    * sf0.1): kernel 1.1–1.7 s affine vs 1.5–2.0 s per-slot — ~1.2–1.6×,
-    * NOT the 46× an earlier in-battery timing suggested (that was cache
-    * starvation across the battery, see the `t()` note in Scratch). The
-    * win is asymptotic, not local: string-hash work drops 64× per
-    * shingle byte, and this corpus's ~short synthetic shingles make the
-    * kernel scheduling-bound; at real KB-document scale the per-slot
-    * form's cost grows with text volume while the affine form's stays
-    * one pass (SCALE.md §4). The 31-bit truncation costs ~n²/2^32
-    * birthday collisions across distinct shingles — noise relative to
-    * the LSH candidate-probability curve. Hash array let-bound
+    * measurement (fresh JVM, 3 alternating reps at sf0.1): kernel
+    * 1.1–1.7 s affine vs 1.5–2.0 s per-slot — ~1.2–1.6×, NOT the 46× an
+    * earlier in-battery timing suggested (that was cache starvation
+    * across the battery). The win is asymptotic, not local: string-hash
+    * work drops 64× per shingle byte, and this corpus's ~short synthetic
+    * shingles make the kernel scheduling-bound; at real KB-document
+    * scale the per-slot form's cost grows with text volume while the
+    * affine form's stays one pass (SCALE.md §4). The 31-bit truncation
+    * costs ~n²/2^32 birthday collisions across distinct shingles — noise
+    * relative to the LSH candidate-probability curve. Hash array let-bound
     * ([[Cols.bind]]) so it is built once per row. */
   def minHashSignature(shs: Column, numHashes: Int): Column =
     affineSignature(shs, portablePerms(numHashes), HashFamily.Production)
@@ -75,8 +74,8 @@ object Dedup {
     * `perms` is the canonical [[portablePerms]] table (every repo call
     * site) — Spark runs HOF lambda bodies interpreted per element, so
     * the composition below paid numHashes × |shingles| boxed closure
-    * dispatches per row (~1.7 s per sf0.1 corpus pass, Scratch
-    * sigkernel). The HOF form remains the executable specification
+    * dispatches per row (~1.7 s per sf0.1 corpus pass). The HOF form
+    * remains the executable specification
     * ([[affineSignatureHof]], LlmOpsSpec holds the two bit-identical,
     * nulls included). */
   def affineSignature(shs: Column, perms: Seq[(Long, Long)],

@@ -261,7 +261,7 @@ object Fingerprint {
   /** The gate's decision for `docs` under the portable family,
     * recomputed from the same statistics [[containmentPortable]] would
     * use — a diagnostic surface for soak modes that record WHICH kernel
-    * a corpus takes (Scratch winnowdiverse); no mutable state. */
+    * a corpus takes; no mutable state. */
   private[graft] def wouldUseDensePortable(docs: DataFrame,
                                            minContainBp: Long,
                                            maxDf: Int = Int.MaxValue): Boolean = {

@@ -71,7 +71,7 @@ object PageRank {
       // materialize off the cached relations, then release them — the
       // operator owns its persists (Graph.triangles discipline; ADVICE
       // r5 #4: leaving them cached is the cache-accumulation failure
-      // mode Bench/Scratch otherwise paper over with clearCache())
+      // mode Bench otherwise papers over with clearCache())
       p.localCheckpoint(true)
     } finally { ew.unpersist(); nds.unpersist() }
   }

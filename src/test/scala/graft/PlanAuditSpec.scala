@@ -413,20 +413,37 @@ class PlanAuditSpec extends SparkSpec {
   // ---- r18 optimization-round guards (VERDICT r17 #1/#3/#4/#5) ---------
 
   test("r18: the md5-prefix hash composition is fused in every hot SQL site") {
-    // FuseMd5Prefix32 must route the per-row conv(substr(md5)) chain
-    // through the codegen'd kernel in the queries VERDICT r17 priced:
-    // x80 (the 63.7 s / 21%-of-the-xops-wall case), x284, x363, x74, x79
-    // optimized-plan assertions: the rewrite is an optimizer rule, and
-    // the compact PHYSICAL tree string elides aggregate result
-    // projections (x79's fused hash lives in one)
-    Seq("x80_winnowing_sql", "x284_negative_sampling",
-        "x363_kmv_source_jaccard", "x74_minhash_sql", "x79_simhash_sql")
-      .foreach { n =>
-        val p = SparkEntry.queries(n)(spark, sf0001)
-          .queryExecution.optimizedPlan.toString
-        assert(p.contains("md5_prefix32"), s"$n: hash not fused:\n${p.take(1500)}")
-        assert(!p.contains("conv("), s"$n: unfused conv survived:\n${p.take(1500)}")
+    // FuseMd5Prefix32 must route the per-row conv(substr(md5(s), 1, 8), 16, 10)
+    // chain through the codegen'd kernel. Driven by the inventory: every
+    // entry whose Spark text calls md5 and whose analyzed plan spells the
+    // chain; the pinned count fails if a chain split across projections
+    // drops an entry out of the inventory. Optimized-plan assertions: the
+    // rewrite is an optimizer rule, and the compact PHYSICAL tree string
+    // elides aggregate result projections (x79's fused hash lives in one)
+    import org.apache.spark.sql.catalyst.expressions.{Conv, Literal, Md5, Substring}
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    def chains(p: LogicalPlan) = p.collectWithSubqueries { case n =>
+      n.expressions.flatMap(_.collect {
+        case c @ Conv(Substring(Md5(_), Literal(1, _), Literal(8, _)), _, _, _) => c })
+    }.flatten
+    // entries whose plan also holds a conv( the rule is not meant to fuse
+    val otherConv = Map(
+      "x307_bloom_fpr" -> "its second and third hashes slice md5 at offsets 9 and 17")
+    Catalog.ensure(spark, sf0001)
+    val covered = Queries.all.filter(_.spark.contains("md5(")).flatMap { q =>
+      val qe = spark.sql(q.spark).queryExecution
+      if (chains(qe.analyzed).isEmpty) None
+      else {
+        val p = qe.optimizedPlan
+        assert(p.toString.contains("md5_prefix32"), s"${q.name}: hash not fused:\n${p.toString.take(1500)}")
+        assert(chains(p).isEmpty, s"${q.name}: unfused conv survived:\n${p.toString.take(1500)}")
+        assert(otherConv.contains(q.name) || !p.toString.contains("conv("),
+          s"${q.name}: unfused conv survived:\n${p.toString.take(1500)}")
+        Some(q.name)
       }
+    }
+    assert(covered.size == 21, s"the rule covers ${covered.size} queries: $covered")
+    assert(otherConv.keySet.subsetOf(covered.toSet), s"stale exemption: ${otherConv.keySet -- covered}")
   }
 
   test("r18 x126: cheap band conjuncts evaluate BEFORE the levenshtein DP") {

@@ -32,6 +32,15 @@ class QueriesSpec extends SparkSpec {
       SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }
 
+  test("SPARK_GRAFT_CPUS hint width: 32 when unset, a bad value fails loudly") {
+    assert(Queries.hintWidth(None) == 32)
+    assert(Queries.hintWidth(Some("8")) == 8)
+    Seq("", "eight", "4.0", " 4", "0", "-2").foreach { bad =>
+      val e = intercept[IllegalArgumentException](Queries.hintWidth(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), e.getMessage)
+    }
+  }
+
   expectedRows.foreach { case (name, n) =>
     test(s"$name returns $n rows at sf0.001") {
       assert(SparkEntry.queries(name)(spark, sf0001).count() == n)
